@@ -31,32 +31,26 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from jp_qcew_spark.io import ensure_session_confs
+from jp_qcew_spark.io import (
+    ensure_session_confs,
+    events_ts_micros,
+    load_table,
+    table_schema,
+)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema pinned up front —
-    streaming sources never infer). ``ts`` arrives as parquet TIMESTAMP(NANOS)
-    (long under nanosAsLong); convert to a real microsecond timestamp so
-    watermarks/windows see event time, exactly as `io.load_table` does for
-    batch."""
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    """File-source stream over the events parquet. Streaming sources never
+    infer, so the schema is pinned up front from the session's table-schema
+    memo (``io.table_schema``); ``ts`` becomes a real microsecond timestamp
+    so watermarks/windows see event time, exactly as `io.load_table` does
+    for batch."""
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema(spark, sf_dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # Parquet naive timestamps infer as TIMESTAMP_NTZ, but event-time
-        # watermarks require TimestampType (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
-        # Under the pinned UTC session timezone the cast is value-preserving,
-        # so streaming results still equal their batch/oracle twins.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return events_ts_micros(stream)
 
 
 def _ephemeral_checkpoint_dir() -> str | None:
@@ -148,9 +142,10 @@ def state_width(spark: SparkSession, n_keys: int) -> int:
     stream_dedup_neardup ~16-20 → ~12-14). The width still grows with
     the key space (sf1's ~50k fingerprints derive 32+ again, capped at
     core count locally; a cluster's defaultParallelism raises the cap),
-    so this is the deployment rule, not a local[32] constant."""
+    so this is the deployment rule, not a local[32] constant. The floor
+    of 8 yields to the cap: fewer cores than 8 give core-count width."""
     dp = spark.sparkContext.defaultParallelism
-    return max(8, min(dp, n_keys // 1000))
+    return min(dp, max(8, n_keys // 1000))
 
 
 def run_to_quiescence(
@@ -585,12 +580,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     no streaming state accumulates; the canonical shape for dimension
     enrichment at ingest time."""
     ev = read_events_stream(spark, sf_dir)
-    cust = (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-        .select(
-            F.col("c_custkey").alias("user_id"),
-            "c_mktsegment",
-        )
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"),
+        "c_mktsegment",
     )
     enriched = (
         ev.join(F.broadcast(cust), "user_id", "left")

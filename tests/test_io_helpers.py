@@ -1,10 +1,13 @@
-"""Unit tests for io.py's widen_scan decision helpers (ADVICE r4): the
-byte-size conf parser and the URI-safe local file stat. Pure-Python — no
-Spark session needed."""
+"""Unit tests for io.py: the widen_scan decision helpers (ADVICE r4: the
+byte-size conf parser and the URI-safe local file stat), the per-session
+table-schema memo behind load_table, and the engine's cache scoping."""
 
 from __future__ import annotations
 
 import os
+import threading
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -44,6 +47,155 @@ def test_local_file_size_skips_remote_and_missing(tmp_path):
     assert _local_file_size("s3://bucket/key.parquet") is None
     assert _local_file_size("hdfs://nn:8020/x.parquet") is None
     assert _local_file_size(str(tmp_path / "missing.parquet")) is None
+
+
+@contextmanager
+def count_jobs(spark):
+    """Yield a one-item list that holds, on exit, the number of Spark jobs
+    the block launched from this thread (counted through a job group)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    out = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _orders_pairs(a, b):
+    """Order pairs placed by the same customer, summed: a self-join whose
+    two sides must carry distinct attribute ids to resolve."""
+    from pyspark.sql import functions as F
+
+    return (
+        a.join(
+            b,
+            (a.o_custkey == b.o_custkey) & (a.o_orderkey < b.o_orderkey),
+        )
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(a.o_orderkey + b.o_orderkey).alias("keys"),
+        )
+        .collect()
+    )
+
+
+class TestSchemaMemo:
+    """load_table pins each table's Parquet schema once per session and
+    file state, and hands back a fresh lazy DataFrame on every call."""
+
+    def test_warm_load_launches_no_job(self, spark, sf_dir):
+        from jp_qcew_spark.io import load_table, metadata_row_count
+
+        load_table(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "events")
+        with count_jobs(spark) as jobs:
+            orders = load_table(spark, sf_dir, "orders")
+            events = load_table(spark, sf_dir, "events")
+            n = metadata_row_count(spark, sf_dir, "orders")
+        assert jobs == [0]
+        assert dict(events.dtypes)["ts"] == "timestamp"
+        assert n == orders.count()
+
+    def test_self_join_resolves_and_matches_inferred_read(self, spark, sf_dir):
+        from jp_qcew_spark.io import load_table
+
+        a = load_table(spark, sf_dir, "orders")
+        b = load_table(spark, sf_dir, "orders")
+        assert a is not b
+        path = os.path.join(sf_dir, "orders.parquet")
+        inferred = _orders_pairs(spark.read.parquet(path),
+                                 spark.read.parquet(path))
+        assert _orders_pairs(a, b) == inferred
+        assert inferred[0]["n"] > 0
+
+    def test_rewritten_table_is_reinferred(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from jp_qcew_spark.io import load_table
+
+        path = str(tmp_path / "orders.parquet")
+        spark.range(3).write.parquet(path)
+        assert load_table(spark, str(tmp_path), "orders").columns == ["id"]
+        spark.range(3).selectExpr("id", "id * 2 AS x").write.mode(
+            "overwrite"
+        ).parquet(path)
+        df = load_table(spark, str(tmp_path), "orders")
+        assert df.columns == ["id", "x"]
+        assert sorted(r.x for r in df.collect()) == [0, 2, 4]
+        # a single file replaced at the same path
+        single = str(tmp_path / "single")
+        os.mkdir(single)
+        target = os.path.join(single, "orders.parquet")
+        pq.write_table(pa.table({"a": [1, 2]}), target)
+        assert load_table(spark, single, "orders").columns == ["a"]
+        pq.write_table(pa.table({"a": [1], "b": ["z"]}), target + ".new")
+        os.replace(target + ".new", target)
+        df = load_table(spark, single, "orders")
+        assert [tuple(r) for r in df.collect()] == [(1, "z")]
+
+    def test_missing_table_raises_sparks_error(self, spark, tmp_path):
+        from pyspark.errors import AnalysisException
+
+        from jp_qcew_spark.io import load_table
+
+        with pytest.raises(AnalysisException, match="orders.parquet"):
+            load_table(spark, str(tmp_path), "orders")
+
+    def test_concurrent_cold_loads_infer_once(self, spark, tmp_path):
+        """More threads than cores open one cold table at once: all get the
+        same schema and exactly one of them runs the inference job."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        from jp_qcew_spark.io import load_table
+
+        spark.range(4).selectExpr(
+            "id", "CAST(id AS STRING) AS s"
+        ).write.parquet(str(tmp_path / "orders.parquet"))
+        n = 2 * spark.sparkContext.defaultParallelism
+        barrier = threading.Barrier(n, timeout=60)
+
+        def open_table(_):
+            barrier.wait()
+            with count_jobs(spark) as jobs:
+                schema = load_table(spark, str(tmp_path), "orders").schema
+            return schema, jobs[0]
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(n) as pool:
+                got = list(pool.map(open_table, range(n), timeout=120))
+        finally:
+            sys.setswitchinterval(interval)
+        assert len(got) == n
+        assert all(schema == got[0][0] for schema, _ in got)
+        assert got[0][0].fieldNames() == ["id", "s"]
+        assert sum(jobs for _, jobs in got) == 1
+
+
+@pytest.mark.parametrize(
+    "name, collect_jobs",
+    [("cast_nullsafe", 4), ("rank_dense", 4), ("mode_keying", 5)],
+)
+def test_warm_query_job_counts(spark, sf_dir, name, collect_jobs):
+    """Job-count regression guards: a warm registry build launches no job
+    (every table's schema is memoised) and its collect launches a fixed
+    number, which box speed cannot move."""
+    from jp_qcew_spark.queries import all_queries
+
+    build = all_queries()[name]
+    build(spark, sf_dir).collect()
+    with count_jobs(spark) as build_jobs:
+        df = build(spark, sf_dir)
+    with count_jobs(spark) as run_jobs:
+        df.collect()
+    assert (build_jobs[0], run_jobs[0]) == (0, collect_jobs)
 
 
 class TestScopedCaching:

@@ -127,13 +127,13 @@ def test_foreach_batch_sink_idempotent(spark, sf_dir, tmp_path):
 
 def test_state_width_rule(spark):
     """Round 15: state-store width derives from key cardinality
-    (keys/1000, floor 8, capped at defaultParallelism) — scale-adaptive,
-    not a per-query constant."""
+    (keys/1000, floor 8, capped at defaultParallelism; the cap wins on
+    fewer than 8 cores) — scale-adaptive, not a per-query constant."""
     from jp_qcew_spark.streaming.pipelines import state_width
 
     dp = spark.sparkContext.defaultParallelism
-    assert state_width(spark, 0) == 8
-    assert state_width(spark, 5_000) == 8          # sf0.1 fingerprints
+    assert state_width(spark, 0) == min(dp, 8)
+    assert state_width(spark, 5_000) == min(dp, 8)  # sf0.1 fingerprints
     assert state_width(spark, 50_000) == min(dp, 50)   # sf1 derives wider
     assert state_width(spark, 10**9) == dp         # capped at core count
 
