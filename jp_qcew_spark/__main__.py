@@ -33,11 +33,12 @@ def cmd_etl(args: argparse.Namespace) -> int:
 
 
 def cmd_naics(args: argparse.Namespace) -> int:
+    from jp_qcew_spark.io import order_result
     from jp_qcew_spark.operators.naics import naics4_aggregate
 
     spark = _spark()
-    agg = naics4_aggregate(spark.read.parquet(args.data)).orderBy(
-        "year", "qtr", "naics4"
+    agg = order_result(
+        naics4_aggregate(spark.read.parquet(args.data)), "year", "qtr", "naics4"
     )
     if args.output:
         agg.write.mode("overwrite").parquet(args.output)

@@ -316,6 +316,32 @@ def widen_scan(df: DataFrame, density: int = 1) -> DataFrame:
     return df
 
 
+def order_result(df: DataFrame, *cols) -> DataFrame:
+    """Final sort of a result the caller collects: ``df.orderBy(*cols)``
+    sorted in one task over a ``SinglePartition`` exchange.
+
+    A plain global sort is planned as a range exchange, and Spark's
+    ``RangePartitioner`` first runs a sampling job over the sort's input.
+    That job re-executes everything above the last shuffle, and the
+    exchange's map stage then runs it a second time. A one-partition
+    exchange already satisfies the sort's distribution, so no range
+    exchange, no sampling job and no second run are planned. The stage
+    under the sort still runs in parallel; only its already-reduced
+    output moves to one task.
+
+    Scale: the single sort task holds exactly the rows the Spark driver
+    is about to collect, so it is bounded by what that process can hold
+    anyway, while the range path pays a whole extra pass over the last
+    stage at any scale. Use it only where the sort is final, and keep a
+    plain ``orderBy`` where the helper only adds a job: the sort's input
+    is already one partition (a global window under it), or the result
+    is typically one row (adaptive execution then drops the sort, but
+    never a requested repartition). Never use it for
+    ``orderBy(...).limit(n)``, which plans as a top-k heap, or for
+    writes."""
+    return df.repartition(1).orderBy(*cols)
+
+
 def cache_parallel(df: DataFrame) -> DataFrame:
     """Persist ``df`` spread over ``defaultParallelism`` partitions.
 
@@ -493,7 +519,7 @@ def trained_artifact(
 
                 t0 = _time.perf_counter()
                 df = build()
-                rows = df.orderBy(*df.columns).collect()
+                rows = order_result(df, *df.columns).collect()
                 if len(rows) > _TRAINED_ROW_CAP:
                     raise ValueError(
                         f"trained artifact {key!r} collected {len(rows)} "

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jp_qcew_spark.io import order_result
+
 _MONTH_OFFSET = {
     "first_month_employment": 1,
     "second_month_employment": 2,
@@ -50,7 +52,7 @@ def resample_yearly(monthly: DataFrame) -> DataFrame:
         monthly.groupBy("year")
         .agg(F.avg("employment").alias("employment"))
         .withColumn("date", F.make_date(F.col("year"), F.lit(1), F.lit(1)))
-        .orderBy("year")
+        .transform(order_result, "year")
     )
 
 
@@ -63,7 +65,7 @@ def resample_quarterly(monthly: DataFrame) -> DataFrame:
         .withColumn(
             "date", F.make_date(F.col("year"), F.col("qtr") * 3, F.lit(1))
         )
-        .orderBy("year", "qtr")
+        .transform(order_result, "year", "qtr")
     )
 
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jp_qcew_spark.io import order_result
+
 TIME_FRAMES = ("yearly", "fiscal", "quarterly")
 
 
@@ -87,7 +89,7 @@ def filter_wages_data(
         .filter(F.col("naics_desc_label") == naics_desc_label)
         .groupBy("time_period")
         .agg(F.sum(F.col(measure).cast("double")).alias("nominas"))
-        .orderBy("time_period")
+        .transform(order_result, "time_period")
     )
 
 
@@ -98,7 +100,7 @@ def label_domain(enriched: DataFrame) -> list[str]:
         enriched.select("naics_desc_label")
         .filter(F.col("naics_desc_label").isNotNull())
         .distinct()
-        .orderBy("naics_desc_label")
+        .transform(order_result, "naics_desc_label")
         .collect()
     )
     return [r[0] for r in rows]

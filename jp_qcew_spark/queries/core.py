@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +48,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 2).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(order_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -101,7 +101,7 @@ def q_cast_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.count("status_as_num").alias("n_parsed_status"),
         )
-        .orderBy("priority_num")
+        .transform(order_result, "priority_num")
     )
 
 
@@ -130,7 +130,7 @@ def q_fixedwidth_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(F.substring("text", 1, 12)).alias("head_field"),
         F.trim(F.substring("text", 20, 6)).alias("mid_field"),
         F.length("text").cast("long").alias("text_len"),
-    ).orderBy("doc_id")
+    ).transform(order_result, "doc_id")
 
 
 ORACLE_FIXEDWIDTH_SLICE = """
@@ -158,7 +158,7 @@ def q_filter_nonblank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.round(F.avg("n_chars"), 2).alias("avg_chars"),
         )
-        .orderBy("lang")
+        .transform(order_result, "lang")
     )
 
 
@@ -205,7 +205,7 @@ def q_suppressed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("total_wages") * 0.014, 2).alias("fondo_contributions"),
         F.round(F.col("total_wages") * 0.0145, 2).alias("medicare_contributions"),
         F.round(F.col("total_wages") * 0.062, 2).alias("ssn_contributions"),
-    ).orderBy("year", "qtr", "code")
+    ).transform(order_result, "year", "qtr", "code")
 
 
 ORACLE_SUPPRESSED_AGG = """
@@ -256,7 +256,7 @@ def q_mode_keying(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("modal_priority"),
             F.col("cnt").alias("modal_count"),
         )
-        .orderBy("o_orderstatus")
+        .transform(order_result, "o_orderstatus")
     )
 
 
@@ -279,7 +279,7 @@ def q_distinct_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_process.py:266-272 builds the UI dropdown domain).
     """
     c = load_table(spark, sf_dir, "customer")
-    return c.select("c_mktsegment").distinct().orderBy("c_mktsegment")
+    return c.select("c_mktsegment").distinct().transform(order_result, "c_mktsegment")
 
 
 ORACLE_DISTINCT_DOMAIN = """
@@ -311,7 +311,7 @@ def q_label_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.nullif(F.col("r_name"), F.lit("ASIA")),
             ).alias("label_nullable"),
         )
-        .orderBy("nation_key")
+        .transform(order_result, "nation_key")
     )
 
 

@@ -36,6 +36,7 @@ from jp_qcew_spark.ext import dedup as D
 from jp_qcew_spark.functions import text as X
 from jp_qcew_spark.io import (
     load_table,
+    order_result,
     track_cache,
     trained_artifact,
     widen_scan,
@@ -88,7 +89,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum("is_contam"), F.lit(0)).alias("n_contam"),
         )
         .withColumn("n_clean", F.col("n_train") - F.col("n_contam"))
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -151,7 +152,7 @@ def q_scrub_denylist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_hits").cast("long").alias("n_masked"),
             F.sum("scrub_len").cast("long").alias("scrub_chars"),
         )
-        .orderBy("lang")
+        .transform(order_result, "lang")
     )
 
 
@@ -216,7 +217,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("h") < F.col("cut")).cast("long")).alias("n_kept"),
         )
         .select("source", "n_docs", "cut", "n_kept")
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -442,7 +443,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         annotated.select("doc_id", status.alias("status"))
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -523,7 +524,7 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         survivors.withColumn("rk", F.row_number().over(w_final))
         .filter(F.col("rk") <= _RES_K)
         .select("source", F.col("rk").cast("long").alias("rk"), "doc_id")
-        .orderBy("source", "rk")
+        .transform(order_result, "source", "rk")
     )
 
 
@@ -616,7 +617,7 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count(planted, F.lit(_RE_PHONE)).cast("long").alias("n_phone"),
         F.length(red).cast("long").alias("red_len"),
         F.md5(F.encode(red, "UTF-8")).alias("red_md5"),
-    ).orderBy("doc_id")
+    ).transform(order_result, "doc_id")
 
 
 ORACLE_SCRUB_PII = rf"""
@@ -772,7 +773,7 @@ def q_quality_percentile_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("p10").alias("p10"),
             F.first("p90").alias("p90"),
         )
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -883,7 +884,7 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("selected") == 1, F.col("doc_id"))
             ).cast("long").alias("sel_checksum"),
         )
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -1442,7 +1443,7 @@ def q_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the tier note above for training recipe, measured accuracies and
     the 100 TB posture; ``quality_classifier_gd_eval`` prices the
     NB-vs-GD adjudication, ``quality_classifier_apply`` serves it."""
-    return _qc_weights_t(spark, sf_dir).orderBy("feature_id")
+    return _qc_weights_t(spark, sf_dir).transform(order_result, "feature_id")
 
 
 def q_quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1462,7 +1463,7 @@ def q_quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("keep"),
             F.col("y").cast("long").alias("teacher_label"),
         )
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -1504,7 +1505,7 @@ def q_quality_classifier_gd_eval(
             .select(F.lit(variant).alias("variant"))
             .crossJoin(F.broadcast(agg))
         )
-    return out[0].unionByName(out[1]).orderBy("variant")
+    return out[0].unionByName(out[1]).transform(order_result, "variant")
 
 
 def _qc_sql_chain() -> str:

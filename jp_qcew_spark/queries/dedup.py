@@ -17,6 +17,7 @@ from jp_qcew_spark.io import (
     cache_parallel,
     load_table,
     metadata_row_count,
+    order_result,
     track_cache,
     widen_scan,
 )
@@ -59,7 +60,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("keeper_doc_id"),
             F.count("*").alias("n_copies"),
         )
-        .orderBy("keeper_doc_id")
+        .transform(order_result, "keeper_doc_id")
     )
 
 
@@ -109,7 +110,7 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jac"),
         )
         .filter(F.col("jac") >= 0.2)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -268,7 +269,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", F.round(F.col("jac"), 6).alias("jac")
         )
         .filter(F.col("jac") >= 0.2)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -313,7 +314,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         hashed.groupBy("simhash")
         .agg(F.min("doc_id").alias("first_doc"), F.count("*").alias("n_docs"))
-        .orderBy("first_doc")
+        .transform(order_result, "first_doc")
     )
 
 
@@ -412,7 +413,7 @@ def q_dedup_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jac"),
         )
         .filter(F.col("jac") >= 0.5)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -460,7 +461,7 @@ def q_data_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
         )
-        .orderBy("split")
+        .transform(order_result, "split")
     )
 
 
@@ -522,7 +523,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         labels.join(comp_sizes, "comp")
         .select(F.col("id").alias("doc_id"), "comp", "comp_size")
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -645,7 +646,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("dropped_dup"))
             .alias("action"),
         )
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -921,7 +922,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.levenshtein(F.col("a.head"), F.col("b.head")).alias("dist"),
         )
         .filter(F.col("dist") <= _FZ_DIST)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -1006,7 +1007,7 @@ def q_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("dup_ratio"),
         )
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -1158,7 +1159,7 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.withColumn(
             "is_near", (F.col("lev") <= _SNM_NEAR).cast("long")
         )
-        .orderBy("pos_a", "delta")
+        .transform(order_result, "pos_a", "delta")
     )
 
 
@@ -1329,7 +1330,7 @@ def q_dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("pairs_compared"),
         )
-        .orderBy("win")
+        .transform(order_result, "win")
     )
 
 
@@ -1432,7 +1433,7 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("inter") / F.col("sb.sz"), 6).alias("cont_ba"),
         )
         .filter(F.greatest("cont_ab", "cont_ba") >= 0.5)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -1543,7 +1544,7 @@ def q_dedup_minhash_est_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("jac_exact")
             ).alias("abs_err"),
         )
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 
@@ -2111,7 +2112,7 @@ def q_dedup_minhash_target(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", F.round(F.col("jac"), 6).alias("jac")
         )
         .filter(F.col("jac") >= _MH_TGT_JACCARD)
-        .orderBy("doc_a", "doc_b")
+        .transform(order_result, "doc_a", "doc_b")
     )
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +38,7 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
+        .transform(order_result, "window_start", "event_type")
     )
 
 
@@ -64,7 +64,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
-        .orderBy("window_start")
+        .transform(order_result, "window_start")
     )
 
 
@@ -100,7 +100,7 @@ def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-        .orderBy("user_id", "session_start")
+        .transform(order_result, "user_id", "session_start")
     )
 
 
@@ -146,7 +146,7 @@ def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("k"), 4).alias("avg_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
+        .transform(order_result, "event_type")
     )
 
 
@@ -174,7 +174,7 @@ def q_events_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "event_type", "event_id", "ts")
-        .orderBy("user_id", "event_type")
+        .transform(order_result, "user_id", "event_type")
     )
 
 
@@ -219,7 +219,7 @@ def q_events_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
+        .transform(order_result, "window_start", "event_type")
     )
 
 
@@ -299,7 +299,7 @@ def q_events_rollup_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("n_events"),
             F.round(F.sum("sv"), 2).alias("sum_value"),
         )
-        .orderBy("hour_start", "event_type")
+        .transform(order_result, "hour_start", "event_type")
     )
 
 
@@ -341,7 +341,7 @@ def q_events_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .orderBy("k_bucket")
+        .transform(order_result, "k_bucket")
     )
 
 
@@ -406,7 +406,7 @@ def q_events_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .drop("session_id")
-        .orderBy("user_id", "session_start")
+        .transform(order_result, "user_id", "session_start")
     )
 
 
@@ -456,7 +456,7 @@ def q_events_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("first_match_ts"),
             F.round(F.sum("next_value"), 2).alias("matched_value"),
         )
-        .orderBy("user_id")
+        .transform(order_result, "user_id")
     )
 
 
@@ -529,7 +529,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("attributed_value"),
             F.max("last_click_ts").alias("last_click_ts"),
         )
-        .orderBy("user_id")
+        .transform(order_result, "user_id")
     )
 
 
@@ -586,7 +586,7 @@ def q_ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             "med7", F.expr("percentile(daily_value, 0.5)").over(w)
         )
         .select("event_type", "d", "daily_value", F.round("med7", 4).alias("med7"))
-        .orderBy("event_type", "d")
+        .transform(order_result, "event_type", "d")
     )
 
 
@@ -647,7 +647,7 @@ def q_events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_src").cast("long").alias("n_src"),
             F.round(F.col("n") / F.col("n_src"), 6).alias("p"),
         )
-        .orderBy("src", "dst")
+        .transform(order_result, "src", "dst")
     )
 
 
@@ -736,7 +736,7 @@ def q_ts_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("det7_sum") / (7.0 * F.col("n_days")), 4
             ).alias("seasonal"),
         )
-        .orderBy("event_type", "dow")
+        .transform(order_result, "event_type", "dow")
     )
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jp_qcew_spark.functions.geo import haversine_km, in_bbox
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 # Presentation sorts pin NULLS LAST explicitly: Spark's ASC default is
 # NULLS FIRST while DuckDB's is NULLS LAST, so any nullable sort key
@@ -111,7 +111,7 @@ def q_geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 3,
             ).alias("avg_dist_km"),
         )
-        .orderBy(F.col("n_name").asc_nulls_last())
+        .transform(order_result, F.col("n_name").asc_nulls_last())
     )
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table, track_cache
+from jp_qcew_spark.io import load_table, order_result, track_cache
 
 _DAMP = 0.85
 _ITERS = 3
@@ -76,7 +76,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = track_cache(ranks)
     return ranks.select(
         "node", F.round(F.col("pr") * 1000, 6).alias("pr_permille")
-    ).orderBy("node")
+    ).transform(order_result, "node")
 
 
 ORACLE_GRAPH_PAGERANK = f"""
@@ -310,7 +310,7 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("changed"),
         )
-        .orderBy("vec_id")
+        .transform(order_result, "vec_id")
     )
 
 

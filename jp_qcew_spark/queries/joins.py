@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +50,7 @@ def q_join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
             F.count("*").alias("n_items"),
         )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
+        .transform(order_result, F.col("revenue").desc(), F.col("n_name"))
     )
 
 
@@ -80,7 +80,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(big, c.c_custkey == big.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_customers_no_big_orders"))
-        .orderBy("c_mktsegment")
+        .transform(order_result, "c_mktsegment")
     )
 
 
@@ -105,7 +105,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .select(F.col("n_nationkey").cast("long").alias("nation_key"), "n_name")
-        .orderBy("nation_key")
+        .transform(order_result, "nation_key")
     )
 
 
@@ -155,7 +155,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pur_id").alias("last_purchase_id"),
             F.round("pur_value", 2).alias("last_purchase_value"),
         )
-        .orderBy("err_id")
+        .transform(order_result, "err_id")
     )
 
 
@@ -204,7 +204,7 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("err_id", "user_id")
         .agg(F.count("pur_id").alias("purchases_last_hour"))
-        .orderBy("err_id")
+        .transform(order_result, "err_id")
     )
 
 
@@ -245,7 +245,7 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_items"),
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
-        .orderBy("s_nationkey")
+        .transform(order_result, "s_nationkey")
     )
 
 
@@ -318,7 +318,7 @@ def q_regional_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_items"),
             F.round(F.sum("rev"), 2).alias("revenue"),
         )
-        .orderBy("r_name", "n_name")
+        .transform(order_result, "r_name", "n_name")
     )
 
 
@@ -402,7 +402,7 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_price"),
         )
-        .orderBy("o_orderpriority")
+        .transform(order_result, "o_orderpriority")
     )
 
 
@@ -470,7 +470,7 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.cast("long").alias("dist_us"),
             F.round("pur_value", 2).alias("nearest_purchase_value"),
         )
-        .orderBy("err_id")
+        .transform(order_result, "err_id")
     )
 
 

@@ -22,7 +22,7 @@ from jp_qcew_spark.functions.text import (
     quality_score,
     word_count,
 )
-from jp_qcew_spark.io import cache_parallel, load_table
+from jp_qcew_spark.io import cache_parallel, load_table, order_result
 
 _MIN_QUALITY = 0.4
 _MIN_WORDS = 5
@@ -97,7 +97,7 @@ def q_llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = exact_kept.join(losers, "doc_id", "left_anti")
     return (
         survivors.select("doc_id", "quality", "words", "bpe_tokens")
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jp_qcew_spark.ext import multimodal as M
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 _KINDS = ["image", "audio", "video"]  # doc_id % 3 -> kind
 
@@ -52,7 +52,7 @@ def q_mm_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             height.alias("height"),
         )
         .filter(F.col("doc_id") < 200)
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -78,7 +78,7 @@ def q_mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing: binary column → pandas bytes → parsed features). Hash-matching
     the SQL oracle proves the bytes crossed the Arrow boundary intact."""
     m = _media(spark, sf_dir).filter(F.col("doc_id") < 200)
-    return M.decode_features(m).orderBy("doc_id")
+    return M.decode_features(m).transform(order_result, "doc_id")
 
 
 ORACLE_MM_DECODE = f"""
@@ -106,7 +106,9 @@ def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     vids = _media(spark, sf_dir).filter(
         (F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 300)
     )
-    return M.frame_samples(vids, "doc_id", "payload").orderBy("doc_id", "frame_idx")
+    return order_result(
+        M.frame_samples(vids, "doc_id", "payload"), "doc_id", "frame_idx"
+    )
 
 
 ORACLE_MM_FRAMES = f"""
@@ -133,7 +135,7 @@ def q_mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, so a hash match proves actual pixel arithmetic, not header math."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     img = d.select("doc_id", M.synth_ppm(F.col("text")).alias("payload"))
-    return M.ppm_features(img).orderBy("doc_id")
+    return M.ppm_features(img).transform(order_result, "doc_id")
 
 
 # 4×4 P6: 48 pixel bytes = 96 hex chars = md5(text) hex repeated 3×.
@@ -171,7 +173,7 @@ def q_mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the compressed binary column survived the JVM↔Arrow round trip
     AND the inflate/unfilter arithmetic is exact."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.png_features(M.synth_png(d)).orderBy("doc_id")
+    return M.png_features(M.synth_png(d)).transform(order_result, "doc_id")
 
 
 # identical pixel rule to mm_ppm_decode (4×4 RGB from repeat(md5(text),3)),
@@ -214,7 +216,7 @@ def q_mm_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (no hex-string casts), so a hash match proves the whole
     compressed round trip is byte-exact."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.gif_features(M.synth_gif(d)).orderBy("doc_id")
+    return M.gif_features(M.synth_gif(d)).transform(order_result, "doc_id")
 
 
 # pixel p = 16*k + i (k-th md5 block, i-th byte), laid out row-major on a
@@ -260,7 +262,7 @@ def q_mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt of an exact dyadic mean (256 = 2^8 samples), so the hash match
     proves the sample plane is byte-exact, not just the header."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.wav_features(M.synth_wav(d)).orderBy("doc_id")
+    return M.wav_features(M.synth_wav(d)).transform(order_result, "doc_id")
 
 
 # sample s <- bytes (2s, 2s+1) of the indexed-md5 stream: both bytes land
@@ -311,7 +313,7 @@ def q_mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums (< 2^53) divided once, identical across numpy and both
     engines."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.bmp_features(M.synth_bmp(d)).orderBy("doc_id")
+    return M.bmp_features(M.synth_bmp(d)).transform(order_result, "doc_id")
 
 
 # byte j of the stream = hex chars (2i+1, 2i+2) of md5(text||'-'||k) with
@@ -354,7 +356,7 @@ def q_mm_tga_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_bytes`` as ``18 + 4*n_packets + 26`` exactly. A hash match proves
     the COMPRESSION STRUCTURE round-trips, not just the pixel plane."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.tga_features(M.synth_tga(d)).orderBy("doc_id")
+    return M.tga_features(M.synth_tga(d)).transform(order_result, "doc_id")
 
 
 # byte j of the stream sits at scan line r = j // 15, in-row position
@@ -430,7 +432,9 @@ def q_mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match proves frame boundaries, signs, and energies are all
     sample-exact."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.wav_frame_features(M.synth_wav(d)).orderBy("doc_id", "frame")
+    return order_result(
+        M.wav_frame_features(M.synth_wav(d)), "doc_id", "frame"
+    )
 
 
 # Sample rule identical to ORACLE_MM_WAV_DECODE, with the sample index s
@@ -492,7 +496,7 @@ def q_mm_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer sums divided once, identical on numpy and both
     engines."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.tiff_features(M.synth_tiff(d)).orderBy("doc_id")
+    return M.tiff_features(M.synth_tiff(d)).transform(order_result, "doc_id")
 
 
 # byte j of the stream = hex chars (2(j%16)+1, 2(j%16)+2) of

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 # Presentation sorts pin NULLS LAST explicitly: Spark's ASC default is
 # NULLS FIRST while DuckDB's is NULLS LAST, so any nullable sort key
@@ -36,7 +36,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(price).cast("long").alias("ceil_price"),
         F.floor(price).cast("long").alias("floor_price"),
         F.abs(price - 1000.0).alias("abs_dev_1000"),
-    ).orderBy("p_partkey")
+    ).transform(order_result, "p_partkey")
 
 
 ORACLE_MATH = """
@@ -69,7 +69,7 @@ def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("has_digit").alias("n_with_digit"),
             F.max(F.length("devoweled")).alias("max_devoweled_len"),
         )
-        .orderBy(F.col("p_brand").asc_nulls_last())
+        .transform(order_result, F.col("p_brand").asc_nulls_last())
     )
 
 
@@ -108,7 +108,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("days_to_month_end"), 4).alias("avg_days_to_eom"),
             F.countDistinct("dow").alias("n_dows"),
         )
-        .orderBy(F.col("order_month").asc_nulls_last())
+        .transform(order_result, F.col("order_month").asc_nulls_last())
     )
 
 
@@ -160,7 +160,7 @@ def q_array_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("vmax"), 6).alias("max_component"),
             F.round(F.avg("head8_sum"), 6).alias("avg_head8_sum"),
         )
-        .orderBy(F.col("label").asc_nulls_last())
+        .transform(order_result, F.col("label").asc_nulls_last())
     )
 
 
@@ -227,7 +227,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("edit_dist").alias("nearest_supplier_dist"),
             F.count("*").alias("n_suppliers"),
         )
-        .orderBy("c_custkey")
+        .transform(order_result, "c_custkey")
     )
 
 
@@ -272,7 +272,7 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("g"), 2).alias("sum_greatest"),
             F.round(F.sum("l"), 2).alias("sum_least"),
         )
-        .orderBy(F.col("prio").asc_nulls_last())
+        .transform(order_result, F.col("prio").asc_nulls_last())
     )
 
 
@@ -328,7 +328,7 @@ def q_regr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr(f"regr_r2({y}, {x})"), 6).alias("r2"),
             F.round(F.stddev_samp(x), 6).alias("sd_qty"),
         )
-        .orderBy(F.col("l_returnflag").asc_nulls_last())
+        .transform(order_result, F.col("l_returnflag").asc_nulls_last())
     )
 
 
@@ -384,7 +384,7 @@ def q_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("x"), 2).alias("bin_min"),
             F.round(F.max("x"), 2).alias("bin_max"),
         )
-        .orderBy(F.col("bucket").asc_nulls_last())
+        .transform(order_result, F.col("bucket").asc_nulls_last())
     )
 
 
@@ -429,7 +429,7 @@ def q_argmax_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("s_acctbal"), 2).alias("min_bal"),
             F.count("*").cast("long").alias("n_suppliers"),
         )
-        .orderBy(F.col("s_nationkey").asc_nulls_last())
+        .transform(order_result, F.col("s_nationkey").asc_nulls_last())
     )
 
 

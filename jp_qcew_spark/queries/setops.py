@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -21,7 +21,7 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.select(F.col("c_nationkey").cast("long").alias("nation_key"))
         .union(s.select(F.col("s_nationkey").cast("long")))
         .distinct()
-        .orderBy("nation_key")
+        .transform(order_result, "nation_key")
     )
 
 
@@ -40,7 +40,7 @@ def q_intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.select(F.col("c_nationkey").cast("long").alias("nation_key"))
         .intersect(s.select(F.col("s_nationkey").cast("long")))
-        .orderBy("nation_key")
+        .transform(order_result, "nation_key")
     )
 
 
@@ -60,7 +60,7 @@ def q_except_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.select(F.col("c_nationkey").cast("long").alias("nation_key"))
         .exceptAll(s.select(F.col("s_nationkey").cast("long")))
         .distinct()
-        .orderBy("nation_key")
+        .transform(order_result, "nation_key")
     )
 
 

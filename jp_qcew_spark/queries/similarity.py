@@ -33,6 +33,7 @@ from jp_qcew_spark.io import (
     cache_parallel,
     load_table,
     metadata_row_count,
+    order_result,
     track_cache,
     track_local_checkpoint,
     widen_scan,
@@ -89,7 +90,7 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
-def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for the first 10 vectors (self excluded).
 
     Queries are broadcast; scoring is map-side over the candidate scan; the
@@ -114,8 +115,13 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
-        .orderBy("query_id", "rank")
     )
+
+
+def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_knn_bruteforce`` in result order (the recall evals
+    join the unordered rows)."""
+    return order_result(_knn_bruteforce(spark, sf_dir), "query_id", "rank")
 
 
 ORACLE_KNN_BRUTEFORCE = f"""
@@ -135,7 +141,7 @@ FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-def q_knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed top-3 neighbors: candidates limited to the query's
     sign-bit bucket — the sub-quadratic ANN plan (bucket join replaces the
     full cross product).
@@ -178,8 +184,13 @@ def q_knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
     )
+
+
+def q_knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_knn_signlsh`` in result order (``knn_recall_eval``
+    joins the unordered rows)."""
+    return order_result(_knn_signlsh(spark, sf_dir), "query_id", "rank")
 
 
 def _oracle_signlsh() -> str:
@@ -257,7 +268,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nb_label").cast("long").alias("predicted_label"),
             "votes",
         )
-        .orderBy("query_id")
+        .transform(order_result, "query_id")
     )
 
 
@@ -473,7 +484,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
+        .transform(order_result, "query_id", "rank")
     )
 
 
@@ -665,7 +676,7 @@ def _scored_pairs(vecs: DataFrame, cand: DataFrame, out: str) -> DataFrame:
     )
 
 
-def q_dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family, north-star tier):
     candidates from a MULTI-BAND sign-LSH self-join (a pair is scored iff it
     collides in ≥1 band), verified at cosine ≥ 0.3.
@@ -688,8 +699,13 @@ def q_dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _scored_pairs(vecs, cand, "cos_sim")
         .filter(F.col("cos_sim") >= 0.3)
-        .orderBy("id_a", "id_b")
     )
+
+
+def q_dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_dedup_embedding_cos`` in result order (``dedup_recall_eval``
+    joins the unordered rows)."""
+    return order_result(_dedup_embedding_cos(spark, sf_dir), "id_a", "id_b")
 
 
 _SIG64 = " || ".join(
@@ -797,7 +813,7 @@ def q_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("vec_id", e.label.cast("long").alias("label"), "embedding")
         .groupBy("label")
         .applyInPandas(_zscore_group, _ZSCORE_SCHEMA)
-        .orderBy("vec_id")
+        .transform(order_result, "vec_id")
     )
 
 
@@ -860,7 +876,7 @@ def q_knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
+        .transform(order_result, "query_id", "rank")
     )
 
 
@@ -966,7 +982,7 @@ def q_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
+        .transform(order_result, "query_id", "rank")
     )
 
 
@@ -1077,7 +1093,7 @@ def q_udf_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("nrm"), 6).alias("avg_norm"),
             F.round(F.max("nrm"), 6).alias("max_norm"),
         )
-        .orderBy("label")
+        .transform(order_result, "label")
     )
 
 
@@ -1182,7 +1198,7 @@ def q_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_vecs"),
             F.round(F.avg(F.sqrt("dist")), 6).alias("avg_dist"),
         )
-        .orderBy("cid")
+        .transform(order_result, "cid")
     )
 
 
@@ -1296,7 +1312,7 @@ def q_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("n_kept"),
             F.round(F.avg("cos_to_rep"), 6).alias("avg_cos_to_rep"),
         )
-        .orderBy("label")
+        .transform(order_result, "label")
     )
 
 
@@ -1658,7 +1674,7 @@ def _pq_sub_pivot_sql(src_dims: str, map_name: str, sub_name: str) -> str:
   FROM {src_dims} d JOIN {map_name} a ON a.pos = d.pos GROUP BY 1, 2)"""
 
 
-def q_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN scan (Jégou/Douze/Schmid IVFADC, the
     memory-bounded path): corpus vectors compress from 64 doubles
     (512 B) to ``_PQ_M`` = 32 single-byte codes (16× memory cut), and
@@ -1713,8 +1729,13 @@ def q_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("rank"),
         )
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
     )
+
+
+def q_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_knn_pq_adc`` in result order (``knn_pq_recall_eval``
+    joins the unordered rows)."""
+    return order_result(_knn_pq_adc(spark, sf_dir), "query_id", "rank")
 
 
 def _pq_train_sql(
@@ -1833,7 +1854,7 @@ ORACLE["knn_pq_adc"] = ORACLE_KNN_PQ_ADC
 # --------------------------------------------------------------------------
 
 
-def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PQ — the full IVFADC architecture (FAISS's default billion-
     scale index): the TRAINED coarse quantizer (``_ivf_cells``, shared
     with ``knn_ivf``) restricts each query to ITS OWN cell (sub-linear
@@ -1901,8 +1922,13 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("rank"),
         )
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
     )
+
+
+def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_knn_ivfpq`` in result order (``knn_pq_recall_eval``
+    joins the unordered rows)."""
+    return order_result(_knn_ivfpq(spark, sf_dir), "query_id", "rank")
 
 
 ORACLE_KNN_IVFPQ = f"""
@@ -1991,7 +2017,7 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("abs_err") * 1000, 6).alias("max_err_permille"),
             F.round(F.avg("abs_err") * 1000, 6).alias("avg_err_permille"),
         )
-        .orderBy("dim")
+        .transform(order_result, "dim")
     )
 
 
@@ -2042,7 +2068,9 @@ def q_knn_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     colliding in several bands collapses via max(score) — the duplicate
     scores are bit-identical (same vectors, same fold), so max IS the
     value and matches the oracle's score-after-DISTINCT."""
-    return _banded_topk(spark, sf_dir, _lsh_cfg, S.sign_bands)
+    return order_result(
+        _banded_topk(spark, sf_dir, _lsh_cfg, S.sign_bands), "query_id", "rank"
+    )
 
 
 def _banded_topk(
@@ -2142,7 +2170,6 @@ def _banded_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -2199,13 +2226,13 @@ def q_knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is top-3 lists (3 rows per query on each side), so the eval costs
     nothing at any scale — the expensive parts are the index builds the
     sub-queries already optimized."""
-    bf = q_knn_bruteforce(spark, sf_dir).select(
+    bf = _knn_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    ann = q_knn_signlsh(spark, sf_dir).select(
+    ann = _knn_signlsh(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    bnd = q_knn_lsh_banded(spark, sf_dir).select(
+    bnd = _banded_topk(spark, sf_dir, _lsh_cfg, S.sign_bands).select(
         "query_id", "neighbor_id"
     )
 
@@ -2231,7 +2258,7 @@ def q_knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "recall_banded_at_3", F.round(F.col("n_hits_banded") / 3.0, 4)
         )
     )
-    return per_q.orderBy("query_id")
+    return per_q.transform(order_result, "query_id")
 
 
 ORACLE_KNN_RECALL = f"""
@@ -2314,7 +2341,7 @@ def q_embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         partials.groupBy("i", "j")
         .agg(F.round(F.sum("g"), 4).alias("g"))
-        .orderBy("i", "j")
+        .transform(order_result, "i", "j")
     )
 
 
@@ -2419,7 +2446,7 @@ def q_knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``count()`` against parquet row-group metadata; the oracle derives
     the identical (bands, bits) via the same scalar-subquery pattern.
     Everything else is keyed on src or (src, dst)."""
-    return _mutual_edges(spark, sf_dir).orderBy("src", "dst")
+    return _mutual_edges(spark, sf_dir).transform(order_result, "src", "dst")
 
 
 def _mutual_edges_ctes(base: str | None = None) -> str:
@@ -2569,7 +2596,7 @@ def _semdedup_keep(
             .cast("long")
             .alias("n_kept"),
         )
-        .orderBy("comp")
+        .transform(order_result, "comp")
     )
 
 
@@ -2701,7 +2728,7 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sel_round",
         F.col("cid").alias("vec_id"),
         F.round("sel_dist", 6).alias("sel_dist"),
-    ).orderBy("sel_round")
+    ).transform(order_result, "sel_round")
 
 
 def _kc_oracle() -> str:
@@ -2747,7 +2774,7 @@ ORACLE["sample_kcenter"] = _kc_oracle()
 # --------------------------------------------------------------------------
 
 
-def q_dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs with the RANDOM-HYPERPLANE banded
     generator — the tier past the coordinate-plane budget. The
     coordinate-sign generator (``dedup_embedding_cos``) spends one of the
@@ -2785,8 +2812,13 @@ def q_dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _scored_pairs(vecs, cand, "cos_sim")
         .filter(F.col("cos_sim") >= 0.3)
-        .orderBy("id_a", "id_b")
     )
+
+
+def q_dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_dedup_embedding_rp`` in result order (``dedup_recall_eval``
+    joins the unordered rows)."""
+    return order_result(_dedup_embedding_rp(spark, sf_dir), "id_a", "id_b")
 
 
 # The RP signature CTE chain, shared by the dedup generator and the
@@ -2900,7 +2932,7 @@ def q_knn_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins recall by true similarity and shows exactly that curve, so the
     two queries together certify where the RP tier works and where it
     deliberately does not."""
-    bf = q_knn_bruteforce(spark, sf_dir).select(
+    bf = _knn_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
     rp = _banded_topk(spark, sf_dir, _lsh_cfg_rp, S.rp_bands).select(
@@ -2922,7 +2954,7 @@ def q_knn_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "recall_rp_at_3"
             ),
         )
-        .orderBy("query_id")
+        .transform(order_result, "query_id")
     )
 
 
@@ -3028,12 +3060,12 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cs") >= 0.3)
     )
     rp = (
-        q_dedup_embedding_rp(spark, sf_dir)
+        _dedup_embedding_rp(spark, sf_dir)
         .filter(F.col("id_a") < _EVAL_SLICE)
         .select("id_a", "id_b", F.lit(1).alias("hit_rp"))
     )
     co = (
-        q_dedup_embedding_cos(spark, sf_dir)
+        _dedup_embedding_cos(spark, sf_dir)
         .filter(F.col("id_a") < _EVAL_SLICE)
         .select("id_a", "id_b", F.lit(1).alias("hit_co"))
     )
@@ -3064,7 +3096,7 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "recall_coord",
             F.round(F.col("n_coord") / F.col("n_true"), 4),
         )
-        .orderBy("sim_band")
+        .transform(order_result, "sim_band")
     )
 
 
@@ -3338,7 +3370,7 @@ def q_dedup_embedding_rp_target(
     return (
         _scored_pairs(vecs, cand, "cos_sim")
         .filter(F.col("cos_sim") >= _TGT_COS)
-        .orderBy("id_a", "id_b")
+        .transform(order_result, "id_a", "id_b")
     )
 
 
@@ -3549,7 +3581,7 @@ def q_dedup_recall_target_eval(
         )
         .withColumn("bands_used", F.lit(int(bands)).cast("long"))
         .withColumn("bits_used", F.lit(int(bits)).cast("long"))
-        .orderBy("sim_band")
+        .transform(order_result, "sim_band")
     )
 
 
@@ -3754,7 +3786,7 @@ def q_knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("scan_frac"),
         )
-        .orderBy("nprobe")
+        .transform(order_result, "nprobe")
     )
 
 
@@ -4034,11 +4066,11 @@ def q_knn_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # process (shared with the curve/residual/opq evals)
     exact3 = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
     approx = (
-        q_knn_ivfpq(spark, sf_dir)
+        _knn_ivfpq(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .withColumn("tier", F.lit(_PQ_EVAL_TIERS[0]))
         .unionByName(
-            q_knn_pq_adc(spark, sf_dir)
+            _knn_pq_adc(spark, sf_dir)
             .select("query_id", "neighbor_id")
             .withColumn("tier", F.lit(_PQ_EVAL_TIERS[1]))
         )
@@ -4061,7 +4093,7 @@ def q_knn_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("h"), F.lit(0)) / F.col("ex_total"), 6
             ).alias("recall_at3"),
         )
-        .orderBy("tier")
+        .transform(order_result, "tier")
     )
 
 
@@ -4344,7 +4376,7 @@ def q_knn_pq_residual_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_variant[0]
         .unionByName(per_variant[1])
         .crossJoin(ratio)
-        .orderBy("variant")
+        .transform(order_result, "variant")
     )
 
 
@@ -4590,7 +4622,7 @@ def q_knn_pq_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         per_variant = [f.result() for f in futs]
     return (
-        per_variant[0].unionByName(per_variant[1]).orderBy("assignment")
+        per_variant[0].unionByName(per_variant[1]).transform(order_result, "assignment")
     )
 
 
@@ -4774,7 +4806,7 @@ def q_knn_ivfpq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("scan_frac"),
         )
-        .orderBy("nprobe")
+        .transform(order_result, "nprobe")
     )
 
 
@@ -4948,7 +4980,7 @@ def q_knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rank") <= 3)
         .select("query_id", "neighbor_id", "d2", "rank")
-        .orderBy("query_id", "rank")
+        .transform(order_result, "query_id", "rank")
     )
 
 
@@ -5109,7 +5141,7 @@ def q_knn_ivfpq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_at3"),
             "reranked",
         )
-        .orderBy("r")
+        .transform(order_result, "r")
     )
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,7 +34,7 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_returnflag", "l_linestatus", "g_rf", "g_ls", "n", "sum_qty"
         )
-        .orderBy("g_rf", "g_ls", "l_returnflag", "l_linestatus")
+        .transform(order_result, "g_rf", "g_ls", "l_returnflag", "l_linestatus")
     )
 
 
@@ -55,7 +55,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the general form rollup/cube sugar over (Spark SQL syntax; one expand)."""
     o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_gs")
-    return spark.sql(
+    gs = spark.sql(
         """
         SELECT year(o_orderdate) AS order_year,
                o_orderpriority,
@@ -66,9 +66,9 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders_gs
         GROUP BY GROUPING SETS ((year(o_orderdate), o_orderpriority),
                                 (year(o_orderdate)), ())
-        ORDER BY g_year, g_prio, order_year, o_orderpriority
         """
     )
+    return order_result(gs, "g_year", "g_prio", "order_year", "o_orderpriority")
 
 
 ORACLE_GROUPING_SETS = """
@@ -102,7 +102,7 @@ def q_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.get("pcts", 1), 4).alias("p95"),
             F.round(F.get("pcts", 2), 4).alias("p99"),
         )
-        .orderBy("l_returnflag")
+        .transform(order_result, "l_returnflag")
     )
 
 
@@ -159,7 +159,7 @@ def q_sketch_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         within(F.col("p50a"), p50, 0.01).alias("p50_within_1pct"),
         F.round(p95, 4).alias("p95"),
         within(F.col("p95a"), p95, 0.01).alias("p95_within_1pct"),
-    ).orderBy("l_returnflag")
+    ).transform(order_result, "l_returnflag")
 
 
 ORACLE_SKETCH_APPROX = """
@@ -208,7 +208,7 @@ def q_sketch_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.abs(F.col("est") - F.col("n_docs")) / F.col("n_docs") <= 0.15)
         .cast("long")
         .alias("est_within_15pct"),
-    ).orderBy("lang")
+    ).transform(order_result, "lang")
 
 
 ORACLE_SKETCH_HLL_ROLLUP = """
@@ -231,7 +231,7 @@ def q_agg_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_orderkey").alias("n_orders"),
             F.countDistinct("l_suppkey").alias("n_suppliers"),
         )
-        .orderBy("l_returnflag")
+        .transform(order_result, "l_returnflag")
     )
 
 
@@ -474,7 +474,7 @@ def q_sketch_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "err_p95"
             ),
         )
-        .orderBy("l_returnflag")
+        .transform(order_result, "l_returnflag")
     )
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jp_qcew_spark.functions import text as X
-from jp_qcew_spark.io import load_table, widen_scan
+from jp_qcew_spark.io import load_table, order_result, widen_scan
 
 
 def _docs(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
@@ -49,7 +49,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.nonspace_len(t).alias("n_nonspace"),
         X.avg_word_len(t).alias("avg_word_len"),
         X.punct_count(t).alias("n_punct"),
-    ).orderBy("doc_id")
+    ).transform(order_result, "doc_id")
 
 
 ORACLE_TEXT_STATS = r"""
@@ -80,7 +80,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.round(F.avg("quality"), 4).alias("avg_quality"),
         )
-        .orderBy("bucket")
+        .transform(order_result, "bucket")
     )
 
 
@@ -119,7 +119,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("lang", X.lang_guess(t).alias("lang_guess"))
         .groupBy("lang", "lang_guess")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("lang", "lang_guess")
+        .transform(order_result, "lang", "lang_guess")
     )
 
 
@@ -154,7 +154,7 @@ def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("total_tokens"),
             F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
         )
-        .orderBy("source")
+        .transform(order_result, "source")
     )
 
 
@@ -177,7 +177,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir, "doc_id", "text")
     return d.select(
         "doc_id", X.fingerprint(F.col("text")).alias("fp")
-    ).orderBy("doc_id")
+    ).transform(order_result, "doc_id")
 
 
 ORACLE_TEXT_FINGERPRINT = r"""
@@ -249,7 +249,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chunk_chars"
             ),
         )
-        .orderBy("doc_id", "chunk_id")
+        .transform(order_result, "doc_id", "chunk_id")
     )
 
 
@@ -328,7 +328,7 @@ def q_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select("w1", F.col("rk").cast("long").alias("rk"), "w2", "n")
-        .orderBy("w1", "rk")
+        .transform(order_result, "w1", "rk")
     )
 
 
@@ -375,7 +375,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice(F.sort_array(F.collect_set("doc_id")), 1, 16), ","
             ).alias("postings"),
         )
-        .orderBy("token")
+        .transform(order_result, "token")
     )
 
 
@@ -433,13 +433,13 @@ def q_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.trim(F.col("text")) != "")
     )
     d.createOrReplaceTempView("_udtf_docs")
-    return spark.sql(
+    tokens = spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token
         FROM _udtf_docs d, LATERAL tokenize_udtf(d.text) t
-        ORDER BY d.doc_id, t.pos
         """
     )
+    return order_result(tokens, "doc_id", "pos")
 
 
 ORACLE_UDTF_TOKENIZE = r"""
@@ -498,7 +498,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_tokens"),
             F.round(F.avg("logp"), 4).alias("avg_logp"),
         )
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -579,7 +579,9 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = c / F.col("n")
         terms = terms + F.when(c > 0, p * F.log2(p)).otherwise(F.lit(0.0))
     ent = F.when(F.col("n") > 0, F.round(-terms, 4)).otherwise(F.lit(0.0))
-    return with_n.select("doc_id", ent.alias("entropy")).orderBy("doc_id")
+    return order_result(
+        with_n.select("doc_id", ent.alias("entropy")), "doc_id"
+    )
 
 
 def _entropy_oracle() -> str:
@@ -653,7 +655,7 @@ def q_text_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_bigrams"),
             F.round(F.avg("logp"), 4).alias("avg_logp"),
         )
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -817,7 +819,7 @@ def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chunk_sig"
             ),
         )
-        .orderBy("doc_id", "chunk_id")
+        .transform(order_result, "doc_id", "chunk_id")
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from jp_qcew_spark.io import (
     load_table,
+    order_result,
     track_local_checkpoint,
     widen_scan,
 )
@@ -90,7 +91,11 @@ def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fill",
             F.round(F.col("pack_tokens") / F.lit(PACK_BUDGET), 4),
         )
-        .orderBy(F.col("source").asc_nulls_last(), F.col("pack_id").asc_nulls_last())
+        .transform(
+            order_result,
+            F.col("source").asc_nulls_last(),
+            F.col("pack_id").asc_nulls_last(),
+        )
     )
 
 
@@ -144,7 +149,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_total"),
             F.sum("kept").alias("n_kept"),
         )
-        .orderBy(F.col("lang").asc_nulls_last())
+        .transform(order_result, F.col("lang").asc_nulls_last())
     )
 
 
@@ -183,7 +188,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_words") > 0)
         .withColumn("is_repetitive", (F.col("rep_ratio") > 0.5).cast("long"))
-        .orderBy("doc_id")
+        .transform(order_result, "doc_id")
     )
 
 
@@ -248,7 +253,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 3)
         .select("doc_id", "rank", "word", "tf", "df", "tfidf")
-        .orderBy("doc_id", "rank")
+        .transform(order_result, "doc_id", "rank")
     )
 
 
@@ -678,7 +683,8 @@ def q_tokenizer_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "fill", F.round(F.col("pack_tokens") / F.lit(PACK_BUDGET), 4)
         )
-        .orderBy(
+        .transform(
+            order_result,
             F.col("source").asc_nulls_last(),
             F.col("pack_id").asc_nulls_last(),
         )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 from jp_qcew_spark.operators import timeseries as T
 from jp_qcew_spark.operators.wages import enrich_wages, filter_wages_data
 
@@ -115,7 +115,7 @@ def q_wages_label_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("naics_desc_label")
         .filter(F.col("naics_desc_label").isNotNull())
         .distinct()
-        .orderBy("naics_desc_label")
+        .transform(order_result, "naics_desc_label")
     )
 
 
@@ -284,7 +284,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v_filled"
             ),
         )
-        .orderBy("event_type", "h")
+        .transform(order_result, "event_type", "h")
     )
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def _purchases(ev: DataFrame) -> DataFrame:
@@ -65,7 +65,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             F.col("valid_to").isNull().cast("long").alias("is_current"),
         )
-        .orderBy("user_id", "valid_from", "event_id")
+        .transform(order_result, "user_id", "valid_from", "event_id")
     )
 
 
@@ -286,7 +286,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("cohort_week", "week_age")
         .agg(F.countDistinct("user_id").cast("long").alias("n_users"))
-        .orderBy("cohort_week", "week_age")
+        .transform(order_result, "cohort_week", "week_age")
     )
 
 
@@ -365,7 +365,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_bal"),
         )
-        .orderBy("action")
+        .transform(order_result, "action")
     )
 
 
@@ -452,7 +452,7 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_outliers"),
             F.round(F.max("arz"), 4).alias("max_abs_rz"),
         )
-        .orderBy("event_type")
+        .transform(order_result, "event_type")
     )
 
 
@@ -522,7 +522,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("updated_at"),
             F.col("n_ops").cast("long").alias("n_ops"),
         )
-        .orderBy("user_id")
+        .transform(order_result, "user_id")
     )
 
 
@@ -593,7 +593,7 @@ def q_join_pit_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v.event_id").alias("version_id"),
             F.col("v.value").alias("value_asof"),
         )
-        .orderBy("user_id", "click_ts", "click_id")
+        .transform(order_result, "user_id", "click_ts", "click_id")
     )
 
 
@@ -688,7 +688,7 @@ def q_cdc_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.sum(F.coalesce("val_a", F.lit(0)))
             ).cast("long").alias("delta_cents"),
         )
-        .orderBy("op")
+        .transform(order_result, "op")
     )
 
 
@@ -790,7 +790,7 @@ def q_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "is_current", F.col("valid_to").isNull().cast("long")
         )
-        .orderBy("user_id", "valid_from", "event_id")
+        .transform(order_result, "user_id", "valid_from", "event_id")
     )
 
 
@@ -1021,7 +1021,7 @@ def q_layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("scan_fraction"),
         )
-        .orderBy("layout")
+        .transform(order_result, "layout")
     )
 
 

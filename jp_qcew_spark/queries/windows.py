@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.io import load_table
+from jp_qcew_spark.io import load_table, order_result
 
 
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +56,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.round("o_totalprice", 2).alias("total_price"),
         )
-        .orderBy("c_mktsegment", "rk")
+        .transform(order_result, "c_mktsegment", "rk")
     )
 
 
@@ -102,7 +102,7 @@ def q_lag_diff_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("revenue") - F.col("prev")) / F.col("prev") * 100, 4
             ).alias("revenue_diff_p"),
         )
-        .orderBy("series", "month")
+        .transform(order_result, "series", "month")
     )
 
 
@@ -141,7 +141,7 @@ def q_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate",
             F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
         )
-        .orderBy("o_custkey", "o_orderdate", "o_orderkey")
+        .transform(order_result, "o_custkey", "o_orderdate", "o_orderkey")
     )
 
 
@@ -179,7 +179,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "revenue",
             F.round(F.avg("revenue").over(w), 2).alias("revenue_ma3"),
         )
-        .orderBy("series", "month")
+        .transform(order_result, "series", "month")
     )
 
 
@@ -209,7 +209,7 @@ def q_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey",
         F.round("s_acctbal", 2).alias("acctbal"),
         F.dense_rank().over(w).cast("long").alias("bal_rank"),
-    ).orderBy("nation_key", "bal_rank", "s_suppkey")
+    ).transform(order_result, "nation_key", "bal_rank", "s_suppkey")
 
 
 ORACLE_RANK_DENSE = """
@@ -231,7 +231,7 @@ def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("l_linestatus", ["O", "F"])
         .agg(F.round(F.sum("l_quantity"), 2))
         .withColumnsRenamed({"O": "qty_open", "F": "qty_filled"})
-        .orderBy("l_returnflag")
+        .transform(order_result, "l_returnflag")
     )
 
 
@@ -262,7 +262,7 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
             "measure",
             F.round("val", 2).alias("val"),
         )
-        .orderBy("l_orderkey", "line_no", "measure")
+        .transform(order_result, "l_orderkey", "line_no", "measure")
     )
 
 
@@ -293,7 +293,8 @@ def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.count("*").alias("n_rows"),
         )
-        .orderBy(
+        .transform(
+            order_result,
             F.col("l_returnflag").asc_nulls_first(),
             F.col("l_linestatus").asc_nulls_first(),
         )
@@ -330,7 +331,7 @@ def q_analytic_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.first("o_totalprice").over(wframe), 2).alias("part_min"),
             F.round(F.last("o_totalprice").over(wframe), 2).alias("part_max"),
         )
-        .orderBy("o_orderpriority", "price", "o_orderkey")
+        .transform(order_result, "o_orderpriority", "price", "o_orderkey")
     )
 
 
@@ -464,7 +465,7 @@ def q_rank_global_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("cd"), 6).alias("max_cd"),
             F.round(F.sum("o_totalprice"), 2).alias("tile_value"),
         )
-        .orderBy("o_orderpriority", "tile")
+        .transform(order_result, "o_orderpriority", "tile")
     )
 
 
@@ -538,7 +539,7 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v",
             F.round(F.expr(num) / F.expr(den), 4).alias("ewma"),
         )
-        .orderBy("o_orderpriority", "o_orderdate")
+        .transform(order_result, "o_orderpriority", "o_orderdate")
     )
 
 
@@ -606,7 +607,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("roll_n").cast("long").alias("peak_events_30m"),
             F.round(F.max("roll_v"), 2).alias("peak_value_30m"),
         )
-        .orderBy("user_id")
+        .transform(order_result, "user_id")
     )
 
 

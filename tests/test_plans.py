@@ -1322,3 +1322,48 @@ def test_recall_eval_truth_pass_pre_amplification_repartition(
         plan = I.formatted_plan(df)
         assert not I.has_cartesian_product(df)
         assert re.search(r"hashpartitioning\(id_b", plan), builder.__name__
+
+
+def _root_sort_input(df) -> str:
+    """The operator line directly under the plan's global (root) Sort."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    i = next(i for i, ln in enumerate(lines) if re.search(r"Sort \[.*\], true", ln))
+    return lines[i + 1].strip()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cast_nullsafe",
+        "mode_keying",
+        "rank_dense",
+        "quantiles_exact",
+        "pricing_summary",
+        "suppressed_agg",
+        "join_broadcast_dims",
+        "running_sum",
+        "union_distinct",
+    ],
+)
+def test_final_sort_over_single_partition(spark, sf_dir, name):
+    """A collected result's final sort (io.order_result) sits on a
+    SinglePartition exchange, never a range exchange: a range exchange's
+    RangePartitioner runs a sampling job that re-executes the stage under
+    the sort before the exchange runs it again."""
+    from jp_qcew_spark.queries import all_queries
+
+    df = all_queries()[name](spark, sf_dir)
+    assert _root_sort_input(df).startswith("+- Exchange SinglePartition")
+    assert not re.search(r"rangepartitioning", I.formatted_plan(df), re.I)
+
+
+def test_tick_sample_sort_adds_no_exchange(spark, sf_dir):
+    """tick_sample's sort input is already one partition (its unpartitioned
+    row_number window), so its final sort stays a plain orderBy: no
+    one-partition repartition on top of the window's own exchange."""
+    from jp_qcew_spark.queries.core import q_tick_sample
+
+    df = q_tick_sample(spark, sf_dir)
+    assert not _root_sort_input(df).startswith("+- Exchange")
+    assert "REPARTITION_BY_NUM" not in I.formatted_plan(df)
+    assert I.count_exchanges(df) == 2

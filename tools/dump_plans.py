@@ -14,8 +14,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 HEADLINERS = [
     ("pricing_summary",
      "Flagship aggregate: predicate pushdown into the parquet scan, 7-of-11 "
-     "column pruning, map-side partial aggregation, one agg shuffle + one "
-     "sort shuffle."),
+     "column pruning, map-side partial aggregation, one agg shuffle; the "
+     "reduced result moves to one partition for the final sort, so no "
+     "range-sampling job re-runs the aggregate."),
     ("join_broadcast_dims",
      "Star join: every dimension arrives as BroadcastHashJoin — the fact "
      "table is never shuffled per-dim."),

@@ -1,0 +1,123 @@
+"""Per-query job and stage profile of registry queries, read from Spark's
+status store (which works with ``spark.ui.enabled=false``).
+
+Each query is built and collected once cold, then built and collected
+again under labelled job groups; the warm pair is reported:
+
+    python tools/profile_query.py rank_dense quantiles_exact --sf DIR
+    python tools/profile_query.py --all --sf DIR   # every non-stream query
+
+``DIR`` is a scale-factor directory of the oracle tables (TESTDATA.md).
+
+Columns: warm build jobs, warm collect jobs, completed and skipped
+collect stages, collect tasks, executor run ms of the collect, and the
+collect's wall ms. The counts do not move with box speed; the two ms
+columns do. Output is one Markdown table row per query.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+HEADER = (
+    "| query | build jobs | collect jobs | stages | skipped | tasks "
+    "| run ms | collect ms |\n|---|---|---|---|---|---|---|---|"
+)
+
+
+def _group_counters(spark, group: str) -> dict[str, int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    out = dict(jobs=0, stages=0, skipped=0, tasks=0, run_ms=0)
+    seen: set[int] = set()
+    for job_id in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job_id)
+        if info is None:
+            continue
+        out["jobs"] += 1
+        for sid in info.stageIds:
+            if sid in seen:
+                continue
+            seen.add(sid)
+            st = store.lastStageAttempt(sid)
+            if str(st.status()) == "SKIPPED":
+                out["skipped"] += 1
+                continue
+            out["stages"] += 1
+            out["tasks"] += st.numTasks()
+            out["run_ms"] += st.executorRunTime()
+    return out
+
+
+def profile(spark, name: str, fn, sf_dir: str) -> dict[str, int]:
+    """Warm build and collect counters of one registry query."""
+    sc = spark.sparkContext
+    sc.setJobGroup(f"profile:{name}:cold", name)
+    fn(spark, sf_dir).collect()
+    sc.setJobGroup(f"profile:{name}:build", name)
+    df = fn(spark, sf_dir)
+    sc.setJobGroup(f"profile:{name}:collect", name)
+    t0 = time.perf_counter()
+    df.collect()
+    wall = round((time.perf_counter() - t0) * 1000)
+    rec = _group_counters(spark, f"profile:{name}:collect")
+    rec["build_jobs"] = _group_counters(spark, f"profile:{name}:build")["jobs"]
+    rec["collect_ms"] = wall
+    return rec
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("names", nargs="*", help="registry query names")
+    p.add_argument("--all", action="store_true",
+                   help="every registry query outside the streaming group")
+    p.add_argument("--sf", required=True, metavar="DIR",
+                   help="scale-factor directory of the oracle tables")
+    args = p.parse_args(argv)
+
+    from jp_qcew_spark.queries import all_queries
+    from jp_qcew_spark.session import get_spark
+
+    qs = all_queries()
+    names = list(args.names)
+    if args.all:
+        names += [
+            n for n, fn in qs.items()
+            if fn.__wrapped__.__module__ != "jp_qcew_spark.queries.streaming"
+        ]
+    unknown = [n for n in names if n not in qs]
+    if unknown or not names:
+        p.error(f"unknown query names: {unknown}" if unknown else
+                "name at least one query, or pass --all")
+
+    spark = get_spark(
+        app_name="profile_query",
+        # keep every job and stage of a long sweep in the status store
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.retainedJobs": "1000000",
+            "spark.ui.retainedStages": "1000000",
+        },
+    )
+    print(HEADER, flush=True)
+    for name in names:
+        r = profile(spark, name, qs[name], args.sf)
+        print(
+            f"| {name} | {r['build_jobs']} | {r['jobs']} | {r['stages']} "
+            f"| {r['skipped']} | {r['tasks']} | {r['run_ms']} "
+            f"| {r['collect_ms']} |",
+            flush=True,
+        )
+    spark.stop()
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
