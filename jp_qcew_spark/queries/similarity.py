@@ -25,6 +25,8 @@ table.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -90,6 +92,204 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
+# --------------------------------------------------------------------------
+# Top-k and recall builders. The ANN family's top-k cuts and recall@k
+# evals go through these; each Spark builder has a DuckDB twin that emits
+# the same computation as a CTE.
+# --------------------------------------------------------------------------
+
+
+def _topk(
+    df: DataFrame,
+    keys: list[str],
+    order: Column,
+    k: int,
+    rank: str = "rk",
+    tie: str = "neighbor_id",
+    bigint: bool = False,
+) -> DataFrame:
+    """The top ``k`` rows of ``df`` per ``keys`` under ``order``, ties to
+    the smaller ``tie`` id, numbered 1..k in column ``rank``. ``bigint``
+    emits the rank as BIGINT (a served result column) and cuts on the
+    cast; an internal cut keeps the int row number."""
+    rn = F.row_number().over(
+        Window.partitionBy(*keys).orderBy(order, F.col(tie).asc())
+    )
+    return df.withColumn(rank, rn.cast("long") if bigint else rn).filter(
+        F.col(rank) <= k
+    )
+
+
+def _topk_sql(
+    name: str,
+    src: str,
+    keys: list[str],
+    order: str,
+    k: int,
+    cols: str = "query_id, neighbor_id",
+    rank: str = "rk",
+    tie: str = "neighbor_id",
+) -> str:
+    """CTE ``name(cols)``: the ``_topk`` cut of ``src`` in DuckDB."""
+    return f"""{name} AS (
+  SELECT {cols} FROM (
+    SELECT *, row_number() OVER (
+        PARTITION BY {", ".join(keys)} ORDER BY {order}, {tie} ASC) AS {rank}
+    FROM {src}) WHERE {rank} <= {k})"""
+
+
+def _recall(
+    truth: DataFrame,
+    approx: DataFrame,
+    frame: DataFrame | None = None,
+    keys: Sequence[str] = (),
+    name: str = "recall_at3",
+    per: int | None = None,
+    digits: int = 6,
+    hits: str | None = None,
+) -> DataFrame:
+    """Recall of an approximate top-k against a truth top-k, per group.
+
+    Hits are the (query_id, neighbor_id) rows the two share, counted per
+    ``keys`` and left-joined onto ``frame`` (one row per group), so a
+    group without hits reads 0. With no keys the one global count is
+    cross-joined onto ``frame``, or stands alone as one row when there
+    is no frame. The ratio divides by |truth| (or by ``per``, the
+    per-query evals' k) and rounds to ``digits``. Returns ``frame``'s
+    columns, the hit count as BIGINT ``hits`` when named, and the ratio
+    as ``name``."""
+    h = (
+        approx.join(truth, ["query_id", "neighbor_id"])
+        .groupBy(*keys)
+        .agg(F.count("*").alias("h"))
+    )
+    if keys:
+        out = frame.join(h, list(keys), "left")
+    else:
+        out = h if frame is None else frame.crossJoin(F.broadcast(h))
+    n, den = F.coalesce(F.col("h"), F.lit(0)), per
+    if per is None:
+        tot = truth.agg(F.count("*").alias("ex_total"))
+        out, den = out.crossJoin(F.broadcast(tot)), F.col("ex_total")
+    return out.select(
+        *(frame.columns if frame is not None else []),
+        *([n.cast("long").alias(hits)] if hits else []),
+        F.round(n / den, digits).alias(name),
+    )
+
+
+def _recall_sql(
+    name: str,
+    truth: str,
+    approx: str,
+    frame: str,
+    keys: Sequence[str] = (),
+    col: str = "recall_at3",
+    per: int | None = None,
+    digits: int = 6,
+    hits: str | None = None,
+) -> str:
+    """CTEs ``{name}_h`` and ``name``: ``_recall`` in DuckDB; ``name``
+    carries every column of ``frame`` plus ``hits`` and ``col``."""
+    sel = "".join(f"a.{k}, " for k in keys)
+    group = f"\n  GROUP BY {', '.join(f'a.{k}' for k in keys)}" if keys else ""
+    on = " AND ".join(f"h.{k} = f.{k}" for k in keys)
+    join = (
+        f"LEFT JOIN {name}_h h ON {on}" if keys else f"CROSS JOIN {name}_h h"
+    )
+    n = "COALESCE(h.h, 0)"
+    if per is None:
+        join += f"\n  CROSS JOIN (SELECT count(*) AS ex_total FROM {truth}) x"
+    cnt = f"CAST({n} AS BIGINT) AS {hits}, " if hits else ""
+    return f"""{name}_h AS (
+  SELECT {sel}count(*) AS h
+  FROM {approx} a JOIN {truth} e
+    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id{group}),
+{name} AS (
+  SELECT f.*, {cnt}round({n} / {per or "x.ex_total"}, {digits}) AS {col}
+  FROM {frame} f
+  {join})"""
+
+
+def _truth(vecs: DataFrame, score: Column, order: Column) -> DataFrame:
+    """Exact top-3 of the query slice over ``vecs(vec_id, v)``, self
+    excluded: ``score`` is a named expression of the query vector ``qv``
+    and the candidate ``v``, ranked by ``order``. The query slice is
+    broadcast; the corpus side is one linear pass."""
+    q = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    scored = (
+        F.broadcast(q)
+        .join(vecs, F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), score)
+    )
+    return _topk(scored, ["query_id"], order, 3)
+
+
+def _truth_sql(score: str, desc: bool, src: str = "vecs") -> str:
+    """CTE ``exact3(query_id, neighbor_id)``: ``_truth`` in DuckDB, with
+    ``score`` an expression over ``q.v`` and ``c.v``."""
+    scored = f"""(
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {score} AS s
+    FROM {src} q JOIN {src} c ON c.vec_id <> q.vec_id
+    WHERE q.vec_id < {_N_QUERIES})"""
+    return _topk_sql(
+        "exact3", scored, ["query_id"], f"s {'DESC' if desc else 'ASC'}", 3
+    )
+
+
+def _widen(
+    df: DataFrame, col: str, values: tuple[int, ...], rank: str
+) -> DataFrame:
+    """One copy of each row per swept ``values`` entry ``col`` >= its
+    ``rank``: a row ranked r serves every sweep setting from r up, so one
+    candidate frame feeds the whole sweep. The value table broadcasts."""
+    t = df.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(v) for v in values])).alias(col)
+    )
+    return df.join(F.broadcast(t), F.col(rank) <= F.col(col))
+
+
+def _widen_sql(
+    name: str, src: str, col: str, values: tuple[int, ...], rank: str
+) -> str:
+    """CTE ``name``: ``_widen`` in DuckDB."""
+    t = " UNION ALL ".join(f"SELECT {v} AS {col}" for v in values)
+    return f"""{name} AS (
+  SELECT t.{col}, s.* FROM {src} s JOIN ({t}) t ON s.{rank} <= t.{col})"""
+
+
+def _scan_frac(col: str, n_corpus: int) -> Column:
+    """Scanned pairs over all query × corpus pairs, self excluded: one
+    exact-integer IEEE division, so the rounded value cannot diverge
+    cross-engine."""
+    return F.round(
+        F.col(col) / (F.lit(_N_QUERIES) * F.lit(n_corpus - 1)), 6
+    ).alias("scan_frac")
+
+
+def _scan_frac_sql(col: str) -> str:
+    """``_scan_frac`` in DuckDB."""
+    return (
+        f"round({col} / ({_N_QUERIES} * ((SELECT count(*) FROM vecs) - 1)),"
+        " 6) AS scan_frac"
+    )
+
+
+def _served_sql(
+    src: str, score: str = "score", desc: bool = True, k: int = 3
+) -> str:
+    """The tail of a served-tier oracle: the top-``k`` of a
+    ``src(query_id, neighbor_id, score)`` CTE with its BIGINT ``rank``,
+    in result order."""
+    return f"""{_topk_sql(
+        "ranked", src, ["query_id"], f"{score} {'DESC' if desc else 'ASC'}",
+        k, f"query_id, neighbor_id, {score}, rank", rank="rank",
+    )}
+SELECT * FROM ranked ORDER BY query_id, rank"""
+
+
 def _knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for the first 10 vectors (self excluded).
 
@@ -109,12 +309,9 @@ def _knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 5, "rank",
+        bigint=True,
     )
 
 
@@ -131,13 +328,8 @@ scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          {_COS_SQL} AS score
   FROM q JOIN vecs c ON c.vec_id <> q.query_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
+),
+{_served_sql("scored", k=5)}
 """
 
 
@@ -178,12 +370,9 @@ def _knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 3, "rank",
+        bigint=True,
     )
 
 
@@ -217,13 +406,8 @@ scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          {_COS_SQL} AS score
   FROM q JOIN vecs c ON c.bucket = q.qbucket AND c.vec_id <> q.query_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+),
+{_served_sql("scored")}
 """
 
 
@@ -478,14 +662,10 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .transform(order_result, "query_id", "rank")
-    )
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 3, "rank",
+        bigint=True,
+    ).transform(order_result, "query_id", "rank")
 
 
 ORACLE_KNN_IVF = f"""
@@ -500,13 +680,8 @@ scored AS (
             * sqrt(list_sum(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2])))), 6)
            AS score
   FROM q JOIN assigned c ON c.cell = q.qcell AND c.vec_id <> q.query_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+),
+{_served_sql("scored")}
 """
 
 
@@ -870,14 +1045,10 @@ def q_knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .transform(order_result, "query_id", "rank")
-    )
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 3, "rank",
+        bigint=True,
+    ).transform(order_result, "query_id", "rank")
 
 
 _GATE_SQL = r"""
@@ -914,13 +1085,8 @@ scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          {_COS_SQL} AS score
   FROM q JOIN vecs c ON c.vec_id <> q.query_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+),
+{_served_sql("scored")}
 """
 
 QUERIES["knn_hybrid"] = q_knn_hybrid
@@ -976,14 +1142,10 @@ def q_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .transform(order_result, "query_id", "rank")
-    )
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 3, "rank",
+        bigint=True,
+    ).transform(order_result, "query_id", "rank")
 
 
 def _oracle_multiprobe() -> str:
@@ -1028,13 +1190,8 @@ scored AS (
            AS score
   FROM probes p JOIN vecs c
     ON c.bucket = p.probe_bucket AND c.vec_id <> p.query_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+),
+{_served_sql("scored")}
 """
 
 
@@ -1503,6 +1660,64 @@ def _pq_qlut(sub: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
+def _adc(
+    codes: DataFrame, lut: DataFrame, on: Column | None = None
+) -> DataFrame:
+    """Asymmetric-distance scan (query_id, neighbor_id, adc_d2): the code
+    table joins the broadcast query LUT on (m, code) and sums the
+    per-subspace distances per (query, vector), self excluded. ``on`` is
+    an extra join condition, the IVF cell restriction."""
+    ne = F.col("vec_id") != F.col("query_id")
+    return (
+        codes.join(F.broadcast(lut), ["m", "code"])
+        .filter(ne if on is None else on & ne)
+        .groupBy("query_id", "vec_id")
+        .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
+        .withColumnRenamed("vec_id", "neighbor_id")
+    )
+
+
+def _adc_sql(name: str, codes: str, lut: str, on: str | None = None) -> str:
+    """CTE ``name(query_id, neighbor_id, adc_d2)``: ``_adc`` in DuckDB
+    (``codes`` aliased ``c``, ``lut`` aliased ``q`` in ``on``)."""
+    cond = f" AND {on}" if on else ""
+    return f"""{name} AS (
+  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
+  FROM {codes} c JOIN {lut} q ON q.m = c.m AND q.code = c.code
+  WHERE c.vec_id <> q.query_id{cond}
+  GROUP BY 1, 2)"""
+
+
+def _with_cells(
+    codes: DataFrame, lut: DataFrame, cells: DataFrame
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The nprobe=1 IVF restriction: each code row tagged with its
+    vector's ``cell``, each query's LUT rows with its home ``qcell`` (a
+    bounded broadcast), and the ``_adc`` join condition over the two."""
+    qcells = cells.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
+    )
+    return (
+        codes.join(cells, "vec_id"),
+        lut.join(F.broadcast(qcells), "query_id"),
+        F.col("cell") == F.col("qcell"),
+    )
+
+
+def _with_cells_sql(p: str) -> str:
+    """CTEs ``{p}_codesc`` and ``{p}_qlutc``: ``_with_cells`` in DuckDB
+    over ``{p}_codes``, ``{p}_qlut`` and ``assigned``."""
+    return f"""{p}_codesc AS (
+  SELECT c.vec_id, a.cell, c.m, c.code
+  FROM {p}_codes c JOIN assigned a ON a.vec_id = c.vec_id),
+{p}_qlutc AS (
+  SELECT q.query_id, a.cell AS qcell, q.m, q.code, q.qd2
+  FROM {p}_qlut q JOIN assigned a ON a.vec_id = q.query_id)"""
+
+
+_IN_CELL_SQL = "c.cell = q.qcell"
+
+
 def _pq_dims(src: DataFrame) -> DataFrame:
     """(vec_id, pos, x) coordinate stream — the pivot input shared by the
     OPQ-lite assignment trainer and the subvector builders."""
@@ -1588,10 +1803,11 @@ def _pq_opq_map_t(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_sub_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SERVED subvector stream: OPQ-lite balanced assignment over
-    the raw corpus. One construction shared by ``knn_pq_adc`` and
-    ``knn_ivfpq`` (identical analyzed plans → the scoped cache dedupes
-    the codebook training when ``knn_pq_recall_eval`` runs both); the
-    assignment map is the promoted artifact (``_pq_opq_map_t``)."""
+    the raw corpus. One construction shared by ``knn_pq_adc``,
+    ``knn_ivfpq`` and the codebook trainer (``_pq_codebook_t``), so
+    every served tier encodes the stream its promoted codebook was
+    trained on; the assignment map is the promoted artifact
+    (``_pq_opq_map_t``)."""
     vecs = _vecs(spark, sf_dir).select("vec_id", "v")
     return _pq_sub_pivot(vecs, _pq_opq_map_t(spark, sf_dir))
 
@@ -1621,25 +1837,11 @@ def _pq_exact3_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, neighbor_id, d2); evals that need ids only project."""
 
     def build() -> DataFrame:
-        vecs = _vecs(spark, sf_dir).select("vec_id", "v")
-        q = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-        we = Window.partitionBy("query_id").orderBy(
-            F.col("d2").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            F.broadcast(q)
-            .join(vecs, F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.round(S.l2sq(F.col("qv"), F.col("v")), 6).alias("d2"),
-            )
-            .withColumn("rk", F.row_number().over(we))
-            .filter(F.col("rk") <= 3)
-            .select("query_id", "neighbor_id", "d2")
-        )
+        return _truth(
+            _vecs(spark, sf_dir).select("vec_id", "v"),
+            F.round(S.l2sq(F.col("qv"), F.col("v")), 6).alias("d2"),
+            F.col("d2").asc(),
+        ).select("query_id", "neighbor_id", "d2")
 
     return _trained(spark, sf_dir, "pq_exact3", build)
 
@@ -1701,34 +1903,17 @@ def _knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the adjacent identity pairing at identical scan cost —
     ``knn_pq_opq_eval`` is the pricing harness and keeps the identity
     counterfactual measured), built on the same construction as
-    ``knn_ivfpq``'s, so when ``knn_pq_recall_eval`` runs BOTH tiers
-    under one query scope the scoped cache dedupes the (identical)
-    codebook training between them instead of training twice. (Both
-    tiers train on RAW vectors; the residual-training alternative is
-    priced — and measured recall-negative on this corpus — by
-    ``knn_pq_residual_eval``.)
+    ``knn_ivfpq``'s; both tiers serve the promoted ``_pq_codebook_t``,
+    so when ``knn_pq_recall_eval`` runs BOTH tiers the codebook is
+    trained once per process. (Both tiers train on RAW vectors; the
+    residual-training alternative is priced — and measured
+    recall-negative on this corpus — by ``knn_pq_residual_eval``.)
     """
     sub = _pq_sub_opq(spark, sf_dir)
     cb = _pq_codebook_t(spark, sf_dir)
-    enc = _pq_encode(sub, cb)
-    qlut = _pq_qlut(sub, cb)
-    adc = (
-        enc.join(F.broadcast(qlut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_d2",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
+    adc = _adc(_pq_encode(sub, cb), _pq_qlut(sub, cb))
+    return _topk(
+        adc, ["query_id"], F.col("adc_d2").asc(), 3, "rank", bigint=True
     )
 
 
@@ -1738,53 +1923,27 @@ def q_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_result(_knn_pq_adc(spark, sf_dir), "query_id", "rank")
 
 
-def _pq_train_sql(
-    vecs: str = "vecs",
-    prefix: str = "pq",
-    with_d2: bool = False,
-    sub: str | None = None,
-) -> str:
+def _pq_train_sql(sub: str, prefix: str = "pq") -> str:
     """CTE chain (appended after a ``vecs(vec_id, v)`` CTE) that replays
-    ``_pq_codebook`` + ``_pq_encode`` + ``_pq_qlut`` exactly: stride
-    ``{prefix}_st``, subvector stream ``{prefix}_sub``, training sample
-    ``{prefix}_tr``, seeds ``{prefix}_cb0``, Lloyd iterations
+    ``_pq_codebook`` + ``_pq_encode`` + ``_pq_qlut`` exactly over the
+    subvector CTE ``sub(vec_id, m, x1, x2)``: stride ``{prefix}_st``
+    (from the corpus count), training sample ``{prefix}_tr``, seeds
+    ``{prefix}_cb0``, Lloyd iterations
     ``{prefix}_b{{i}}``/``{prefix}_m{{i}}``/``{prefix}_cb{{i}}``, then
-    ``{prefix}_cb``, ``{prefix}_codes(vec_id, m, code)`` and
-    ``{prefix}_qlut(query_id, m, code, qd2)``. Defaults emit the exact
-    chain the r12-verified knn_pq_adc / knn_ivfpq oracles carry; a
-    non-default ``prefix`` lets TWO chains (e.g. raw + residual,
-    ``knn_pq_residual_eval``) coexist in one statement, and ``with_d2``
-    adds the winning codeword's squared distance to ``{prefix}_codes``
-    — the per-subvector reconstruction error the distortion eval
-    aggregates. ``sub`` names a PREBUILT subvector CTE
-    ``(vec_id, m, x1, x2)`` to train/encode from (the OPQ-lite eval's
-    permuted streams); default None emits the ``{prefix}_sub``
-    projection from ``vecs`` exactly as the r12-verified chain."""
+    ``{prefix}_cb``, ``{prefix}_codes(vec_id, m, code, d2)`` (``d2`` is
+    the winning codeword's squared distance, the per-subvector
+    reconstruction error) and ``{prefix}_qlut(query_id, m, code, qd2)``.
+    Distinct prefixes let several chains coexist in one statement."""
     p = prefix
     d2 = (
         "(t.x1 - c.c1) * (t.x1 - c.c1)"
         " + (t.x2 - c.c2) * (t.x2 - c.c2)"
     )
-    # with_d2=False emits the inner select BYTE-identical to the
-    # r12-verified chain (no dead d2 projection) so unchanged consumers'
-    # oracle texts don't churn under the evidence policy
-    codes_d2 = ", d2" if with_d2 else ""
-    inner_d2 = f"{d2} AS d2, " if with_d2 else ""
-    sub_name = sub or f"{p}_sub"
-    sub_cte = (
-        ""
-        if sub
-        else f"""{p}_sub AS (
-  SELECT vec_id, m,
-         v[{_PQ_SUBDIM} * m + 1] AS x1, v[{_PQ_SUBDIM} * m + 2] AS x2
-  FROM {vecs} CROSS JOIN range(0, {_PQ_M}) t(m)),
-"""
-    )
     parts = [
         f"""{p}_st AS (
   SELECT greatest(1, CAST(floor(count(*) / {_PQ_TRAIN_CAP}.0) AS BIGINT)) AS s
-  FROM {vecs}),
-{sub_cte}{p}_tr AS (SELECT * FROM {sub_name} WHERE vec_id % (SELECT s FROM {p}_st) = 0),
+  FROM vecs),
+{p}_tr AS (SELECT * FROM {sub} WHERE vec_id % (SELECT s FROM {p}_st) = 0),
 {p}_cb0 AS (
   SELECT m, CAST(rn - 1 AS BIGINT) AS code,
          round(x1, 6) AS c1, round(x2, 6) AS c2
@@ -1811,37 +1970,29 @@ def _pq_train_sql(
     parts.append(
         f"""{p}_cb AS (SELECT m, code, c1, c2 FROM {prev}),
 {p}_codes AS (
-  SELECT vec_id, m, code{codes_d2} FROM (
-    SELECT t.vec_id, t.m, c.code, {inner_d2}row_number() OVER (
+  SELECT vec_id, m, code, d2 FROM (
+    SELECT t.vec_id, t.m, c.code, {d2} AS d2, row_number() OVER (
         PARTITION BY t.vec_id, t.m ORDER BY {d2} ASC, c.code ASC) AS rn
-    FROM {sub_name} t JOIN {p}_cb c ON c.m = t.m) WHERE rn = 1),
+    FROM {sub} t JOIN {p}_cb c ON c.m = t.m) WHERE rn = 1),
 {p}_qlut AS (
   SELECT t.vec_id AS query_id, t.m, c.code, round({d2}, 6) AS qd2
-  FROM {sub_name} t JOIN {p}_cb c ON c.m = t.m
+  FROM {sub} t JOIN {p}_cb c ON c.m = t.m
   WHERE t.vec_id < {_N_QUERIES})"""
     )
     return ",\n".join(parts)
 
 
+# The served PQ chain after a ``vecs`` CTE: OPQ-lite map, subvector
+# pivot, codebook training, ``pq_codes`` and ``pq_qlut``.
+_PQ_SERVED_SQL = f"""{_pq_opq_map_sql()},
+{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
+{_pq_train_sql("pq_subp")}"""
+
 ORACLE_KNN_PQ_ADC = f"""
 WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_pq_opq_map_sql()},
-{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
-{_pq_train_sql(sub="pq_subp")},
-adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM pq_codes c JOIN pq_qlut q ON q.m = c.m AND q.code = c.code
-  WHERE c.vec_id <> q.query_id
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS BIGINT)
-    AS rank
-  FROM adc
-)
-SELECT query_id, neighbor_id, adc_d2, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+{_PQ_SERVED_SQL},
+{_adc_sql("adc", "pq_codes", "pq_qlut")},
+{_served_sql("adc", "adc_d2", False)}
 """
 
 
@@ -1887,42 +2038,27 @@ def _knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     The PQ stream builds from the RAW scan and the cell map joins onto
     the code table afterwards (one vec_id-keyed equi-join of two compact
     corpus-linear frames, co-partitionable at scale) — mirroring the
-    oracle's CTE shape. The earlier draft threaded ``cell`` through the
-    subvector stream instead, which stacked the whole PQ training chain
-    on top of the coarse-quantizer cache: every codebook superstep job
-    then re-walked the coarse chain, measured 6.8 s vs 3.3 s warm at
-    sf0.1 for identical results.
+    oracle's CTE shape.
     """
+    adc = _ivfpq_adc(spark, sf_dir)
+    return _topk(
+        adc, ["query_id"], F.col("adc_d2").asc(), 3, "rank", bigint=True
+    )
+
+
+def _ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The served IVFADC scan, untruncated: every in-cell candidate of
+    each query with its ADC distance. ``knn_ivfpq`` cuts it to top-3;
+    the refine stage (``_ivfpq_refine``) to a top-R shortlist."""
     _cent, assigned = _ivf_cells(spark, sf_dir)
-    cells = assigned.select("vec_id", "cell")
     sub = _pq_sub_opq(spark, sf_dir)
     cb = _pq_codebook_t(spark, sf_dir)
-    codes = _pq_encode(sub, cb).join(cells, "vec_id")
-    qcells = cells.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
+    codes, qlut, in_cell = _with_cells(
+        _pq_encode(sub, cb),
+        _pq_qlut(sub, cb),
+        assigned.select("vec_id", "cell"),
     )
-    qlut = _pq_qlut(sub, cb).join(F.broadcast(qcells), "query_id")
-    adc = (
-        codes.join(F.broadcast(qlut), ["m", "code"])
-        .filter(
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id"))
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_d2",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    return _adc(codes, qlut, in_cell)
 
 
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1931,34 +2067,18 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_result(_knn_ivfpq(spark, sf_dir), "query_id", "rank")
 
 
-ORACLE_KNN_IVFPQ = f"""
-WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+# ``_ivfpq_adc`` in DuckDB: the CTE chain up to the cell-restricted
+# ``adc(query_id, neighbor_id, adc_d2)``.
+_IVFPQ_ADC_SQL = f"""vecs AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 {_ivf_train_sql()},
-{_pq_opq_map_sql()},
-{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
-{_pq_train_sql(sub="pq_subp")},
-codes AS (
-  SELECT c.vec_id, a.cell, c.m, c.code
-  FROM pq_codes c JOIN assigned a ON a.vec_id = c.vec_id
-),
-qlut AS (
-  SELECT q.query_id, a.cell AS qcell, q.m, q.code, q.qd2
-  FROM pq_qlut q JOIN assigned a ON a.vec_id = q.query_id
-),
-adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM codes c JOIN qlut q ON q.m = c.m AND q.code = c.code
-  WHERE c.cell = q.qcell AND c.vec_id <> q.query_id
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS BIGINT)
-    AS rank
-  FROM adc
-)
-SELECT query_id, neighbor_id, adc_d2, rank
-FROM ranked WHERE rank <= 3 ORDER BY query_id, rank
+{_PQ_SERVED_SQL},
+{_with_cells_sql("pq")},
+{_adc_sql("adc", "pq_codesc", "pq_qlutc", _IN_CELL_SQL)}"""
+
+ORACLE_KNN_IVFPQ = f"""
+WITH {_IVFPQ_ADC_SQL},
+{_served_sql("adc", "adc_d2", False)}
 """
 
 
@@ -2164,12 +2284,9 @@ def _banded_topk(
             .groupBy("query_id", "neighbor_id")
             .agg(F.max("score").alias("score"))
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
+    return _topk(
+        scored, ["query_id"], F.col("score").desc(), 3, "rank",
+        bigint=True,
     )
 
 
@@ -2189,14 +2306,7 @@ qscored AS (
   JOIN raw a ON a.vec_id = qc.query_id
   JOIN raw b ON b.vec_id = qc.neighbor_id
 ),
-qranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS BIGINT)
-      AS rank
-  FROM qscored
-)
-SELECT query_id, neighbor_id, score, rank
-FROM qranked WHERE rank <= 3 ORDER BY query_id, rank
+{_served_sql("qscored")}
 """
 
 
@@ -2235,55 +2345,29 @@ def q_knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bnd = _banded_topk(spark, sf_dir, _lsh_cfg, S.sign_bands).select(
         "query_id", "neighbor_id"
     )
-
-    def _hits(approx: DataFrame, col: str) -> DataFrame:
-        return (
-            bf.join(approx, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count("*").alias(col))
-        )
-
-    per_q = (
-        bf.select("query_id")
-        .distinct()
-        .join(_hits(ann, "h1"), "query_id", "left")
-        .join(_hits(bnd, "h2"), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("h1", F.lit(0)).cast("long").alias("n_hits"),
-            F.coalesce("h2", F.lit(0)).cast("long").alias("n_hits_banded"),
-        )
-        .withColumn("recall_at_3", F.round(F.col("n_hits") / 3.0, 4))
-        .withColumn(
-            "recall_banded_at_3", F.round(F.col("n_hits_banded") / 3.0, 4)
-        )
-    )
-    return per_q.transform(order_result, "query_id")
+    per_q = bf.select("query_id").distinct()
+    for approx, name, hits in (
+        (ann, "recall_at_3", "n_hits"),
+        (bnd, "recall_banded_at_3", "n_hits_banded"),
+    ):
+        per_q = _recall(bf, approx, per_q, ["query_id"], name, 3, 4, hits)
+    return per_q.select(
+        "query_id", "n_hits", "n_hits_banded", "recall_at_3",
+        "recall_banded_at_3",
+    ).transform(order_result, "query_id")
 
 
 ORACLE_KNN_RECALL = f"""
 WITH bf AS ({ORACLE_KNN_BRUTEFORCE}),
 ann AS ({_oracle_signlsh()}),
 bnd AS ({_oracle_knn_banded()}),
-hits AS (
-  SELECT bf.query_id, count(*) AS n_hits
-  FROM bf JOIN ann USING (query_id, neighbor_id)
-  GROUP BY bf.query_id
-),
-hits_b AS (
-  SELECT bf.query_id, count(*) AS n_hits
-  FROM bf JOIN bnd USING (query_id, neighbor_id)
-  GROUP BY bf.query_id
-)
-SELECT q.query_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(COALESCE(hb.n_hits, 0) AS BIGINT) AS n_hits_banded,
-       round(COALESCE(h.n_hits, 0) / 3.0, 4) AS recall_at_3,
-       round(COALESCE(hb.n_hits, 0) / 3.0, 4) AS recall_banded_at_3
-FROM (SELECT DISTINCT query_id FROM bf) q
-LEFT JOIN hits h USING (query_id)
-LEFT JOIN hits_b hb USING (query_id)
-ORDER BY q.query_id
+qs AS (SELECT DISTINCT query_id FROM bf),
+{_recall_sql("r1", "bf", "ann", "qs", ["query_id"], "recall_at_3", 3, 4,
+             "n_hits")},
+{_recall_sql("r2", "bf", "bnd", "r1", ["query_id"], "recall_banded_at_3", 3,
+             4, "n_hits_banded")}
+SELECT query_id, n_hits, n_hits_banded, recall_at_3, recall_banded_at_3
+FROM r2 ORDER BY query_id
 """
 
 QUERIES["knn_recall_eval"] = q_knn_recall_eval
@@ -2938,24 +3022,10 @@ def q_knn_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     rp = _banded_topk(spark, sf_dir, _lsh_cfg_rp, S.rp_bands).select(
         "query_id", "neighbor_id"
     )
-    hits = (
-        bf.join(rp, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("h", F.lit(0)).cast("long").alias("n_hits_rp"),
-            F.round(F.coalesce("h", F.lit(0)) / 3.0, 4).alias(
-                "recall_rp_at_3"
-            ),
-        )
-        .transform(order_result, "query_id")
-    )
+    return _recall(
+        bf, rp, bf.select("query_id").distinct(), ["query_id"],
+        "recall_rp_at_3", 3, 4, "n_hits_rp",
+    ).transform(order_result, "query_id")
 
 
 ORACLE_KNN_RECALL_RP = f"""
@@ -2974,25 +3044,11 @@ qscored AS (
   JOIN raw a ON a.vec_id = qc.query_id
   JOIN raw b ON b.vec_id = qc.neighbor_id
 ),
-qranked AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-  FROM qscored
-),
-rp AS (
-  SELECT query_id, neighbor_id FROM qranked WHERE rank <= 3
-),
-hits AS (
-  SELECT bf.query_id, count(*) AS h
-  FROM bf JOIN rp USING (query_id, neighbor_id)
-  GROUP BY bf.query_id
-)
-SELECT q.query_id,
-       CAST(COALESCE(h.h, 0) AS BIGINT) AS n_hits_rp,
-       round(COALESCE(h.h, 0) / 3.0, 4) AS recall_rp_at_3
-FROM (SELECT DISTINCT query_id FROM bf) q
-LEFT JOIN hits h USING (query_id)
-ORDER BY q.query_id
+{_topk_sql("rp", "qscored", ["query_id"], "score DESC", 3)},
+qs AS (SELECT DISTINCT query_id FROM bf),
+{_recall_sql("rec", "bf", "rp", "qs", ["query_id"], "recall_rp_at_3", 3, 4,
+             "n_hits_rp")}
+SELECT * FROM rec ORDER BY query_id
 """
 
 QUERIES["knn_recall_rp"] = q_knn_recall_rp
@@ -3686,27 +3742,7 @@ def q_knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned-volume aggregate."""
     n_corpus = metadata_row_count(spark, sf_dir, "embeddings")
     cent, assigned = _ivf_cells(spark, sf_dir)
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    # per-query cell ranking over the (tiny, broadcast) centroid set
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cscore").desc(), F.col("clabel").asc()
-    )
-    qcells = (
-        q.join(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            "clabel",
-            S.cosine(F.col("qv"), F.col("cv")).alias("cscore"),
-        )
-        .withColumn("cellrank", F.row_number().over(wq))
-        .filter(F.col("cellrank") <= max(_IVF_CURVE_NPROBES))
-        .select(
-            "query_id", "qv", F.col("clabel").alias("qcell"), "cellrank"
-        )
-    )
+    qcells = _probe_cells(assigned, cent)
     # candidates: query side broadcast (bounded by _N_QUERIES x nprobe),
     # corpus side keyed by cell. Each vector lives in exactly ONE cell,
     # so (query_id, neighbor_id) pairs are distinct by construction.
@@ -3724,140 +3760,100 @@ def q_knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine(F.col("qv"), F.col("v")).alias("score"),
         )
     )
-    cand = track_cache(cand)
-    probes = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p) for p in _IVF_CURVE_NPROBES])
-        ).alias("nprobe")
-    )
-    # widening join: a candidate at cellrank k serves every nprobe >= k
-    pc = cand.join(
-        F.broadcast(probes), F.col("cellrank") <= F.col("nprobe")
-    )
-    wt = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    ivf3 = (
-        pc.withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= 3)
-        .select("nprobe", "query_id", "neighbor_id")
-    )
-    scanned = pc.groupBy("nprobe").agg(
-        F.count("*").alias("total_scanned")
-    )
     # exact truth: |slice| x n brute force over the same assigned frame
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+    truth = _truth(
+        assigned,
+        S.cosine(F.col("qv"), F.col("v")).alias("score"),
+        F.col("score").desc(),
     )
-    exact3 = (
-        F.broadcast(q)
-        .join(assigned, F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("v")).alias("score"),
-        )
-        .withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "neighbor_id")
+    return _probe_curve(
+        track_cache(cand), F.col("score").desc(), truth, n_corpus
     )
-    hits = (
-        ivf3.join(exact3, ["query_id", "neighbor_id"])
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("h"))
+
+
+def _probe_cells(assigned: DataFrame, cent: DataFrame) -> DataFrame:
+    """Each query's ``max(_IVF_CURVE_NPROBES)`` nearest cells
+    (query_id, qv, qcell, cellrank) by cosine against the bounded,
+    broadcast centroid set, ties to the smaller cell id."""
+    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    tot = exact3.agg(F.count("*").alias("ex_total"))
-    # both ratios are single IEEE divisions of exact integers, so the
-    # rounded values cannot diverge cross-engine (and neither
-    # denominator family can land a 6-dp rounding midpoint: k/(3*_N_Q)
-    # and k/(_N_Q*(n-1)) reduce to on-grid decimals whenever they
-    # terminate)
+    scored = q.join(F.broadcast(cent)).select(
+        "query_id",
+        "qv",
+        "clabel",
+        S.cosine(F.col("qv"), F.col("cv")).alias("cscore"),
+    )
+    return _topk(
+        scored,
+        ["query_id"],
+        F.col("cscore").desc(),
+        max(_IVF_CURVE_NPROBES),
+        "cellrank",
+        "clabel",
+    ).select("query_id", "qv", F.col("clabel").alias("qcell"), "cellrank")
+
+
+def _probe_curve(
+    cand: DataFrame, order: Column, truth: DataFrame, n_corpus: int
+) -> DataFrame:
+    """One (nprobe, recall_at3, scan_frac) row per ``_IVF_CURVE_NPROBES``
+    entry from the candidates of the probed cells (query_id, cellrank,
+    neighbor_id, score columns): a candidate in the query's r-th cell
+    serves every nprobe >= r; top-3 per (nprobe, query) under ``order``
+    against ``truth``, scan fraction from the candidate count."""
+    pc = _widen(cand, "nprobe", _IVF_CURVE_NPROBES, "cellrank")
+    top3 = _topk(pc, ["nprobe", "query_id"], order, 3).select(
+        "nprobe", "query_id", "neighbor_id"
+    )
+    scanned = pc.groupBy("nprobe").agg(F.count("*").alias("total_scanned"))
     return (
-        scanned.join(hits, "nprobe", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "nprobe",
-            F.round(
-                F.coalesce(F.col("h"), F.lit(0)) / F.col("ex_total"), 6
-            ).alias("recall_at3"),
-            F.round(
-                F.col("total_scanned")
-                / (F.lit(_N_QUERIES) * F.lit(n_corpus - 1)),
-                6,
-            ).alias("scan_frac"),
-        )
+        _recall(truth, top3, scanned, ["nprobe"])
+        .select("nprobe", "recall_at3", _scan_frac("total_scanned", n_corpus))
         .transform(order_result, "nprobe")
     )
 
 
-_IVF_CURVE_PROBES_SQL = " UNION ALL ".join(
-    f"SELECT {p} AS nprobe" for p in _IVF_CURVE_NPROBES
-)
-
-ORACLE_KNN_IVF_CURVE = f"""
-WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_ivf_train_sql()},
-q AS (SELECT vec_id AS query_id, v AS qv FROM assigned
+# ``_probe_cells`` in DuckDB, over the ``assigned`` and ``cent`` CTEs
+_PROBE_CELLS_SQL = f"""q AS (SELECT vec_id AS query_id, v AS qv FROM assigned
       WHERE vec_id < {_N_QUERIES}),
 qcell_scored AS (
   SELECT q.query_id, q.qv, cent.clabel,
          {_cos_sql("q.qv", "cent.cv")} AS cscore
   FROM q CROSS JOIN cent
 ),
-qcells AS (
-  SELECT query_id, qv, clabel AS qcell, cellrank FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cscore DESC, clabel ASC) AS cellrank
-    FROM qcell_scored
-  ) WHERE cellrank <= {max(_IVF_CURVE_NPROBES)}
-),
+{_topk_sql(
+    "qcells", "qcell_scored", ["query_id"], "cscore DESC",
+    max(_IVF_CURVE_NPROBES), "query_id, qv, clabel AS qcell, cellrank",
+    rank="cellrank", tie="clabel",
+)}"""
+
+
+def _probe_curve_sql(cand: str, order: str) -> str:
+    """``_probe_curve`` in DuckDB: the CTE tail and final SELECT after a
+    statement that defines ``cand``, ``exact3`` and ``vecs``."""
+    pc = _widen_sql("pc", cand, "nprobe", _IVF_CURVE_NPROBES, "cellrank")
+    return f"""{pc},
+{_topk_sql("top3", "pc", ["nprobe", "query_id"], order, 3,
+           "nprobe, query_id, neighbor_id")},
+scanned AS (SELECT nprobe, count(*) AS total_scanned FROM pc GROUP BY 1),
+{_recall_sql("rec", "exact3", "top3", "scanned", ["nprobe"])}
+SELECT nprobe, recall_at3, {_scan_frac_sql("total_scanned")}
+FROM rec ORDER BY nprobe"""
+
+
+ORACLE_KNN_IVF_CURVE = f"""
+WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+{_ivf_train_sql()},
+{_PROBE_CELLS_SQL},
 cand AS (
   SELECT qc.query_id, qc.cellrank, a.vec_id AS neighbor_id,
          {_cos_sql("qc.qv", "a.v")} AS score
   FROM qcells qc JOIN assigned a
     ON a.cell = qc.qcell AND a.vec_id <> qc.query_id
 ),
-probes AS ({_IVF_CURVE_PROBES_SQL}),
-pc AS (
-  SELECT p.nprobe, c.query_id, c.neighbor_id, c.score
-  FROM cand c JOIN probes p ON c.cellrank <= p.nprobe
-),
-ivf3 AS (
-  SELECT nprobe, query_id, neighbor_id FROM (
-    SELECT nprobe, query_id, neighbor_id, row_number() OVER (
-        PARTITION BY nprobe, query_id
-        ORDER BY score DESC, neighbor_id ASC) AS rk
-    FROM pc
-  ) WHERE rk <= 3
-),
-scanned AS (SELECT nprobe, count(*) AS total_scanned FROM pc GROUP BY 1),
-exact_scored AS (
-  SELECT q.query_id, a.vec_id AS neighbor_id,
-         {_cos_sql("q.qv", "a.v")} AS score
-  FROM q JOIN assigned a ON a.vec_id <> q.query_id
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
-hits AS (
-  SELECT i.nprobe, count(*) AS h
-  FROM ivf3 i JOIN exact3 e
-    ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-  GROUP BY 1
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3),
-nn AS (SELECT count(*) AS n FROM vecs)
-SELECT s.nprobe,
-       round(COALESCE(h.h, 0) / t.ex_total, 6) AS recall_at3,
-       round(s.total_scanned / ({_N_QUERIES} * (nn.n - 1)), 6) AS scan_frac
-FROM scanned s
-LEFT JOIN hits h ON h.nprobe = s.nprobe
-CROSS JOIN tot t CROSS JOIN nn
-ORDER BY s.nprobe
+{_truth_sql(_cos_sql("q.v", "c.v"), True, "assigned")},
+{_probe_curve_sql("cand", "score DESC")}
 """
 
 QUERIES["knn_ivf_recall_curve"] = q_knn_ivf_recall_curve
@@ -3895,25 +3891,12 @@ def q_knn_ivf_nlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     swept nlist."""
     n_corpus = metadata_row_count(spark, sf_dir, "embeddings")
     vecs = _vecs(spark, sf_dir).select("vec_id", "v")
-    q = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    exact3 = track_cache(
-        F.broadcast(q)
-        .join(vecs, F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("v")).alias("score"),
+    score = S.cosine(F.col("qv"), F.col("v")).alias("score")
+    truth = track_cache(
+        _truth(vecs, score, F.col("score").desc()).select(
+            "query_id", "neighbor_id"
         )
-        .withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "neighbor_id")
     )
-    tot = exact3.agg(F.count("*").alias("ex_total"))
     rows = []
     for k in _IVF_NLIST_SWEEP:
         _cent, assigned = _ivf_train(vecs, k)
@@ -3930,32 +3913,17 @@ def q_knn_ivf_nlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("vec_id") != F.col("query_id")),
             )
             .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                S.cosine(F.col("qv"), F.col("v")).alias("score"),
+                "query_id", F.col("vec_id").alias("neighbor_id"), score
             )
         )
-        top3 = (
-            cand.withColumn("rk", F.row_number().over(we))
-            .filter(F.col("rk") <= 3)
-            .select("query_id", "neighbor_id")
-        )
-        hits = top3.join(exact3, ["query_id", "neighbor_id"]).agg(
-            F.count("*").alias("h")
-        )
-        scanned = cand.agg(F.count("*").alias("sc"))
+        top3 = _topk(cand, ["query_id"], F.col("score").desc(), 3)
         rows.append(
-            hits.crossJoin(F.broadcast(scanned))
-            .crossJoin(F.broadcast(tot))
+            _recall(truth, top3)
+            .crossJoin(F.broadcast(cand.agg(F.count("*").alias("sc"))))
             .select(
                 F.lit(k).cast("long").alias("nlist"),
-                F.round(F.col("h") / F.col("ex_total"), 6).alias(
-                    "recall_at3"
-                ),
-                F.round(
-                    F.col("sc") / (F.lit(_N_QUERIES) * F.lit(n_corpus - 1)),
-                    6,
-                ).alias("scan_frac"),
+                "recall_at3",
+                _scan_frac("sc", n_corpus),
             )
         )
     out = rows[0]
@@ -3972,14 +3940,9 @@ def _oracle_nlist_sweep() -> str:
         for k in _IVF_NLIST_SWEEP
     )
     per_k = "\nUNION ALL\n".join(
-        f"""SELECT CAST({k} AS BIGINT) AS nlist,
-       round((SELECT count(*) FROM top3_{k} t
-              JOIN exact3 e ON e.query_id = t.query_id
-               AND e.neighbor_id = t.neighbor_id)
-             / (SELECT count(*) FROM exact3), 6) AS recall_at3,
-       round((SELECT count(*) FROM cand_{k})
-             / ({_N_QUERIES} * ((SELECT count(*) FROM vecs) - 1)), 6)
-         AS scan_frac"""
+        f"""SELECT CAST({k} AS BIGINT) AS nlist, recall_at3,
+       {_scan_frac_sql("sc")}
+FROM rec_{k}"""
         for k in _IVF_NLIST_SWEEP
     )
     cand_ctes = ",\n".join(
@@ -3989,26 +3952,14 @@ def _oracle_nlist_sweep() -> str:
   FROM (SELECT vec_id AS query_id, v AS qv, cell AS qcell FROM asg{k}
         WHERE vec_id < {_N_QUERIES}) qk
   JOIN asg{k} a ON a.cell = qk.qcell AND a.vec_id <> qk.query_id),
-top3_{k} AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rk
-    FROM cand_{k}) WHERE rk <= 3)"""
+{_topk_sql(f"top3_{k}", f"cand_{k}", ["query_id"], "score DESC", 3)},
+sc_{k} AS (SELECT count(*) AS sc FROM cand_{k}),
+{_recall_sql(f"rec_{k}", "exact3", f"top3_{k}", f"sc_{k}")}"""
         for k in _IVF_NLIST_SWEEP
     )
     return f"""
 WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
-      WHERE vec_id < {_N_QUERIES}),
-exact_scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         {_cos_sql("q.qv", "c.v")} AS score
-  FROM q JOIN vecs c ON c.vec_id <> q.query_id),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rk
-    FROM exact_scored) WHERE rk <= 3),
+{_truth_sql(_cos_sql("q.v", "c.v"), True)},
 {chains},
 {cand_ctes}
 {per_k}
@@ -4075,50 +4026,30 @@ def q_knn_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("tier", F.lit(_PQ_EVAL_TIERS[1]))
         )
     )
-    hits = approx.join(exact3, ["query_id", "neighbor_id"]).groupBy(
-        "tier"
-    ).agg(F.count("*").alias("h"))
-    tot = exact3.agg(F.count("*").alias("ex_total"))
     tiers = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(t) for t in _PQ_EVAL_TIERS])
         ).alias("tier")
     )
-    return (
-        tiers.join(hits, "tier", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "tier",
-            F.round(
-                F.coalesce(F.col("h"), F.lit(0)) / F.col("ex_total"), 6
-            ).alias("recall_at3"),
-        )
-        .transform(order_result, "tier")
+    return _recall(exact3, approx, tiers, ["tier"]).transform(
+        order_result, "tier"
     )
 
 
-_PQ_EVAL_L2_SQL = (
-    "list_sum(list_transform(list_zip(q.v, c.v),"
-    " x -> (x[1] - x[2]) * (x[1] - x[2])))"
+# exact squared L2 between ``q.v`` and ``c.v``, rounded 6 dp (``S.l2sq``)
+_L2_SQL = (
+    "round(list_sum(list_transform(list_zip(q.v, c.v),"
+    " x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
 )
+
+# ``_pq_exact3_t`` in DuckDB: the PQ tiers' exact-L2 truth
+_PQ_EXACT3_SQL = _truth_sql(_L2_SQL, False)
 
 # The approximate sides embed the tiers' OWN oracle texts as subqueries
 # — the eval's oracle cannot drift from the tiers it certifies.
 ORACLE_KNN_PQ_RECALL = f"""
 WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-exact_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_PQ_EVAL_L2_SQL}, 6) AS d2
-  FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
+{_PQ_EXACT3_SQL},
 approx AS (
   SELECT '{_PQ_EVAL_TIERS[0]}' AS tier, query_id, neighbor_id
   FROM ({ORACLE_KNN_IVFPQ}) ivfpq_t
@@ -4128,19 +4059,8 @@ approx AS (
 ),
 tiers AS (SELECT '{_PQ_EVAL_TIERS[0]}' AS tier
           UNION ALL SELECT '{_PQ_EVAL_TIERS[1]}'),
-hits AS (
-  SELECT a.tier, count(*) AS h
-  FROM approx a JOIN exact3 e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY 1
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3)
-SELECT t.tier,
-       round(COALESCE(h.h, 0) / x.ex_total, 6) AS recall_at3
-FROM tiers t
-LEFT JOIN hits h ON h.tier = t.tier
-CROSS JOIN tot x
-ORDER BY t.tier
+{_recall_sql("rec", "exact3", "approx", "tiers", ["tier"])}
+SELECT * FROM rec ORDER BY tier
 """
 
 QUERIES["knn_pq_recall_eval"] = q_knn_pq_recall_eval
@@ -4166,6 +4086,92 @@ def _ivf_residuals(cent: DataFrame, assigned: DataFrame) -> DataFrame:
         "vec_id",
         F.zip_with("v", "cv", lambda a, b: a - b).alias("v"),
     )
+
+
+def _pq_variant(
+    col: str,
+    name: str,
+    sub: DataFrame,
+    cb: DataFrame,
+    truth: DataFrame,
+    cells: DataFrame | None = None,
+) -> DataFrame:
+    """One (``col`` = ``name``, recall_at3, mean_recon_d2) row of a PQ
+    variant eval: the subvector stream ``sub`` encoded against codebook
+    ``cb``, ADC top-3 per query scored against ``truth``, and the mean
+    reconstruction error of the codes served. ``cells`` restricts each
+    query's scan to its home IVF cell (the ``knn_ivfpq`` convention);
+    without it the scan is full (``knn_pq_adc``).
+
+    The encode argmin and the LUT are local checkpoints, not caches:
+    lazy frames here are referenced by several concurrently-building
+    broadcast subtrees, whose threads race to recompute the n×M×K encode
+    chain (a heap OOM in a bare 1 GiB session at sf0.1), and truncation
+    spares the driver re-analyzing the evals' composite of several
+    trained chains on every build. Blocks are scope-tracked
+    (io.track_local_checkpoint)."""
+    # one argmin pass feeds both the served code table and the
+    # winning-codeword d2 the distortion mean aggregates
+    best = track_local_checkpoint(
+        sub.join(F.broadcast(cb), "m")
+        .select(
+            "vec_id",
+            "m",
+            F.struct(
+                _pq_d2().alias("d2"), F.col("code").alias("code")
+            ).alias("sc"),
+        )
+        .groupBy("vec_id", "m")
+        .agg(F.min("sc").alias("b"))
+        .select(
+            "vec_id",
+            "m",
+            F.col("b.code").alias("code"),
+            F.col("b.d2").alias("d2"),
+        )
+    )
+    recon = (
+        best.groupBy("vec_id")
+        .agg(F.sum("d2").alias("vd2"))
+        .agg(F.round(F.avg("vd2"), 6).alias("mean_recon_d2"))
+    )
+    codes, lut = best.select("vec_id", "m", "code"), _pq_qlut(sub, cb)
+    on = None
+    if cells is not None:
+        codes, lut, on = _with_cells(codes, lut, cells)
+    adc = _adc(codes, track_local_checkpoint(lut), on)
+    top3 = _topk(adc, ["query_id"], F.col("adc_d2").asc(), 3)
+    frame = sub.sparkSession.range(1).select(F.lit(name).alias(col))
+    return _recall(truth, top3, frame).crossJoin(F.broadcast(recon))
+
+
+def _pq_variant_sql(p: str, col: str, name: str) -> str:
+    """``_pq_variant`` in DuckDB: CTE ``{p}_rec(col, mean_recon_d2,
+    recall_at3)`` over the chain ``_pq_train_sql(prefix=p)`` emits, an
+    ``{p}_adc`` CTE (``_adc_sql``) and ``exact3``."""
+    return f"""{p}_recon AS (
+  SELECT '{name}' AS {col}, round(avg(vd2), 6) AS mean_recon_d2 FROM (
+    SELECT vec_id, sum(d2) AS vd2 FROM {p}_codes GROUP BY 1)),
+{_topk_sql(f"{p}_top3", f"{p}_adc", ["query_id"], "adc_d2 ASC", 3)},
+{_recall_sql(f"{p}_rec", "exact3", f"{p}_top3", f"{p}_recon")}"""
+
+
+def _on_threads(spark: SparkSession, *builds) -> list:
+    """Run independent eager builds on concurrent driver threads and
+    return their results in order. The evals' variant chains share no
+    lineage (each is deterministic in isolation: seeded training,
+    promoted artifacts built under io's lock), so overlapping their
+    checkpoints and training supersteps changes wall clock, never
+    values."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(b)) for b in builds
+        ]
+        return [f.result() for f in futs]
 
 
 def q_knn_pq_residual_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4208,7 +4214,8 @@ def q_knn_pq_residual_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture: everything the standalone tiers prove carries over
     (bounded training samples, broadcast codebooks/LUTs, cell-
-    restricted scans, the pre-amplification repartition in ``_pq_sub``);
+    restricted scans, the pre-amplification repartition in
+    ``_pq_sub_pivot``);
     the eval adds one corpus-linear cached code table per variant and
     the |queries|×n truth pass. Cross-engine float caveat: the two
     corpus-wide means (``mean_recon_d2``, the RSS/TSS sums) share the
@@ -4218,28 +4225,15 @@ def q_knn_pq_residual_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-dimension global mean is pre-rounded at 6 dp on both
     engines."""
     cent, assigned = _ivf_cells(spark, sf_dir)
-    # local checkpoints, not plain caches, at every compact frontier
-    # (cells, truth, ratio, per-variant codes/LUT) — two measured
-    # reasons: (a) LAZY frames here are referenced by several
-    # concurrently-building broadcast subtrees (hits/recon/tot per
-    # variant), whose threads race to recompute the n×M×K encode chain
-    # in parallel — a heap OOM in a bare 1 GiB session at sf0.1; the
-    # eager checkpoint serializes the heavy passes; (b) this eval
-    # composes FOUR trained chains (IVF + 2 codebooks + truth) into one
-    # output plan, and with caches alone the driver re-analyzes that
-    # composite every build — checkpoint truncation took the warm
-    # build+collect from 9.8 s + 16.3 s to plan-free scans of the
-    # materialized frontiers. Blocks are scope-tracked
-    # (io.track_local_checkpoint); the registry contract (collect
-    # before the next query builds) is exactly how the driver runs.
+    # cells are a local checkpoint like the variants' frontiers
+    # (``_pq_variant``): the four trained chains this eval composes would
+    # otherwise be re-analyzed on every build
     cells = track_local_checkpoint(assigned.select("vec_id", "cell"))
     vecs = _vecs(spark, sf_dir).select("vec_id", "v")
     rvecs = _ivf_residuals(cent, assigned)
     stride = _pq_train_stride(spark, sf_dir)
-
     # the promoted truth artifact (30 rows, one truth pass per process)
-    exact3 = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
-    tot = exact3.agg(F.count("*").alias("ex_total"))
+    truth = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
 
     # coarse variance capture: RSS/TSS (per-dimension global mean
     # pre-rounded 6 dp — makes the mean EXACTLY equal cross-engine)
@@ -4264,147 +4258,31 @@ def q_knn_pq_residual_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("rss") / F.col("tss"), 6).alias("coarse_rss_ratio")
     )
 
-    qcells = cells.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-    )
     # ONE assignment for both variants — the subspace map is part of
     # the served index config (trained on the raw corpus, as knn_ivfpq
     # serves it), so the eval isolates the residual-vs-raw TRAINING
-    # INPUT with everything else held fixed; map AND the raw variant's
-    # codebook are the promoted served artifacts (the raw construction
-    # IS the served one — only the residual variant trains here)
+    # INPUT with everything else held fixed; the raw variant IS the
+    # served config and serves the promoted codebook, only the residual
+    # variant trains here
     amap = _pq_opq_map_t(spark, sf_dir)
-
-    def build_variant(name: str, src: DataFrame) -> DataFrame:
-        sub = _pq_sub_pivot(src, amap)
-        cb = (
-            _pq_codebook_t(spark, sf_dir)
-            if name == "raw"
-            else _pq_codebook(sub, stride)
-        )
-        # one argmin pass feeds BOTH consumers: the served code table
-        # and the winning-codeword d2 the distortion mean aggregates;
-        # checkpointed (n×M compact rows) per the frontier note above
-        best = track_local_checkpoint(
-            sub.join(F.broadcast(cb), "m")
-            .select(
-                "vec_id",
-                "m",
-                F.struct(
-                    _pq_d2().alias("d2"), F.col("code").alias("code")
-                ).alias("sc"),
-            )
-            .groupBy("vec_id", "m")
-            .agg(F.min("sc").alias("b"))
-            .select(
-                "vec_id",
-                "m",
-                F.col("b.code").alias("code"),
-                F.col("b.d2").alias("d2"),
-            )
-        )
-        recon = (
-            best.groupBy("vec_id")
-            .agg(F.sum("d2").alias("vd2"))
-            .agg(F.round(F.avg("vd2"), 6).alias("mean_recon_d2"))
-        )
-        codes = best.select("vec_id", "m", "code").join(cells, "vec_id")
-        qlut = track_local_checkpoint(
-            _pq_qlut(sub, cb).join(F.broadcast(qcells), "query_id")
-        )
-        adc = (
-            codes.join(F.broadcast(qlut), ["m", "code"])
-            .filter(
-                (F.col("cell") == F.col("qcell"))
-                & (F.col("vec_id") != F.col("query_id"))
-            )
-            .groupBy("query_id", "vec_id")
-            .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-        )
-        wv = Window.partitionBy("query_id").orderBy(
-            F.col("adc_d2").asc(), F.col("vec_id").asc()
-        )
-        top3 = (
-            adc.select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.row_number().over(wv).alias("rk"),
-            )
-            .filter(F.col("rk") <= 3)
-            .select("query_id", "neighbor_id")
-        )
-        hits = top3.join(exact3, ["query_id", "neighbor_id"]).agg(
-            F.count("*").alias("h")
-        )
-        return (
-            spark.range(1)
-            .select(F.lit(name).alias("variant"))
-            .crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(recon))
-            .select(
-                "variant",
-                F.round(F.col("h") / F.col("ex_total"), 6).alias(
-                    "recall_at3"
-                ),
-                "mean_recon_d2",
-            )
-        )
-
-    # Overlap the two variants' independent job chains (guide §2.6): the
-    # raw variant's encode/LUT checkpoints run on one driver thread while
-    # the residual variant trains its fresh codebook on the other, and
-    # the main thread materializes the RSS/TSS ratio frontier meanwhile —
-    # the driver previously serialized ~10 eager materializations that
-    # share no lineage. Values are untouched: each chain is deterministic
-    # in isolation (seeded training, promoted artifacts under a build
-    # lock), and the final plan is the same union either way.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                inheritable_thread_target(spark)(build_variant), name, src
-            )
-            for name, src in zip(_PQ_RESIDUAL_VARIANTS, (vecs, rvecs))
-        ]
-        ratio = F.broadcast(track_local_checkpoint(ratio_lazy))
-        per_variant = [f.result() for f in futs]
+    raw, resid = _PQ_RESIDUAL_VARIANTS
+    s_raw, s_res = _pq_sub_pivot(vecs, amap), _pq_sub_pivot(rvecs, amap)
+    # the RSS/TSS ratio frontier materializes alongside the variants
+    v_raw, v_res, ratio = _on_threads(
+        spark,
+        lambda: _pq_variant(
+            "variant", raw, s_raw, _pq_codebook_t(spark, sf_dir), truth, cells
+        ),
+        lambda: _pq_variant(
+            "variant", resid, s_res, _pq_codebook(s_res, stride), truth, cells
+        ),
+        lambda: track_local_checkpoint(ratio_lazy),
+    )
     return (
-        per_variant[0]
-        .unionByName(per_variant[1])
-        .crossJoin(ratio)
+        v_raw.unionByName(v_res)
+        .crossJoin(F.broadcast(ratio))
         .transform(order_result, "variant")
     )
-
-
-def _pq_residual_adc_sql(p: str) -> str:
-    """Per-variant CTE tail (codebook chain prefix ``p``): distortion
-    mean over the served codes, cell-restricted ADC top-3, truth hits."""
-    return f"""{p}_recon AS (
-  SELECT round(avg(vd2), 6) AS mean_recon_d2 FROM (
-    SELECT vec_id, sum(d2) AS vd2 FROM {p}_codes GROUP BY 1)),
-{p}_qlutc AS (
-  SELECT q.query_id, a.cell AS qcell, q.m, q.code, q.qd2
-  FROM {p}_qlut q JOIN assigned a ON a.vec_id = q.query_id),
-{p}_adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM (SELECT k.vec_id, a.cell, k.m, k.code
-        FROM {p}_codes k JOIN assigned a ON a.vec_id = k.vec_id) c
-  JOIN {p}_qlutc q ON q.m = c.m AND q.code = c.code
-  WHERE c.cell = q.qcell AND c.vec_id <> q.query_id
-  GROUP BY 1, 2),
-{p}_top3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS rk
-    FROM {p}_adc) WHERE rk <= 3),
-{p}_hits AS (
-  SELECT count(*) AS h
-  FROM {p}_top3 a JOIN exact3 e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id)"""
 
 
 ORACLE_KNN_PQ_RESIDUAL = f"""
@@ -4420,22 +4298,9 @@ rdims AS (
   FROM rvecs),
 {_pq_sub_pivot_sql("opq_dims", "opq_map", "pr_subp")},
 {_pq_sub_pivot_sql("rdims", "opq_map", "pz_subp")},
-{_pq_train_sql(vecs="vecs", prefix="pr", with_d2=True, sub="pr_subp")},
-{_pq_train_sql(vecs="rvecs", prefix="pz", with_d2=True, sub="pz_subp")},
-exact_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_PQ_EVAL_L2_SQL}, 6) AS d2
-  FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3),
+{_pq_train_sql("pr_subp", "pr")},
+{_pq_train_sql("pz_subp", "pz")},
+{_PQ_EXACT3_SQL},
 rss AS (SELECT sum(list_sum(list_transform(v, x -> x * x))) AS s FROM rvecs),
 gmean AS (
   SELECT pos, round(avg(x), 6) AS gx FROM (
@@ -4447,18 +4312,15 @@ tss AS (
   JOIN gmean g ON g.pos = t.pos),
 ratio AS (SELECT round(r.s / t.s, 6) AS coarse_rss_ratio
           FROM rss r CROSS JOIN tss t),
-{_pq_residual_adc_sql("pr")},
-{_pq_residual_adc_sql("pz")}
+{_with_cells_sql("pr")},
+{_adc_sql("pr_adc", "pr_codesc", "pr_qlutc", _IN_CELL_SQL)},
+{_pq_variant_sql("pr", "variant", _PQ_RESIDUAL_VARIANTS[0])},
+{_with_cells_sql("pz")},
+{_adc_sql("pz_adc", "pz_codesc", "pz_qlutc", _IN_CELL_SQL)},
+{_pq_variant_sql("pz", "variant", _PQ_RESIDUAL_VARIANTS[1])}
 SELECT v.variant, v.recall_at3, v.mean_recon_d2, x.coarse_rss_ratio
-FROM (
-  SELECT '{_PQ_RESIDUAL_VARIANTS[0]}' AS variant,
-         round(h.h / t.ex_total, 6) AS recall_at3, r.mean_recon_d2
-  FROM pr_hits h CROSS JOIN tot t CROSS JOIN pr_recon r
-  UNION ALL
-  SELECT '{_PQ_RESIDUAL_VARIANTS[1]}',
-         round(h.h / t.ex_total, 6), r.mean_recon_d2
-  FROM pz_hits h CROSS JOIN tot t CROSS JOIN pz_recon r
-) v CROSS JOIN ratio x
+FROM (SELECT * FROM pr_rec UNION ALL SELECT * FROM pz_rec) v
+CROSS JOIN ratio x
 ORDER BY v.variant
 """
 
@@ -4517,136 +4379,31 @@ def q_knn_pq_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 rows; assignment maps are 64-row broadcasts; everything
     downstream is the ``knn_pq_adc`` architecture with the same bounded
     training / broadcast-LUT / codes-only-shuffle shape; checkpoint
-    frontiers as in ``knn_pq_residual_eval`` (same race + plan-size
-    reasoning)."""
+    frontiers as in ``_pq_variant``."""
     vecs = _vecs(spark, sf_dir).select("vec_id", "v")
     stride = _pq_train_stride(spark, sf_dir)
-
     # the promoted truth artifact (30 rows, one truth pass per process)
-    exact3 = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
-    tot = exact3.agg(F.count("*").alias("ex_total"))
-
-    bmap = _pq_opq_map_t(spark, sf_dir)
+    truth = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
     imap = spark.range(_PQ_M * _PQ_SUBDIM).select(
         F.col("id").alias("pos"),
         F.floor(F.col("id") / _PQ_SUBDIM).cast("long").alias("m"),
         (F.col("id") % _PQ_SUBDIM + 1).alias("slot"),
     )
-
-    def build_variant(name: str, amap: DataFrame) -> DataFrame:
-        sub = _pq_sub_pivot(vecs, amap)
-        # the balanced variant IS the served config — its codebook is
-        # the promoted artifact; only the identity counterfactual
-        # trains fresh here
-        cb = (
-            _pq_codebook_t(spark, sf_dir)
-            if name == "balanced"
-            else _pq_codebook(sub, stride)
-        )
-        best = track_local_checkpoint(
-            sub.join(F.broadcast(cb), "m")
-            .select(
-                "vec_id",
-                "m",
-                F.struct(
-                    _pq_d2().alias("d2"), F.col("code").alias("code")
-                ).alias("sc"),
-            )
-            .groupBy("vec_id", "m")
-            .agg(F.min("sc").alias("b"))
-            .select(
-                "vec_id",
-                "m",
-                F.col("b.code").alias("code"),
-                F.col("b.d2").alias("d2"),
-            )
-        )
-        recon = (
-            best.groupBy("vec_id")
-            .agg(F.sum("d2").alias("vd2"))
-            .agg(F.round(F.avg("vd2"), 6).alias("mean_recon_d2"))
-        )
-        qlut = track_local_checkpoint(_pq_qlut(sub, cb))
-        adc = (
-            best.select("vec_id", "m", "code")
-            .join(F.broadcast(qlut), ["m", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-        )
-        wv = Window.partitionBy("query_id").orderBy(
-            F.col("adc_d2").asc(), F.col("vec_id").asc()
-        )
-        top3 = (
-            adc.select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.row_number().over(wv).alias("rk"),
-            )
-            .filter(F.col("rk") <= 3)
-            .select("query_id", "neighbor_id")
-        )
-        hits = top3.join(exact3, ["query_id", "neighbor_id"]).agg(
-            F.count("*").alias("h")
-        )
-        return (
-            spark.range(1)
-            .select(F.lit(name).alias("assignment"))
-            .crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(recon))
-            .select(
-                "assignment",
-                F.round(F.col("h") / F.col("ex_total"), 6).alias(
-                    "recall_at3"
-                ),
-                "mean_recon_d2",
-            )
-        )
-
-    # Overlap the two assignments' independent job chains (guide §2.6):
-    # the balanced variant's encode/LUT checkpoints run concurrently
-    # with the identity counterfactual's fresh codebook training — the
-    # chains share only the promoted artifacts (built once under the
-    # memo lock), so overlap changes wall clock, never values.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                inheritable_thread_target(spark)(build_variant), name, amap
-            )
-            for name, amap in zip(_PQ_OPQ_VARIANTS, (bmap, imap))
-        ]
-        per_variant = [f.result() for f in futs]
-    return (
-        per_variant[0].unionByName(per_variant[1]).transform(order_result, "assignment")
+    bal, ident = _PQ_OPQ_VARIANTS
+    s_bal = _pq_sub_pivot(vecs, _pq_opq_map_t(spark, sf_dir))
+    s_id = _pq_sub_pivot(vecs, imap)
+    # the balanced variant IS the served config and serves the promoted
+    # codebook; only the identity counterfactual trains here
+    v_bal, v_id = _on_threads(
+        spark,
+        lambda: _pq_variant(
+            "assignment", bal, s_bal, _pq_codebook_t(spark, sf_dir), truth
+        ),
+        lambda: _pq_variant(
+            "assignment", ident, s_id, _pq_codebook(s_id, stride), truth
+        ),
     )
-
-
-def _pq_opq_adc_sql(p: str) -> str:
-    """Per-assignment CTE tail: distortion mean over the served codes,
-    FULL-SCAN ADC top-3 (the knn_pq_adc convention — no cell term),
-    truth hits."""
-    return f"""{p}_recon AS (
-  SELECT round(avg(vd2), 6) AS mean_recon_d2 FROM (
-    SELECT vec_id, sum(d2) AS vd2 FROM {p}_codes GROUP BY 1)),
-{p}_adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM {p}_codes c JOIN {p}_qlut q ON q.m = c.m AND q.code = c.code
-  WHERE c.vec_id <> q.query_id
-  GROUP BY 1, 2),
-{p}_top3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS rk
-    FROM {p}_adc) WHERE rk <= 3),
-{p}_hits AS (
-  SELECT count(*) AS h
-  FROM {p}_top3 a JOIN exact3 e
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id)"""
+    return v_bal.unionByName(v_id).transform(order_result, "assignment")
 
 
 ORACLE_KNN_PQ_OPQ = f"""
@@ -4658,31 +4415,15 @@ imap AS (
   FROM range(0, {_PQ_M * _PQ_SUBDIM}) t(pos)),
 {_pq_sub_pivot_sql("opq_dims", "opq_map", "ob_subp")},
 {_pq_sub_pivot_sql("opq_dims", "imap", "oi_subp")},
-{_pq_train_sql(vecs="vecs", prefix="ob", with_d2=True, sub="ob_subp")},
-{_pq_train_sql(vecs="vecs", prefix="oi", with_d2=True, sub="oi_subp")},
-exact_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_PQ_EVAL_L2_SQL}, 6) AS d2
-  FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3),
-{_pq_opq_adc_sql("ob")},
-{_pq_opq_adc_sql("oi")}
-SELECT '{_PQ_OPQ_VARIANTS[0]}' AS assignment,
-       round(h.h / t.ex_total, 6) AS recall_at3, r.mean_recon_d2
-FROM ob_hits h CROSS JOIN tot t CROSS JOIN ob_recon r
-UNION ALL
-SELECT '{_PQ_OPQ_VARIANTS[1]}',
-       round(h.h / t.ex_total, 6), r.mean_recon_d2
-FROM oi_hits h CROSS JOIN tot t CROSS JOIN oi_recon r
+{_pq_train_sql("ob_subp", "ob")},
+{_pq_train_sql("oi_subp", "oi")},
+{_PQ_EXACT3_SQL},
+{_adc_sql("ob_adc", "ob_codes", "ob_qlut")},
+{_pq_variant_sql("ob", "assignment", _PQ_OPQ_VARIANTS[0])},
+{_adc_sql("oi_adc", "oi_codes", "oi_qlut")},
+{_pq_variant_sql("oi", "assignment", _PQ_OPQ_VARIANTS[1])}
+SELECT assignment, recall_at3, mean_recon_d2 FROM (
+  SELECT * FROM ob_rec UNION ALL SELECT * FROM oi_rec)
 ORDER BY assignment
 """
 
@@ -4734,157 +4475,44 @@ def q_knn_ivfpq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed both the per-nprobe ranking and the scan-volume aggregate)."""
     n_corpus = metadata_row_count(spark, sf_dir, "embeddings")
     cent, assigned = _ivf_cells(spark, sf_dir)
-    cells = assigned.select("vec_id", "cell")
     sub = _pq_sub_opq(spark, sf_dir)
     cb = _pq_codebook_t(spark, sf_dir)
+    cells = assigned.select("vec_id", "cell")
     codes = _pq_encode(sub, cb).join(cells, "vec_id")
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cscore").desc(), F.col("clabel").asc()
-    )
-    qcells = (
-        q.join(F.broadcast(cent))
-        .select(
-            "query_id",
-            "clabel",
-            S.cosine(F.col("qv"), F.col("cv")).alias("cscore"),
-        )
-        .withColumn("cellrank", F.row_number().over(wq))
-        .filter(F.col("cellrank") <= max(_IVF_CURVE_NPROBES))
-        .select("query_id", F.col("clabel").alias("qcell"), "cellrank")
-    )
-    qlut = _pq_qlut(sub, cb)
     adc = track_cache(
         codes.join(
-            F.broadcast(qcells),
+            F.broadcast(_probe_cells(assigned, cent)),
             (F.col("cell") == F.col("qcell"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .join(F.broadcast(qlut), ["query_id", "m", "code"])
+        .join(F.broadcast(_pq_qlut(sub, cb)), ["query_id", "m", "code"])
         .groupBy("query_id", "vec_id", "cellrank")
         .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
+        .withColumnRenamed("vec_id", "neighbor_id")
     )
-    probes = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p) for p in _IVF_CURVE_NPROBES])
-        ).alias("nprobe")
-    )
-    pc = adc.join(
-        F.broadcast(probes), F.col("cellrank") <= F.col("nprobe")
-    )
-    wt = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    top3 = (
-        pc.withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= 3)
-        .select("nprobe", "query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    scanned = pc.groupBy("nprobe").agg(F.count("*").alias("total_scanned"))
     # exact truth under the PQ-tier convention: squared-L2, ties to the
     # smaller id — the promoted artifact (one truth pass per process)
-    exact3 = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        top3.join(exact3, ["query_id", "neighbor_id"])
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("h"))
-    )
-    tot = exact3.agg(F.count("*").alias("ex_total"))
-    return (
-        scanned.join(hits, "nprobe", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "nprobe",
-            F.round(
-                F.coalesce(F.col("h"), F.lit(0)) / F.col("ex_total"), 6
-            ).alias("recall_at3"),
-            F.round(
-                F.col("total_scanned")
-                / (F.lit(_N_QUERIES) * F.lit(n_corpus - 1)),
-                6,
-            ).alias("scan_frac"),
-        )
-        .transform(order_result, "nprobe")
-    )
+    truth = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
+    return _probe_curve(adc, F.col("adc_d2").asc(), truth, n_corpus)
 
 
 ORACLE_KNN_IVFPQ_CURVE = f"""
 WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 {_ivf_train_sql()},
-{_pq_opq_map_sql()},
-{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
-{_pq_train_sql(sub="pq_subp")},
-codes AS (
-  SELECT c.vec_id, a.cell, c.m, c.code
-  FROM pq_codes c JOIN assigned a ON a.vec_id = c.vec_id
-),
-q AS (SELECT vec_id AS query_id, v AS qv FROM assigned
-      WHERE vec_id < {_N_QUERIES}),
-qcell_scored AS (
-  SELECT q.query_id, cent.clabel,
-         {_cos_sql("q.qv", "cent.cv")} AS cscore
-  FROM q CROSS JOIN cent
-),
-qcells AS (
-  SELECT query_id, clabel AS qcell, cellrank FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cscore DESC, clabel ASC) AS cellrank
-    FROM qcell_scored
-  ) WHERE cellrank <= {max(_IVF_CURVE_NPROBES)}
-),
+{_PQ_SERVED_SQL},
+{_with_cells_sql("pq")},
+{_PROBE_CELLS_SQL},
 cand_adc AS (
   SELECT qc.query_id, k.vec_id AS neighbor_id, qc.cellrank,
          round(sum(l.qd2), 6) AS adc_d2
   FROM qcells qc
-  JOIN codes k ON k.cell = qc.qcell AND k.vec_id <> qc.query_id
+  JOIN pq_codesc k ON k.cell = qc.qcell AND k.vec_id <> qc.query_id
   JOIN pq_qlut l
     ON l.query_id = qc.query_id AND l.m = k.m AND l.code = k.code
   GROUP BY 1, 2, 3
 ),
-probes AS ({_IVF_CURVE_PROBES_SQL}),
-pc AS (
-  SELECT p.nprobe, c.query_id, c.neighbor_id, c.adc_d2
-  FROM cand_adc c JOIN probes p ON c.cellrank <= p.nprobe
-),
-ivfpq3 AS (
-  SELECT nprobe, query_id, neighbor_id FROM (
-    SELECT nprobe, query_id, neighbor_id, row_number() OVER (
-        PARTITION BY nprobe, query_id
-        ORDER BY adc_d2 ASC, neighbor_id ASC) AS rk
-    FROM pc
-  ) WHERE rk <= 3
-),
-scanned AS (SELECT nprobe, count(*) AS total_scanned FROM pc GROUP BY 1),
-exact_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_PQ_EVAL_L2_SQL}, 6) AS d2
-  FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
-hits AS (
-  SELECT i.nprobe, count(*) AS h
-  FROM ivfpq3 i JOIN exact3 e
-    ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-  GROUP BY 1
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3),
-nn AS (SELECT count(*) AS n FROM vecs)
-SELECT s.nprobe,
-       round(COALESCE(h.h, 0) / t.ex_total, 6) AS recall_at3,
-       round(s.total_scanned / ({_N_QUERIES} * (nn.n - 1)), 6) AS scan_frac
-FROM scanned s
-LEFT JOIN hits h ON h.nprobe = s.nprobe
-CROSS JOIN tot t CROSS JOIN nn
-ORDER BY s.nprobe
+{_PQ_EXACT3_SQL},
+{_probe_curve_sql("cand_adc", "adc_d2 ASC")}
 """
 
 QUERIES["knn_ivfpq_recall_curve"] = q_knn_ivfpq_recall_curve
@@ -4930,103 +4558,62 @@ def q_knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe at any corpus size — never a second full scan. The oracle
     replays the exact chain (ADC shortlist ties to the smaller
     neighbor_id, then exact d2 ties the same way)."""
-    # the UNTRUNCATED ADC ranking (knn_ivfpq serves top-3; the refine
-    # stage needs top-R) — same chain, wider cut
-    _cent, assigned = _ivf_cells(spark, sf_dir)
-    cells = assigned.select("vec_id", "cell")
-    sub = _pq_sub_opq(spark, sf_dir)
-    cb = _pq_codebook_t(spark, sf_dir)
-    codes = _pq_encode(sub, cb).join(cells, "vec_id")
-    qcells = cells.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-    )
-    qlut = _pq_qlut(sub, cb).join(F.broadcast(qcells), "query_id")
-    adc = (
-        codes.join(F.broadcast(qlut), ["m", "code"])
-        .filter(
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id"))
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(wa))
-        .filter(F.col("rk") <= _PQ_RERANK_R)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
-    qv = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    refined = (
-        F.broadcast(shortlist.join(F.broadcast(qv), "query_id"))
-        .join(vecs, F.col("vec_id") == F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(S.l2sq(F.col("qv"), F.col("v")), 6).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
     return (
-        refined.withColumn(
-            "rank", F.row_number().over(wr).cast("long")
+        _topk(
+            _ivfpq_refine(spark, sf_dir, _PQ_RERANK_R),
+            ["query_id"],
+            F.col("d2").asc(),
+            3,
+            "rank",
+            bigint=True,
         )
-        .filter(F.col("rank") <= 3)
         .select("query_id", "neighbor_id", "d2", "rank")
         .transform(order_result, "query_id", "rank")
     )
 
 
-ORACLE_KNN_IVFPQ_RERANK = f"""
-WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_ivf_train_sql()},
-{_pq_opq_map_sql()},
-{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
-{_pq_train_sql(sub="pq_subp")},
-codes AS (
-  SELECT c.vec_id, a.cell, c.m, c.code
-  FROM pq_codes c JOIN assigned a ON a.vec_id = c.vec_id
-),
-qlut AS (
-  SELECT q.query_id, a.cell AS qcell, q.m, q.code, q.qd2
-  FROM pq_qlut q JOIN assigned a ON a.vec_id = q.query_id
-),
-adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM codes c JOIN qlut q ON q.m = c.m AND q.code = c.code
-  WHERE c.cell = q.qcell AND c.vec_id <> q.query_id
-  GROUP BY 1, 2
-),
-shortlist AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS rk
-    FROM adc
-  ) WHERE rk <= {_PQ_RERANK_R}
-),
+def _ivfpq_refine(spark: SparkSession, sf_dir: str, r: int) -> DataFrame:
+    """The refine stage (query_id, neighbor_id, rk, d2): the served
+    IVFADC ranking cut to a top-``r`` shortlist (ADC rank ``rk``, ties
+    to the smaller neighbor_id), each candidate re-scored by exact
+    squared-L2 ``d2`` against the raw vectors. The shortlist side is
+    queries×r rows (broadcast), so the raw corpus is touched by one
+    keyed join."""
+    shortlist = _topk(
+        _ivfpq_adc(spark, sf_dir), ["query_id"], F.col("adc_d2").asc(), r
+    ).select("query_id", "neighbor_id", "rk")
+    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
+    qv = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    return (
+        F.broadcast(shortlist.join(F.broadcast(qv), "query_id"))
+        .join(vecs, F.col("vec_id") == F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            "rk",
+            F.round(S.l2sq(F.col("qv"), F.col("v")), 6).alias("d2"),
+        )
+    )
+
+
+def _ivfpq_refine_sql(r: int) -> str:
+    """CTEs ``shortlist`` and ``refined``: ``_ivfpq_refine`` in DuckDB,
+    after ``_IVFPQ_ADC_SQL``."""
+    return f"""{_topk_sql("shortlist", "adc", ["query_id"], "adc_d2 ASC", r,
+           "query_id, neighbor_id, rk")},
 refined AS (
-  SELECT s.query_id, s.neighbor_id,
-         round(list_sum(list_transform(list_zip(q.qv, c.v),
-               x -> (x[1] - x[2]) * (x[1] - x[2]))), 6) AS d2
+  SELECT s.query_id, s.neighbor_id, s.rk, {_L2_SQL} AS d2
   FROM shortlist s
-  JOIN (SELECT vec_id AS query_id, v AS qv FROM vecs
-        WHERE vec_id < {_N_QUERIES}) q ON q.query_id = s.query_id
-  JOIN vecs c ON c.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, d2, rank FROM (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC)
-    AS BIGINT) AS rank
-  FROM refined
-) WHERE rank <= 3
-ORDER BY query_id, rank
+  JOIN vecs q ON q.vec_id = s.query_id
+  JOIN vecs c ON c.vec_id = s.neighbor_id)"""
+
+
+ORACLE_KNN_IVFPQ_RERANK = f"""
+WITH {_IVFPQ_ADC_SQL},
+{_ivfpq_refine_sql(_PQ_RERANK_R)},
+{_served_sql("refined", "d2", False)}
 """
 
 QUERIES["knn_ivfpq_rerank"] = q_knn_ivfpq_rerank
@@ -5069,162 +4656,30 @@ def q_knn_ivfpq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     not by R). The sweep's verdict is a config: ship R=10
     (``_PQ_RERANK_R``); at 50 the re-rank join carries 5× the traffic
     for +0.000. Scale posture identical to ``knn_ivfpq_rerank``."""
-    _cent, assigned = _ivf_cells(spark, sf_dir)
-    cells = assigned.select("vec_id", "cell")
-    sub = _pq_sub_opq(spark, sf_dir)
-    cb = _pq_codebook_t(spark, sf_dir)
-    codes = _pq_encode(sub, cb).join(cells, "vec_id")
-    qcells = cells.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-    )
-    qlut = _pq_qlut(sub, cb).join(F.broadcast(qcells), "query_id")
-    adc = (
-        codes.join(F.broadcast(qlut), ["m", "code"])
-        .filter(
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id"))
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("qd2"), 6).alias("adc_d2"))
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(wa))
-        .filter(F.col("rk") <= max(_PQ_RERANK_SWEEP_RS))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rk")
-    )
-    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
-    qv = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
     refined = track_cache(
-        F.broadcast(shortlist.join(F.broadcast(qv), "query_id"))
-        .join(vecs, F.col("vec_id") == F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            F.round(S.l2sq(F.col("qv"), F.col("v")), 6).alias("d2"),
-        )
+        _ivfpq_refine(spark, sf_dir, max(_PQ_RERANK_SWEEP_RS))
     )
-    rtable = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(r) for r in _PQ_RERANK_SWEEP_RS])
-        ).alias("r")
-    )
-    per_r = refined.join(F.broadcast(rtable), F.col("rk") <= F.col("r"))
-    wt = Window.partitionBy("r", "query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
-    top3 = (
-        per_r.withColumn("rrk", F.row_number().over(wt))
-        .filter(F.col("rrk") <= 3)
-        .select("r", "query_id", "neighbor_id")
-    )
+    per_r = _widen(refined, "r", _PQ_RERANK_SWEEP_RS, "rk")
+    top3 = _topk(per_r, ["r", "query_id"], F.col("d2").asc(), 3, "rrk")
     reranked = per_r.groupBy("r").agg(F.count("*").alias("reranked"))
-    exact3 = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        top3.join(exact3, ["query_id", "neighbor_id"])
-        .groupBy("r")
-        .agg(F.count("*").alias("h"))
-    )
-    tot = exact3.agg(F.count("*").alias("ex_total"))
+    truth = _pq_exact3_t(spark, sf_dir).select("query_id", "neighbor_id")
     return (
-        reranked.join(hits, "r", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "r",
-            F.round(
-                F.coalesce(F.col("h"), F.lit(0)) / F.col("ex_total"), 6
-            ).alias("recall_at3"),
-            "reranked",
-        )
+        _recall(truth, top3, reranked, ["r"])
+        .select("r", "recall_at3", "reranked")
         .transform(order_result, "r")
     )
 
 
-_RERANK_RS_SQL = " UNION ALL ".join(
-    f"SELECT {r} AS r" for r in _PQ_RERANK_SWEEP_RS
-)
-
 ORACLE_KNN_IVFPQ_RERANK_SWEEP = f"""
-WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_ivf_train_sql()},
-{_pq_opq_map_sql()},
-{_pq_sub_pivot_sql("opq_dims", "opq_map", "pq_subp")},
-{_pq_train_sql(sub="pq_subp")},
-codes AS (
-  SELECT c.vec_id, a.cell, c.m, c.code
-  FROM pq_codes c JOIN assigned a ON a.vec_id = c.vec_id
-),
-qlut AS (
-  SELECT q.query_id, a.cell AS qcell, q.m, q.code, q.qd2
-  FROM pq_qlut q JOIN assigned a ON a.vec_id = q.query_id
-),
-adc AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, round(sum(q.qd2), 6) AS adc_d2
-  FROM codes c JOIN qlut q ON q.m = c.m AND q.code = c.code
-  WHERE c.cell = q.qcell AND c.vec_id <> q.query_id
-  GROUP BY 1, 2
-),
-shortlist AS (
-  SELECT query_id, neighbor_id, rk FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_d2 ASC, neighbor_id ASC) AS rk
-    FROM adc
-  ) WHERE rk <= {max(_PQ_RERANK_SWEEP_RS)}
-),
-refined AS (
-  SELECT s.query_id, s.neighbor_id, s.rk,
-         round(list_sum(list_transform(list_zip(q.qv, c.v),
-               x -> (x[1] - x[2]) * (x[1] - x[2]))), 6) AS d2
-  FROM shortlist s
-  JOIN (SELECT vec_id AS query_id, v AS qv FROM vecs
-        WHERE vec_id < {_N_QUERIES}) q ON q.query_id = s.query_id
-  JOIN vecs c ON c.vec_id = s.neighbor_id
-),
-rtable AS ({_RERANK_RS_SQL}),
-per_r AS (
-  SELECT t.r, f.query_id, f.neighbor_id, f.d2
-  FROM refined f JOIN rtable t ON f.rk <= t.r
-),
-top3 AS (
-  SELECT r, query_id, neighbor_id FROM (
-    SELECT r, query_id, neighbor_id, row_number() OVER (
-        PARTITION BY r, query_id ORDER BY d2 ASC, neighbor_id ASC) AS rrk
-    FROM per_r
-  ) WHERE rrk <= 3
-),
+WITH {_IVFPQ_ADC_SQL},
+{_ivfpq_refine_sql(max(_PQ_RERANK_SWEEP_RS))},
+{_widen_sql("per_r", "refined", "r", _PQ_RERANK_SWEEP_RS, "rk")},
+{_topk_sql("top3", "per_r", ["r", "query_id"], "d2 ASC", 3,
+           "r, query_id, neighbor_id", rank="rrk")},
 reranked AS (SELECT r, count(*) AS reranked FROM per_r GROUP BY 1),
-exact_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_PQ_EVAL_L2_SQL}, 6) AS d2
-  FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM exact_scored
-  ) WHERE rk <= 3
-),
-hits AS (
-  SELECT t.r, count(*) AS h
-  FROM top3 t JOIN exact3 e
-    ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
-  GROUP BY 1
-),
-tot AS (SELECT count(*) AS ex_total FROM exact3)
-SELECT k.r,
-       round(COALESCE(h.h, 0) / x.ex_total, 6) AS recall_at3,
-       k.reranked
-FROM reranked k
-LEFT JOIN hits h ON h.r = k.r
-CROSS JOIN tot x
-ORDER BY k.r
+{_PQ_EXACT3_SQL},
+{_recall_sql("rec", "exact3", "top3", "reranked", ["r"])}
+SELECT r, recall_at3, reranked FROM rec ORDER BY r
 """
 
 QUERIES["knn_ivfpq_rerank_sweep"] = q_knn_ivfpq_rerank_sweep

@@ -50,9 +50,10 @@ def test_local_file_size_skips_remote_and_missing(tmp_path):
 
 
 @contextmanager
-def count_jobs(spark):
-    """Yield a one-item list that holds, on exit, the number of Spark jobs
-    the block launched from this thread (counted through a job group)."""
+def count_jobs(spark, stages: bool = False):
+    """Yield a list that holds, on exit, the number of Spark jobs the block
+    launched from this thread (counted through a job group) and, with
+    ``stages``, the number of their stages that ran (skipped excluded)."""
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -62,7 +63,19 @@ def count_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        out.append(len(jobs))
+        if stages:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            store = sc._jsc.sc().statusStore()
+            ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+            out.append(
+                sum(
+                    str(store.lastStageAttempt(s).status()) != "SKIPPED"
+                    for s in ids
+                )
+            )
 
 
 def _orders_pairs(a, b):
@@ -180,28 +193,32 @@ class TestSchemaMemo:
 
 
 @pytest.mark.parametrize(
-    "name, collect_jobs",
+    "name, collect_jobs, collect_stages",
     [
-        ("cast_nullsafe", 3),
-        ("rank_dense", 3),
-        ("mode_keying", 4),
-        ("quantiles_exact", 3),
+        pytest.param("cast_nullsafe", 3, 3, id="cast_nullsafe-3"),
+        pytest.param("rank_dense", 3, 3, id="rank_dense-3"),
+        pytest.param("mode_keying", 4, 4, id="mode_keying-4"),
+        pytest.param("quantiles_exact", 3, 3, id="quantiles_exact-3"),
     ],
 )
-def test_warm_query_job_counts(spark, sf_dir, name, collect_jobs):
-    """Job-count regression guards: a warm registry build launches no job
-    (every table's schema is memoised) and its collect launches a fixed
-    number, which box speed cannot move. The final sort runs no range-
-    sampling job (io.order_result)."""
+def test_warm_query_job_counts(
+    spark, sf_dir, name, collect_jobs, collect_stages
+):
+    """Job- and stage-count regression guards: a warm registry build
+    launches no job (every table's schema is memoised) and its collect
+    launches a fixed number of jobs and runs a fixed number of stages,
+    which box speed cannot move (the stage counts read the same at
+    local[2] and local[4]). The final sort runs no range-sampling job
+    (io.order_result)."""
     from jp_qcew_spark.queries import all_queries
 
     build = all_queries()[name]
     build(spark, sf_dir).collect()
     with count_jobs(spark) as build_jobs:
         df = build(spark, sf_dir)
-    with count_jobs(spark) as run_jobs:
+    with count_jobs(spark, stages=True) as run:
         df.collect()
-    assert (build_jobs[0], run_jobs[0]) == (0, collect_jobs)
+    assert (build_jobs[0], *run) == (0, collect_jobs, collect_stages)
 
 
 class TestScopedCaching:
