@@ -23,11 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jp_qcew_spark.sources.fixed_width import decode_qcew, read_qcew_text, typed_qcew
+from jp_qcew_spark.sources.fixed_width import (
+    decode_exprs,
+    decode_qcew,
+    read_qcew_text,
+    typed_qcew,
+)
 
 
 def file_mode_keys(typed: DataFrame) -> DataFrame:
-    """Per source file, the modal (year, qtr) — deterministic min-of-modes."""
+    """Per source file, the modal (year, qtr) — deterministic min-of-modes;
+    ``typed`` needs only (source_file, year, qtr)."""
     counted = (
         typed.groupBy("source_file", "year", "qtr")
         .count()
@@ -64,22 +70,19 @@ def run_etl(
     raw = read_qcew_text(spark, input_glob).filter(
         F.length(F.trim("value")) > 0
     )
-    # deliberately NOT persisted: the mode-key pass only reads (source_file,
-    # year, qtr), and Catalyst prunes the 121-column decode projection down
-    # to those 3 substrings for that job — re-scanning the raw text twice is
-    # cheaper than materializing a full-width cache, and at 100 TB caching
-    # the corpus is not an option anyway
+    # deliberately NOT persisted: the mode-key pass decodes only (year, qtr)
+    # from the first chunk of each line, so re-scanning the raw text is
+    # cheaper than caching the 121-column decode, and at 100 TB caching the
+    # corpus is not an option anyway
     typed = typed_qcew(decode_qcew(raw))
-    keys = file_mode_keys(typed)
-    keyed = typed.join(F.broadcast(keys), "source_file", "left").drop(
-        "source_file", "value"
+    keys = file_mode_keys(
+        typed_qcew(raw.selectExpr("source_file", *decode_exprs(("year", "qtr"))))
     )
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "dynamic" if incremental else "static",
-    )
+    keyed = typed.join(F.broadcast(keys), "source_file", "left").drop("source_file")
+    # a per-write option, so the caller's session conf is left alone
     (
         keyed.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if incremental else "static")
         .partitionBy("file_year", "file_qtr")
         .parquet(output_dir)
     )

@@ -496,26 +496,17 @@ def stream_qcew_ingest(
     StreamingQuery; callers `awaitTermination()` (availableNow drains the
     backlog then stops — the replayable test/batch-catchup trigger).
     """
-    from jp_qcew_spark.sources.fixed_width import decode_qcew, typed_qcew
+    from jp_qcew_spark.sources.fixed_width import decode_qcew, line_reader, typed_qcew
 
     ensure_session_confs(spark)
-    # CSV-as-line-reader: Spark's text source is UTF-8-only (see
-    # sources.fixed_width.read_qcew_text) — same latin-1-safe shape here
     raw = (
-        spark.readStream.format("csv")
-        .option("encoding", "ISO-8859-1")
-        .option("sep", "\x01")
-        .option("quote", "")
-        .option("header", "false")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
+        line_reader(spark.readStream)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .schema("value string")
         .load(input_dir)
         .select(F.col("value"), F.input_file_name().alias("source_file"))
         .filter(F.length(F.trim("value")) > 0)
     )
-    typed = typed_qcew(decode_qcew(raw)).drop("value", "source_file")
+    typed = typed_qcew(decode_qcew(raw)).drop("source_file")
     return (
         typed.writeStream.format("parquet")
         .option("path", output_dir)

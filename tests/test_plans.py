@@ -278,6 +278,31 @@ def test_dynamic_partition_pruning_on_qcew(spark, tmp_path_factory):
     assert "dynamicpruning" in plan.lower() or "DynamicPruning" in plan
 
 
+def test_qcew_decode_slices_each_chunk_once(spark, tmp_path):
+    """The fixed-width decode is one Project whose 121 fields slice a few
+    chunks of the raw line (at most 128 chars each, tiling the 1,060-char
+    record), not 121 flat slices: subexpression elimination then walks a
+    line once per chunk instead of once per field from char 0."""
+    import re
+
+    from jp_qcew_spark.schema.qcew_fields import FIELDS, RECORD_WIDTH
+    from jp_qcew_spark.sources.fixed_width import decode_qcew, read_qcew_text
+
+    p = tmp_path / "one.txt"
+    p.write_text(" " * RECORD_WIDTH + "\n", encoding="latin-1")
+    plan = decode_qcew(read_qcew_text(spark, str(p)))._jdf.queryExecution()
+    project = plan.optimizedPlan()
+    assert project.nodeName() == "Project"
+    exprs = project.projectList().mkString("\n")
+    slices = re.findall(r"substring\(value#\d+, (\d+), (\d+)\)", exprs)
+    assert len(slices) == len(FIELDS)
+    chunks = sorted({(int(g), int(n)) for g, n in slices})
+    assert len(chunks) <= 10 and all(n <= 128 for _, n in chunks)
+    starts = [1] + [g + n for g, n in chunks]
+    assert [g for g, _ in chunks] == starts[:-1]
+    assert starts[-1] == RECORD_WIDTH + 1
+
+
 def test_fuzzy_dedup_blocked_join(spark, sf_dir):
     """Edit-distance linkage must stay BLOCKED: an equi-join on the block
     prefix (never cartesian), no forced broadcasts, and the block-frequency

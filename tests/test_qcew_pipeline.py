@@ -7,6 +7,7 @@ records the Spark pipeline produced — semantics-parity, not bug-parity
 
 from __future__ import annotations
 
+import glob
 import os
 
 import duckdb
@@ -104,6 +105,48 @@ def test_etl_idempotent_rerun(spark, qcew_dirs, etl_out):
     n1 = df.count()
     df2 = run_etl(spark, qcew_dirs["root"] + "/*/*", out)
     assert df2.count() == n1  # dynamic overwrite, not append-duplication
+
+
+def _partitions(out):
+    return sorted(
+        os.path.relpath(p, out) for p in glob.glob(os.path.join(out, "*", "*"))
+    )
+
+
+def test_etl_overwrite_mode_is_per_write(spark, qcew_dirs, tmp_path):
+    """``incremental`` picks the overwrite mode for run_etl's own write and
+    leaves the caller's session conf alone: a re-run over one year's files
+    keeps the other year's partitions when incremental and replaces them
+    otherwise, whatever the session says."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    root, out = qcew_dirs["root"], str(tmp_path / "out")
+    try:
+        run_etl(spark, root + "/*/*", out)
+        both = _partitions(out)
+        assert len(both) == 8
+        spark.conf.set(key, "static")
+        run_etl(spark, root + "/2015/*", out, incremental=True)
+        assert spark.conf.get(key) == "static"
+        assert _partitions(out) == both
+        spark.conf.set(key, "dynamic")
+        run_etl(spark, root + "/2015/*", out, incremental=False)
+        assert spark.conf.get(key) == "dynamic"
+        assert _partitions(out) == [p for p in both if "file_year=2015" in p]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_run_etl_warm_job_count(spark, qcew_dirs, tmp_path):
+    """A warm run_etl launches 5 Spark jobs; a rise is the first sign of a
+    re-planned or re-scanned stage."""
+    from tests.test_io_helpers import count_jobs
+
+    root = qcew_dirs["root"] + "/*/*"
+    run_etl(spark, root, str(tmp_path / "cold"))
+    with count_jobs(spark) as n:
+        run_etl(spark, root, str(tmp_path / "warm"))
+    assert n == [5]
 
 
 def test_naics_aggregate_matches_duckdb_golden(etl_out, spark):
@@ -297,7 +340,16 @@ def test_latin1_roundtrip(spark, tmp_path):
     must decode to the right characters — a UTF-8 misread would mangle every
     name field."""
     name = "COMPAÑÍA AZUCARERA JOSÉ MUÑOZ"
-    line = make_line({"leg_corp_name": name, "year": "2015", "qtr": "1"})
+    line = make_line(
+        {
+            "leg_corp_name": name,
+            "year": "2015",
+            "qtr": "1",
+            "trade_name": "CAFÉ",
+            "naics_code": "541511",
+            "qcew_contact_website": "www.ejemplo.pr",
+        }
+    )
     p = tmp_path / "latin1.txt"
     p.write_bytes((line + "\n").encode("iso-8859-1"))
     from jp_qcew_spark.sources.fixed_width import read_qcew_text
@@ -305,6 +357,43 @@ def test_latin1_roundtrip(spark, tmp_path):
     row = typed_qcew(decode_qcew(read_qcew_text(spark, str(p)))).first()
     assert row["leg_corp_name"] == name
     assert row["year"] == 2015
+    # fields after the two-byte ñ/é, in the same chunk and in later ones:
+    # slices count characters, not bytes
+    assert row["trade_name"] == "CAFÉ"
+    assert row["naics_code"] == "541511"
+    assert row["qcew_contact_website"] == "www.ejemplo.pr"
+
+
+@pytest.mark.parametrize(
+    "ws", list(" \t\r\n\x0b\x0c"), ids=["sp", "tab", "cr", "lf", "vt", "ff"]
+)
+def test_decode_trims_each_whitespace_char(spark, ws):
+    """Each of the six chars of the reference's whitespace class is
+    stripped from both edges of a field, and nowhere else; a char outside
+    the class (ESC) is kept. Every one of the 121 fields is checked
+    against a Python slice-and-strip of the same line, with ñ/é ahead of
+    the dirty fields in the first and last chunks."""
+    from jp_qcew_spark.schema.qcew_fields import FIELDS
+
+    line = make_line(
+        {
+            "leg_corp_name": "ÑñÉé" * 8,
+            "naics_code": f"{ws}5415{ws}",
+            "year": f"{ws}20{ws}",
+            "rep_unit_desc": f"{ws}a{ws}b{ws}",
+            "qcew_contact_website": f"{ws}{ws}w.pr{ws}{ws}",
+            "future_use": f"\x1b{ws}x{ws}\x1b",
+        }
+    )
+    row = decode_qcew(spark.createDataFrame([(line,)], "value string")).first()
+    want = {
+        name: line[pos - 1 : pos - 1 + length].strip(" \t\r\n\x0b\x0c")
+        for name, pos, length in FIELDS
+    }
+    assert row.asDict() == want
+    assert row["naics_code"] == "5415"
+    assert row["rep_unit_desc"] == f"a{ws}b"
+    assert row["future_use"] == f"\x1b{ws}x{ws}\x1b"
 
 
 def test_typed_cast_fractional_truncates(spark):
