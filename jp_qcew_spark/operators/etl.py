@@ -61,7 +61,9 @@ def run_etl(
 ) -> DataFrame:
     """Full ETL: read fixed-width glob → decode/type → mode-key → write
     parquet partitioned by (file_year, file_qtr). Returns the normalized
-    DataFrame (lazy read-back of what was written).
+    DataFrame: a lazy read-back of what was written, under the written
+    frame's own schema, so no inference job runs and the partition columns
+    keep their declared types.
 
     ``incremental=True`` uses dynamic partition overwrite: re-processing a
     (year, qtr) replaces exactly that partition — correct idempotent loads
@@ -86,4 +88,4 @@ def run_etl(
         .partitionBy("file_year", "file_qtr")
         .parquet(output_dir)
     )
-    return spark.read.parquet(output_dir)
+    return spark.read.schema(keyed.schema).parquet(output_dir)

@@ -45,8 +45,8 @@ _GROUPS = [
 # - CHANGED in r15, optimization round 2: (a) the five connected-
 #   components consumers (size-gated local union-find finish,
 #   ext/graph.py); (b) the two PQ pricing evals (variants built on
-#   concurrent driver threads); (c) every stream that drains through
-#   run_to_memory/run_to_quiescence — RAM-backed ephemeral checkpoints,
+#   concurrent driver threads); (c) every stream, all drained by
+#   run_to_memory (the one bounded drain) — RAM-backed ephemeral checkpoints,
 #   key-cardinality-derived state width for the dedup twins, PLUS the
 #   inherited r15 commit's Arrow record-batch replay feeds and the
 #   checkpoint-checksum default — the 17 registered stream consumers

@@ -1,16 +1,17 @@
 """Structured Streaming queries (SURVEY.md §2.I, extension tier B).
 
 Each entry runs a REAL streaming pipeline (readStream → watermark → stateful
-operator → available-now trigger → memory sink) and returns the drained sink.
-Oracles check the batch-equivalent semantics in DuckDB: session windows and
-key-set dedup are deterministic; the custom-stateful per-user stats reduce to
-a plain group-by at quiescence.
+operator → memory sink, drained by ``run_to_memory``) and returns the drained
+sink. Oracles check the batch-equivalent semantics in DuckDB: session windows
+and key-set dedup are deterministic; the custom-stateful per-user stats reduce
+to a plain group-by after the drain.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from jp_qcew_spark.io import order_result
 from jp_qcew_spark.streaming import (
     stream_cdc_apply,
     stream_dedup_keys,
@@ -20,7 +21,9 @@ from jp_qcew_spark.streaming import (
 
 
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_session_windows(spark, sf_dir).orderBy("user_id", "session_start")
+    return stream_session_windows(spark, sf_dir).transform(
+        order_result, "user_id", "session_start"
+    )
 
 
 # identical semantics to the batch session_window oracle (events.py)
@@ -50,7 +53,9 @@ ORDER BY user_id, session_start
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_dedup_keys(spark, sf_dir).orderBy("user_id", "event_type")
+    return stream_dedup_keys(spark, sf_dir).transform(
+        order_result, "user_id", "event_type"
+    )
 
 
 ORACLE_STREAM_DEDUP = """
@@ -60,7 +65,7 @@ FROM events ORDER BY user_id, event_type
 
 
 def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_stateful_user_stats(spark, sf_dir).orderBy("user_id")
+    return stream_stateful_user_stats(spark, sf_dir).transform(order_result, "user_id")
 
 
 ORACLE_STREAM_STATEFUL = """
@@ -85,7 +90,9 @@ ORACLE = {
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jp_qcew_spark.streaming.pipelines import stream_static_enrich
 
-    return stream_static_enrich(spark, sf_dir).orderBy("c_mktsegment", "event_type")
+    return stream_static_enrich(spark, sf_dir).transform(
+        order_result, "c_mktsegment", "event_type"
+    )
 
 
 ORACLE_STREAM_STATIC = """
@@ -102,8 +109,8 @@ ORACLE["stream_static_join"] = ORACLE_STREAM_STATIC
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jp_qcew_spark.streaming.pipelines import stream_stream_attribution
 
-    return stream_stream_attribution(spark, sf_dir).orderBy(
-        "user_id", "view_id", "buy_id"
+    return stream_stream_attribution(spark, sf_dir).transform(
+        order_result, "user_id", "view_id", "buy_id"
     )
 
 
@@ -123,7 +130,7 @@ ORACLE["stream_stream_join"] = ORACLE_STREAM_STREAM_JOIN
 def q_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jp_qcew_spark.streaming.pipelines import stream_tws_user_extremes
 
-    return stream_tws_user_extremes(spark, sf_dir).orderBy("user_id")
+    return stream_tws_user_extremes(spark, sf_dir).transform(order_result, "user_id")
 
 
 ORACLE_STREAM_TWS = """
@@ -169,7 +176,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         run_to_memory(stream, "complete", "sink_sliding")
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
-        .orderBy("window_start")
+        .transform(order_result, "window_start")
     )
 
 
@@ -196,15 +203,14 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed-sized micro-batches, aggregated per event_type. Equality with the plain
     batch oracle proves the replay is exactly-once END TO END — a
     dropped or double-read micro-batch anywhere in the offset protocol
-    diverges the counts. (It already caught one real bug: an availableNow
-    drain silently truncates this source to its first prefetched batch —
-    hash-red at sf0.01 in the bare-session driver simulation.)"""
+    diverges the counts: an availableNow trigger would keep only the
+    source's first prefetched batch."""
     import os
 
     from pyspark.sql import functions as F
 
     from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_quiescence
+    from jp_qcew_spark.streaming.pipelines import run_to_memory
 
     spark.dataSource.register(EventReplayDataSource)
     stream = (
@@ -217,11 +223,8 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    # run_to_quiescence, NOT run_to_memory: the simple reader's prefetcher
-    # exposes one batch per latestOffset, so an availableNow drain would
-    # stop after the FIRST micro-batch (see run_to_quiescence docstring)
-    return run_to_quiescence(agg, "complete", "sink_pyds_replay").orderBy(
-        "event_type"
+    return run_to_memory(agg, "complete", "sink_pyds_replay").transform(
+        order_result, "event_type"
     )
 
 
@@ -268,7 +271,9 @@ def q_stream_python_source_sharded(spark: SparkSession, sf_dir: str) -> DataFram
         F.sum("user_id").cast("long").alias("uid_mass"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    return run_to_memory(agg, "complete", "sink_pyds_sharded").orderBy("shard")
+    return run_to_memory(agg, "complete", "sink_pyds_sharded").transform(
+        order_result, "shard"
+    )
 
 
 ORACLE_STREAM_PYTHON_SOURCE_SHARDED = """
@@ -284,9 +289,9 @@ ORACLE["stream_python_source_sharded"] = ORACLE_STREAM_PYTHON_SOURCE_SHARDED
 
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC snapshot maintenance (see streaming.pipelines
-    .stream_cdc_apply); at quiescence it must equal the batch
+    .stream_cdc_apply); after the drain it must equal the batch
     ``cdc_apply`` compaction exactly, so the two share one oracle."""
-    return stream_cdc_apply(spark, sf_dir).orderBy("user_id")
+    return stream_cdc_apply(spark, sf_dir).transform(order_result, "user_id")
 
 
 # identical semantics to the batch cdc_apply oracle (warehouse.py)
@@ -314,12 +319,12 @@ ORACLE["stream_cdc_apply"] = ORACLE_STREAM_CDC
 def q_stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CEP pattern match (see streaming.pipelines
     .stream_cep_sequence): per-user 1-event state buffer over the custom
-    ordered replay source, cross-batch adjacency carry; at quiescence it
+    ordered replay source, cross-batch adjacency carry; after the drain it
     equals the batch ``events_cep_sequence`` lead-window exactly, so the
     two share one oracle."""
     from jp_qcew_spark.streaming.pipelines import stream_cep_sequence
 
-    return stream_cep_sequence(spark, sf_dir).orderBy("user_id")
+    return stream_cep_sequence(spark, sf_dir).transform(order_result, "user_id")
 
 
 # identical semantics to the batch events_cep_sequence oracle (events.py)
@@ -358,7 +363,7 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark to bound state — the defining deployment advantage of a
     mergeable sketch over exact quantiles in a stream.
 
-    Batch-oracle equality at quiescence proves the per-batch partial
+    Batch-oracle equality after the drain proves the per-batch partial
     histograms merged associatively: a dropped batch, a double-merged
     bin, or an order-dependent merge diverges the counts and the
     interpolated estimates with them."""
@@ -368,7 +373,7 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jp_qcew_spark.queries.sketches import hist_quantile_readout
     from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_quiescence
+    from jp_qcew_spark.streaming.pipelines import run_to_memory
 
     spark.dataSource.register(EventReplayDataSource)
     stream = (
@@ -381,7 +386,7 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("flag"),
         F.expr("CAST(floor(value / 10.0) AS BIGINT)").alias("bin"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    sink = run_to_quiescence(hist, "complete", "sink_qhist_replay")
+    sink = run_to_memory(hist, "complete", "sink_qhist_replay")
     return (
         hist_quantile_readout(sink, 10)
         .select(
@@ -390,7 +395,7 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("e50", 4).alias("est_p50"),
             F.round("e95", 4).alias("est_p95"),
         )
-        .orderBy("event_type")
+        .transform(order_result, "event_type")
     )
 
 
@@ -439,8 +444,8 @@ def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch query reads its own sketch table: exact per-user counts (a
     sketch cannot enumerate its keys — the candidate set always comes
     from outside) probe the STREAMED sketch, estimate = min over the
-    key's d cells, top-20 by exact count. Batch-oracle equality at
-    quiescence is the associative-merge proof: a dropped micro-batch, a
+    key's d cells, top-20 by exact count. Batch-oracle equality after
+    the drain is the associative-merge proof: a dropped micro-batch, a
     double-counted cell, or an order-dependent merge shifts at least one
     min-cell estimate.
 
@@ -455,7 +460,7 @@ def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jp_qcew_spark.io import load_table
     from jp_qcew_spark.queries.sketches import _CMS_D
     from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_quiescence
+    from jp_qcew_spark.streaming.pipelines import run_to_memory
 
     def probes(df: DataFrame, key: str) -> DataFrame:
         return (
@@ -496,7 +501,7 @@ def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cms_stream = probes(stream, "user_id").groupBy("j", "b").agg(
         F.count(F.lit(1)).alias("total")
     )
-    sink = run_to_quiescence(cms_stream, "complete", "sink_cms_replay")
+    sink = run_to_memory(cms_stream, "complete", "sink_cms_replay")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("k"))
@@ -607,7 +612,7 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jp_qcew_spark.io import load_table
     from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_quiescence
+    from jp_qcew_spark.streaming.pipelines import run_to_memory
 
     spark.dataSource.register(EventReplayDataSource)
     stream = (
@@ -637,7 +642,7 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "r")
         .agg(F.max("rho").alias("m"))
     )
-    sink = run_to_quiescence(regs, "complete", "sink_hll_replay")
+    sink = run_to_memory(regs, "complete", "sink_hll_replay")
     agg = sink.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nreg"),
         F.sum(F.expr("CAST(pow(2, 32 - m) AS BIGINT)")).alias("sp"),
@@ -674,7 +679,7 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         est.join(exact, "event_type")
         .select("event_type", "n_exact", "n_registers", "v_zero", "est_hll")
-        .orderBy("event_type")
+        .transform(order_result, "event_type")
     )
 
 
@@ -734,7 +739,7 @@ def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint seen-flag in the state store, append-mode emission)."""
     from jp_qcew_spark.streaming.pipelines import stream_dedup_incremental
 
-    return stream_dedup_incremental(spark, sf_dir).orderBy("doc_id")
+    return stream_dedup_incremental(spark, sf_dir).transform(order_result, "doc_id")
 
 
 # Batch reconstruction of the replay: batch index = rank(doc_id) // bsz
@@ -782,7 +787,7 @@ def q_stream_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen-flag state, any-band OR folded at the boundary)."""
     from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
 
-    return stream_dedup_neardup(spark, sf_dir).orderBy("doc_id")
+    return stream_dedup_neardup(spark, sf_dir).transform(order_result, "doc_id")
 
 
 def _oracle_stream_neardup() -> str:
@@ -791,7 +796,7 @@ def _oracle_stream_neardup() -> str:
     a band key was 'seen earlier' iff its minimum batch index precedes
     mine; the in-batch keeper per (band, key, batch) is the minimum
     doc_id; the per-doc verdict is the same any-band OR the stream folds
-    after quiescence. Signature CTEs are the dedup_minhash_lsh oracle's
+    after the drain. Signature CTEs are the dedup_minhash_lsh oracle's
     (same hash family, bit-for-bit)."""
     from jp_qcew_spark.queries.dedup import _SH_SQL, _sig_band_sql
 
@@ -854,7 +859,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact tokenize/hash parity with the batch feature pipeline)."""
     from jp_qcew_spark.streaming.pipelines import stream_quality_gate
 
-    return stream_quality_gate(spark, sf_dir).orderBy("doc_id")
+    return stream_quality_gate(spark, sf_dir).transform(order_result, "doc_id")
 
 
 def _oracle_stream_quality_gate() -> str:

@@ -209,8 +209,8 @@ class _ShardedReplayReader(DataSourceStreamReader):
     instead ask the broker for end-offsets, and would advance
     ``latestOffset`` in bounded increments (the ReadLimit/admission-control
     analog); this bounded replay exposes the whole feed in one planned
-    batch, which exercises the parallel-partition path under
-    ``availableNow`` without relying on Python-source admission control.
+    batch, so one micro-batch reads every shard in parallel and the drain
+    (``run_to_memory``) ends once that batch commits.
 
     Executor reads re-filter the parquet by shard (fine for a bounded
     file; a real feed serves cursor reads) — the contract under test is

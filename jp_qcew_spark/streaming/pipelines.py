@@ -8,15 +8,18 @@ batch twin in ``jp_qcew_spark.queries.events`` computed with the *same*
 window functions, which is how the DuckDB oracle checks streaming results.
 
 Scale posture: streaming state is keyed by ``user_id`` (the natural
-100 TB partition key); watermarks bound state size; `availableNow` triggers
-give reproducible batch-equivalent replays for testing, while the same
-pipelines run unmodified with a live trigger against an arriving-file
-directory (`maxFilesPerTrigger`) in production.
+100 TB partition key); watermarks bound state size. Every bounded replay
+drains through ``run_to_memory``, which ends when the committed offsets
+reach the end of the feed; the same pipelines run unmodified with a live
+trigger against an arriving-file directory (`maxFilesPerTrigger`) in
+production.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,29 +57,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ephemeral_checkpoint_dir() -> str | None:
-    """Checkpoint directory for the engine's EPHEMERAL test-sink drains.
+    """A fresh checkpoint directory for one ``run_to_memory`` drain.
 
-    These checkpoints exist only for the seconds a bounded replay takes —
-    the memory-sink result is the output; nothing ever restarts from
-    them — yet they default under ``java.io.tmpdir`` on DISK, so every
-    micro-batch pays offset-log + state-delta fsyncs to /tmp (profiled
-    r15: the disk path also reads up to 2× slower run-to-run under page-
-    cache pressure). A RAM-backed tmpfs dir removes that I/O from the
-    drain's critical path. Resolution order: ``SPARK_GRAFT_STREAM_CKPT``
-    (a production-like run points this at durable storage), else a fresh
-    dir under /dev/shm when present, else None (Spark's own temp dir —
-    the pre-r15 behavior, so non-tmpfs platforms are unchanged). One
-    fresh dir per drain: a reused location would make the second run try
-    to RECOVER a finished query (memory sinks refuse). Best-effort
-    removal after the drain; production checkpoints (explicit
+    The memory sink is the drain's output and nothing restarts from its
+    checkpoint, so it lives in RAM rather than under ``java.io.tmpdir``,
+    keeping offset-log and state-delta writes off the disk. Resolution
+    order: ``SPARK_GRAFT_STREAM_CKPT``, else a fresh directory under
+    /dev/shm, else None (Spark's own temp directory). Each drain gets its
+    own directory: a reused one would make the next run try to recover a
+    finished memory-sink query. Production checkpoints (explicit
     ``checkpoint_dir`` arguments, e.g. ``stream_qcew_ingest``) do not
     route through this."""
     forced = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
     base = forced or "/dev/shm"
     if not os.path.isdir(base) or not os.access(base, os.W_OK):
         return None
-    import tempfile
-
     return tempfile.mkdtemp(prefix="jp_qcew_ckpt_", dir=base)
 
 
@@ -86,46 +81,53 @@ def run_to_memory(
     name: str | None = None,
     state_partitions: int = 8,
 ) -> DataFrame:
-    """Drain a streaming DataFrame through an available-now trigger into a
-    memory sink and return the sink table (one bounded replay — the testing
-    idiom; production swaps the sink + trigger, the plan is unchanged).
+    """Drain a bounded stream into a memory sink and return the sink table
+    (the engine's one bounded replay; production swaps the sink and the
+    trigger, the plan is unchanged).
+
+    The query starts on the default trigger and the drain returns from
+    ``processAllAvailable()``, which returns once the committed offsets
+    equal every source's latest offset and no data or watermark batch is
+    pending: the drain ends on an offset, never on a timer. That holds for
+    a ``SimpleDataSourceStreamReader`` too, whose latest offset is the next
+    batch its prefetcher read, so the drain runs until the feed is
+    exhausted (an availableNow trigger would keep only the first batch).
+    A query that dies re-raises its own error. The query is stopped on
+    every exit.
 
     Pass a stable ``name`` from fixed pipelines: re-running replaces the
-    sink table instead of leaking a new one per invocation (repeat callers —
-    the bench harness runs every query 4× — would otherwise accumulate
-    result tables in executor memory).
+    sink table instead of leaking a new one per call.
 
-    ``state_partitions`` sizes the stream's STATE STORE explicitly rather
-    than inheriting the batch shuffle width: Spark captures
-    ``spark.sql.shuffle.partitions`` at first micro-batch and the
-    checkpoint pins it for the stream's LIFETIME, so a streaming job must
-    choose this number deliberately at creation (the standard deployment
-    rule). Sized to key cardinality: every state instance costs a task +
-    store open per micro-batch, so width beyond ~keys/1000 is pure
-    overhead (measured here: 32 → 8 cuts replay latency ~20% with
-    per-user state in the hundreds; a production fleet with 10^8 users
-    sets hundreds of partitions the same way)."""
+    ``state_partitions`` sizes the stream's state store instead of
+    inheriting the batch shuffle width: the query clones the session in
+    ``start()`` and its first offset log entry pins that clone's
+    ``spark.sql.shuffle.partitions`` for the stream's lifetime. The
+    caller's conf is restored as soon as ``start()`` returns. Every state
+    partition costs a task and a store open per micro-batch, so size it to
+    key cardinality (``state_width``)."""
     spark = stream_df.sparkSession
     name = name or f"sink_{uuid.uuid4().hex[:12]}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     ckpt = _ephemeral_checkpoint_dir()
     try:
         writer = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .trigger(availableNow=True)
         )
         if ckpt:
             writer = writer.option("checkpointLocation", ckpt)
-        query = writer.start()
-        query.awaitTermination()
+        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            query = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         if ckpt:
-            import shutil
-
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
@@ -146,82 +148,6 @@ def state_width(spark: SparkSession, n_keys: int) -> int:
     of 8 yields to the cap: fewer cores than 8 give core-count width."""
     dp = spark.sparkContext.defaultParallelism
     return min(dp, max(8, n_keys // 1000))
-
-
-def run_to_quiescence(
-    stream_df: DataFrame,
-    output_mode: str,
-    name: str,
-    state_partitions: int = 8,
-    timeout_s: float = 120.0,
-) -> DataFrame:
-    """Drain a stream through a PROCESSING-TIME trigger until the source
-    reports no more available data, then stop — the drain for sources whose
-    ``availableNow`` end-offset cannot capture the whole feed up front.
-
-    Why not ``run_to_memory``: availableNow snapshots ``latestOffset()``
-    ONCE at trigger start. A ``SimpleDataSourceStreamReader`` is wrapped in
-    a driver-side prefetcher whose latestOffset only ever exposes the next
-    prefetched micro-batch, so an availableNow replay would process exactly
-    one batch and declare the feed done — silent data loss (caught by the
-    bare-session driver simulation at sf0.01, where the feed outgrew one
-    batch; at sf0.001 one batch covered it and the bug hid). Polling
-    ``query.status["isDataAvailable"]`` after each completed batch is the
-    engine's own "caught up" signal, so the drain ends exactly when the
-    offset log reaches the end of the feed — however many micro-batches
-    that takes. Production equivalent: a continuously-running query with
-    the same trigger; the quiescence stop is the test-harness affordance.
-    """
-    import time
-
-    spark = stream_df.sparkSession
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    ckpt = _ephemeral_checkpoint_dir()
-    try:
-        writer = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(processingTime="50 milliseconds")
-        )
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        query = writer.start()
-        deadline = time.time() + timeout_s
-        settled = 0
-        while time.time() < deadline:
-            if not query.isActive:
-                # the query died before quiescing — surface ITS error, not
-                # a misleading timeout (awaitTermination re-raises it)
-                query.awaitTermination()
-                raise RuntimeError(
-                    f"stream {name!r} terminated before quiescing"
-                )
-            status = query.status
-            if (
-                query.lastProgress is not None
-                and not status["isDataAvailable"]
-                and not status["isTriggerActive"]
-            ):
-                settled += 1
-                if settled >= 2:  # two consecutive idle checks = caught up
-                    break
-            else:
-                settled = 0
-            time.sleep(0.1)
-        else:
-            query.stop()
-            raise TimeoutError(f"stream {name!r} did not quiesce in {timeout_s}s")
-        query.stop()
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if ckpt:
-            import shutil
-
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,8 +363,8 @@ def _cdc_fn(key, pdfs, state):
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the batch ``cdc_apply`` snapshot: the events
     changelog streams through ``applyInPandasWithState`` keeping only the
-    last-writer row per key (max (ts, event_id)) and the op count; at
-    quiescence the snapshot equals the batch compaction exactly — delete
+    last-writer row per key (max (ts, event_id)) and the op count; after
+    the drain the snapshot equals the batch compaction exactly — delete
     tombstones ('view' as last op) drop the key. State per key is ONE
     row regardless of stream length — the production shape for a
     continuously-maintained CDC snapshot at 100 TB/day changelog volume
@@ -543,15 +469,13 @@ def stream_foreach_batch_sink(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # dynamic mode: overwrite ONLY the partitions this batch writes
-        # (its own batch_id dir) — a replayed batch replaces itself and
-        # never clobbers earlier batches
-        batch_df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
+        # dynamic mode, per write: overwrite ONLY the partition this batch
+        # writes (its own batch_id dir), so a replayed batch replaces itself
+        # and never clobbers earlier batches; no session conf is touched
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(output_dir)
         )
@@ -761,7 +685,7 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) order across ~8 micro-batches: the per-user 1-event
     state buffer (_cep_fn) must genuinely bridge batch boundaries for the
     result to equal the batch lead-window — a file-source replay would
-    collapse to one batch and never exercise the carry. At quiescence the
+    collapse to one batch and never exercise the carry. After the drain the
     match set equals the batch query exactly, so the two share one
     oracle."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -803,7 +727,7 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch at sf0.1), so task-level parallelism on the state shuffle is
     # the lever — measured 11.0 s -> 7.4 s from 8 -> 32 here, where the
     # low-key-cardinality streams (event_type keys) gain nothing
-    sink = run_to_quiescence(
+    sink = run_to_memory(
         matches, "append", "sink_cep_sequence", state_partitions=32
     )
     return sink.groupBy("user_id").agg(
@@ -854,8 +778,8 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table replays in doc_id order as ~8 deterministic
     micro-batches (``DocReplayDataSource``); each batch's head
     fingerprints probe the accumulated seen-keys state
-    (``applyInPandasWithState`` keyed by fp). Batch-oracle equality at
-    quiescence proves the dedup tier's merge law on the wire the way the
+    (``applyInPandasWithState`` keyed by fp). Batch-oracle equality after
+    the drain proves the dedup tier's merge law on the wire the way the
     r8 HLL/CMS twins did for sketches: because batch boundaries are a
     pure function of (doc_id rank, ceil(n/8)), the oracle reconstructs
     "seen in an earlier batch" with two window minima — a dropped batch,
@@ -890,7 +814,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jp_qcew_spark.io import metadata_row_count
 
     n_docs = metadata_row_count(spark, sf_dir, "documents")
-    return run_to_quiescence(
+    return run_to_memory(
         out,
         "append",
         "sink_dedup_incremental",
@@ -917,8 +841,8 @@ _NEARDUP_STATE = StructType(
 # key itself. The r9 exact-dedup stream keys state per fingerprint — the
 # honest per-key cost contract, and at 3x the key cardinality (3 band
 # keys per doc) the per-key Arrow invocation overhead measurably breaks
-# scaling: the per-key first cut ran 19.98 s at sf0.1 and failed the
-# 120 s quiescence gate at sf1 (~150k key groups). Bucketing bounds the
+# scaling: the per-key first cut ran 19.98 s at sf0.1 and did not
+# finish in 120 s at sf1 (~150k key groups). Bucketing bounds the
 # invocation count at min(|keys in batch|, buckets) per micro-batch and
 # moves the per-key flags into an array-of-identities state per bucket
 # — the invocation-count vs state-value-size knob. (Round 13 packed the
@@ -956,7 +880,7 @@ def _neardup_fn(key, pdfs, state):
     docs get ``prior=1`` if the identity was already registered; within
     the batch the smallest doc_id per identity is its keeper
     (``lower_in_batch=0``) and the rest are flagged. The per-DOC verdict
-    is an any-band OR folded AFTER quiescence — a doc is near-dup if ANY
+    is an any-band OR folded AFTER the drain — a doc is near-dup if ANY
     of its bands hit — which cannot be decided inside one key group, so
     the stateful op emits per-(band, doc) facts and the batch rollup at
     the boundary folds them (the stream_cep_sequence post-sink-agg
@@ -1036,9 +960,10 @@ def stream_dedup_neardup(
     3x the r9 exact-dedup stream — so the stateful op is keyed by a
     crc32 BUCKET of the band identity (``_NEARDUP_BUCKETS``), bounding
     Arrow invocations per micro-batch at the bucket count instead of the
-    key count (the per-key first cut: 19.98 s at sf0.1, quiescence
-    timeout at sf1; bucketed: measured at both). state_partitions=32
-    (the measured lever). Batch-oracle equality at quiescence: batch
+    key count (the per-key first cut: 19.98 s at sf0.1, unfinished at
+    sf1; bucketed: measured at both). The state width comes from
+    ``state_width`` over the bucket count. Batch-oracle equality after
+    the drain: batch
     index is a pure function of (doc_id rank, ceil(n/8)), so the oracle
     reconstructs 'band seen earlier' and 'lower id in batch' with two
     window minima over the banded keys — the r9 reconstruction device
@@ -1075,8 +1000,8 @@ def stream_dedup_neardup(
     # Signature = ONE Arrow-batched UDF (ext.dedup.minhash_band_keys):
     # the batch pipeline's codegen exploded+groupBy form is a streaming
     # aggregation (forbidden before the stateful op), and the per-row
-    # HOF fallback measured ~70 core-ms/doc interpreted — the sf1
-    # quiescence killer; the Arrow loop is ~2-3 ms/doc, bit-identical
+    # HOF fallback measured ~70 core-ms/doc interpreted, too slow
+    # for sf1; the Arrow loop is ~2-3 ms/doc, bit-identical
     # keys (pinned by test). The replay source emits ONE partition per
     # micro-batch, so repartition FIRST to run the signature at task
     # parallelism (the widen_scan lesson applied to the wire).
@@ -1122,7 +1047,7 @@ def stream_dedup_neardup(
     # checksum-fix re-measure put 32 partitions at ~16-20 s vs ~12-14 s
     # at 8-16 (sf0.1); a production wire raising the bucket count
     # derives a wider store through the same rule
-    sink = run_to_quiescence(
+    sink = run_to_memory(
         out,
         "append",
         "sink_dedup_neardup",
@@ -1218,4 +1143,4 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = stream.repartition(32).mapInPandas(
         score, "doc_id long, margin_micro long, keep long"
     )
-    return run_to_quiescence(scored, "append", "sink_quality_gate")
+    return run_to_memory(scored, "append", "sink_quality_gate")

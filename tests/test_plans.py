@@ -1368,6 +1368,8 @@ def _root_sort_input(df) -> str:
         "join_broadcast_dims",
         "running_sum",
         "union_distinct",
+        "stream_stateful_user_stats",
+        "stream_session",
     ],
 )
 def test_final_sort_over_single_partition(spark, sf_dir, name):

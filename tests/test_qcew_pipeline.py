@@ -96,6 +96,13 @@ def test_etl_mode_keying_and_partitions(etl_out):
         for r in df.select("file_year", "file_qtr").distinct().collect()
     }
     assert parts == {(y, q) for y in (2015, 2016) for q in (1, 2, 3, 4)}
+    # the read-back carries the written schema: partition keys keep the
+    # type of the (year, qtr) they were keyed from, not one inferred from
+    # directory names
+    types = dict(df.dtypes)
+    assert types["file_year"] == types["year"] == "bigint"
+    assert types["file_qtr"] == types["qtr"] == "bigint"
+    assert df.columns[-2:] == ["file_year", "file_qtr"]
     # dirty years survive as DATA (year column), just not as partition keys
     assert df.filter(F.col("year") == 2200).count() > 0
 
@@ -138,15 +145,16 @@ def test_etl_overwrite_mode_is_per_write(spark, qcew_dirs, tmp_path):
 
 
 def test_run_etl_warm_job_count(spark, qcew_dirs, tmp_path):
-    """A warm run_etl launches 5 Spark jobs; a rise is the first sign of a
-    re-planned or re-scanned stage."""
+    """A warm run_etl launches 4 Spark jobs (its read-back infers no
+    schema); a rise is the first sign of a re-planned or re-scanned
+    stage."""
     from tests.test_io_helpers import count_jobs
 
     root = qcew_dirs["root"] + "/*/*"
     run_etl(spark, root, str(tmp_path / "cold"))
     with count_jobs(spark) as n:
         run_etl(spark, root, str(tmp_path / "warm"))
-    assert n == [5]
+    assert n == [4]
 
 
 def test_naics_aggregate_matches_duckdb_golden(etl_out, spark):

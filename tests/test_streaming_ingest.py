@@ -150,3 +150,26 @@ def test_ephemeral_checkpoint_dir_is_fresh_and_writable(tmp_path, monkeypatch):
     assert a.startswith(str(tmp_path)) and os.path.isdir(a)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", str(tmp_path / "absent"))
     assert _ephemeral_checkpoint_dir() is None  # unwritable parent: fall back
+
+
+def test_foreach_batch_sink_leaves_session_conf(spark, sf_dir, tmp_path):
+    """The sink's dynamic partition overwrite is a per-write option: the
+    caller's ``partitionOverwriteMode`` is unchanged after the stream, and
+    a batch still overwrites only its own ``batch_id`` partition while the
+    session says static."""
+    from jp_qcew_spark.streaming.pipelines import stream_foreach_batch_sink
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    out, cp = str(tmp_path / "fb_out"), str(tmp_path / "fb_cp")
+    spark.range(1).withColumn("batch_id", F.lit(99)).write.partitionBy(
+        "batch_id"
+    ).parquet(out)
+    try:
+        spark.conf.set(key, "static")
+        stream_foreach_batch_sink(spark, sf_dir, out, cp).awaitTermination()
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    assert os.path.isdir(os.path.join(out, "batch_id=99"))
+    assert glob.glob(os.path.join(out, "batch_id=0", "*.parquet"))
