@@ -29,45 +29,53 @@ TABLES = (
 )
 
 
+# The runtime SQL confs the engine's semantics depend on: ``get_spark``
+# builds its session with them and ``ensure_session_confs`` pins them on a
+# session the caller built. Every key is runtime-settable.
+#
+# - ANSI off: null-on-failure casts / NULL on div-by-zero, mirroring the
+#   reference's ``cast(strict=False)`` (data_process.py:66-82) and the
+#   DuckDB oracle's TRY_CAST comparisons (Spark 4 defaults ANSI **on**).
+# - UTC session timezone: parquet instants must render as naive-UTC to
+#   match DuckDB's naive timestamps.
+# - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), unreadable
+#   otherwise; load_table converts back to micros.
+# - checkpoint checksums off: Spark 4.1 writes and verifies a checksum file
+#   for every streaming checkpoint file through an async writer pool each
+#   state-store commit waits on; the engine's stream checkpoints are
+#   ephemeral, so SPARK_GRAFT_CKPT_CHECKSUM=true (read at import) is the
+#   only way back on.
+# - cached-plan repartitioning: lets AQE re-plan (and coalesce) CACHED
+#   plans, so a .persist() under a 200-shuffle-partition session does not
+#   freeze 200 near-empty cache partitions for every downstream stage.
+ENGINE_CONFS = {
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": os.environ.get(
+        "SPARK_GRAFT_CKPT_CHECKSUM", "false"
+    ),
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
-    """Pin the runtime confs the engine's semantics depend on.
+    """Pin ``ENGINE_CONFS`` on ``spark``: the driver (and any embedding
+    application) builds its own SparkSession, so session-level defaults
+    can't be assumed. Idempotent; no other conf is written."""
+    for k, v in ENGINE_CONFS.items():
+        spark.conf.set(k, v)
 
-    The driver (and any embedding application) builds its own SparkSession, so
-    session-level defaults can't be assumed:
 
-    - ANSI off: null-on-failure casts / NULL on div-by-zero, mirroring the
-      reference's ``cast(strict=False)`` (data_process.py:66-82) and the
-      DuckDB oracle's TRY_CAST comparisons (Spark 4 defaults ANSI **on**).
-    - UTC session timezone: parquet instants must render as naive-UTC to match
-      DuckDB's naive timestamps.
-    - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), unreadable
-      otherwise; load_table converts back to micros.
-
-    All three are runtime-settable SQL confs; setting them is idempotent.
-    """
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Spark 4.1 generates + verifies a CHECKSUM FILE for every streaming
-    # checkpoint file through an async writer pool the task must await
-    # (ChecksumCheckpointFileManager.awaitResult) — profiled r15: every
-    # state-pass task parked there ~1 s with ~20 ms of CPU, the dominant
-    # per-micro-batch cost of the whole stateful tier. The engine's
-    # streaming checkpoints are ephemeral per-query test sinks, so
-    # corruption detection buys nothing here; a production deployment on
-    # durable object storage can re-enable it per query (the conf is
-    # runtime-settable; SPARK_GRAFT_CKPT_CHECKSUM=true restores it).
-    spark.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
-    )
-    # Let AQE re-plan (and coalesce) CACHED plans: without this, a
-    # .persist() under a default 200-shuffle-partition session freezes 200
-    # near-empty cache partitions, and every downstream stage pays 200
-    # task-overheads — measured 10× slowdowns on the dedup pipelines.
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
+def file_stamp(path: str) -> tuple[int, int, int] | None:
+    """``(st_mtime_ns, st_size, st_ino)`` of ``path``, or None when
+    ``os.stat`` cannot see it (a URI or a missing file): a file rewritten
+    or replaced at the same path gets a new stamp."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 # Per-session memo of each table's inferred Parquet schema (table_schema):
@@ -96,12 +104,10 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     pinned first."""
     ensure_session_confs(spark)
     path = _table_path(sf_dir, name)
-    try:
-        st = os.stat(path)
-    except OSError:
+    stamp = file_stamp(path)
+    if stamp is None:
         return spark.read.parquet(path).schema
     key = os.path.abspath(path)
-    stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
     hit = _SCHEMA_MEMO.get(spark, {}).get(key)
     if hit is None or hit[0] != stamp:
         with _SCHEMA_LOCK:
@@ -482,11 +488,13 @@ def release_caches() -> int:
 # hash-verified against its full SQL oracle replay each round.  Rows are
 # stored SORTED by the frame's columns so the promoted relation's content
 # is independent of collection partition order.  Keyed by (artifact,
-# absolute sf_dir) — scales never cross-contaminate; artifacts survive
-# query-scope release on purpose (that is the point).
+# absolute sf_dir) and the stamps of the directory's table files — scales
+# never cross-contaminate, and a rewritten table retrains its artifacts;
+# artifacts survive query-scope release on purpose (that is the point).
 # ---------------------------------------------------------------------------
 
-_TRAINED_MEMO: dict[tuple[str, str], tuple[list, object]] = {}
+# (key, absolute sf_dir) -> (table-file stamps, rows, schema)
+_TRAINED_MEMO: dict[tuple[str, str], tuple[tuple, list, object]] = {}
 _TRAINED_ROW_CAP = 100_000
 # Re-entrant: builds nest (the served codebook's build pulls the OPQ map
 # artifact), and the eval queries now materialize independent variants
@@ -512,9 +520,12 @@ def trained_artifact(
     artifacts; returns a fresh LocalRelation bound to ``spark`` (never a
     cached reference to a stopped session's frame)."""
     mk = (key, os.path.abspath(sf_dir))
-    if mk not in _TRAINED_MEMO:
+    stamp = tuple(file_stamp(_table_path(sf_dir, t)) for t in TABLES)
+    hit = _TRAINED_MEMO.get(mk)
+    if hit is None or hit[0] != stamp:
         with _TRAINED_LOCK:
-            if mk not in _TRAINED_MEMO:
+            hit = _TRAINED_MEMO.get(mk)
+            if hit is None or hit[0] != stamp:
                 import time as _time
 
                 t0 = _time.perf_counter()
@@ -530,9 +541,8 @@ def trained_artifact(
                 TRAINED_BUILD_SECONDS[key] = round(
                     _time.perf_counter() - t0, 3
                 )
-                _TRAINED_MEMO[mk] = (rows, df.schema)
-    rows, schema = _TRAINED_MEMO[mk]
-    return spark.createDataFrame(rows, schema)
+                hit = _TRAINED_MEMO[mk] = (stamp, rows, df.schema)
+    return spark.createDataFrame(hit[1], hit[2])
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

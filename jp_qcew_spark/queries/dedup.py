@@ -8,7 +8,9 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jp_qcew_spark.ext import dedup as D
@@ -49,6 +51,198 @@ def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exploded_shingles(d, "doc_id", "text")
 
 
+def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_exploded`` with the stop-shingle cap (ext.dedup.stop_shingle_filter),
+    cached at core-count width: the one shingle universe the shared-shingle
+    queries count both intersections and set sizes over, so their Jaccard
+    stays self-consistent."""
+    return cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
+
+
+# the df <= cap filter mirrors ext.dedup.stop_shingle_filter (DF_CAP_DEFAULT)
+_CAPPED_EX_SQL = rf"""sh AS ({_SH_SQL}),
+ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
+ex AS (
+  SELECT doc_id, s FROM (
+    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
+  ) WHERE df <= {D.DF_CAP_DEFAULT}
+)"""
+
+
+def _overlap(a: DataFrame, b: DataFrame, item: str = "shingle") -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b): every pair doc_a < doc_b sharing
+    at least one ``item`` of two (doc_id, item) frames, with the shared
+    count and both set sizes.
+
+    Candidates come from the item-keyed equi-join, so only docs sharing an
+    item meet (never n²); sizes are counted over ``b``, so ``a`` is ``b``
+    itself or a slice of its docs. The size table is one row per document,
+    so it never carries a broadcast hint (AQE still broadcasts it when
+    small); only a bounded ``a`` may be hinted by the caller."""
+    pairs = (
+        a.alias("a")
+        .join(
+            b.alias("b"),
+            (F.col(f"a.{item}") == F.col(f"b.{item}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count("*").alias("inter"))
+    )
+    sizes = b.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    return (
+        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "inter",
+            F.col("sa.sz").alias("sz_a"),
+            F.col("sb.sz").alias("sz_b"),
+        )
+    )
+
+
+def _overlap_sql(name: str, ex: str, item: str = "s") -> str:
+    """CTE ``name(doc_a, doc_b, inter, sz_a, sz_b)``: ``_overlap`` of the
+    (doc_id, item) relation ``ex`` with itself, in DuckDB."""
+    return f"""{name} AS (
+  SELECT p.doc_a, p.doc_b, p.inter, sa.sz AS sz_a, sb.sz AS sz_b
+  FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        FROM {ex} a JOIN {ex} b ON a.{item} = b.{item} AND a.doc_id < b.doc_id
+        GROUP BY 1, 2) p
+  JOIN (SELECT doc_id, count(*) AS sz FROM {ex} GROUP BY doc_id) sa
+    ON p.doc_a = sa.doc_id
+  JOIN (SELECT doc_id, count(*) AS sz FROM {ex} GROUP BY doc_id) sb
+    ON p.doc_b = sb.doc_id)"""
+
+
+def _jaccard() -> Column:
+    """Unrounded Jaccard of an ``_overlap`` row."""
+    return F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+
+
+def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, comp) near-dup cluster labels: connected components
+    (ext.graph.connected_components) of the Jaccard ≥ 0.1 pair graph over
+    the capped shingles, labelled by the cluster's min doc_id. The
+    threshold is unrounded, as in ``_NEAR_DUP_SQL``."""
+    from jp_qcew_spark.ext.graph import connected_components
+
+    ex = _capped_shingles(spark, sf_dir)
+    edges = _overlap(ex, ex).filter(_jaccard() >= 0.1)
+    return connected_components(edges.select("doc_a", "doc_b"), "doc_a", "doc_b")
+
+
+def _components_sql(
+    edges: str, a: str = "doc_a", b: str = "doc_b", node: str = "doc_id"
+) -> str:
+    """CTEs ``ue``, ``reach`` and ``comp(node, comp)``: connected components
+    of the undirected graph ``edges(a, b)`` in DuckDB, labelled by the min
+    reachable id. ``reach`` grows one edge hop per recursion until the
+    fixpoint (UNION dedups), so the chain needs ``WITH RECURSIVE``."""
+    return f"""ue AS (
+  SELECT {a} AS a, {b} AS b FROM {edges}
+  UNION ALL SELECT {b}, {a} FROM {edges}
+),
+reach(src, dst) AS (
+  SELECT a, a FROM ue GROUP BY a
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN ue e ON r.dst = e.a
+),
+comp AS (SELECT src AS {node}, min(dst) AS comp FROM reach GROUP BY src)"""
+
+
+_NEAR_DUP_SQL = f"""{_CAPPED_EX_SQL},
+{_overlap_sql("pairs", "ex")},
+pedges AS (
+  SELECT doc_a, doc_b FROM pairs
+  WHERE inter::DOUBLE / (sz_a + sz_b - inter) >= 0.1
+),
+{_components_sql("pedges")}"""
+
+
+def _band_labels(edges: Sequence[float]) -> list[str]:
+    """Bin labels of descending ``edges``: "0.90+", "0.70-0.90", …; the
+    last bin is everything below its upper edge."""
+    return [f"{edges[0]:.2f}+"] + [
+        f"{lo:.2f}-{hi:.2f}" for lo, hi in zip(edges[1:], edges)
+    ]
+
+
+def _binned_recall(
+    truth: DataFrame,
+    score: str,
+    edges: Sequence[float],
+    hits: dict[str, DataFrame],
+    keys: list[str],
+) -> DataFrame:
+    """Pair recall binned by true similarity: ``truth`` holds the true
+    pairs (``keys``) with their ``score``, binned as ``sim_band`` by
+    descending ``edges`` (``_band_labels``); each ``hits`` frame is one
+    generator's pairs. Per bin: BIGINT ``n_true``, then ``n_<x>`` and
+    ``recall_<x>`` (hits over n_true, 4 digits) per hit set ``x``. Rows
+    come back unordered."""
+    labels = _band_labels(edges)
+    band = F.when(F.col(score) >= edges[0], labels[0])
+    for lo, label in zip(edges[1:-1], labels[1:-1]):
+        band = band.when(F.col(score) >= lo, label)
+    out = truth
+    for x, h in hits.items():
+        out = out.join(h.select(*keys, F.lit(1).alias(f"hit_{x}")), keys, "left")
+    out = (
+        out.select(band.otherwise(labels[-1]).alias("sim_band"),
+                   *(f"hit_{x}" for x in hits))
+        .groupBy("sim_band")
+        .agg(
+            F.count("*").cast("long").alias("n_true"),
+            *(
+                F.coalesce(F.sum(f"hit_{x}"), F.lit(0)).cast("long").alias(f"n_{x}")
+                for x in hits
+            ),
+        )
+    )
+    for x in hits:
+        out = out.withColumn(
+            f"recall_{x}", F.round(F.col(f"n_{x}") / F.col("n_true"), 4)
+        )
+    return out
+
+
+def _binned_recall_sql(
+    name: str,
+    truth: str,
+    score: str,
+    edges: Sequence[float],
+    hits: dict[str, str],
+    keys: list[str],
+) -> str:
+    """CTEs ``{name}_l`` and ``name``: ``_binned_recall`` in DuckDB, each
+    ``hits`` value naming a pair relation."""
+    labels = _band_labels(edges)
+    case = "".join(
+        f"WHEN t.{score} >= {e} THEN '{label}' "
+        for e, label in zip(edges[:-1], labels)
+    )
+    flags, joins = [], []
+    for i, (x, rel) in enumerate(hits.items()):
+        flags.append(f"CASE WHEN h{i}.{keys[0]} IS NULL THEN 0 ELSE 1 END AS hit_{x}")
+        on = " AND ".join(f"h{i}.{k} = t.{k}" for k in keys)
+        joins.append(f"LEFT JOIN {rel} h{i} ON {on}")
+    cnt = "".join(f", CAST(sum(hit_{x}) AS BIGINT) AS n_{x}" for x in hits)
+    rec = "".join(f", round(sum(hit_{x}) / count(*), 4) AS recall_{x}" for x in hits)
+    return f"""{name}_l AS (
+  SELECT CASE {case}ELSE '{labels[-1]}' END AS sim_band, {", ".join(flags)}
+  FROM {truth} t {" ".join(joins)}
+),
+{name} AS (
+  SELECT sim_band, CAST(count(*) AS BIGINT) AS n_true{cnt}{rec}
+  FROM {name}_l GROUP BY sim_band
+)"""
+
+
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized md5 fingerprint: keeper = min doc_id per
     fingerprint group (one shuffle on the 128-bit key)."""
@@ -73,68 +267,26 @@ FROM documents GROUP BY fp ORDER BY keeper_doc_id
 
 
 def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by word-3-gram Jaccard ≥ 0.2.
-
-    Candidate generation = shared-shingle equi-join (only docs sharing at
-    least one shingle ever meet — shuffle keyed by shingle, never n²), with
-    a stop-shingle document-frequency cap (ext.dedup.stop_shingle_filter) so
-    one ubiquitous shingle can't explode the self-join quadratically; |A∩B|
-    falls out of the join group-count, |A∪B| from per-doc size counts. The
-    size joins are plain equi-joins on doc_id — the sizes table is one row
-    per document (unbounded at corpus scale), so it must never carry a
-    broadcast hint; AQE still broadcasts it when genuinely small.
-    """
-    ex = cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    """Near-duplicate pairs by word-3-gram Jaccard ≥ 0.2 (rounded to 6):
+    the shared-shingle pairs of ``_overlap`` over ``_capped_shingles``.
+    The stop-shingle cap keeps one ubiquitous shingle from exploding the
+    self-join quadratically."""
+    ex = _capped_shingles(spark, sf_dir)
     return (
-        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter")), 6
-            ).alias("jac"),
-        )
+        _overlap(ex, ex)
+        .select("doc_a", "doc_b", F.round(_jaccard(), 6).alias("jac"))
         .filter(F.col("jac") >= 0.2)
         .transform(order_result, "doc_a", "doc_b")
     )
 
 
-# the df <= 32 filter mirrors ext.dedup.stop_shingle_filter (DF_CAP_DEFAULT);
-# sizes are counted over the SAME capped shingle universe as the intersection,
-# so the Jaccard stays self-consistent
-ORACLE_DEDUP_JACCARD_PAIRS = rf"""
-WITH sh AS ({_SH_SQL}),
-ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-ex AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
-  ) WHERE df <= {D.DF_CAP_DEFAULT}
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+ORACLE_DEDUP_JACCARD_PAIRS = f"""
+WITH {_CAPPED_EX_SQL},
+{_overlap_sql("pairs", "ex")}
 SELECT doc_a, doc_b,
-       round(inter::DOUBLE / (sa.sz + sb.sz - inter), 6) AS jac
-FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter), 6) >= 0.2
+       round(inter::DOUBLE / (sz_a + sz_b - inter), 6) AS jac
+FROM pairs
+WHERE round(inter::DOUBLE / (sz_a + sz_b - inter), 6) >= 0.2
 ORDER BY doc_a, doc_b
 """
 
@@ -391,33 +543,15 @@ def q_dedup_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     grams = cache_parallel(grams)
-    a, b = grams.alias("a"), grams.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
     return (
-        inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter")), 6
-            ).alias("jac"),
-        )
+        _overlap(grams, grams, "gram")
+        .select("doc_a", "doc_b", F.round(_jaccard(), 6).alias("jac"))
         .filter(F.col("jac") >= 0.5)
         .transform(order_result, "doc_a", "doc_b")
     )
 
 
-ORACLE_DEDUP_CHAR_NGRAM = r"""
+ORACLE_DEDUP_CHAR_NGRAM = rf"""
 WITH d AS (
   SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
   FROM documents WHERE doc_id < 300
@@ -425,17 +559,11 @@ WITH d AS (
   SELECT DISTINCT doc_id,
          substr(t, CAST(unnest(range(1, length(t) - 3)) AS INTEGER), 5) AS gram
   FROM d WHERE length(t) >= 5
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-  FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+), {_overlap_sql("pairs", "g", "gram")}
 SELECT doc_a, doc_b,
-       round(i * 1.0 / (sa.sz + sb.sz - i), 6) AS jac
-FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-WHERE round(i * 1.0 / (sa.sz + sb.sz - i), 6) >= 0.5
+       round(inter * 1.0 / (sz_a + sz_b - inter), 6) AS jac
+FROM pairs
+WHERE round(inter * 1.0 / (sz_a + sz_b - inter), 6) >= 0.5
 ORDER BY doc_a, doc_b
 """
 
@@ -484,41 +612,11 @@ ORACLE["data_split"] = ORACLE_DATA_SPLIT
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: connected components over the Jaccard ≥ 0.1 pair
-    graph (ext.graph.connected_components — iterative hash-min label
-    propagation, rounds bounded by cluster diameter). This is the step a
-    real dedup pipeline runs after pair generation: transitive closure
-    (a~b, b~c ⇒ {a,b,c} one cluster even when a≁c) with the cluster's min
-    doc_id as the deterministic canonical label. Output: every clustered
-    doc with its component label and component size."""
-    from jp_qcew_spark.ext.graph import connected_components
-
-    ex = cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    edges = (
-        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        # unrounded threshold, mirrored exactly in the oracle's WHERE
-        .filter(
-            F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            >= 0.1
-        )
-        .select("doc_a", "doc_b")
-    )
-    labels = connected_components(edges, "doc_a", "doc_b")
+    """Near-dup CLUSTERS: every clustered doc with its ``_near_dup_labels``
+    component (the cluster's min doc_id) and the component size. This is
+    the step a dedup pipeline runs after pair generation: transitive
+    closure (a~b, b~c ⇒ {a,b,c} one cluster even when a≁c)."""
+    labels = _near_dup_labels(spark, sf_dir)
     comp_sizes = labels.groupBy("comp").agg(F.count("*").alias("comp_size"))
     return (
         labels.join(comp_sizes, "comp")
@@ -527,37 +625,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# transitive closure via recursive CTE: reach(src,dst) grows by one edge hop
-# per recursion until fixpoint (UNION dedups); comp = min reachable id.
-ORACLE_DEDUP_COMPONENTS = rf"""
-WITH RECURSIVE sh AS ({_SH_SQL}),
-ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-ex AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
-  ) WHERE df <= {D.DF_CAP_DEFAULT}
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pedges AS (
-  SELECT doc_a, doc_b
-  FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter::DOUBLE / (sa.sz + sb.sz - inter) >= 0.1
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pedges
-  UNION ALL SELECT doc_b, doc_a FROM pedges
-),
-reach(src, dst) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src)
+ORACLE_DEDUP_COMPONENTS = f"""
+WITH RECURSIVE {_NEAR_DUP_SQL}
 SELECT doc_id, comp, sz.comp_size
 FROM comp
 JOIN (SELECT comp, count(*) AS comp_size FROM comp GROUP BY comp) sz
@@ -569,117 +638,26 @@ QUERIES["dedup_components"] = q_dedup_components
 ORACLE["dedup_components"] = ORACLE_DEDUP_COMPONENTS
 
 
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best-of-cluster dedup — the production KEEP POLICY on top of the
-    cluster structure (round 14): ``dedup_exact`` keeps min-id,
-    ``semdedup_*`` keeps the centroid; a real curation pipeline keeps
-    the HIGHEST-QUALITY member of each near-dup cluster and drops the
-    rest, so the dedup pass and the quality pass compose instead of
-    fighting (dropping a high-quality doc because its low-quality twin
-    had a smaller id is a measurable corpus-quality loss).
-
-    Composition: the exact ``dedup_components`` cluster structure
-    (Jaccard ≥ 0.1 shingle graph → hash-min connected components) +
-    the engine's composite quality score as the ranking, ties to the
-    smaller doc_id, quality NULLs (empty text) ranked last — pinned
-    NULLS LAST on both engines because DuckDB's DESC default is
-    nulls-first while Spark's is nulls-last (a silent cross-engine flip
-    otherwise). Every document gets a verdict: ``kept_best`` (cluster
-    winner), ``dropped_dup`` (outranked member), ``singleton``
-    (unclustered; component label = own id).
-
-    100 TB posture: identical to ``dedup_components`` through the CC
-    labels (df-capped candidate pairs, diameter-bounded label
-    propagation), plus one quality projection over the corpus scan and
-    one comp-keyed window whose partition size is the CLUSTER size —
-    bounded by the dedup structure, never corpus-scale."""
-    from jp_qcew_spark.ext.graph import connected_components
+def _keep_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, comp, quality, single) for every document: its
+    ``_near_dup_labels`` cluster (its own id and ``single`` when
+    unclustered) and its composite quality score (functions.text)."""
     from jp_qcew_spark.functions import text as X
 
-    ex = cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    edges = (
-        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(
-            F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            >= 0.1
-        )
-        .select("doc_a", "doc_b")
-    )
-    labels = connected_components(edges, "doc_a", "doc_b")
+    labels = _near_dup_labels(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", X.quality_score(F.col("text")).alias("quality")
     )
-    lab = docs.join(
-        labels, docs["doc_id"] == labels["id"], "left"
-    ).select(
+    return docs.join(labels, docs["doc_id"] == labels["id"], "left").select(
         "doc_id",
         F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp"),
         "quality",
         F.col("comp").isNull().alias("single"),
     )
-    w = Window.partitionBy("comp").orderBy(
-        F.col("quality").desc_nulls_last(), F.col("doc_id").asc()
-    )
-    return (
-        lab.withColumn("rk", F.row_number().over(w))
-        .select(
-            "doc_id",
-            "comp",
-            "quality",
-            F.when(F.col("single"), F.lit("singleton"))
-            .when(F.col("rk") == 1, F.lit("kept_best"))
-            .otherwise(F.lit("dropped_dup"))
-            .alias("action"),
-        )
-        .transform(order_result, "doc_id")
-    )
 
 
-ORACLE_DEDUP_KEEP_BEST = rf"""
-WITH RECURSIVE sh AS ({_SH_SQL}),
-ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-ex AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
-  ) WHERE df <= {D.DF_CAP_DEFAULT}
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pedges AS (
-  SELECT doc_a, doc_b
-  FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter::DOUBLE / (sa.sz + sb.sz - inter) >= 0.1
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pedges
-  UNION ALL SELECT doc_b, doc_a FROM pedges
-),
-reach(src, dst) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src),
-qt AS (
+# ``_keep_labels`` in DuckDB, over the ``comp`` CTE of _NEAR_DUP_SQL
+_KEEP_LAB_SQL = r"""qt AS (
   SELECT doc_id, text,
          CASE WHEN trim(text) = '' THEN 0
               ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n,
@@ -703,7 +681,45 @@ lab AS (
   SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp, d.quality,
          (c.comp IS NULL) AS single
   FROM docs d LEFT JOIN comp c USING (doc_id)
-),
+)"""
+
+
+def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Best-of-cluster dedup — the keep policy on top of the cluster
+    structure: ``dedup_exact`` keeps min-id, ``semdedup_*`` keeps the
+    centroid; a curation pipeline keeps the HIGHEST-QUALITY member of each
+    near-dup cluster and drops the rest, so the dedup pass and the quality
+    pass compose instead of fighting.
+
+    Ranking inside a cluster: quality descending, ties to the smaller
+    doc_id, quality NULLs (empty text) last — pinned NULLS LAST on both
+    engines because DuckDB's DESC default is nulls-first while Spark's is
+    nulls-last. Every document gets a verdict: ``kept_best`` (cluster
+    winner), ``dropped_dup`` (outranked member), ``singleton``
+    (unclustered; component label = own id). The comp-keyed window's
+    partition size is the cluster size, bounded by the dedup structure."""
+    w = Window.partitionBy("comp").orderBy(
+        F.col("quality").desc_nulls_last(), F.col("doc_id").asc()
+    )
+    return (
+        _keep_labels(spark, sf_dir)
+        .withColumn("rk", F.row_number().over(w))
+        .select(
+            "doc_id",
+            "comp",
+            "quality",
+            F.when(F.col("single"), F.lit("singleton"))
+            .when(F.col("rk") == 1, F.lit("kept_best"))
+            .otherwise(F.lit("dropped_dup"))
+            .alias("action"),
+        )
+        .transform(order_result, "doc_id")
+    )
+
+
+ORACLE_DEDUP_KEEP_BEST = f"""
+WITH RECURSIVE {_NEAR_DUP_SQL},
+{_KEEP_LAB_SQL},
 ranked AS (
   SELECT *, row_number() OVER (
       PARTITION BY comp
@@ -724,59 +740,12 @@ ORACLE["dedup_keep_best"] = ORACLE_DEDUP_KEEP_BEST
 
 def q_dedup_keep_best_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The keep policy's price tag: survivor count and mean survivor
-    quality under ``min_id`` (the naive ``dedup_exact``-style keeper)
-    vs ``best_quality`` (``dedup_keep_best``) on the SAME cluster
-    structure. Both policies keep identical survivor COUNTS (one per
-    cluster + singletons), so the whole delta is quality — the number a
-    curation pipeline cites for ranking clusters by quality instead of
-    id. Measured (mean survivor quality, min_id → best_quality, equal
-    survivor counts 476/476/4752): 0.408084 → 0.408137 at sf0.001,
-    0.406536 → 0.406594 at sf0.01, 0.408044 → 0.408113 at sf0.1 —
-    small on this near-uniform synthetic corpus by construction
-    (quality spread 0.36-0.45, and most clusters are exact-dup twins of
-    EQUAL quality), but right-signed at every scale for zero extra
-    passes; on a real crawl the quality spread inside a near-dup
-    cluster (boilerplate-laden vs clean copies) is what makes this the
-    standard policy. Scale posture identical to ``dedup_keep_best``
-    with a second window rank on the same comp-keyed partition."""
-    from jp_qcew_spark.ext.graph import connected_components
-    from jp_qcew_spark.functions import text as X
-
-    ex = cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    edges = (
-        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(
-            F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            >= 0.1
-        )
-        .select("doc_a", "doc_b")
-    )
-    labels = connected_components(edges, "doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", X.quality_score(F.col("text")).alias("quality")
-    )
-    lab = track_cache(
-        docs.join(labels, docs["doc_id"] == labels["id"], "left").select(
-            "doc_id",
-            F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp"),
-            "quality",
-        )
-    )
+    quality under ``min_id`` (the ``dedup_exact``-style keeper) vs
+    ``best_quality`` (``dedup_keep_best``) on the SAME cluster structure.
+    Both policies keep one survivor per cluster plus the singletons, so
+    the whole delta is quality. Two window ranks on the same comp-keyed
+    partition over the scope-cached labels."""
+    lab = track_cache(_keep_labels(spark, sf_dir).drop("single"))
     wq = Window.partitionBy("comp").orderBy(
         F.col("quality").desc_nulls_last(), F.col("doc_id").asc()
     )
@@ -799,59 +768,9 @@ def q_dedup_keep_best_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out[0].unionByName(out[1]).orderBy("policy")
 
 
-ORACLE_DEDUP_KEEP_BEST_EVAL = rf"""
-WITH RECURSIVE sh AS ({_SH_SQL}),
-ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-ex AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
-  ) WHERE df <= {D.DF_CAP_DEFAULT}
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pedges AS (
-  SELECT doc_a, doc_b
-  FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter::DOUBLE / (sa.sz + sb.sz - inter) >= 0.1
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pedges
-  UNION ALL SELECT doc_b, doc_a FROM pedges
-),
-reach(src, dst) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src),
-qt AS (
-  SELECT doc_id, text,
-         CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-             x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is', 'it',
-                        'that', 'for'))) AS sw,
-         length(regexp_replace(text, '\s+', '', 'g')) AS nonspace,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-         length(text) AS total
-  FROM documents
-),
-docs AS (
-  SELECT doc_id,
-         CASE WHEN n = 0 OR total = 0 THEN NULL
-              ELSE round(0.4 * (sw::DOUBLE / n)
-                   + 0.3 * least(nonspace::DOUBLE / n / 10.0, 1.0)
-                   + 0.3 * (alpha::DOUBLE / total), 4) END AS quality
-  FROM qt
-),
-lab AS (
-  SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp, d.quality
-  FROM docs d LEFT JOIN comp c USING (doc_id)
-),
+ORACLE_DEDUP_KEEP_BEST_EVAL = f"""
+WITH RECURSIVE {_NEAR_DUP_SQL},
+{_KEEP_LAB_SQL},
 ranked AS (
   SELECT comp, quality,
          row_number() OVER (
@@ -1403,62 +1322,32 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc), so a Jaccard-only dedup pass ships the duplicated passage into
     training — this is the standard gate for subset/quotation dupes.
 
-    Same scale discipline as the Jaccard query: candidates come from the
-    stop-shingle-capped shared-shingle equi-join (never n²), sizes from a
-    per-doc count over the SAME capped shingle universe, and the pair
-    keeps both directions' containments with the pair emitted once
-    (doc_a < doc_b), filtered on max(C_ab, C_ba) ≥ 0.5."""
-    ex = cache_parallel(D.stop_shingle_filter(_exploded(spark, sf_dir)))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    Same pairs as the Jaccard query (``_overlap`` over
+    ``_capped_shingles``); each pair (doc_a < doc_b) keeps both
+    directions' containments and is kept when max(C_ab, C_ba) ≥ 0.5."""
+    ex = _capped_shingles(spark, sf_dir)
     return (
-        pairs.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        _overlap(ex, ex)
         .select(
             "doc_a",
             "doc_b",
-            F.round(F.col("inter") / F.col("sa.sz"), 6).alias("cont_ab"),
-            F.round(F.col("inter") / F.col("sb.sz"), 6).alias("cont_ba"),
+            F.round(F.col("inter") / F.col("sz_a"), 6).alias("cont_ab"),
+            F.round(F.col("inter") / F.col("sz_b"), 6).alias("cont_ba"),
         )
         .filter(F.greatest("cont_ab", "cont_ba") >= 0.5)
         .transform(order_result, "doc_a", "doc_b")
     )
 
 
-ORACLE_TEXT_CONTAINMENT = rf"""
-WITH sh AS ({_SH_SQL}),
-ex0 AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-ex AS (
-  SELECT doc_id, s FROM (
-    SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM ex0
-  ) WHERE df <= {D.DF_CAP_DEFAULT}
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+ORACLE_TEXT_CONTAINMENT = f"""
+WITH {_CAPPED_EX_SQL},
+{_overlap_sql("pairs", "ex")}
 SELECT doc_a, doc_b,
-       round(inter::DOUBLE / sa.sz, 6) AS cont_ab,
-       round(inter::DOUBLE / sb.sz, 6) AS cont_ba
+       round(inter::DOUBLE / sz_a, 6) AS cont_ab,
+       round(inter::DOUBLE / sz_b, 6) AS cont_ba
 FROM pairs
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE greatest(round(inter::DOUBLE / sa.sz, 6),
-               round(inter::DOUBLE / sb.sz, 6)) >= 0.5
+WHERE greatest(round(inter::DOUBLE / sz_a, 6),
+               round(inter::DOUBLE / sz_b, 6)) >= 0.5
 ORDER BY doc_a, doc_b
 """
 
@@ -1816,6 +1705,7 @@ _DOC_PLANT_OFFS = (1_000_000, 2_000_000)
 # smaller doc_id sits below this bound (covers every planted original),
 # keeping the truth pass |slice| x n — linear, never n².
 _DOC_EVAL_SLICE = 300
+_MH_EVAL_EDGES = (0.8, 0.6, 0.4, 0.2)  # the eval's Jaccard bins
 
 
 def _lsh_cfg_minhash_target(
@@ -2148,61 +2038,22 @@ def q_dedup_minhash_recall_eval(
     itself is under the hash, not just its effects
     (``dedup_recall_target_eval``'s device on the text tier).
 
-    Scale shape: ground truth is a shared-shingle join of the BOUNDED
-    eval slice (doc_id < ``_DOC_EVAL_SLICE``, broadcast — the one hint,
-    |slice| x n LINEAR, never n² all-pairs) against the corpus; hits
-    come from the generator's CANDIDATE set (pre-verify), which is what
-    the 1-(1-s^r)^b math predicts per bin; the final agg is a 4-bin
-    rollup. The planted cohorts give the >=0.8 bin real members."""
+    Scale shape: ground truth is ``_overlap`` of the BOUNDED eval slice
+    (doc_id < ``_DOC_EVAL_SLICE``, broadcast — the one hint, |slice| x n
+    LINEAR, never n² all-pairs) against the corpus; hits come from the
+    generator's CANDIDATE set (pre-verify), which is what the
+    1-(1-s^r)^b math predicts per bin; ``_binned_recall`` rolls up 4
+    bins. The planted cohorts give the >=0.8 bin real members."""
     ex, cand, bands, rpb = _mh_target_banding(spark, sf_dir)
     exs = ex.filter(F.col("doc_id") < _DOC_EVAL_SLICE)
-    inter = (
-        F.broadcast(exs.alias("xa"))
-        .join(
-            ex.alias("xb"),
-            (F.col("xa.shingle") == F.col("xb.shingle"))
-            & (F.col("xa.doc_id") < F.col("xb.doc_id")),
-        )
-        .groupBy(
-            F.col("xa.doc_id").alias("doc_a"),
-            F.col("xb.doc_id").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
     truth = (
-        inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter")
-                / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            ).alias("jac"),
-        )
+        _overlap(F.broadcast(exs), ex)
+        .select("doc_a", "doc_b", _jaccard().alias("jac"))
         .filter(F.col("jac") >= 0.2)
     )
-    hits = cand.filter(F.col("doc_a") < _DOC_EVAL_SLICE).select(
-        "doc_a", "doc_b", F.lit(1).alias("hit")
-    )
-    band = (
-        F.when(F.col("jac") >= 0.8, "0.80+")
-        .when(F.col("jac") >= 0.6, "0.60-0.80")
-        .when(F.col("jac") >= 0.4, "0.40-0.60")
-        .otherwise("0.20-0.40")
-    )
+    hits = {"hit": cand.filter(F.col("doc_a") < _DOC_EVAL_SLICE)}
     return (
-        truth.join(hits, ["doc_a", "doc_b"], "left")
-        .select(band.alias("sim_band"), "hit")
-        .groupBy("sim_band")
-        .agg(
-            F.count("*").cast("long").alias("n_true"),
-            F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hit"),
-        )
-        .withColumn(
-            "recall_hit", F.round(F.col("n_hit") / F.col("n_true"), 4)
-        )
+        _binned_recall(truth, "jac", _MH_EVAL_EDGES, hits, ["doc_a", "doc_b"])
         .withColumn("bands_used", F.lit(int(bands)).cast("long"))
         .withColumn("rpb_used", F.lit(int(rpb)).cast("long"))
         .orderBy("sim_band")
@@ -2222,22 +2073,12 @@ truth AS (
           / (len(a.shset) + len(b.shset)
              - len(list_intersect(a.shset, b.shset))) >= 0.2
 ),
-labeled AS (
-  SELECT CASE WHEN t.jac >= 0.8 THEN '0.80+'
-              WHEN t.jac >= 0.6 THEN '0.60-0.80'
-              WHEN t.jac >= 0.4 THEN '0.40-0.60'
-              ELSE '0.20-0.40' END AS sim_band,
-         CASE WHEN c.doc_a IS NULL THEN 0 ELSE 1 END AS hit
-  FROM truth t
-  LEFT JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
-)
-SELECT sim_band,
-       CAST(count(*) AS BIGINT) AS n_true,
-       CAST(sum(hit) AS BIGINT) AS n_hit,
-       round(sum(hit) / count(*), 4) AS recall_hit,
+{_binned_recall_sql("rec", "truth", "jac", _MH_EVAL_EDGES, {"hit": "cand"},
+                    ["doc_a", "doc_b"])}
+SELECT rec.*,
        CAST((SELECT bands FROM cfg) AS BIGINT) AS bands_used,
        CAST((SELECT rpb FROM cfg) AS BIGINT) AS rpb_used
-FROM labeled GROUP BY sim_band ORDER BY sim_band
+FROM rec ORDER BY sim_band
 """
 
 QUERIES["dedup_minhash_recall_eval"] = q_dedup_minhash_recall_eval

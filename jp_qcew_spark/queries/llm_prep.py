@@ -23,6 +23,7 @@ from jp_qcew_spark.functions.text import (
     word_count,
 )
 from jp_qcew_spark.io import cache_parallel, load_table, order_result
+from jp_qcew_spark.queries.dedup import _jaccard, _overlap, _overlap_sql
 
 _MIN_QUALITY = 0.4
 _MIN_WORDS = 5
@@ -64,34 +65,16 @@ def q_llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
     )
     exact_kept = cache_parallel(exact_kept)
-    # near-dup pairs among survivors (shared-shingle candidates, exact
-    # Jaccard verify — the sub-quadratic keyed-join plan from queries.dedup)
+    # near-dup pairs among survivors: the shared-shingle pairs of
+    # queries.dedup. Losers (one row per dropped doc) grow with the corpus,
+    # so the anti join carries no broadcast hint
     ex = cache_parallel(
         D.stop_shingle_filter(D.exploded_shingles(exact_kept, "doc_id", "text"))
     )
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("inter"))
-    )
-    # sizes (one row per surviving doc) and losers (one row per dropped doc)
-    # grow with the corpus — plain equi/anti joins, no broadcast hints; AQE
-    # broadcasts them at small scale, shuffles them at 100 TB
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
     losers = (
-        inter.join(sizes.alias("sa"), F.col("da") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("db") == F.col("sb.doc_id"))
-        .filter(
-            F.col("inter")
-            / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            >= _JACCARD_MAX
-        )
-        .select(F.col("db").alias("doc_id"))
+        _overlap(ex, ex)
+        .filter(_jaccard() >= _JACCARD_MAX)
+        .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
     survivors = exact_kept.join(losers, "doc_id", "left_anti")
@@ -102,7 +85,7 @@ def q_llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The oracle re-derives the whole chain in SQL (quality formula inlined from
-# functions.text; shingle/Jaccard CTEs from queries.dedup's oracle family).
+# functions.text; the shared-shingle pairs from queries.dedup._overlap_sql).
 _EN = ",".join(f"'{w}'" for w in
                ("the", "a", "and", "of", "to", "in", "is", "it", "that", "for"))
 _ES = ",".join(f"'{w}'" for w in
@@ -156,16 +139,10 @@ WITH feats AS (
   SELECT doc_id, shingle FROM (
     SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df FROM sh0
   ) WHERE df <= 32
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), losers AS (
-  SELECT DISTINCT db AS doc_id
-  FROM inter JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-  WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.5
+), {_overlap_sql("pairs", "sh", "shingle")},
+losers AS (
+  SELECT DISTINCT doc_b AS doc_id FROM pairs
+  WHERE inter * 1.0 / (sz_a + sz_b - inter) >= 0.5
 )
 SELECT doc_id, quality, words, bpe_tokens
 FROM exact_kept

@@ -42,6 +42,11 @@ from jp_qcew_spark.io import (
 )
 from jp_qcew_spark.io import reset_trained_artifacts as reset_trained_memo
 from jp_qcew_spark.io import trained_artifact as _trained
+from jp_qcew_spark.queries.dedup import (
+    _binned_recall,
+    _binned_recall_sql,
+    _components_sql,
+)
 
 _N_QUERIES = 10
 _COS_SQL = (
@@ -1473,7 +1478,7 @@ def q_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_semdedup() -> str:
+def _oracle_semdedup_lsh() -> str:
     sig16 = " || ".join(
         f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, 17)
     )
@@ -1516,7 +1521,7 @@ FROM scored GROUP BY label ORDER BY label
 
 
 QUERIES["semdedup_lsh"] = q_semdedup_lsh
-ORACLE["semdedup_lsh"] = _oracle_semdedup()
+ORACLE["semdedup_lsh"] = _oracle_semdedup_lsh()
 
 
 # --------------------------------------------------------------------------
@@ -2689,16 +2694,7 @@ def _oracle_semdedup(base: str | None = None) -> str:
     candidate tier exactly as ``_mutual_edges_ctes``."""
     return f"""
 WITH RECURSIVE {_mutual_edges_ctes(base)},
-ue AS (
-  SELECT src AS a, dst AS b FROM mut
-  UNION ALL SELECT dst, src FROM mut
-),
-reach(src, dst) AS (
-  SELECT a, a FROM ue GROUP BY a
-  UNION
-  SELECT r.src, e2.b FROM reach r JOIN ue e2 ON r.dst = e2.a
-),
-comp AS (SELECT src AS vec_id, min(dst) AS comp FROM reach GROUP BY src),
+{_components_sql("mut", "src", "dst", "vec_id")},
 qv AS (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
@@ -3064,6 +3060,8 @@ ORACLE["knn_recall_rp"] = ORACLE_KNN_RECALL_RP
 # cost is |slice| x n (LINEAR in the corpus), where full ground truth
 # would be n^2. The slice is the eval budget, not a semantic knob.
 _EVAL_SLICE = 200
+_EVAL_EDGES = (0.9, 0.7, 0.5, 0.3)  # dedup_recall_eval's cosine bins
+_TGT_EVAL_EDGES = (0.8, 0.65, 0.5, 0.3)  # dedup_recall_target_eval's bins
 
 
 def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3075,12 +3073,8 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent by construction (collision probability (1-theta/pi)^r per
     band), so a single recall number hides the design point — near-exact
     duplicates collide almost surely while marginal pairs at the 0.3
-    threshold collide rarely. The binned curve makes that trade measured
-    data (the faiss recall-curve discipline), and on THIS synthetic
-    corpus it also documents why the top-3 evals read low: the corpus
-    has essentially no high-similarity pairs (989/990 true pairs at
-    sf0.01 sit in the 0.30-0.50 band), so every generator is being
-    scored at the hash family's designed-miss region.
+    threshold collide rarely. The binned curve (``_binned_recall``) makes
+    that trade measured data (the faiss recall-curve discipline).
 
     Scale shape: ground truth broadcasts the 200-vector eval slice
     against the corpus (bounded side broadcast, one linear pass — never
@@ -3092,11 +3086,9 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the broadcast join: the join amplifies every corpus row
     ×|slice| (200 cosine folds per row), and widen_scan's byte gate
     cannot see compute amplification — a one-split embeddings file
-    otherwise puts the whole |slice|×n scoring pass on ONE core (the
-    `_pq_sub_pivot` lesson; measured 8.5 s single-task CPU at sf0.1,
-    ~90% of this eval's bill). The exchange payload is the compact
-    pre-amplification corpus stream (n rows), linear and evenly keyed
-    by the unique vec_id."""
+    otherwise puts the whole |slice|×n scoring pass on ONE core. The
+    exchange payload is the compact pre-amplification corpus stream (n
+    rows), linear and evenly keyed by the unique vec_id."""
     sc = spark.sparkContext
     vecs = _vecs(spark, sf_dir).select("vec_id", "v")
     a = vecs.filter(F.col("vec_id") < _EVAL_SLICE).select(
@@ -3115,45 +3107,16 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cs") >= 0.3)
     )
-    rp = (
-        _dedup_embedding_rp(spark, sf_dir)
-        .filter(F.col("id_a") < _EVAL_SLICE)
-        .select("id_a", "id_b", F.lit(1).alias("hit_rp"))
-    )
-    co = (
-        _dedup_embedding_cos(spark, sf_dir)
-        .filter(F.col("id_a") < _EVAL_SLICE)
-        .select("id_a", "id_b", F.lit(1).alias("hit_co"))
-    )
-    band = (
-        F.when(F.col("cs") >= 0.9, "0.90+")
-        .when(F.col("cs") >= 0.7, "0.70-0.90")
-        .when(F.col("cs") >= 0.5, "0.50-0.70")
-        .otherwise("0.30-0.50")
-    )
-    return (
-        truth.join(rp, ["id_a", "id_b"], "left")
-        .join(co, ["id_a", "id_b"], "left")
-        .select(band.alias("sim_band"), "hit_rp", "hit_co")
-        .groupBy("sim_band")
-        .agg(
-            F.count("*").cast("long").alias("n_true"),
-            F.coalesce(F.sum("hit_rp"), F.lit(0))
-            .cast("long")
-            .alias("n_rp"),
-            F.coalesce(F.sum("hit_co"), F.lit(0))
-            .cast("long")
-            .alias("n_coord"),
+    hits = {
+        x: h.filter(F.col("id_a") < _EVAL_SLICE)
+        for x, h in (
+            ("rp", _dedup_embedding_rp(spark, sf_dir)),
+            ("coord", _dedup_embedding_cos(spark, sf_dir)),
         )
-        .withColumn(
-            "recall_rp", F.round(F.col("n_rp") / F.col("n_true"), 4)
-        )
-        .withColumn(
-            "recall_coord",
-            F.round(F.col("n_coord") / F.col("n_true"), 4),
-        )
-        .transform(order_result, "sim_band")
-    )
+    }
+    return _binned_recall(
+        truth, "cs", _EVAL_EDGES, hits, ["id_a", "id_b"]
+    ).transform(order_result, "sim_band")
 
 
 ORACLE_DEDUP_RECALL = f"""
@@ -3167,24 +3130,9 @@ truth AS (
 ),
 rp AS ({_oracle_dedup_rp()}),
 co AS ({_oracle_dedup_embedding()}),
-labeled AS (
-  SELECT CASE WHEN t.cs >= 0.9 THEN '0.90+'
-              WHEN t.cs >= 0.7 THEN '0.70-0.90'
-              WHEN t.cs >= 0.5 THEN '0.50-0.70'
-              ELSE '0.30-0.50' END AS sim_band,
-         CASE WHEN rp.id_a IS NULL THEN 0 ELSE 1 END AS hit_rp,
-         CASE WHEN co.id_a IS NULL THEN 0 ELSE 1 END AS hit_co
-  FROM truth t
-  LEFT JOIN rp ON rp.id_a = t.id_a AND rp.id_b = t.id_b
-  LEFT JOIN co ON co.id_a = t.id_a AND co.id_b = t.id_b
-)
-SELECT sim_band,
-       CAST(count(*) AS BIGINT) AS n_true,
-       CAST(sum(hit_rp) AS BIGINT) AS n_rp,
-       CAST(sum(hit_co) AS BIGINT) AS n_coord,
-       round(sum(hit_rp) / count(*), 4) AS recall_rp,
-       round(sum(hit_co) / count(*), 4) AS recall_coord
-FROM labeled GROUP BY sim_band ORDER BY sim_band
+{_binned_recall_sql("rec", "truth", "cs", _EVAL_EDGES,
+                    {"rp": "rp", "coord": "co"}, ["id_a", "id_b"])}
+SELECT * FROM rec ORDER BY sim_band
 """
 
 QUERIES["dedup_recall_eval"] = q_dedup_recall_eval
@@ -3559,19 +3507,17 @@ def q_dedup_recall_target_eval(
     (``dedup_embedding_rp_target``) against brute-force ground truth
     over the seeded corpus — the certification that the derived band
     count delivers the contract: recall in the >=0.8-cosine bin must
-    clear 0.9 (pinned by test at sf0.1; measured ~0.96-1.0 — pairs above
-    the threshold collide with higher-than-floor probability). The
-    derived (bands, bits) pair rides along as hashed OUTPUT columns, so
-    the driver certifies that both engines derived the SAME config from
-    the same (threshold, recall) target — the sweep itself is under the
-    hash, not just its effects (r11: bits became a second derived
-    scalar, so it gets its own column like the text tier's rpb_used).
+    clear 0.9 (pinned by test at sf0.1). The derived (bands, bits) pair
+    rides along as hashed OUTPUT columns, so the driver certifies that
+    both engines derived the SAME config from the same (threshold,
+    recall) target — the derivation itself is under the hash, not just
+    its effects.
 
     Scale shape: ground truth broadcasts the bounded eval slice against
     the corpus (|slice| x n, LINEAR — never n^2 all-pairs); hits come
     from the generator's CANDIDATE set (pre-verify), which is what the
-    1-(1-p^r)^b math predicts per bin; the final agg is a 4-bin rollup.
-    The planted cohorts give the >=0.8 bin real members (the raw
+    1-(1-p^r)^b math predicts per bin; ``_binned_recall`` rolls up 4
+    bins. The planted cohorts give the >=0.8 bin real members (the raw
     synthetic corpus has ~none)."""
     n_raw = metadata_row_count(spark, sf_dir, "embeddings")
     n_aug = n_raw + 2 * _PLANT_N
@@ -3589,11 +3535,9 @@ def q_dedup_recall_target_eval(
         F.col("v").alias("va"),
         F.col("nrm").alias("na"),
     )
-    # Pre-amplification repartition of the corpus side: the broadcast
-    # truth join folds |slice| cosines per corpus row, and the cached
-    # vecs frame inherits the scan's 1-2 splits — same single-core
-    # amplification as dedup_recall_eval's truth pass (the
-    # `_pq_sub_pivot` lesson), fixed the same way.
+    # Pre-amplification repartition of the corpus side, as in
+    # dedup_recall_eval's truth pass: the broadcast truth join folds
+    # |slice| cosines per corpus row of a frame with the scan's 1-2 splits
     b = vecs.select(
         F.col("vec_id").alias("id_b"),
         F.col("v").alias("vb"),
@@ -3613,28 +3557,9 @@ def q_dedup_recall_target_eval(
         )
         .filter(F.col("cs") >= 0.3)
     )
-    hits = cand.filter(F.col("id_a") < _EVAL_SLICE).select(
-        "id_a", "id_b", F.lit(1).alias("hit")
-    )
-    band = (
-        F.when(F.col("cs") >= 0.8, "0.80+")
-        .when(F.col("cs") >= 0.65, "0.65-0.80")
-        .when(F.col("cs") >= 0.5, "0.50-0.65")
-        .otherwise("0.30-0.50")
-    )
+    hits = {"tgt": cand.filter(F.col("id_a") < _EVAL_SLICE)}
     return (
-        truth.join(hits, ["id_a", "id_b"], "left")
-        .select(band.alias("sim_band"), "hit")
-        .groupBy("sim_band")
-        .agg(
-            F.count("*").cast("long").alias("n_true"),
-            F.coalesce(F.sum("hit"), F.lit(0))
-            .cast("long")
-            .alias("n_tgt"),
-        )
-        .withColumn(
-            "recall_tgt", F.round(F.col("n_tgt") / F.col("n_true"), 4)
-        )
+        _binned_recall(truth, "cs", _TGT_EVAL_EDGES, hits, ["id_a", "id_b"])
         .withColumn("bands_used", F.lit(int(bands)).cast("long"))
         .withColumn("bits_used", F.lit(int(bits)).cast("long"))
         .transform(order_result, "sim_band")
@@ -3648,22 +3573,12 @@ truth AS (
   FROM aug a JOIN aug b ON a.vec_id < b.vec_id
   WHERE a.vec_id < {_EVAL_SLICE} AND {_PAIR_COS_SQL} >= 0.3
 ),
-labeled AS (
-  SELECT CASE WHEN t.cs >= 0.8 THEN '0.80+'
-              WHEN t.cs >= 0.65 THEN '0.65-0.80'
-              WHEN t.cs >= 0.5 THEN '0.50-0.65'
-              ELSE '0.30-0.50' END AS sim_band,
-         CASE WHEN c.id_a IS NULL THEN 0 ELSE 1 END AS hit
-  FROM truth t
-  LEFT JOIN cand c ON c.id_a = t.id_a AND c.id_b = t.id_b
-)
-SELECT sim_band,
-       CAST(count(*) AS BIGINT) AS n_true,
-       CAST(sum(hit) AS BIGINT) AS n_tgt,
-       round(sum(hit) / count(*), 4) AS recall_tgt,
+{_binned_recall_sql("rec", "truth", "cs", _TGT_EVAL_EDGES, {"tgt": "cand"},
+                    ["id_a", "id_b"])}
+SELECT rec.*,
        CAST((SELECT bands FROM cfg) AS BIGINT) AS bands_used,
        CAST((SELECT bits FROM cfg) AS BIGINT) AS bits_used
-FROM labeled GROUP BY sim_band ORDER BY sim_band
+FROM rec ORDER BY sim_band
 """
 
 QUERIES["dedup_recall_target_eval"] = q_dedup_recall_target_eval

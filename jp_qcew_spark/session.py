@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from jp_qcew_spark.io import ENGINE_CONFS
+
 
 def get_spark(
     app_name: str = "jp_qcew_spark",
@@ -24,10 +26,10 @@ def get_spark(
 
     - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
       dynamic broadcast conversion — the 100 TB skew story (SURVEY.md §4).
-    - UTC session timezone: parity with the DuckDB oracle's naive timestamps.
     - Arrow enabled: vectorized pandas interchange for the pandas-UDF tier.
-    - ANSI off (explicit): the engine relies on null-on-failure casts to mirror
-      the reference's ``cast(strict=False)`` (reference data_process.py:66-82).
+    - ``io.ENGINE_CONFS``: ANSI off, UTC, nanosAsLong and the rest of the
+      confs the engine's semantics depend on (the same table
+      ``io.ensure_session_confs`` pins on a caller's session).
     - shuffle partitions sized to cores locally; on a real cluster AQE coalesces
       from a deliberately high initial number instead.
     """
@@ -44,29 +46,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS); Spark's reader rejects it
-        # unless nanos surface as long — load_table converts back to micros.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-        )
-        # streaming checkpoint checksum files off: ephemeral test-sink
-        # checkpoints; the 4.1 checksum manager blocks every state-store
-        # commit on an async writer pool (see io.ensure_session_confs)
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
-        )
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

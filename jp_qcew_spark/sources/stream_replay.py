@@ -97,54 +97,65 @@ def _cast_feed_table(t, schema: StructType):
 
 
 class _ReplayReader(SimpleDataSourceStreamReader):
+    """Replay a parquet feed in a deterministic total order as fixed-size
+    micro-batches: the events table ordered by (ts, event_id). A subclass
+    names another feed through ``_COLUMNS``, ``_ORDER`` and ``_FEED_SCHEMA``."""
+
+    _COLUMNS = ["event_id", "ts", "user_id", "event_type", "value"]
+    _ORDER = [("ts", "ascending"), ("event_id", "ascending")]
+    _FEED_SCHEMA = _SCHEMA
+
     def __init__(self, options: dict) -> None:
         self._path = options["path"]
         self._batch_opt = options.get("batch_rows", "auto")
         self._batch: int | None = None
         self._table = None
 
+    def _files(self) -> list[str]:
+        """The feed path may be a single parquet file (the driver
+        testdata) or a Spark-written DIRECTORY of part files."""
+        import glob as g
+        import os as o
+
+        if o.path.isdir(self._path):
+            return sorted(g.glob(o.path.join(self._path, "*.parquet")))
+        return [self._path]
+
     def _batch_rows(self) -> int:
-        """Micro-batch size. ``auto`` = ~1/8 of the feed (parquet metadata
-        row count, no data read): micro-batch COUNT, not size, is what the
-        replay exercises, and every batch costs a fixed state-store +
-        sink-commit overhead (~0.25 s locally) — a constant batch size
-        therefore makes replay wall-clock scale with the FEED instead of
-        with the batch count (measured: 64 s for the 1M-row feed at 4096
-        rows/batch vs ~8 bounded batches under auto). Sizing batches to
-        throughput is the production rule (maxOffsetsPerTrigger etc.);
-        pass an integer to pin it explicitly."""
+        """Micro-batch size. ``auto`` = ceil(n/8) of the feed (parquet
+        metadata row counts, no data read): micro-batch COUNT, not size,
+        is what the replay exercises, and every batch costs a fixed
+        state-store + sink-commit overhead, so a constant batch size would
+        make replay wall-clock scale with the feed. Pass an integer to pin
+        it explicitly."""
         if self._batch is None:
             if self._batch_opt == "auto":
                 import pyarrow.parquet as pq
 
-                n = pq.ParquetFile(self._path).metadata.num_rows
+                n = sum(
+                    pq.ParquetFile(f).metadata.num_rows for f in self._files()
+                )
                 self._batch = max(1, -(-n // 8))
             else:
                 self._batch = int(self._batch_opt)
         return self._batch
 
     def _feed(self):
-        """Load + globally order the feed once per reader instance (driver
-        side, by design of the Simple variant). (ts, event_id) is a total
-        order, so batch boundaries are deterministic across restarts.
-
-        The feed stays an ARROW TABLE end to end (r15, guide §4.2): the
-        r14 form still materialized Python tuples, and Spark's simple-
-        reader transport then re-converted every row back to Arrow per
-        micro-batch (``records_to_arrow_batches``: one converter call
-        per field per row). ``read`` now serves zero-copy RecordBatch
-        slices, which the runner ships to the JVM directly — no Python
-        row objects exist anywhere on the wire. Value-identical: same
-        sort, same columns, and ``_cast_feed_table`` pins the exact
-        Arrow schema the tuple path would have built."""
+        """Load and order the feed once per reader instance (driver side,
+        by design of the Simple variant). ``_ORDER`` is a total order, so
+        batch boundaries are deterministic across restarts. The feed stays
+        an Arrow table end to end: ``read`` serves zero-copy RecordBatch
+        slices, which the runner ships to the JVM as they are, and
+        ``_cast_feed_table`` pins the exact Arrow schema Spark derives
+        from the declared one."""
         if self._table is None:
+            import pyarrow as pa
             import pyarrow.parquet as pq
 
-            t = pq.read_table(
-                self._path,
-                columns=["event_id", "ts", "user_id", "event_type", "value"],
-            ).sort_by([("ts", "ascending"), ("event_id", "ascending")])
-            self._table = _cast_feed_table(t, _SCHEMA)
+            t = pa.concat_tables(
+                pq.read_table(f, columns=self._COLUMNS) for f in self._files()
+            ).sort_by(self._ORDER)
+            self._table = _cast_feed_table(t, self._FEED_SCHEMA)
         return self._table
 
     def initialOffset(self) -> dict:
@@ -314,81 +325,15 @@ _DOC_SCHEMA = StructType(
 )
 
 
-class _DocReplayReader(SimpleDataSourceStreamReader):
-    """Replay the documents table in doc_id order as fixed-size
-    micro-batches — the crawl-ingest feed ``stream_dedup_incremental``
-    drains. Same cursor/offset contract as ``_ReplayReader``; the total
-    order here is doc_id (unique by construction), so every batch
-    boundary is deterministic and, crucially, ORACLE-DERIVABLE: batch
-    index of a doc = rank(doc_id) // batch_rows, which a window function
-    reproduces exactly. ``auto`` batch sizing = ceil(n/8), the events
-    replay's rule."""
+class _DocReplayReader(_ReplayReader):
+    """Replay the documents table in doc_id order — the crawl-ingest feed
+    ``stream_dedup_incremental`` drains. doc_id is unique, so every batch
+    boundary is deterministic and ORACLE-DERIVABLE: batch index of a doc
+    = rank(doc_id) // batch_rows, which a window function reproduces."""
 
-    def __init__(self, options: dict) -> None:
-        self._path = options["path"]
-        self._batch_opt = options.get("batch_rows", "auto")
-        self._batch: int | None = None
-        self._table = None
-
-    def _files(self) -> list[str]:
-        """The feed path may be a single parquet file (the driver
-        testdata) or a Spark-written DIRECTORY of part files — accept
-        both so the source drains any documents table."""
-        import glob as g
-        import os as o
-
-        if o.path.isdir(self._path):
-            return sorted(g.glob(o.path.join(self._path, "*.parquet")))
-        return [self._path]
-
-    def _batch_rows(self) -> int:
-        if self._batch is None:
-            if self._batch_opt == "auto":
-                import pyarrow.parquet as pq
-
-                n = sum(
-                    pq.ParquetFile(f).metadata.num_rows
-                    for f in self._files()
-                )
-                self._batch = max(1, -(-n // 8))
-            else:
-                self._batch = int(self._batch_opt)
-        return self._batch
-
-    def _feed(self):
-        # Arrow end to end (guide §4.2): concat + sort_by, then the table
-        # is served as zero-copy RecordBatch slices — no Python row
-        # objects (the r14 form still zipped the table into tuples that
-        # the runner re-converted to Arrow per batch). doc_id is unique,
-        # so the order is identical to the replaced row-loop.
-        if self._table is None:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            t = pa.concat_tables(
-                pq.read_table(f, columns=["doc_id", "text"])
-                for f in self._files()
-            ).sort_by([("doc_id", "ascending")])
-            self._table = _cast_feed_table(t, _DOC_SCHEMA)
-        return self._table
-
-    def initialOffset(self) -> dict:
-        return {"idx": 0}
-
-    def read(self, start: dict) -> tuple:
-        tbl = self._feed()
-        lo = start["idx"]
-        hi = min(lo + self._batch_rows(), tbl.num_rows)
-        return iter(tbl.slice(lo, hi - lo).to_batches()), {"idx": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        tbl = self._feed()
-        return iter(
-            tbl.slice(start["idx"], end["idx"] - start["idx"]).to_batches()
-        )
-
-    def commit(self, end: dict) -> None:
-        pass
+    _COLUMNS = ["doc_id", "text"]
+    _ORDER = [("doc_id", "ascending")]
+    _FEED_SCHEMA = _DOC_SCHEMA
 
 
 class DocReplayDataSource(DataSource):

@@ -221,6 +221,62 @@ def test_warm_query_job_counts(
     assert (build_jobs[0], *run) == (0, collect_jobs, collect_stages)
 
 
+def test_trained_artifact_follows_rewritten_table(spark, tmp_path):
+    """A promoted artifact is keyed by the stamps of its scale-factor
+    directory's table files: rewriting a table there retrains it."""
+    from jp_qcew_spark.io import load_table, trained_artifact
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "embeddings.parquet")
+
+    def n_rows() -> int:
+        art = trained_artifact(
+            spark, sf, "test_rows",
+            lambda: load_table(spark, sf, "embeddings").groupBy().count(),
+        )
+        return art.first()[0]
+
+    spark.range(5).withColumnRenamed("id", "vec_id").write.parquet(path)
+    assert n_rows() == 5
+    assert n_rows() == 5
+    spark.range(2).withColumnRenamed("id", "vec_id").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert n_rows() == 2
+
+
+def test_engine_confs_change_only_their_keys(spark, tmp_path):
+    """On a session whose engine confs are unset, one ``load_table`` and
+    one ``run_to_memory`` drain write exactly ``io.ENGINE_CONFS``."""
+    from pyspark.sql import functions as F
+
+    from jp_qcew_spark.io import ENGINE_CONFS, load_table
+    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
+    from jp_qcew_spark.streaming.pipelines import run_to_memory
+    from tests.conftest import SF_SMOKE
+
+    s = spark.newSession()
+    for k in ENGINE_CONFS:
+        s.conf.unset(k)
+    before = s.conf.getAll
+    assert all(before.get(k) != v for k, v in ENGINE_CONFS.items())
+    load_table(s, SF_SMOKE, "orders")
+    s.dataSource.register(EventReplayDataSource)
+    stream = (
+        s.readStream.format("eventreplay")
+        .option("path", os.path.join(SF_SMOKE, "events.parquet"))
+        .load()
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    assert run_to_memory(stream, "complete", "sink_conf_probe").count() > 0
+    after = s.conf.getAll
+    changed = {k for k in before.keys() | after.keys()
+               if before.get(k) != after.get(k)}
+    assert changed == set(ENGINE_CONFS)
+    assert all(after[k] == v for k, v in ENGINE_CONFS.items())
+
+
 class TestScopedCaching:
     """Round-6 cache-scoping contract (VERDICT r5 #3): engine-internal
     persists are tracked; the registry releases the previous query's caches

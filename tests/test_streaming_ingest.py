@@ -173,3 +173,61 @@ def test_foreach_batch_sink_leaves_session_conf(spark, sf_dir, tmp_path):
         spark.conf.set(key, before)
     assert os.path.isdir(os.path.join(out, "batch_id=99"))
     assert glob.glob(os.path.join(out, "batch_id=0", "*.parquet"))
+
+
+def test_stream_neardup_flags_a_near_duplicate(spark, tmp_path):
+    """A near-duplicate that is not an exact head duplicate: doc 5 repeats
+    doc 0 but for its second word, so its head fingerprint differs while
+    two of its three MinHash bands equal doc 0's (checked in DuckDB with
+    the oracle's hash family). The banded stream flags doc 5 against the
+    state doc 0's batch left, its DuckDB oracle agrees on every doc, and
+    the exact head-fingerprint stream keeps doc 5."""
+    import duckdb
+
+    from jp_qcew_spark.queries.dedup import _SH_SQL, _sig_band_sql
+    from jp_qcew_spark.queries.streaming import _oracle_stream_neardup
+    from jp_qcew_spark.streaming.pipelines import (
+        stream_dedup_incremental,
+        stream_dedup_neardup,
+    )
+
+    words = [f"w{j}" for j in range(20)]
+    rows = [
+        (i, " ".join(f"d{i}x{j}" for j in range(10))) for i in range(16)
+    ]
+    rows[0] = (0, " ".join(words))
+    rows[5] = (5, " ".join([words[0], "q1"] + words[2:]))
+    docs = tmp_path / "documents.parquet"
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(docs)
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{docs}/*.parquet')"
+    )
+    sig_exprs, band_selects = _sig_band_sql()
+    shared = con.execute(
+        f"""WITH sh AS ({_SH_SQL}),
+        sig AS (SELECT doc_id, shset, {sig_exprs} FROM sh),
+        banded AS ({band_selects})
+        SELECT a.band_idx FROM banded a JOIN banded b
+          ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+        WHERE a.doc_id = 0 AND b.doc_id = 5 ORDER BY 1"""
+    ).fetchall()
+    assert shared == [(0,), (2,)]
+
+    got = {
+        r.doc_id: r.status
+        for r in stream_dedup_neardup(spark, str(tmp_path)).collect()
+    }
+    assert got[5] == "dup_vs_seen"  # batch 2 probes state set by batch 0
+    assert all(s == "kept" for i, s in got.items() if i != 5), got
+    oracle = dict(con.execute(_oracle_stream_neardup()).fetchall())
+    con.close()
+    assert got == oracle
+    exact = {
+        r.doc_id: r.status
+        for r in stream_dedup_incremental(spark, str(tmp_path)).collect()
+    }
+    assert exact[5] == "kept"
