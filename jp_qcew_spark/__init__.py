@@ -16,22 +16,6 @@ Layers
 - ``queries``    : the driver-facing query registry (queries() + oracle_sql()).
 """
 
+from jp_qcew_spark.io import release_caches  # noqa: F401  (public re-export)
+
 __version__ = "0.1.0"
-
-
-def release_caches() -> int:
-    """Release every engine-tracked cache and checkpoint block (see
-    ``io.release_caches``). The query registry scopes caches automatically
-    (a new query's build releases the previous query's working set);
-    embedders that call query builders directly, or that want the LAST
-    query's caches gone without building another, call this.
-
-    CONTRACT: materialize (collect/write) each query's result BEFORE
-    building the next query or calling this. Released plain caches
-    recompute, but released ``localCheckpoint`` blocks cannot (truncated
-    lineage) — a retained DataFrame from an earlier scope fails with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND when collected after release. The
-    behavior is pinned in tests/test_io_helpers.py::TestScopedCaching."""
-    from jp_qcew_spark.io import release_caches as _rc
-
-    return _rc()

@@ -9,10 +9,13 @@ Aggregates every query group into two dicts consumed by ``__spark_entry__``:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
+
+from jp_qcew_spark.io import enter_scope
 
 _GROUPS = [
     "jp_qcew_spark.queries.core",
@@ -36,47 +39,11 @@ _GROUPS = [
     "jp_qcew_spark.queries.curation",
 ]
 
-# Driver-window rotation (VERDICT r2 #1): the driver's CORRECTNESS snapshot
-# covers only the FIRST 50 registry entries, so registration order is
-# evidence policy. This list pins the ROUND-15 window (VERDICT r14 #8:
-# r15-changed queries first, then the two joins displaced in r14, then
-# the oldest r10 evidence):
-#
-# - CHANGED in r15, optimization round 2: (a) the five connected-
-#   components consumers (size-gated local union-find finish,
-#   ext/graph.py); (b) the two PQ pricing evals (variants built on
-#   concurrent driver threads); (c) every stream, all drained by
-#   run_to_memory (the one bounded drain) — RAM-backed ephemeral checkpoints,
-#   key-cardinality-derived state width for the dedup twins, PLUS the
-#   inherited r15 commit's Arrow record-batch replay feeds and the
-#   checkpoint-checksum default — the 17 registered stream consumers
-#   all sit in the window;
-# - then join_range / join_salted_skew (displaced from the r14 leads);
-# - then the r10 cohort's remaining rows (oldest evidence),
-#   alphabetical.
-#
-# Previous round's rationale, kept for the audit trail:
-#
-# - quality_classifier_{train,apply,gd_eval} and knn_ivfpq_rerank_sweep
-#   are NEW this round (the curation triad's trained classifier —
-#   NB closed form + 3 priced logistic supersteps, VERDICT r13 #7 —
-#   and the refine-budget sweep closing the ANN quality arc, #5);
-# - the whole served+eval PQ/IVF family CHANGED (trained-artifact
-#   promotion, VERDICT r13 #4: the OPQ map / served codebook / IVF
-#   centroids / exact ground truth now train once per process via
-#   io.trained_artifact — value-identical by construction, re-certified
-#   anyway), and stream_dedup_neardup gained the packed-band-index
-#   width guard (ADVICE r13 — raise-only, behavior identical at any
-#   in-contract config);
-# - then the final 10 r9-evidence rows (VERDICT r13 #2 names them as
-#   THE r14 leads), retiring all r9 evidence from the registry;
-# - the remaining slots start retiring the r10 cohort (44 rows, the
-#   oldest evidence once r9 clears), alphabetical: agg_distinct_exact
-#   .. mode_keying land this round; the remaining 18 (moving_avg ..
-#   unpivot_long) plus the younger half of the r10 cohort lead the
-#   r15 window — two rounds retire r10 entirely (r15: the 18 left
-#   here + 8 more slots toward r11 evidence).
-# Everything NOT listed follows in module-registration order.
+# Driver-window rotation: the driver's correctness snapshot covers only
+# the FIRST 50 registry entries, so registration order is evidence policy.
+# Rotate this list every round: queries changed this round first, then the
+# oldest driver evidence. Everything not listed follows in module order.
+# The per-round rationale lives in BASELINE.md ("Driver window history").
 _WINDOW_PRIORITY = [
     # -- changed in round 15: connected-components local finish
     "semdedup_mutual",
@@ -144,30 +111,12 @@ _WINDOW_PRIORITY = [
 
 
 
-# Scoped caching (VERDICT r5 #3): builders persist hot intermediates (LSH
-# candidates, IVF assignments, pagerank supersteps) and hand back only the
-# result DataFrame, so without scoping a long-lived session accumulates dead
-# cached partitions — at 100 TB, executor OOM. Every internal persist routes
-# through io.track_cache; the wrapper below releases the PREVIOUS query's
-# caches when a DIFFERENT query starts building, bounding accumulation at
-# one query's working set while repeated builds of the SAME query (bench
-# medians) keep their warm caches. The last query's caches are released by
-# io.release_caches() (or session stop).
-_CURRENT_SCOPE: list[str | None] = [None]
-
-
 def _scoped(name: str, fn):
+    @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from jp_qcew_spark.io import release_caches
-
-        if _CURRENT_SCOPE[0] != name:
-            release_caches()
-            _CURRENT_SCOPE[0] = name
+        enter_scope(name)
         return fn(spark, sf_dir)
 
-    wrapped.__name__ = getattr(fn, "__name__", name)
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
     return wrapped
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from jp_qcew_spark.ext import similarity as S
 from jp_qcew_spark.io import (
     cache_parallel,
+    current_scope,
     load_table,
     metadata_row_count,
     order_result,
@@ -4077,14 +4078,18 @@ def _on_threads(spark: SparkSession, *builds) -> list:
     lineage (each is deterministic in isolation: seeded training,
     promoted artifacts built under io's lock), so overlapping their
     checkpoints and training supersteps changes wall clock, never
-    values."""
+    values. Each build runs under a copy of the caller's context, so what
+    it tracks lands in the caller's query scope (io.current_scope)."""
     from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
 
     from pyspark import inheritable_thread_target
 
+    current_scope()  # created here, so every context copy below shares it
     with ThreadPoolExecutor(max_workers=len(builds)) as pool:
         futs = [
-            pool.submit(inheritable_thread_target(spark)(b)) for b in builds
+            pool.submit(copy_context().run, inheritable_thread_target(spark)(b))
+            for b in builds
         ]
         return [f.result() for f in futs]
 

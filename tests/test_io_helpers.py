@@ -278,14 +278,155 @@ def test_engine_confs_change_only_their_keys(spark, tmp_path):
 
 
 class TestScopedCaching:
-    """Round-6 cache-scoping contract (VERDICT r5 #3): engine-internal
-    persists are tracked; the registry releases the previous query's caches
-    when a different query builds; release_caches() drains the rest. A
-    long-lived session must end a multi-query sweep with an EMPTY cache
-    manager without spark.catalog.clearCache()."""
+    """Cache-scoping contract: engine-internal persists and checkpoints
+    are tracked in the calling context's scope; the registry releases the
+    previous query's scope when a different query builds in the same
+    context; release_caches() drains the rest. A long-lived session must
+    end a multi-query sweep with an EMPTY cache manager without
+    spark.catalog.clearCache(), and two threads sharing one session must
+    never release each other's resources."""
 
     def _cache_empty(self, spark) -> bool:
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def _rdd_ids(self, spark) -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    def test_two_queries_on_two_threads(self, spark, sf_dir):
+        """Thread A builds, thread B builds a different query, then both
+        collect: B's build must not release A's checkpoints (with one
+        process-wide scope A's collect fails with
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from jp_qcew_spark.io import release_caches
+        from jp_qcew_spark.queries import all_queries
+
+        qs = all_queries()
+        names = ("tokenizer_bpe_merges", "graph_pagerank")
+        serial = [
+            sorted(map(tuple, qs[n](spark, sf_dir).collect())) for n in names
+        ]
+        release_caches()
+        # one worker each: a pool thread keeps its own context across tasks
+        with ThreadPoolExecutor(1) as a, ThreadPoolExecutor(1) as b:
+            pools = (a, b)
+            dfs = [
+                t.submit(qs[n], spark, sf_dir).result()
+                for t, n in zip(pools, names)
+            ]
+            rows = [t.submit(df.collect).result() for t, df in zip(pools, dfs)]
+            assert [sorted(map(tuple, r)) for r in rows] == serial
+            assert all(t.submit(release_caches).result() > 0 for t in pools)
+        assert self._cache_empty(spark)
+        assert self._rdd_ids(spark) == set()
+
+    def test_release_is_per_thread(self, spark):
+        from concurrent.futures import ThreadPoolExecutor
+
+        from jp_qcew_spark.io import release_caches, track_local_checkpoint
+
+        release_caches()
+        df = spark.range(1000)
+        with ThreadPoolExecutor(1) as other:
+            cp = other.submit(track_local_checkpoint, df).result()
+            rid = cp._jdf.queryExecution().logical().rdd().id()
+            assert release_caches() == 0  # this thread tracks nothing
+            assert rid in self._rdd_ids(spark)
+            assert cp.count() == 1000
+            assert other.submit(release_caches).result() == 1
+        assert rid not in self._rdd_ids(spark)
+
+    def test_failed_build_does_not_leak(self, spark, sf_dir):
+        """A build that tracks a cache, and a checkpoint on one of its
+        own threads, then raises: the next different query's build in
+        the same context releases both."""
+        from jp_qcew_spark.io import (
+            release_caches,
+            track_cache,
+            track_local_checkpoint,
+        )
+        from jp_qcew_spark.queries import _scoped, all_queries
+        from jp_qcew_spark.queries.similarity import _on_threads
+
+        def failing_build(spark, sf_dir):
+            track_cache(spark.range(100).selectExpr("id * 3 AS x")).count()
+            _on_threads(spark, lambda: track_local_checkpoint(spark.range(9)))
+            raise RuntimeError("build failed")
+
+        release_caches()
+        with pytest.raises(RuntimeError, match="build failed"):
+            _scoped("failing_build", failing_build)(spark, sf_dir)
+        assert not self._cache_empty(spark)
+        assert self._rdd_ids(spark)
+        all_queries()["pricing_summary"](spark, sf_dir)
+        assert self._cache_empty(spark)
+        assert self._rdd_ids(spark) == set()
+
+    def test_threaded_builds_share_the_callers_scope(self, spark):
+        """More builds than cores and a short switch interval: every
+        handle the builds' threads track lands in the caller's scope."""
+        import sys
+
+        from jp_qcew_spark.io import release_caches, track_cache
+        from jp_qcew_spark.queries.similarity import _on_threads
+
+        class Frame:  # what track_cache and release_caches call
+            def persist(self):
+                return self
+
+            def unpersist(self, blocking=False):
+                return self
+
+        def build():
+            for _ in range(200):
+                track_cache(Frame())
+
+        release_caches()
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            _on_threads(spark, *[build] * 16)
+        finally:
+            sys.setswitchinterval(interval)
+        assert release_caches() == 16 * 200
+
+    def test_checkpoint_tracks_its_own_rdd(self, spark, monkeypatch):
+        """Another query's RDD persisted while the checkpoint runs (as a
+        concurrent thread's would) is neither tracked nor released."""
+        from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+        from jp_qcew_spark.io import (
+            current_scope,
+            release_caches,
+            track_local_checkpoint,
+        )
+
+        release_caches()
+        sc = spark.sparkContext
+        unrelated = [sc.parallelize(range(10)).cache()]
+        unrelated[0].count()
+        checkpoint = ClassicDataFrame.localCheckpoint
+
+        def persist_other_then_checkpoint(self, *args, **kwargs):
+            unrelated.append(sc.parallelize(range(10)).cache())
+            unrelated[-1].count()
+            return checkpoint(self, *args, **kwargs)
+
+        monkeypatch.setattr(
+            ClassicDataFrame, "localCheckpoint", persist_other_then_checkpoint
+        )
+        before = self._rdd_ids(spark)
+        cp = track_local_checkpoint(spark.range(1000))
+        cp_id = cp._jdf.queryExecution().logical().rdd().id()
+        others = {r.id() for r in unrelated}
+        assert self._rdd_ids(spark) - before == {cp_id, unrelated[-1].id()}
+        assert [h.id() for h in current_scope().handles] == [cp_id]
+        assert release_caches() == 1
+        assert self._rdd_ids(spark) & (others | {cp_id}) == others
+        for r in unrelated:
+            r.unpersist()
 
     def test_sweep_leaves_no_caches(self, spark, sf_dir):
         from jp_qcew_spark.io import release_caches

@@ -12,6 +12,7 @@ through the same projection builder on small literal DataFrames, batched.
 
 from __future__ import annotations
 
+import re
 import string
 
 from hypothesis import HealthCheck, given, settings
@@ -58,12 +59,18 @@ def test_decode_round_trip(spark, vals):
         assert row[name] == val[: widths[name]].strip(), name
 
 
-# every char Spark's UTF8String numeric casts trim from the ends: all
-# codepoints <= 0x20 (Java String.trim semantics), NOT just Python/Unicode
-# whitespace — hypothesis found '0\x1b' (trailing ESC), which Python's
-# .strip() keeps but Spark trims, casting to 0 where the old predicate
-# demanded NULL
-_CAST_TRIM = "".join(chr(i) for i in range(0x21))
+# every byte Spark's UTF8String numeric casts trim from the ends: all
+# codepoints <= 0x20 and DEL 0x7f (Java whitespace or ISO control), NOT
+# just Python/Unicode whitespace — hypothesis found '0\x1b' (trailing
+# ESC), which Python's .strip() keeps but Spark trims, casting to 0 where
+# the old predicate demanded NULL
+_CAST_TRIM = "".join(chr(i) for i in range(0x21)) + "\x7f"
+# what the non-ANSI string→integral cast accepts after that trim: an
+# optional sign, then digits with an optional fractional part, or a bare
+# fractional part; the fraction is truncated (typed_qcew's documented
+# semantics), so '.', '-.5' and '1.' cast to 0, 0 and 1, while '', '+'
+# and '1.5.' are NULL — hypothesis found '.', which casts to 0
+_CAST_INT = re.compile(r"([+-]?)(?:([0-9]+)(?:\.[0-9]*)?|\.[0-9]*)")
 
 
 @given(junk=st.text(min_size=0, max_size=6))
@@ -71,10 +78,10 @@ _CAST_TRIM = "".join(chr(i) for i in range(0x21))
 def test_casts_null_not_throw(spark, junk):
     """Non-numeric year/qtr content decodes to NULL, never an exception —
     the reference's cast(strict=False) semantics (data_process.py:66-82).
-    The predicate models Spark's actual string→int acceptance: trim chars
-    ≤ 0x20 from both ends, then optional sign + ASCII digits."""
-    import re as _re
-
+    The predicate models Spark's actual string→int acceptance on the
+    field's slice of ``junk`` (``make_line`` cuts it to the field width):
+    trim ``_CAST_TRIM`` from both ends, then ``_CAST_INT``; an accepted
+    slice must cast to its truncated integer value."""
     line = make_line({"year": junk, "qtr": junk, "total_wages": junk})
     df = decode_qcew(
         spark.createDataFrame([(line,)], "value string").withColumn(
@@ -82,9 +89,13 @@ def test_casts_null_not_throw(spark, junk):
         )
     )
     row = typed_qcew(df).select("year", "qtr", "total_wages").first()
-    stripped = junk.strip(_CAST_TRIM)
-    if not _re.fullmatch(r"[+-]?[0-9]+", stripped):
-        assert row["year"] is None
+    widths = {f[0]: f[2] for f in FIELDS}
+    for name in ("year", "qtr"):
+        m = _CAST_INT.fullmatch(junk[: widths[name]].strip(_CAST_TRIM))
+        if m is None:
+            assert row[name] is None, name
+        else:
+            assert row[name] == int(m[1] + (m[2] or "0")), name
 
 
 @given(

@@ -284,3 +284,5 @@ def test_pq_eval_threaded_variants_deterministic(spark, sf_dir):
     )
     release_caches()
     assert first == second
+    # the threads' checkpoints landed in this thread's scope and are gone
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

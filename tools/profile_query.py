@@ -10,10 +10,15 @@ again under labelled job groups; the warm pair is reported:
 
 ``DIR`` is a scale-factor directory of the oracle tables (TESTDATA.md).
 
-Columns: warm build jobs, warm collect jobs, completed and skipped
-collect stages, collect tasks, executor run ms of the collect, and the
-collect's wall ms. The counts do not move with box speed; the two ms
-columns do. Output is one Markdown table row per query.
+Columns: warm build jobs, warm build py4j round trips (every command
+the driver sends the JVM while the builder runs, counted by wrapping
+py4j's ``ClientServerConnection.send_command`` in this process only;
+the object deletes py4j's finalizer thread sends on its own clock are
+not counted), warm collect jobs, completed and skipped collect stages,
+collect tasks, executor run ms of the collect, and the collect's wall
+ms. The counts do not move with box speed; the two ms columns do.
+Queries that build on their own driver threads (the PQ evals) count
+those threads' commands too. Output is one Markdown table row per query.
 
 ``--etl GLOB`` profiles ``run_etl`` of the fixed-width files GLOB names
 (into a temporary directory) and ``naics4_aggregate(...).collect()`` on
@@ -35,9 +40,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADER = (
-    "| query | build jobs | collect jobs | stages | skipped | tasks "
-    "| run ms | collect ms |\n|---|---|---|---|---|---|---|---|"
+    "| query | build jobs | build rt | collect jobs | stages | skipped "
+    "| tasks | run ms | collect ms |\n|---|---|---|---|---|---|---|---|---|"
 )
+
+# py4j commands sent since _count_round_trips() installed its wrapper
+_ROUND_TRIPS = [0]
+
+
+def _count_round_trips() -> None:
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    gc = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(self, command):
+        if not command.startswith(gc):
+            _ROUND_TRIPS[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
 
 
 def _group_counters(spark, group: str) -> dict[str, int]:
@@ -72,13 +95,16 @@ def profile(spark, name: str, fn, sf_dir: str) -> dict[str, int]:
     sc.setJobGroup(f"profile:{name}:cold", name)
     fn(spark, sf_dir).collect()
     sc.setJobGroup(f"profile:{name}:build", name)
+    rt = _ROUND_TRIPS[0]
     df = fn(spark, sf_dir)
+    rt = _ROUND_TRIPS[0] - rt
     sc.setJobGroup(f"profile:{name}:collect", name)
     t0 = time.perf_counter()
     df.collect()
     wall = round((time.perf_counter() - t0) * 1000)
     rec = _group_counters(spark, f"profile:{name}:collect")
     rec["build_jobs"] = _group_counters(spark, f"profile:{name}:build")["jobs"]
+    rec["build_rt"] = rt
     rec["collect_ms"] = wall
     return rec
 
@@ -175,12 +201,13 @@ def main(argv: list[str] | None = None) -> int:
                 flush=True,
             )
     if names:
+        _count_round_trips()
         print(HEADER, flush=True)
     for name in names:
         r = profile(spark, name, qs[name], args.sf)
         print(
-            f"| {name} | {r['build_jobs']} | {r['jobs']} | {r['stages']} "
-            f"| {r['skipped']} | {r['tasks']} | {r['run_ms']} "
+            f"| {name} | {r['build_jobs']} | {r['build_rt']} | {r['jobs']} "
+            f"| {r['stages']} | {r['skipped']} | {r['tasks']} | {r['run_ms']} "
             f"| {r['collect_ms']} |",
             flush=True,
         )
