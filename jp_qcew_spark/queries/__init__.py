@@ -45,6 +45,19 @@ _GROUPS = [
 # oldest driver evidence. Everything not listed follows in module order.
 # The per-round rationale lives in BASELINE.md ("Driver window history").
 _WINDOW_PRIORITY = [
+    # -- changed: the multimodal codecs share one payload stage and one
+    #    decode stage (ext.multimodal._payloads / _decode) — all 11 mm_*
+    "mm_metadata",
+    "mm_decode_features",
+    "mm_frame_sample",
+    "mm_ppm_decode",
+    "mm_png_decode",
+    "mm_gif_decode",
+    "mm_wav_decode",
+    "mm_bmp_decode",
+    "mm_tga_decode",
+    "mm_audio_frames",
+    "mm_tiff_decode",
     # -- changed in round 15: connected-components local finish
     "semdedup_mutual",
     "semdedup_rp",
@@ -78,16 +91,12 @@ _WINDOW_PRIORITY = [
     # -- displaced from the r14 leads by the late-r14 optimization pass
     "join_range",
     "join_salted_skew",
-    # -- r10 cohort retirement continues (oldest evidence), alphabetical;
-    #    semdedup_rp / stream_cep_sequence / events_tumbling_stream /
-    #    tokenizer_* from that cohort are already covered above as
-    #    r15-changed paths
+    # -- r10 cohort (oldest evidence), alphabetical; its tail after
+    #    scd2_upsert rotated out for the mm_* rows
     "join_semi",
     "knn_recall_rp",
     "label_synthesis",
     "lag_diff_pct",
-    "mm_gif_decode",
-    "mm_wav_decode",
     "mode_keying",
     "moving_avg",
     "pivot_wide",
@@ -97,16 +106,6 @@ _WINDOW_PRIORITY = [
     "running_sum",
     "sample_weighted",
     "scd2_upsert",
-    "suppressed_agg",
-    "text_containment",
-    "text_token_count",
-    "tick_sample",
-    "tokenizer_bpe_apply",
-    "tokenizer_bpe_merges",
-    "union_distinct",
-    "unpivot_long",
-    # -- 50th slot: first core entry in module order (r10 cohort spent)
-    "cast_nullsafe",
 ]
 
 

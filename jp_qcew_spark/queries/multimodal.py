@@ -78,7 +78,9 @@ def q_mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing: binary column → pandas bytes → parsed features). Hash-matching
     the SQL oracle proves the bytes crossed the Arrow boundary intact."""
     m = _media(spark, sf_dir).filter(F.col("doc_id") < 200)
-    return M.decode_features(m).transform(order_result, "doc_id")
+    return M._decode(m, M.DECODE_SCHEMA, M.decode_media).transform(
+        order_result, "doc_id"
+    )
 
 
 ORACLE_MM_DECODE = f"""
@@ -127,6 +129,32 @@ FROM frames WHERE frame_idx % 3 = 0 ORDER BY doc_id, frame_idx
 """
 
 
+def _stream_sql(n: int) -> str:
+    """DuckDB rows ``(doc_id, j, v)`` over documents with doc_id < 200 and
+    j < n: ``v`` is byte j of the text's indexed-md5 stream. Block
+    k = j // 16 is md5(text || '-' || k); byte i = j % 16 of it is hex
+    chars 2i+1, 2i+2, parsed with positional instr arithmetic (no
+    hex-string casts)."""
+    return f"""
+  SELECT doc_id, j,
+         (instr('0123456789abcdef',
+                substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 1, 1)) - 1) * 16
+           + instr('0123456789abcdef',
+                   substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 2, 1)) - 1 AS v
+  FROM documents CROSS JOIN range(0, {n}) t(j)
+  WHERE doc_id < 200"""
+
+
+def _codec(spark: SparkSession, sf_dir: str, make, schema, decode) -> DataFrame:
+    """documents (doc_id < 200) -> ``make`` payloads -> ``decode`` features
+    in ``schema``, sorted by doc_id: two Arrow stages, so the encoded
+    binary column itself crosses JVM↔Arrow."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    return M._decode(M._payloads(d, make), schema, decode).transform(
+        order_result, "doc_id"
+    )
+
+
 def q_mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end: synthesize a genuine 4×4 P6 PPM per
     document (JVM-side expressions), decode it with numpy in Arrow batches
@@ -135,14 +163,16 @@ def q_mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, so a hash match proves actual pixel arithmetic, not header math."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     img = d.select("doc_id", M.synth_ppm(F.col("text")).alias("payload"))
-    return M.ppm_features(img).transform(order_result, "doc_id")
+    return M._decode(img, M.PPM_SCHEMA, M.decode_netpbm).transform(
+        order_result, "doc_id"
+    )
 
 
-# 4×4 P6: 48 pixel bytes = 96 hex chars = md5(text) hex repeated 3×.
-# byte i → pixel i//3, row (i//3)//4, col (i//3)%4; downsample keeps
+# 4×4 RGB: 48 pixel bytes = 96 hex chars = md5(text) hex repeated 3×.
+# byte i → pixel i//3, row (i//3)//4, col (i//3)%4; the downsample keeps
 # even rows and even cols (numpy arr[::2, ::2]).
-ORACLE_MM_PPM_DECODE = """
-WITH m AS (
+_MD5_GRID_SQL = """
+m AS (
   SELECT doc_id, substr(repeat(md5(text), 3), 1, 96) AS hx
   FROM documents WHERE doc_id < 200
 ), b AS (
@@ -150,7 +180,10 @@ WITH m AS (
          CAST(('0x' || substr(hx, i * 2 + 1, 2)) AS BIGINT) AS v,
          (i // 3) // 4 AS r, (i // 3) % 4 AS c
   FROM m CROSS JOIN range(0, 48) t(i)
-)
+)"""
+
+ORACLE_MM_PPM_DECODE = f"""
+WITH {_MD5_GRID_SQL}
 SELECT doc_id,
        CAST(4 AS BIGINT) AS width,
        CAST(4 AS BIGINT) AS height,
@@ -162,32 +195,20 @@ FROM b GROUP BY doc_id ORDER BY doc_id
 
 
 def q_mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-codec decode end-to-end (closes the round-4
-    real-codec gate, VERDICT r4 #3): synthesize a genuine zlib-compressed
-    PNG per document — CRC-correct chunks, rows filtered with all four
-    non-trivial PNG scanline filters — then decode it in a SECOND Arrow
-    stage via ``decode_media(real=True)`` → ``decode_png`` (chunk walk +
-    CRC verify + inflate + unfilter + pixel mean + real 2× downsample).
-    Pixels follow the same md5(text) rule as ``mm_ppm_decode``, so the
-    SQL oracle recomputes every pixel value from the text: a hash match
-    proves the compressed binary column survived the JVM↔Arrow round trip
-    AND the inflate/unfilter arithmetic is exact."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.png_features(M.synth_png(d)).transform(order_result, "doc_id")
+    """REAL compressed-codec decode end-to-end: a genuine zlib-compressed
+    PNG per document (CRC-correct chunks, rows filtered with all four
+    non-trivial PNG scanline filters), decoded by ``decode_png`` (chunk
+    walk + CRC verify + inflate + unfilter + pixel mean + real 2×
+    downsample). Pixels follow the ``mm_ppm_decode`` rule, so a hash match
+    proves the inflate/unfilter arithmetic is exact."""
+    return _codec(spark, sf_dir, M._png_payload, M.PNG_FEATURES_SCHEMA,
+                  M.decode_png)
 
 
-# identical pixel rule to mm_ppm_decode (4×4 RGB from repeat(md5(text),3)),
-# plus the IHDR bit depth the decoder must parse out of the real chunk.
-ORACLE_MM_PNG_DECODE = """
-WITH m AS (
-  SELECT doc_id, substr(repeat(md5(text), 3), 1, 96) AS hx
-  FROM documents WHERE doc_id < 200
-), b AS (
-  SELECT doc_id, i,
-         CAST(('0x' || substr(hx, i * 2 + 1, 2)) AS BIGINT) AS v,
-         (i // 3) // 4 AS r, (i // 3) % 4 AS c
-  FROM m CROSS JOIN range(0, 48) t(i)
-)
+# the mm_ppm_decode pixel rule, plus the IHDR bit depth the decoder must
+# parse out of the real chunk.
+ORACLE_MM_PNG_DECODE = f"""
+WITH {_MD5_GRID_SQL}
 SELECT doc_id,
        CAST(4 AS BIGINT) AS width,
        CAST(4 AS BIGINT) AS height,
@@ -199,82 +220,59 @@ FROM b GROUP BY doc_id ORDER BY doc_id
 """
 
 
-
 def q_mm_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SECOND real compressed codec, different compression family than
-    PNG/DEFLATE (VERDICT r5 #6): synthesize a genuine LZW-compressed GIF89a
-    per document (grayscale 256-palette, 32x32), then decode it in a second
-    Arrow stage via ``decode_media(real=True)`` -> ``decode_gif`` (header +
-    LSD parse, palette read, sub-block reassembly, variable-code-width LZW
-    with dictionary rebuild, palette map, mean + real 2x downsample).
-
-    Pixels are indexed md5 blocks (block k = raw bytes of
-    ``md5(text || '-' || k)``), near-random on purpose: the LZW dictionary
-    grows through the 512- and 1024-entry boundaries, so 9-, 10- and
-    11-bit codes all appear on the wire (pinned in tests). The SQL oracle
-    recomputes every pixel byte with the portable positional-hex
-    arithmetic (no hex-string casts), so a hash match proves the whole
-    compressed round trip is byte-exact."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.gif_features(M.synth_gif(d)).transform(order_result, "doc_id")
+    """A second compression family: a genuine LZW-compressed GIF89a per
+    document (grayscale 256-palette, 32x32), decoded by ``decode_gif``
+    (header + LSD parse, palette read, sub-block reassembly,
+    variable-code-width LZW with dictionary rebuild, palette map, mean +
+    real 2x downsample). Pixels are indexed-md5 stream bytes, near-random
+    on purpose: the LZW dictionary grows through the 512- and 1024-entry
+    boundaries, so 9-, 10- and 11-bit codes all appear on the wire
+    (pinned in tests)."""
+    return _codec(spark, sf_dir, M._gif_payload, M.GIF_FEATURES_SCHEMA,
+                  M.decode_gif)
 
 
-# pixel p = 16*k + i (k-th md5 block, i-th byte), laid out row-major on a
-# 32x32 grid; grayscale palette is the identity so pixel value = index.
-# 1024 and 256 are powers of two, so both means are exact dyadic doubles
-# on both engines and ship UNROUNDED (round(x,4) on .90625-style dyadics
-# is a tie Python and DuckDB break differently).
-ORACLE_MM_GIF_DECODE = """
-WITH px AS (
-  SELECT doc_id,
-         (16 * k + i) // 32 AS r, (16 * k + i) % 32 AS c,
-         (instr('0123456789abcdef',
-                substr(md5(text || '-' || k), i * 2 + 1, 1)) - 1) * 16
-           + instr('0123456789abcdef',
-                   substr(md5(text || '-' || k), i * 2 + 2, 1)) - 1 AS v
-  FROM documents CROSS JOIN range(0, 64) t(k) CROSS JOIN range(0, 16) u(i)
-  WHERE doc_id < 200
+# pixel p = stream byte p on a 32x32 grid, row p // 32, col p % 32; the
+# grayscale palette is the identity, so pixel value = index. 1024 and 256
+# are powers of two, so both means are exact dyadic doubles on both
+# engines and ship UNROUNDED (round(x,4) on .90625-style dyadics is a tie
+# Python and DuckDB break differently).
+ORACLE_MM_GIF_DECODE = f"""
+WITH px AS ({_stream_sql(1024)}
 )
 SELECT doc_id,
        CAST(32 AS BIGINT) AS width,
        CAST(32 AS BIGINT) AS height,
        CAST(256 AS BIGINT) AS palette_size,
        avg(v) AS mean_px,
-       avg(v) FILTER (r % 2 = 0 AND c % 2 = 0) AS ds_mean_px
+       avg(v) FILTER ((j // 32) % 2 = 0 AND (j % 32) % 2 = 0) AS ds_mean_px
 FROM px GROUP BY doc_id ORDER BY doc_id
 """
 
 
-
 def q_mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode end-to-end — closes the WAV row of the README
-    gate table: PCM WAV is an uncompressed container (RIFF chunk walk +
-    fmt parse + int16 sample plane, stdlib struct + numpy), so gating it
-    with JPEG/MPEG was over-broad. Synthesize a genuine 44-byte-header
-    PCM WAV per document (256 int16 samples at 8 kHz from the indexed-md5
-    byte stream), round-trip the binary column through Arrow, and decode
-    it via ``decode_media(real=True)`` -> ``decode_wav`` (container
-    verify, chunk walk with pad-byte alignment, PCM-only fmt gate, real
-    signal features: peak + RMS + integer duration).
-
-    The SQL oracle recomputes every little-endian signed 16-bit sample
-    from the text with the portable positional-hex arithmetic; RMS is
-    sqrt of an exact dyadic mean (256 = 2^8 samples), so the hash match
-    proves the sample plane is byte-exact, not just the header."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.wav_features(M.synth_wav(d)).transform(order_result, "doc_id")
+    """REAL audio decode end-to-end: a genuine 44-byte-header PCM WAV per
+    document (256 int16 samples at 8 kHz from the indexed-md5 stream),
+    decoded by ``decode_wav`` (container verify, chunk walk with pad-byte
+    alignment, PCM-only fmt gate, peak + RMS + integer duration). RMS is
+    the sqrt of an exact dyadic mean (256 = 2^8 samples), so the hash
+    match proves the sample plane is byte-exact, not just the header."""
+    return _codec(spark, sf_dir, M._wav_payload, M.WAV_FEATURES_SCHEMA,
+                  M.decode_wav)
 
 
 # sample s <- bytes (2s, 2s+1) of the indexed-md5 stream: both bytes land
-# in block k = s // 8 (md5(text||'-'||k)), hex offsets 2i+1/2i+3 for
+# in block s // 8 (md5(text||'-'||k)), hex offsets 2i+1 / 2i+3 for
 # i = (2s) % 16; u = low + 256*high, sign-extended at 32768.
-ORACLE_MM_WAV_DECODE = """
-WITH raw AS (
-  SELECT doc_id, md5(text || '-' || (t.s // 8)) AS h, ((2 * t.s) % 16) AS i
+_WAV_SAMPLES_SQL = """
+raw AS (
+  SELECT doc_id, t.s AS s,
+         md5(text || '-' || (t.s // 8)) AS h, ((2 * t.s) % 16) AS i
   FROM documents CROSS JOIN range(0, 256) t(s)
   WHERE doc_id < 200
 ), u AS (
-  SELECT doc_id,
+  SELECT doc_id, s,
          (instr('0123456789abcdef', substr(h, 2 * i + 1, 1)) - 1) * 16
            + instr('0123456789abcdef', substr(h, 2 * i + 2, 1)) - 1
            + 256 * ((instr('0123456789abcdef', substr(h, 2 * i + 3, 1)) - 1) * 16
@@ -282,9 +280,12 @@ WITH raw AS (
            AS uu
   FROM raw
 ), v AS (
-  SELECT doc_id, CASE WHEN uu >= 32768 THEN uu - 65536 ELSE uu END AS v
+  SELECT doc_id, s, CASE WHEN uu >= 32768 THEN uu - 65536 ELSE uu END AS v
   FROM u
-)
+)"""
+
+ORACLE_MM_WAV_DECODE = f"""
+WITH {_WAV_SAMPLES_SQL}
 SELECT doc_id,
        CAST(8000 AS BIGINT) AS sample_rate,
        CAST(16 AS BIGINT) AS bits,
@@ -297,84 +298,56 @@ FROM v GROUP BY doc_id ORDER BY doc_id
 
 
 def q_mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FOURTH real image container (round 7, VERDICT r6 #5): synthesize a
-    genuine 24-bit BI_RGB Windows BMP per document, then decode it in a
-    second Arrow stage via ``decode_media(real=True)`` -> ``decode_bmp``
-    (file+info header parse, 4-byte row-stride de-padding, bottom-up row
-    flip, BGR plane). The 10x8 grid makes the stride REAL (30-byte rows
-    padded to 32), and the features are position- and channel-sensitive:
-    ``top_mean`` breaks if the decoder forgets the vertical flip,
-    ``mean_b``/``mean_r`` swap if it confuses BGR with RGB.
-
-    Channel ``ch`` of pixel (r, c) is indexed-md5 stream byte
-    ``3*(r*w+c)+ch`` (block k = raw bytes of ``md5(text || '-' || k)``),
-    so the SQL oracle recomputes every channel byte with the portable
-    positional-hex arithmetic. All means are unrounded doubles: exact
-    integer sums (< 2^53) divided once, identical across numpy and both
-    engines."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.bmp_features(M.synth_bmp(d)).transform(order_result, "doc_id")
+    """A genuine 24-bit BI_RGB Windows BMP per document, decoded by
+    ``decode_bmp`` (file+info header parse, 4-byte row-stride de-padding,
+    bottom-up row flip, BGR plane). The 10x8 grid makes the stride REAL
+    (30-byte rows padded to 32), and the features are position- and
+    channel-sensitive: ``top_mean`` breaks if the decoder forgets the
+    vertical flip, ``mean_b``/``mean_r`` swap if it confuses BGR with RGB.
+    All means are unrounded doubles: exact integer sums (< 2^53) divided
+    once, identical across numpy and both engines."""
+    return _codec(spark, sf_dir, M._bmp_payload, M.BMP_FEATURES_SCHEMA,
+                  M.decode_bmp)
 
 
-# byte j of the stream = hex chars (2i+1, 2i+2) of md5(text||'-'||k) with
-# k = j//16, i = j%16; j maps to (pixel p = j//3, channel ch = j%3),
-# pixel row r = p // 10. 240 bytes = 15 md5 blocks exactly.
-ORACLE_MM_BMP_DECODE = """
-WITH b AS (
-  SELECT doc_id,
-         (j // 3) // 10 AS r, j % 3 AS ch,
-         (instr('0123456789abcdef',
-                substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 1, 1)) - 1) * 16
-           + instr('0123456789abcdef',
-                   substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 2, 1)) - 1 AS v
-  FROM documents CROSS JOIN range(0, 240) t(j)
-  WHERE doc_id < 200
+# stream byte j is channel ch = j % 3 of pixel p = j // 3, pixel row
+# r = p // 10. 240 bytes = 15 md5 blocks exactly.
+ORACLE_MM_BMP_DECODE = f"""
+WITH b AS ({_stream_sql(240)}
 )
 SELECT doc_id,
        CAST(10 AS BIGINT) AS width,
        CAST(8 AS BIGINT) AS height,
        CAST(24 AS BIGINT) AS bpp,
        avg(v) AS mean_px,
-       avg(v) FILTER (r = 0) AS top_mean,
-       avg(v) FILTER (ch = 0) AS mean_b,
-       avg(v) FILTER (ch = 2) AS mean_r
+       avg(v) FILTER ((j // 3) // 10 = 0) AS top_mean,
+       avg(v) FILTER (j % 3 = 0) AS mean_b,
+       avg(v) FILTER (j % 3 = 2) AS mean_r
 FROM b GROUP BY doc_id ORDER BY doc_id
 """
 
 
 def q_mm_tga_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THIRD real compression family on the wire (round 7, after
-    PNG/DEFLATE and GIF/LZW): synthesize a genuine RLE-compressed
-    true-color Targa (type 10) per document and decode it via
-    ``decode_media(real=True)`` -> ``decode_tga`` (header parse, per-
-    scanline run/raw packet walk with packet COUNTING, bottom-up flip).
-
-    Pixel rule: gray pixel (r, c) = stream byte ``r*(w//2) + c//2`` —
-    every byte covers two adjacent pixels, so the greedy encoder provably
-    emits one run packet per maximal equal-byte run and the oracle
-    recomputes ``n_packets`` with a lag() over the byte stream and
-    ``n_bytes`` as ``18 + 4*n_packets + 26`` exactly. A hash match proves
-    the COMPRESSION STRUCTURE round-trips, not just the pixel plane."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.tga_features(M.synth_tga(d)).transform(order_result, "doc_id")
+    """A third compression family on the wire: a genuine RLE-compressed
+    true-color Targa (type 10) per document, decoded by ``decode_tga``
+    (header parse, per-scanline run/raw packet walk with packet COUNTING,
+    bottom-up flip). Every stream byte covers two adjacent gray pixels, so
+    the oracle recomputes ``n_packets`` with a lag() over the byte stream
+    and ``n_bytes`` as ``18 + 4*n_packets + 26`` exactly: a hash match
+    proves the compression structure round-trips, not just the pixels."""
+    return _codec(spark, sf_dir, M._tga_payload, M.TGA_FEATURES_SCHEMA,
+                  M.decode_tga)
 
 
-# byte j of the stream sits at scan line r = j // 15, in-row position
-# jr = j % 15 (w=30, two pixels per byte -> 15 bytes/row); a packet
-# starts wherever the byte differs from its predecessor in the row.
-ORACLE_MM_TGA_DECODE = """
-WITH b AS (
-  SELECT doc_id, j // 15 AS r, j % 15 AS jr,
-         (instr('0123456789abcdef',
-                substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 1, 1)) - 1) * 16
-           + instr('0123456789abcdef',
-                   substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 2, 1)) - 1 AS v
-  FROM documents CROSS JOIN range(0, 240) t(j)
-  WHERE doc_id < 200
+# stream byte j sits at scan line r = j // 15, in-row position j % 15
+# (w=30, two pixels per byte -> 15 bytes/row); a packet starts wherever
+# the byte differs from its predecessor in the row.
+ORACLE_MM_TGA_DECODE = f"""
+WITH b AS ({_stream_sql(240)}
 ), runs AS (
-  SELECT doc_id, r, v,
-         CASE WHEN jr = 0
-                OR v != lag(v) OVER (PARTITION BY doc_id, r ORDER BY jr)
+  SELECT doc_id, j // 15 AS r, v,
+         CASE WHEN j % 15 = 0
+                OR v != lag(v) OVER (PARTITION BY doc_id, j // 15 ORDER BY j)
               THEN 1 ELSE 0 END AS is_start
   FROM b
 )
@@ -416,51 +389,29 @@ ORACLE = {
 
 
 def q_mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FRAME-level audio features (round 7) — the windowed-analysis stage
-    after ``mm_wav_decode``'s whole-file stats: decode each synthesized
-    PCM WAV once and emit per-32-sample-frame peak, RMS energy and
-    zero-crossing count (the energy-gating / VAD-style screen an audio
-    curation pipeline runs before transcription). The 8× row fan-out
-    happens INSIDE the Arrow batch (``ext.multimodal.wav_frame_features``),
-    so the binary column crosses the JVM↔Python boundary exactly once
-    per payload, and the numpy math is vectorized over (n_frames, 32)
-    planes, not per-sample Python.
-
-    The SQL oracle recomputes every int16 sample with the same
-    positional-hex arithmetic as ``mm_wav_decode``, keeps the sample
-    index, and derives frame = s // 32, ZCR via lag() inside the frame —
-    a hash match proves frame boundaries, signs, and energies are all
+    """FRAME-level audio features, the windowed analysis after
+    ``mm_wav_decode``'s whole-file stats: decode each synthesized PCM WAV
+    once and emit per-32-sample-frame peak, RMS energy and zero-crossing
+    count (the energy-gating / VAD-style screen an audio curation pipeline
+    runs before transcription). The 8× row fan-out happens INSIDE the
+    Arrow batch (``ext.multimodal.wav_frame_features``), so the binary
+    column crosses the JVM↔Python boundary exactly once per payload, and
+    the numpy math is vectorized over (n_frames, 32) planes. A hash match
+    with the oracle proves frame boundaries, signs, and energies are all
     sample-exact."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return order_result(
-        M.wav_frame_features(M.synth_wav(d)), "doc_id", "frame"
+        M.wav_frame_features(M._payloads(d, M._wav_payload)), "doc_id", "frame"
     )
 
 
-# Sample rule identical to ORACLE_MM_WAV_DECODE, with the sample index s
-# retained: frame = s // 32; ZCR counts sign boundary flips between
-# consecutive samples WITHIN the frame (31 comparisons per frame).
-ORACLE_MM_AUDIO_FRAMES = """
-WITH raw AS (
-  SELECT doc_id, t.s AS s,
-         md5(text || '-' || (t.s // 8)) AS h, ((2 * t.s) % 16) AS i
-  FROM documents CROSS JOIN range(0, 256) t(s)
-  WHERE doc_id < 200
-), u AS (
-  SELECT doc_id, s,
-         (instr('0123456789abcdef', substr(h, 2 * i + 1, 1)) - 1) * 16
-           + instr('0123456789abcdef', substr(h, 2 * i + 2, 1)) - 1
-           + 256 * ((instr('0123456789abcdef', substr(h, 2 * i + 3, 1)) - 1) * 16
-                    + instr('0123456789abcdef', substr(h, 2 * i + 4, 1)) - 1)
-           AS uu
-  FROM raw
-), v AS (
-  SELECT doc_id, s, s // 32 AS frame,
-         CASE WHEN uu >= 32768 THEN uu - 65536 ELSE uu END AS v
-  FROM u
-), lagd AS (
-  SELECT doc_id, frame, v,
-         lag(v) OVER (PARTITION BY doc_id, frame ORDER BY s) AS pv
+# the mm_wav_decode samples: frame = s // 32; ZCR counts sign boundary
+# flips between consecutive samples WITHIN the frame (31 comparisons per
+# frame).
+ORACLE_MM_AUDIO_FRAMES = f"""
+WITH {_WAV_SAMPLES_SQL}, lagd AS (
+  SELECT doc_id, s // 32 AS frame, v,
+         lag(v) OVER (PARTITION BY doc_id, s // 32 ORDER BY s) AS pv
   FROM v
 )
 SELECT doc_id,
@@ -477,41 +428,25 @@ ORACLE["mm_audio_frames"] = ORACLE_MM_AUDIO_FRAMES
 
 
 def q_mm_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIFTH real image container, and the first TAG-DIRECTORY one
-    (round 8): synthesize a genuine multi-strip little-endian baseline
-    TIFF per document, then decode it in a second Arrow stage via
-    ``decode_media(real=True)`` -> ``decode_tiff`` — the self-describing
-    IFD walk (type-aware 12-byte entries, SHORT values inline, the
-    4-strip LONG StripOffsets/StripByteCounts arrays fetched through
-    OFFSET INDIRECTION) followed by strip-by-strip pixel reassembly.
-    That directory-then-indirection shape is what parquet footers and
-    every zone-map format share; BMP/TGA/WAV never exercise it.
-
-    Grayscale pixel (r, c) is indexed-md5 stream byte ``r*15 + c`` (240
-    bytes = 15 exact md5 blocks), so the SQL oracle recomputes every
-    pixel with the portable positional-hex arithmetic. ``top_mean`` and
-    ``bot_mean`` break if the 4 strips reassemble out of order;
-    ``n_bytes`` pins the whole 394-byte layout (8 header + 118 IFD +
-    2x16 arrays + 240 pixels) byte-for-byte. Means are unrounded doubles:
-    exact integer sums divided once, identical on numpy and both
-    engines."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.tiff_features(M.synth_tiff(d)).transform(order_result, "doc_id")
+    """The first TAG-DIRECTORY container: a genuine multi-strip
+    little-endian baseline TIFF per document, decoded by ``decode_tiff``
+    — the self-describing IFD walk (type-aware 12-byte entries, SHORT
+    values inline, the 4-strip LONG StripOffsets/StripByteCounts arrays
+    fetched through OFFSET INDIRECTION) followed by strip-by-strip pixel
+    reassembly, the directory-then-indirection shape parquet footers
+    share. ``top_mean`` and ``bot_mean`` break if the 4 strips reassemble
+    out of order; ``n_bytes`` pins the whole 394-byte layout. Means are
+    unrounded doubles: exact integer sums divided once, identical on numpy
+    and both engines."""
+    return _codec(spark, sf_dir, M._tiff_payload, M.TIFF_FEATURES_SCHEMA,
+                  M.decode_tiff)
 
 
-# byte j of the stream = hex chars (2(j%16)+1, 2(j%16)+2) of
-# md5(text || '-' || j//16); j maps to row r = j // 15. The layout is
-# constant: 8 (header) + 2 + 9*12 + 4 (IFD) + 4*4 + 4*4 (strip arrays)
+# stream byte j is pixel row r = j // 15. The layout is constant:
+# 8 (header) + 2 + 9*12 + 4 (IFD) + 4*4 + 4*4 (strip arrays)
 # + 240 (pixels) = 394 bytes, 4 strips of 4 rows.
-ORACLE_MM_TIFF_DECODE = """
-WITH b AS (
-  SELECT doc_id, j // 15 AS r,
-         (instr('0123456789abcdef',
-                substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 1, 1)) - 1) * 16
-           + instr('0123456789abcdef',
-                   substr(md5(text || '-' || (j // 16)), (j % 16) * 2 + 2, 1)) - 1 AS v
-  FROM documents CROSS JOIN range(0, 240) t(j)
-  WHERE doc_id < 200
+ORACLE_MM_TIFF_DECODE = f"""
+WITH b AS ({_stream_sql(240)}
 )
 SELECT doc_id,
        CAST(15 AS BIGINT) AS width,
@@ -519,8 +454,8 @@ SELECT doc_id,
        CAST(4 AS BIGINT) AS n_strips,
        CAST(394 AS BIGINT) AS n_bytes,
        avg(v) AS mean_px,
-       avg(v) FILTER (r = 0) AS top_mean,
-       avg(v) FILTER (r = 15) AS bot_mean
+       avg(v) FILTER (j // 15 = 0) AS top_mean,
+       avg(v) FILTER (j // 15 = 15) AS bot_mean
 FROM b GROUP BY doc_id ORDER BY doc_id
 """
 

@@ -122,7 +122,7 @@ def test_synth_ppm_decodes_via_spark(spark):
 
     df = spark.createDataFrame([(1, "some doc text")], "doc_id long, text string")
     img = df.select("doc_id", M.synth_ppm(F.col("text")).alias("payload"))
-    (row,) = M.ppm_features(img).collect()
+    (row,) = M._decode(img, M.PPM_SCHEMA, M.decode_netpbm).collect()
     md5hex = H.md5("some doc text".encode()).hexdigest()
     pixels = bytes.fromhex((md5hex * 3)[: 96])
     import numpy as np
@@ -182,7 +182,9 @@ def test_synth_png_features_via_spark(spark):
     df = spark.createDataFrame(
         [(7, "png doc text")], "doc_id long, text string"
     )
-    (row,) = M.png_features(M.synth_png(df)).collect()
+    (row,) = M._decode(
+        M._payloads(df, M._png_payload), M.PNG_FEATURES_SCHEMA, M.decode_png
+    ).collect()
     md5hex = H.md5("png doc text".encode()).hexdigest()
     arr = np.frombuffer(
         bytes.fromhex((md5hex * 3)[:96]), dtype=np.uint8
@@ -488,6 +490,28 @@ def test_wav_frame_features_math():
     assert round(float(np.sqrt((fr[1].astype("f8") ** 2).mean())), 6) == 7.0
 
 
+def test_wav_frames_conserve_energy_and_peak():
+    """Sum of per-frame energies equals the whole-file energy and the file
+    peak is the max frame peak — ties the frame stage to decode_wav on the
+    same payload with no shared aggregation code."""
+    from jp_qcew_spark.ext import multimodal as M
+
+    rng = np.random.default_rng(7)
+    s = rng.integers(-32768, 32768, size=256, dtype=np.int64).astype("<i2")
+    payload = M.encode_wav(s, sample_rate=8000)
+    d = M.decode_wav(payload)
+    _sr, _ch, _bits, plane = M._wav_plane(payload)
+    fr = plane.reshape(8, 32)
+    frame_energy = (fr.astype(np.float64) ** 2).sum(axis=1)
+    total = (plane.astype(np.float64) ** 2).sum()
+    assert frame_energy.sum() == pytest.approx(total, rel=0)
+    assert int(np.abs(fr).max()) == d["peak"]
+    # whole-file rms derives from the same energy
+    assert d["rms"] == pytest.approx(
+        round(float(np.sqrt(total / 256)), 6), abs=0
+    )
+
+
 def test_tiff_roundtrip_multistrip_indirection():
     """Encode/decode a 15x16 grayscale baseline TIFF: 4 strips whose
     LONG offset/count arrays live BEHIND the IFD (count*4 > 4 forces the
@@ -534,3 +558,36 @@ def test_decode_media_real_dispatches_to_tiff():
     px = np.full((4, 4), 13, dtype=np.uint8)
     d = M.decode_media(M.encode_tiff(px), real=True)
     assert d["mean_px"] == 13.0 and d["n_strips"] == 1
+
+
+# --------------------------------------------------------------------------
+# The indexed-md5 stream: the oracles' SQL fragment against the payload
+# makers' Python stream
+# --------------------------------------------------------------------------
+
+
+def test_stream_sql_matches_md5_stream():
+    """``queries.multimodal._stream_sql`` (the GIF/BMP/TGA/TIFF oracles'
+    byte source) and ``_md5_stream`` (the payload makers') are written
+    independently. Run the fragment in DuckDB over texts with multi-byte
+    UTF-8 and compare every byte of a 240-byte stream, so the 16-byte
+    block boundaries (j = 15 | 16) and the last byte (j = 239) are all
+    checked, as are both hex nibbles of each byte."""
+    import duckdb
+
+    from jp_qcew_spark.queries.multimodal import _stream_sql
+
+    texts = {1: "señor café", 2: "ñ", 3: "é-0", 4: "plain ascii", 5: ""}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(texts.items()))
+    rows = con.sql(_stream_sql(240)).fetchall()
+    con.close()
+    got = {(d, j): v for d, j, v in rows}
+    assert len(got) == len(rows) == 240 * len(texts)
+    for d, t in texts.items():
+        stream = M._md5_stream(t, 240)
+        assert len(stream) == 240
+        for j in (15, 16, 239):
+            assert got[(d, j)] == stream[j], (t, j)
+        assert [got[(d, j)] for j in range(240)] == list(stream), t

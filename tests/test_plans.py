@@ -905,17 +905,21 @@ def test_skyline_two_phase_no_global_fact_sort(spark, sf_dir):
 
 
 def test_mm_codec_queries_prune_scan_and_stay_arrow(spark, sf_dir):
-    """The round-7/8 codec queries (BMP, RLE-TGA, TIFF) must read ONLY
-    (doc_id, text) from the documents scan — payload synthesis and decode
-    are two chained ArrowEvalPython/MapInPandas stages, zero joins, zero
-    extra shuffles beyond the final orderBy."""
+    """The six real-codec queries share one shape: they read ONLY
+    (doc_id, text) from the documents scan, and payload synthesis
+    (``_payloads``) and decode (``_decode``) are two chained MapInPandas
+    stages, zero joins, zero extra shuffles beyond the final sort."""
     from jp_qcew_spark.queries.multimodal import (
         q_mm_bmp_decode,
+        q_mm_gif_decode,
+        q_mm_png_decode,
         q_mm_tga_decode,
         q_mm_tiff_decode,
+        q_mm_wav_decode,
     )
 
-    for q in (q_mm_bmp_decode, q_mm_tga_decode, q_mm_tiff_decode):
+    for q in (q_mm_png_decode, q_mm_gif_decode, q_mm_wav_decode,
+              q_mm_bmp_decode, q_mm_tga_decode, q_mm_tiff_decode):
         df = q(spark, sf_dir)
         schemas = I.read_schemas(df)
         assert schemas and all(

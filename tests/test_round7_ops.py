@@ -6,7 +6,6 @@ DuckDB oracle:
   verbatim shared run is detected at ANY alignment) swept by hypothesis,
 - histogram quantile read-out: estimates bracketed by the rank-holding
   bin against a pure-numpy reference,
-- WAV frame features: energy conservation against the whole-file decode,
 - Markov transitions: rows are a probability distribution with exact
   integer support accounting,
 - Gram matrix: symmetric PSD with trace equal to an independently
@@ -178,33 +177,6 @@ def test_hist_readout_matches_numpy(spark, counts):
         expect = lo + width * (r - cumb) / int(cnts[k])
         assert est == pytest.approx(expect, abs=1e-9)
         assert lo < est <= lo + width  # interpolation stays inside the bin
-
-
-# ---------------------------------------------------------------------------
-# WAV frame features: energy conservation vs whole-file decode
-# ---------------------------------------------------------------------------
-
-
-def test_wav_frames_conserve_energy_and_peak():
-    """Sum of per-frame energies equals the whole-file energy and the file
-    peak is the max frame peak — ties the frame stage to decode_wav on the
-    same payload with no shared aggregation code."""
-    from jp_qcew_spark.ext import multimodal as M
-
-    rng = np.random.default_rng(7)
-    s = rng.integers(-32768, 32768, size=256, dtype=np.int64).astype("<i2")
-    payload = M.encode_wav(s, sample_rate=8000)
-    d = M.decode_wav(payload)
-    _sr, _ch, _bits, plane = M._wav_plane(payload)
-    fr = plane.reshape(8, 32)
-    frame_energy = (fr.astype(np.float64) ** 2).sum(axis=1)
-    total = (plane.astype(np.float64) ** 2).sum()
-    assert frame_energy.sum() == pytest.approx(total, rel=0)
-    assert int(np.abs(fr).max()) == d["peak"]
-    # whole-file rms derives from the same energy
-    assert d["rms"] == pytest.approx(
-        round(float(np.sqrt(total / 256)), 6), abs=0
-    )
 
 
 # ---------------------------------------------------------------------------
