@@ -45,6 +45,23 @@ _GROUPS = [
 # oldest driver evidence. Everything not listed follows in module order.
 # The per-round rationale lives in BASELINE.md ("Driver window history").
 _WINDOW_PRIORITY = [
+    # -- changed: the stream twins build on their batch twins
+    #    (streaming.pipelines.replay_stream, the batch oracles by
+    #    reference, sketches._cms_probes / _cms_topk and the shared SQL
+    #    read-outs)
+    "stream_python_source",
+    "stream_quantile_hist",
+    "stream_countmin_topk",
+    "stream_hll_distinct",
+    "stream_cep_sequence",
+    "stream_dedup_incremental",
+    "stream_dedup_neardup",
+    "stream_quality_gate",
+    "stream_session",
+    "stream_sliding",
+    "stream_cdc_apply",
+    "sketch_countmin_topk",
+    "sketch_quantile_hist",
     # -- changed: the multimodal codecs share one payload stage and one
     #    decode stage (ext.multimodal._payloads / _decode) — all 11 mm_*
     "mm_metadata",
@@ -67,24 +84,10 @@ _WINDOW_PRIORITY = [
     # -- changed in round 15: threaded eval variants
     "knn_pq_residual_eval",
     "knn_pq_opq_eval",
-    # -- changed in round 15: streaming drains (Arrow replay feeds +
-    #    checksum default from the inherited commit; ephemeral-checkpoint
-    #    location + derived state width this session) — all 17 registered
-    #    stream consumers
-    "stream_dedup_incremental",
-    "stream_dedup_neardup",
-    "stream_cep_sequence",
-    "stream_python_source",
+    # -- the other stream consumers, all drained by run_to_memory
     "stream_python_source_sharded",
-    "stream_quality_gate",
-    "stream_hll_distinct",
-    "stream_countmin_topk",
-    "stream_quantile_hist",
-    "stream_session",
     "stream_dedup",
     "stream_stateful_user_stats",
-    "stream_cdc_apply",
-    "stream_sliding",
     "stream_static_join",
     "stream_stream_join",
     "events_tumbling_stream",
@@ -92,7 +95,7 @@ _WINDOW_PRIORITY = [
     "join_range",
     "join_salted_skew",
     # -- r10 cohort (oldest evidence), alphabetical; its tail after
-    #    scd2_upsert rotated out for the mm_* rows
+    #    running_sum rotated out for the mm_* and sketch rows
     "join_semi",
     "knn_recall_rp",
     "label_synthesis",
@@ -104,8 +107,6 @@ _WINDOW_PRIORITY = [
     "rank_dense",
     "rollup_agg",
     "running_sum",
-    "sample_weighted",
-    "scd2_upsert",
 ]
 
 

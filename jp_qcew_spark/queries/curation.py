@@ -409,6 +409,12 @@ def _head_fp(col):
     return F.md5(F.array_join(F.slice(words, 1, _HEAD_WORDS), " "))
 
 
+# DuckDB twin of ``_head_fp`` over a ``text`` column
+_HEAD_FP_SQL = rf"""md5(array_to_string(
+             (regexp_split_to_array(lower(trim(text)), '\s+'))[1:{_HEAD_WORDS}],
+             ' '))"""
+
+
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: docs with doc_id % 10 == 7 arrive as the
     new batch; everything else is the existing corpus. A batch doc is
@@ -447,12 +453,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_INCREMENTAL = rf"""
+ORACLE_DEDUP_INCREMENTAL = f"""
 WITH f AS (
   SELECT doc_id,
-         md5(array_to_string(
-             (regexp_split_to_array(lower(trim(text)), '\s+'))[1:{_HEAD_WORDS}],
-             ' ')) AS fp,
+         {_HEAD_FP_SQL} AS fp,
          doc_id % {_BATCH_MOD} = 7 AS in_batch
   FROM documents
 ), corpus AS (

@@ -247,43 +247,17 @@ _CMS_D = 4    # hash rows
 _CMS_W = 256  # buckets per row
 
 
-def q_sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch heavy hitters over ``l_suppkey`` — the mergeable
-    frequency sketch next to HLL in the sketch tier (Cormode &
-    Muthukrishnan): d=4 md5-derived hash rows × w=256 counters, estimate =
-    min over rows of the key's bucket counter; CMS never under-counts, so
-    ``overcount = est − exact ≥ 0`` always.
-
-    Unlike the HLL queries (randomized → bounded-error FLAGS), every byte
-    here is deterministic — bucket = value of the LAST TWO md5 hex chars,
-    parsed positionally via ``instr('0123456789abcdef', c)`` arithmetic
-    that Spark and DuckDB define identically (w=256 == 16², so two hex
-    digits cover the bucket space exactly, no modulo) — so the oracle
-    recomputes the ENTIRE sketch and the exact estimate values are
-    hash-matched, not banded.  (Round 6: replaced the earlier
-    ``CAST('0x'||hex AS BIGINT)`` oracle parse, whose hex-string→int
-    semantics vary across DuckDB builds and went driver-red in r5.
-    Round 7: the REAL r5/r6 red root cause — DuckDB widens ``sum(BIGINT)``
-    to HUGEINT, so ``n_est``/``overcount`` surfaced as Arrow
-    decimal128(38,0) vs Spark's long and a type-sensitive hash could never
-    match — fixed by ``CAST(... AS BIGINT)`` on both output columns.)
-
-    Scale shape: one partial-agg shuffle to per-key counts (building CMS
-    from pre-aggregated counts is identical to streaming increments — sums
-    commute); the 4×256-row sketch table is then a broadcast join, and at
-    100 TB per-partition CMS tables merge by bucket-wise sum — the whole
-    point of the sketch (ship 4 KB, not the key domain)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    freq = li.groupBy(F.col("l_suppkey").alias("k")).agg(
-        F.count("*").alias("c")
-    )
-    probes = (
-        freq.select(
-            "k",
-            "c",
-            F.explode(
-                F.array(*[F.lit(j) for j in range(_CMS_D)])
-            ).alias("j"),
+def _cms_probes(df: DataFrame) -> DataFrame:
+    """The Count-Min probes of key column ``k``: each row of ``df`` fans
+    out to its d=4 hash rows ``j`` with bucket ``b`` = the value of the
+    LAST TWO hex chars of md5(f"{j}-{k}"), parsed positionally via
+    ``instr('0123456789abcdef', c)`` arithmetic that Spark and DuckDB
+    define identically (w=256 == 16², so two hex digits cover the bucket
+    space exactly, no modulo). Keeps every column of ``df``."""
+    return (
+        df.select(
+            "*",
+            F.explode(F.array(*[F.lit(j) for j in range(_CMS_D)])).alias("j"),
         )
         .withColumn(
             "h",
@@ -295,8 +269,6 @@ def q_sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        # Positional hex parse — the SAME expression text runs in the
-        # DuckDB oracle, so there is no cross-engine cast to disagree on.
         .withColumn(
             "b",
             F.expr(
@@ -306,7 +278,14 @@ def q_sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("h")
     )
-    cms = probes.groupBy("j", "b").agg(F.sum("c").alias("total"))
+
+
+def _cms_topk(probes: DataFrame, cms: DataFrame, key: str) -> DataFrame:
+    """Top-20 heavy hitters read out of a Count-Min sketch ``cms``
+    (j, b, total): ``probes`` holds the candidate keys' exact counts
+    (k, c, j, b) (a sketch cannot enumerate its keys, so the candidates
+    come from outside), estimate = min over the key's d cells, ranked by
+    exact count, ties to the smaller key, which is returned as ``key``."""
     est = (
         probes.join(F.broadcast(cms), ["j", "b"])
         .groupBy("k", "c")
@@ -314,20 +293,22 @@ def q_sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         est.select(
-            F.col("k").alias("suppkey"),
+            F.col("k").alias(key),
             F.col("c").alias("n_exact"),
             F.col("est").alias("n_est"),
             (F.col("est") - F.col("c")).alias("overcount"),
         )
-        .orderBy(F.col("n_exact").desc(), F.col("suppkey").asc())
+        .orderBy(F.col("n_exact").desc(), F.col(key).asc())
         .limit(20)
     )
 
 
-ORACLE_SKETCH_COUNTMIN = f"""
-WITH freq AS (
-  SELECT l_suppkey AS k, count(*) AS c FROM lineitem GROUP BY 1
-), hashed AS (
+def _cms_topk_sql(freq: str, key: str) -> str:
+    """DuckDB twin of the Count-Min top-k over the (k, c) counts the
+    query ``freq`` returns: the sketch built from those counts, each
+    key's estimate as the min over its d cells, top 20 as ``key``."""
+    return f"""
+WITH freq AS ({freq}), hashed AS (
   SELECT k, c, j, md5(j || '-' || k) AS h
   FROM freq CROSS JOIN range(0, {_CMS_D}) t(j)
 ), probes AS (
@@ -338,15 +319,46 @@ WITH freq AS (
 ), cms AS (
   SELECT j, b, sum(c) AS total FROM probes GROUP BY 1, 2
 )
-SELECT p.k AS suppkey,
+SELECT p.k AS {key},
        p.c AS n_exact,
        CAST(min(cms.total) AS BIGINT) AS n_est,
        CAST(min(cms.total) - p.c AS BIGINT) AS overcount
 FROM probes p JOIN cms USING (j, b)
 GROUP BY p.k, p.c
-ORDER BY n_exact DESC, suppkey ASC
+ORDER BY n_exact DESC, {key} ASC
 LIMIT 20
 """
+
+
+def q_sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-Min sketch heavy hitters over ``l_suppkey`` — the mergeable
+    frequency sketch next to HLL in the sketch tier (Cormode &
+    Muthukrishnan): d=4 md5-derived hash rows × w=256 counters, estimate =
+    min over rows of the key's bucket counter; CMS never under-counts, so
+    ``overcount = est − exact ≥ 0`` always.
+
+    Unlike the HLL queries (randomized → bounded-error FLAGS), every byte
+    here is deterministic (``_cms_probes``), so the oracle recomputes the
+    ENTIRE sketch and the exact estimate values are hash-matched, not
+    banded; ``n_est``/``overcount`` are BIGINT on both engines.
+
+    Scale shape: one partial-agg shuffle to per-key counts (building CMS
+    from pre-aggregated counts is identical to streaming increments — sums
+    commute); the 4×256-row sketch table is then a broadcast join, and at
+    100 TB per-partition CMS tables merge by bucket-wise sum — the whole
+    point of the sketch (ship 4 KB, not the key domain)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    freq = li.groupBy(F.col("l_suppkey").alias("k")).agg(
+        F.count("*").alias("c")
+    )
+    probes = _cms_probes(freq)
+    cms = probes.groupBy("j", "b").agg(F.sum("c").alias("total"))
+    return _cms_topk(probes, cms, "suppkey")
+
+
+ORACLE_SKETCH_COUNTMIN = _cms_topk_sql(
+    "SELECT l_suppkey AS k, count(*) AS c FROM lineitem GROUP BY 1", "suppkey"
+)
 
 
 QUERIES = {
@@ -371,7 +383,7 @@ ORACLE = {
 
 
 # --------------------------------------------------------------------------
-# sketch_quantile_hist — mergeable histogram quantile sketch (round 7)
+# sketch_quantile_hist — mergeable histogram quantile sketch
 # --------------------------------------------------------------------------
 
 _QH_WIDTH = 1680   # bin width: 64 bins cover [0, 107520) ⊇ extendedprice
@@ -414,6 +426,31 @@ def hist_quantile_readout(hist: DataFrame, width: int | float) -> DataFrame:
         F.max(F.when(F.col("q") == _QH_QS[0], F.col("est"))).alias("e50"),
         F.max(F.when(F.col("q") == _QH_QS[1], F.col("est"))).alias("e95"),
     )
+
+
+def _hist_readout_sql(width: int) -> str:
+    """DuckDB twin of ``hist_quantile_readout``: the CTEs ``cum``,
+    ``tgt``, ``hit`` and ``wide`` over a CTE ``hist`` of (flag, bin, cnt);
+    ``wide`` holds one row per flag, (flag, n, e50, e95)."""
+    return f"""cum AS (
+  SELECT flag, bin, cnt,
+         sum(cnt) OVER (PARTITION BY flag ORDER BY bin) AS cum,
+         sum(cnt) OVER (PARTITION BY flag) AS n
+  FROM hist
+), tgt AS (
+  SELECT flag, bin, cnt, cum, n, t.q,
+         CAST(ceil(t.q * n) AS BIGINT) AS r
+  FROM cum CROSS JOIN (VALUES ({_QH_QS[0]}), ({_QH_QS[1]})) t(q)
+), hit AS (
+  SELECT flag, q, n,
+         bin * {width} + {width} * (r - (cum - cnt)) / cnt AS est
+  FROM tgt WHERE cum - cnt < r AND r <= cum
+), wide AS (
+  SELECT flag, CAST(n AS BIGINT) AS n,
+         max(CASE WHEN q = {_QH_QS[0]} THEN est END) AS e50,
+         max(CASE WHEN q = {_QH_QS[1]} THEN est END) AS e95
+  FROM hit GROUP BY 1, 2
+)"""
 
 
 def q_sketch_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,29 +523,11 @@ WITH li AS (
   SELECT flag, CAST(floor(v / {_QH_WIDTH}.0) AS BIGINT) AS bin,
          count(*) AS cnt
   FROM li GROUP BY 1, 2
-), cum AS (
-  SELECT flag, bin, cnt,
-         sum(cnt) OVER (PARTITION BY flag ORDER BY bin) AS cum,
-         sum(cnt) OVER (PARTITION BY flag) AS n
-  FROM hist
-), tgt AS (
-  SELECT flag, bin, cnt, cum, n, t.q,
-         CAST(ceil(t.q * n) AS BIGINT) AS r
-  FROM cum CROSS JOIN (VALUES ({_QH_QS[0]}), ({_QH_QS[1]})) t(q)
-), hit AS (
-  SELECT flag, q, n,
-         bin * {_QH_WIDTH} + {_QH_WIDTH} * (r - (cum - cnt)) / cnt AS est
-  FROM tgt WHERE cum - cnt < r AND r <= cum
-), ex AS (
+), {_hist_readout_sql(_QH_WIDTH)}, ex AS (
   SELECT flag,
          quantile_cont(v, {_QH_QS[0]}) AS x50,
          quantile_cont(v, {_QH_QS[1]}) AS x95
   FROM li GROUP BY 1
-), wide AS (
-  SELECT flag, CAST(n AS BIGINT) AS n,
-         max(CASE WHEN q = {_QH_QS[0]} THEN est END) AS e50,
-         max(CASE WHEN q = {_QH_QS[1]} THEN est END) AS e95
-  FROM hit GROUP BY 1, 2
 )
 SELECT flag AS l_returnflag, n,
        round(e50, 4) AS est_p50,

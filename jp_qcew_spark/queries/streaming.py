@@ -9,14 +9,44 @@ to a plain group-by after the drain.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
 
-from jp_qcew_spark.io import order_result
-from jp_qcew_spark.streaming import (
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from jp_qcew_spark.io import load_table, order_result
+from jp_qcew_spark.queries.curation import _HEAD_FP_SQL, _QC_ITERS, _qc_sql_chain
+from jp_qcew_spark.queries.dedup import _SH_SQL, _sig_band_sql
+from jp_qcew_spark.queries.events import (
+    ORACLE_EVENTS_CEP,
+    ORACLE_EVENTS_SESSION,
+    ORACLE_EVENTS_SLIDING,
+)
+from jp_qcew_spark.queries.sketches import (
+    _cms_probes,
+    _cms_topk,
+    _cms_topk_sql,
+    _hist_readout_sql,
+    hist_quantile_readout,
+)
+from jp_qcew_spark.queries.warehouse import ORACLE_CDC_APPLY
+from jp_qcew_spark.sources.stream_replay import EventReplayShardedDataSource
+from jp_qcew_spark.streaming.pipelines import (
+    read_events_stream,
+    replay_stream,
+    run_to_memory,
     stream_cdc_apply,
+    stream_cep_sequence,
+    stream_dedup_incremental,
     stream_dedup_keys,
+    stream_dedup_neardup,
+    stream_quality_gate,
     stream_session_windows,
     stream_stateful_user_stats,
+    stream_static_enrich,
+    stream_stream_attribution,
+    stream_tws_user_extremes,
+    tws_available,
 )
 
 
@@ -24,32 +54,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_session_windows(spark, sf_dir).transform(
         order_result, "user_id", "session_start"
     )
-
-
-# identical semantics to the batch session_window oracle (events.py)
-ORACLE_STREAM_SESSION = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), numbered AS (
-  SELECT *, sum(new_session) OVER (
-      PARTITION BY user_id ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM flagged
-)
-SELECT user_id,
-       min(ts) AS session_start,
-       max(ts) + INTERVAL 30 MINUTE AS session_end,
-       count(*) AS n_events,
-       round(sum(value), 2) AS sum_value
-FROM numbered
-GROUP BY user_id, session_id
-ORDER BY user_id, session_start
-"""
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,15 +85,13 @@ QUERIES = {
 }
 
 ORACLE = {
-    "stream_session": ORACLE_STREAM_SESSION,
+    "stream_session": ORACLE_EVENTS_SESSION,
     "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_stateful_user_stats": ORACLE_STREAM_STATEFUL,
 }
 
 
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jp_qcew_spark.streaming.pipelines import stream_static_enrich
-
     return stream_static_enrich(spark, sf_dir).transform(
         order_result, "c_mktsegment", "event_type"
     )
@@ -107,8 +109,6 @@ ORACLE["stream_static_join"] = ORACLE_STREAM_STATIC
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jp_qcew_spark.streaming.pipelines import stream_stream_attribution
-
     return stream_stream_attribution(spark, sf_dir).transform(
         order_result, "user_id", "view_id", "buy_id"
     )
@@ -128,8 +128,6 @@ ORACLE["stream_stream_join"] = ORACLE_STREAM_STREAM_JOIN
 
 
 def q_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jp_qcew_spark.streaming.pipelines import stream_tws_user_extremes
-
     return stream_tws_user_extremes(spark, sf_dir).transform(order_result, "user_id")
 
 
@@ -141,8 +139,6 @@ FROM events GROUP BY user_id ORDER BY user_id
 """
 
 # registered only where the runtime can actually execute it (protobuf gate)
-from jp_qcew_spark.streaming.pipelines import tws_available  # noqa: E402
-
 if tws_available():
     QUERIES["stream_tws_user_extremes"] = q_stream_tws
     ORACLE["stream_tws_user_extremes"] = ORACLE_STREAM_TWS
@@ -158,12 +154,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: overlapping windows multiply STATE, not input — each event
     updates window_len/slide aggregation states (2 here); state is keyed by
     window so it ages out with the watermark like any tumbling agg."""
-    from jp_qcew_spark.streaming.pipelines import (
-        read_events_stream,
-        run_to_memory,
-    )
-    from pyspark.sql import functions as F
-
     stream = (
         read_events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -180,20 +170,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# identical semantics to the batch events_sliding oracle (events.py)
-ORACLE_STREAM_SLIDING = """
-WITH member AS (
-  SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start, value FROM events
-  UNION ALL
-  SELECT time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes', value
-  FROM events
-)
-SELECT window_start, count(*) AS n_events, round(sum(value), 2) AS sum_value
-FROM member GROUP BY 1 ORDER BY window_start
-"""
-
 QUERIES["stream_sliding"] = q_stream_sliding
-ORACLE["stream_sliding"] = ORACLE_STREAM_SLIDING
+ORACLE["stream_sliding"] = ORACLE_EVENTS_SLIDING
 
 
 def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,21 +183,7 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped or double-read micro-batch anywhere in the offset protocol
     diverges the counts: an availableNow trigger would keep only the
     source's first prefetched batch."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_memory
-
-    spark.dataSource.register(EventReplayDataSource)
-    stream = (
-        spark.readStream.format("eventreplay")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("batch_rows", "auto")  # ~8 micro-batches at any feed size
-        .load()
-    )
-    agg = stream.groupBy("event_type").agg(
+    agg = replay_stream(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
@@ -247,15 +211,6 @@ def q_stream_python_source_sharded(spark: SparkSession, sf_dir: str) -> DataFram
     the simple variant (equality with the batch oracle), now with the
     read path distributed; per-shard user counts make the output
     additionally sensitive to shard-assignment mistakes."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.sources.stream_replay import (
-        EventReplayShardedDataSource,
-    )
-    from jp_qcew_spark.streaming.pipelines import run_to_memory
-
     spark.dataSource.register(EventReplayShardedDataSource)
     stream = (
         spark.readStream.format("eventreplay_sharded")
@@ -294,26 +249,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_cdc_apply(spark, sf_dir).transform(order_result, "user_id")
 
 
-# identical semantics to the batch cdc_apply oracle (warehouse.py)
-ORACLE_STREAM_CDC = """
-WITH ranked AS (
-  SELECT user_id, event_type, value, ts,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts DESC, event_id DESC) AS rn,
-         count(*) OVER (PARTITION BY user_id) AS n_ops
-  FROM events
-)
-SELECT user_id,
-       round(value, 2) AS last_value,
-       ts AS updated_at,
-       CAST(n_ops AS BIGINT) AS n_ops
-FROM ranked
-WHERE rn = 1 AND event_type <> 'view'
-ORDER BY user_id
-"""
-
 QUERIES["stream_cdc_apply"] = q_stream_cdc_apply
-ORACLE["stream_cdc_apply"] = ORACLE_STREAM_CDC
+ORACLE["stream_cdc_apply"] = ORACLE_CDC_APPLY
 
 
 def q_stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,34 +259,11 @@ def q_stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered replay source, cross-batch adjacency carry; after the drain it
     equals the batch ``events_cep_sequence`` lead-window exactly, so the
     two share one oracle."""
-    from jp_qcew_spark.streaming.pipelines import stream_cep_sequence
-
     return stream_cep_sequence(spark, sf_dir).transform(order_result, "user_id")
 
 
-# identical semantics to the batch events_cep_sequence oracle (events.py)
-ORACLE_STREAM_CEP = """
-WITH nxt AS (
-  SELECT user_id, ts, event_type, value,
-         lead(event_type) OVER w AS next_type,
-         lead(ts) OVER w AS next_ts,
-         lead(value) OVER w AS next_value
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), matched AS (
-  SELECT * FROM nxt
-  WHERE event_type = 'click' AND next_type = 'purchase'
-    AND next_ts <= ts + INTERVAL 30 MINUTE
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_matches,
-       min(ts) AS first_match_ts,
-       round(sum(next_value), 2) AS matched_value
-FROM matched GROUP BY user_id ORDER BY user_id
-"""
-
 QUERIES["stream_cep_sequence"] = q_stream_cep_sequence
-ORACLE["stream_cep_sequence"] = ORACLE_STREAM_CEP
+ORACLE["stream_cep_sequence"] = ORACLE_EVENTS_CEP
 
 
 def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,22 +281,7 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     histograms merged associatively: a dropped batch, a double-merged
     bin, or an order-dependent merge diverges the counts and the
     interpolated estimates with them."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.queries.sketches import hist_quantile_readout
-    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_memory
-
-    spark.dataSource.register(EventReplayDataSource)
-    stream = (
-        spark.readStream.format("eventreplay")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("batch_rows", "auto")  # ~8 micro-batches at any feed size
-        .load()
-    )
-    hist = stream.groupBy(
+    hist = replay_stream(spark, sf_dir, "events").groupBy(
         F.col("event_type").alias("flag"),
         F.expr("CAST(floor(value / 10.0) AS BIGINT)").alias("bin"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -399,31 +298,16 @@ def q_stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_QUANTILE_HIST = """
-WITH ev AS (
-  SELECT event_type AS flag, value AS v FROM events
-), hist AS (
-  SELECT flag, CAST(floor(v / 10.0) AS BIGINT) AS bin, count(*) AS cnt
-  FROM ev GROUP BY 1, 2
-), cum AS (
-  SELECT flag, bin, cnt,
-         sum(cnt) OVER (PARTITION BY flag ORDER BY bin) AS cum,
-         sum(cnt) OVER (PARTITION BY flag) AS n
-  FROM hist
-), tgt AS (
-  SELECT flag, bin, cnt, cum, n, t.q,
-         CAST(ceil(t.q * n) AS BIGINT) AS r
-  FROM cum CROSS JOIN (VALUES (0.5), (0.95)) t(q)
-), hit AS (
-  SELECT flag, q, n,
-         bin * 10 + 10 * (r - (cum - cnt)) / cnt AS est
-  FROM tgt WHERE cum - cnt < r AND r <= cum
-)
-SELECT flag AS event_type,
-       CAST(n AS BIGINT) AS n,
-       round(max(CASE WHEN q = 0.5 THEN est END), 4) AS est_p50,
-       round(max(CASE WHEN q = 0.95 THEN est END), 4) AS est_p95
-FROM hit GROUP BY 1, 2 ORDER BY event_type
+ORACLE_STREAM_QUANTILE_HIST = f"""
+WITH hist AS (
+  SELECT event_type AS flag, CAST(floor(value / 10.0) AS BIGINT) AS bin,
+         count(*) AS cnt
+  FROM events GROUP BY 1, 2
+), {_hist_readout_sql(10)}
+SELECT flag AS event_type, n,
+       round(e50, 4) AS est_p50,
+       round(e95, 4) AS est_p95
+FROM wide ORDER BY event_type
 """
 
 QUERIES["stream_quantile_hist"] = q_stream_quantile_hist
@@ -432,129 +316,46 @@ ORACLE["stream_quantile_hist"] = ORACLE_STREAM_QUANTILE_HIST
 
 def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of ``sketch_countmin_topk`` — the sketch tier's
-    second merge law on the wire (VERDICT r7 #6). Count-Min counters are
-    plain sums, so a CMS accumulates in the state store as an additive
-    (j, b)-cell aggregation: each micro-batch of the Python replay source
-    explodes its events into d=4 hash probes and increments the matching
-    cells; complete mode + no watermark because the sketch is bounded by
-    construction (≤ d·w counters, the whole point of a mergeable sketch —
-    state never grows with the stream).
+    second merge law on the wire. Count-Min counters are plain sums, so a
+    CMS accumulates in the state store as an additive (j, b)-cell
+    aggregation: each micro-batch of the Python replay source explodes
+    its events into d=4 hash probes (``sketches._cms_probes``) and
+    increments the matching cells; complete mode + no watermark because
+    the sketch is bounded by construction (≤ d·w counters, the whole
+    point of a mergeable sketch — state never grows with the stream).
 
-    The read-out runs batch-side on the drained sink, exactly like the
-    batch query reads its own sketch table: exact per-user counts (a
-    sketch cannot enumerate its keys — the candidate set always comes
-    from outside) probe the STREAMED sketch, estimate = min over the
-    key's d cells, top-20 by exact count. Batch-oracle equality after
-    the drain is the associative-merge proof: a dropped micro-batch, a
-    double-counted cell, or an order-dependent merge shifts at least one
-    min-cell estimate.
-
-    Hashing is the batch query's deterministic md5 positional-hex scheme
-    (sketches.py) — same expression text on both engines, no cast to
-    disagree on; the BIGINT casts pin the oracle's sum() below HUGEINT
-    (the r5/r6 red class)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.io import load_table
-    from jp_qcew_spark.queries.sketches import _CMS_D
-    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_memory
-
-    def probes(df: DataFrame, key: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(key).alias("k"),
-                *[c for c in df.columns if c == "c"],
-                F.explode(
-                    F.array(*[F.lit(j) for j in range(_CMS_D)])
-                ).alias("j"),
-            )
-            .withColumn(
-                "h",
-                F.md5(
-                    F.concat(
-                        F.col("j").cast("string"),
-                        F.lit("-"),
-                        F.col("k").cast("string"),
-                    )
-                ),
-            )
-            .withColumn(
-                "b",
-                F.expr(
-                    "(instr('0123456789abcdef', substr(h, 31, 1)) - 1) * 16"
-                    " + instr('0123456789abcdef', substr(h, 32, 1)) - 1"
-                ).cast("long"),
-            )
-            .drop("h")
-        )
-
-    spark.dataSource.register(EventReplayDataSource)
-    stream = (
-        spark.readStream.format("eventreplay")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("batch_rows", "auto")  # ~8 micro-batches at any feed size
-        .load()
+    The read-out runs batch-side on the drained sink through the batch
+    query's own ``_cms_topk``: exact per-user counts probe the STREAMED
+    sketch, estimate = min over the key's d cells, top-20 by exact
+    count. Batch-oracle equality after the drain is the
+    associative-merge proof: a dropped micro-batch, a double-counted
+    cell, or an order-dependent merge shifts at least one min-cell
+    estimate."""
+    stream = replay_stream(spark, sf_dir, "events")
+    cms = (
+        _cms_probes(stream.select(F.col("user_id").alias("k")))
+        .groupBy("j", "b")
+        .agg(F.count(F.lit(1)).alias("total"))
     )
-    cms_stream = probes(stream, "user_id").groupBy("j", "b").agg(
-        F.count(F.lit(1)).alias("total")
-    )
-    sink = run_to_memory(cms_stream, "complete", "sink_cms_replay")
+    sink = run_to_memory(cms, "complete", "sink_cms_replay")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("k"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    est = (
-        probes(exact, "k")
-        .join(F.broadcast(sink), ["j", "b"])
-        .groupBy("k", "c")
-        .agg(F.min("total").alias("est"))
-    )
-    return (
-        est.select(
-            F.col("k").alias("user_id"),
-            F.col("c").alias("n_exact"),
-            F.col("est").alias("n_est"),
-            (F.col("est") - F.col("c")).alias("overcount"),
-        )
-        .orderBy(F.col("n_exact").desc(), F.col("user_id").asc())
-        .limit(20)
-    )
+    return _cms_topk(_cms_probes(exact), sink, "user_id")
 
 
-ORACLE_STREAM_COUNTMIN = """
-WITH freq AS (
-  SELECT user_id AS k, count(*) AS c FROM events GROUP BY 1
-), hashed AS (
-  SELECT k, c, j, md5(j || '-' || k) AS h
-  FROM freq CROSS JOIN range(0, 4) t(j)
-), probes AS (
-  SELECT k, c, j,
-         (instr('0123456789abcdef', substr(h, 31, 1)) - 1) * 16
-           + instr('0123456789abcdef', substr(h, 32, 1)) - 1 AS b
-  FROM hashed
-), cms AS (
-  SELECT j, b, CAST(sum(c) AS BIGINT) AS total FROM probes GROUP BY 1, 2
+ORACLE_STREAM_COUNTMIN = _cms_topk_sql(
+    "SELECT user_id AS k, count(*) AS c FROM events GROUP BY 1", "user_id"
 )
-SELECT p.k AS user_id,
-       p.c AS n_exact,
-       CAST(min(cms.total) AS BIGINT) AS n_est,
-       CAST(min(cms.total) - p.c AS BIGINT) AS overcount
-FROM probes p JOIN cms USING (j, b)
-GROUP BY p.k, p.c
-ORDER BY n_exact DESC, user_id ASC
-LIMIT 20
-"""
 
 QUERIES["stream_countmin_topk"] = q_stream_countmin_topk
 ORACLE["stream_countmin_topk"] = ORACLE_STREAM_COUNTMIN
 
 
 # --------------------------------------------------------------------------
-# stream_hll_distinct — HLL register max-merge on the wire (round 8)
+# stream_hll_distinct — HLL register max-merge on the wire
 # --------------------------------------------------------------------------
 
 _HLL_M = 256  # registers (first 2 md5 hex chars)
@@ -606,23 +407,9 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     once the corpus saturates the sketch) is linear counting
     ``m·ln(m/V)`` on exact integer inputs.  Exact distincts from the
     batch table sit alongside for the error report."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.io import load_table
-    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-    from jp_qcew_spark.streaming.pipelines import run_to_memory
-
-    spark.dataSource.register(EventReplayDataSource)
-    stream = (
-        spark.readStream.format("eventreplay")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("batch_rows", "auto")  # ~8 micro-batches at any feed size
-        .load()
-    )
     regs = (
-        stream.select(
+        replay_stream(spark, sf_dir, "events")
+        .select(
             "event_type",
             F.md5(F.col("user_id").cast("string")).alias("h"),
         )
@@ -728,7 +515,7 @@ ORACLE["stream_hll_distinct"] = ORACLE_STREAM_HLL
 
 
 # --------------------------------------------------------------------------
-# stream_dedup_incremental — seen-keys state on the wire (round 9)
+# stream_dedup_incremental — seen-keys state on the wire
 # --------------------------------------------------------------------------
 
 
@@ -737,27 +524,26 @@ def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/pipelines.stream_dedup_incremental for the full design
     (doc replay in doc_id order, ~8 deterministic micro-batches, per-
     fingerprint seen-flag in the state store, append-mode emission)."""
-    from jp_qcew_spark.streaming.pipelines import stream_dedup_incremental
-
     return stream_dedup_incremental(spark, sf_dir).transform(order_result, "doc_id")
 
 
-# Batch reconstruction of the replay: batch index = rank(doc_id) // bsz
-# with bsz = ceil(n/8) (the docreplay 'auto' rule); 'seen earlier' =
-# this fp's minimum batch index precedes mine; in-batch keeper = minimum
-# doc_id within (fp, batch).
-ORACLE_STREAM_DEDUP_INCR = r"""
-WITH d AS (
-  SELECT doc_id,
-         md5(array_to_string(
-             (regexp_split_to_array(lower(trim(text)), '\s+'))[1:8],
-             ' ')) AS fp,
-         row_number() OVER (ORDER BY doc_id) - 1 AS rk
-  FROM documents
-), nb AS (
-  SELECT CAST(ceil(count(*) / 8.0) AS BIGINT) AS bsz FROM documents
-), b AS (
-  SELECT doc_id, fp, rk // (SELECT bsz FROM nb) AS bi FROM d
+# DuckDB twin of the docreplay "auto" batching (sources/stream_replay.py),
+# written independently: the batch index bi of a doc is
+# rank(doc_id) // ceil(n/8).
+_DOC_BATCH_SQL = """
+SELECT doc_id, rk // (SELECT CAST(ceil(count(*) / 8.0) AS BIGINT)
+                      FROM documents) AS bi
+FROM (SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rk
+      FROM documents)
+"""
+
+# Batch reconstruction of the replay: 'seen earlier' = this fp's minimum
+# batch index precedes mine; in-batch keeper = minimum doc_id within
+# (fp, batch).
+ORACLE_STREAM_DEDUP_INCR = f"""
+WITH b AS (
+  SELECT doc_id, {_HEAD_FP_SQL} AS fp, r.bi
+  FROM documents JOIN ({_DOC_BATCH_SQL}) r USING (doc_id)
 ), ann AS (
   SELECT doc_id, fp, bi,
          min(bi) OVER (PARTITION BY fp) AS min_bi,
@@ -776,7 +562,7 @@ ORACLE["stream_dedup_incremental"] = ORACLE_STREAM_DEDUP_INCR
 
 
 # --------------------------------------------------------------------------
-# stream_dedup_neardup — banded near-dup ingest on the wire (round 10)
+# stream_dedup_neardup — banded near-dup ingest on the wire
 # --------------------------------------------------------------------------
 
 
@@ -785,29 +571,20 @@ def q_stream_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/pipelines.stream_dedup_neardup for the full design (doc
     replay in doc_id order, per-row MinHash band signature, per-band-key
     seen-flag state, any-band OR folded at the boundary)."""
-    from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
-
     return stream_dedup_neardup(spark, sf_dir).transform(order_result, "doc_id")
 
 
 def _oracle_stream_neardup() -> str:
-    """Batch reconstruction of the banded replay: batch index =
-    rank(doc_id) // ceil(n/8) over ALL docs (the docreplay 'auto' rule);
-    a band key was 'seen earlier' iff its minimum batch index precedes
-    mine; the in-batch keeper per (band, key, batch) is the minimum
-    doc_id; the per-doc verdict is the same any-band OR the stream folds
-    after the drain. Signature CTEs are the dedup_minhash_lsh oracle's
-    (same hash family, bit-for-bit)."""
-    from jp_qcew_spark.queries.dedup import _SH_SQL, _sig_band_sql
-
+    """Batch reconstruction of the banded replay: batch index from
+    ``_DOC_BATCH_SQL`` over ALL docs (the docreplay 'auto' rule); a band
+    key was 'seen earlier' iff its minimum batch index precedes mine; the
+    in-batch keeper per (band, key, batch) is the minimum doc_id; the
+    per-doc verdict is the same any-band OR the stream folds after the
+    drain. Signature CTEs are the dedup_minhash_lsh oracle's (same hash
+    family, bit-for-bit)."""
     sig_exprs, band_selects = _sig_band_sql()
-    return rf"""
+    return f"""
 WITH sh AS ({_SH_SQL}),
-rk AS (
-  SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rk
-  FROM documents
-),
-nb AS (SELECT CAST(ceil(count(*) / 8.0) AS BIGINT) AS bsz FROM documents),
 nonempty AS (SELECT * FROM sh WHERE len(shset) > 0),
 sig AS (
   SELECT doc_id, shset,
@@ -818,9 +595,8 @@ banded AS (
 {band_selects}
 ),
 k AS (
-  SELECT b.doc_id, b.band_idx, b.band_key,
-         r.rk // (SELECT bsz FROM nb) AS bi
-  FROM banded b JOIN rk r ON b.doc_id = r.doc_id
+  SELECT b.doc_id, b.band_idx, b.band_key, r.bi
+  FROM banded b JOIN ({_DOC_BATCH_SQL}) r ON b.doc_id = r.doc_id
 ),
 ann AS (
   SELECT doc_id, bi,
@@ -847,7 +623,7 @@ ORACLE["stream_dedup_neardup"] = _oracle_stream_neardup()
 
 
 # --------------------------------------------------------------------------
-# stream_quality_gate — online classifier scoring on the wire (round 14)
+# stream_quality_gate — online classifier scoring on the wire
 # --------------------------------------------------------------------------
 
 
@@ -857,8 +633,6 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay micro-batches, promoted 257-weight model in an Arrow
     ``mapInPandas`` closure, zero-shuffle zero-state map-side scoring,
     bit-exact tokenize/hash parity with the batch feature pipeline)."""
-    from jp_qcew_spark.streaming.pipelines import stream_quality_gate
-
     return stream_quality_gate(spark, sf_dir).transform(order_result, "doc_id")
 
 
@@ -867,8 +641,6 @@ def _oracle_stream_quality_gate() -> str:
     per-row function of (model, text) is batch/stream invariant, so the
     hash check proves the wire adds nothing — no dropped batch, no
     tokenizer drift between the JVM plan and the Arrow closure."""
-    from jp_qcew_spark.queries.curation import _QC_ITERS, _qc_sql_chain
-
     return f"""
 WITH {_qc_sql_chain()},
 qc_fm AS (

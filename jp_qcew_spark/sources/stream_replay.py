@@ -5,13 +5,11 @@ Python DataSource API; this module does the same for the STREAMING side
 (``pyspark.sql.datasource.SimpleDataSourceStreamReader``) — the API a
 Python connector to any offset-addressable feed (HTTP cursor, queue,
 changelog) would implement. The concrete source here replays an events
-parquet in a deterministic global order as fixed-size micro-batches:
+parquet in a deterministic global order as fixed-size micro-batches.
+Streams open it through ``streaming.pipelines.replay_stream``, which
+registers the source and loads it:
 
-    spark.dataSource.register(EventReplayDataSource)
-    stream = (spark.readStream.format("eventreplay")
-              .option("path", f"{sf_dir}/events.parquet")
-              .option("batch_rows", 4096)
-              .load())
+    stream = replay_stream(spark, sf_dir, "events", batch_rows=4096)
 
 Offset contract (the part that makes a streaming source a streaming
 source, Structured Streaming Programming Guide "fault tolerance
@@ -314,7 +312,7 @@ class EventReplayShardedDataSource(DataSource):
 
 
 # --------------------------------------------------------------------------
-# Document replay — the ingest feed for streaming dedup (round 9)
+# Document replay — the ingest feed for streaming dedup
 # --------------------------------------------------------------------------
 
 _DOC_SCHEMA = StructType(

@@ -24,6 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -38,7 +39,12 @@ from jp_qcew_spark.io import (
     ensure_session_confs,
     events_ts_micros,
     load_table,
+    metadata_row_count,
     table_schema,
+)
+from jp_qcew_spark.sources.stream_replay import (
+    DocReplayDataSource,
+    EventReplayDataSource,
 )
 
 
@@ -54,6 +60,31 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return events_ts_micros(stream)
+
+
+_REPLAY_SOURCES = {
+    "events": EventReplayDataSource,
+    "documents": DocReplayDataSource,
+}
+
+
+def replay_stream(
+    spark: SparkSession, sf_dir: str, table: str, batch_rows="auto"
+) -> DataFrame:
+    """Deterministic replay of one scale-factor table through its custom
+    Python source (``sources/stream_replay.py``): ``events`` in
+    (ts, event_id) order, ``documents`` in doc_id order, ``batch_rows``
+    rows per micro-batch (``"auto"``: ceil(n/8) of the feed). Pins the
+    engine confs, registers the source and returns the loaded stream."""
+    source = _REPLAY_SOURCES[table]
+    ensure_session_confs(spark)
+    spark.dataSource.register(source)
+    return (
+        spark.readStream.format(source.name())
+        .option("path", os.path.join(sf_dir, f"{table}.parquet"))
+        .option("batch_rows", str(batch_rows))
+        .load()
+    )
 
 
 def _ephemeral_checkpoint_dir() -> str | None:
@@ -133,19 +164,11 @@ def run_to_memory(
 
 
 def state_width(spark: SparkSession, n_keys: int) -> int:
-    """State-store width from KEY CARDINALITY — the engine's measured
-    rule (every state partition costs a store open + commit per
-    micro-batch, so width beyond ~keys/1000 is pure overhead), made
-    scale-adaptive instead of per-query constants. Re-measured in r15
-    after the checkpoint-checksum fix: with the per-file checksum waits
-    gone, the per-partition store overhead dominates and the old
-    32-wide setting INVERTED for the dedup streams
-    (stream_dedup_incremental 10.9 → 6.9 s at sf0.1 going 32 → 8;
-    stream_dedup_neardup ~16-20 → ~12-14). The width still grows with
-    the key space (sf1's ~50k fingerprints derive 32+ again, capped at
-    core count locally; a cluster's defaultParallelism raises the cap),
-    so this is the deployment rule, not a local[32] constant. The floor
-    of 8 yields to the cap: fewer cores than 8 give core-count width."""
+    """State-store width from key cardinality: ``keys // 1000``, at least
+    8, capped at ``defaultParallelism``. Every state partition costs a
+    store open and commit per micro-batch, so width beyond ~keys/1000 is
+    overhead; the width grows with the key space, and the cap wins over
+    the floor on a session with fewer than 8 cores."""
     dp = spark.sparkContext.defaultParallelism
     return min(dp, max(8, n_keys // 1000))
 
@@ -269,8 +292,6 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator: per-user event count + value sum
     held in explicit GroupState (``applyInPandasWithState``), update-mode
     emission; the last (= max-count) emission per user is the final answer."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     stats = (
         read_events_stream(spark, sf_dir)
         .select("user_id", "value")
@@ -369,8 +390,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     row regardless of stream length — the production shape for a
     continuously-maintained CDC snapshot at 100 TB/day changelog volume
     (contrast scd2_history, which materializes every version)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     compacted = (
         read_events_stream(spark, sf_dir)
         .select("user_id", "event_id", "ts", "event_type", "value")
@@ -682,35 +701,23 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the batch ``events_cep_sequence`` pattern match,
     fed by the CUSTOM Python streaming source (sources/stream_replay.py)
     precisely because its offset contract delivers the feed in global
-    (ts, event_id) order across ~8 micro-batches: the per-user 1-event
+    (ts, event_id) order across 4 micro-batches: the per-user 1-event
     state buffer (_cep_fn) must genuinely bridge batch boundaries for the
     result to equal the batch lead-window — a file-source replay would
     collapse to one batch and never exercise the carry. After the drain the
     match set equals the batch query exactly, so the two share one
     oracle."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from jp_qcew_spark.sources.stream_replay import EventReplayDataSource
-
-    ensure_session_confs(spark)
-    spark.dataSource.register(EventReplayDataSource)
-    # 4 micro-batches, not the source's auto-8: every batch of a STATEFUL
-    # consumer pays a full state-store pass (shuffle + per-user pandas
-    # invocation + store commit, ~1.3 s at sf0.1 — the same per-batch cost
-    # profile as stream_stateful_user_stats, times the batch count), and
-    # three boundary carries prove cross-batch adjacency as conclusively
-    # as seven. Batch size from parquet metadata only — no data read.
+    # 4 micro-batches, not the source's auto-8: every batch of a stateful
+    # consumer pays a full state-store pass (shuffle, per-user pandas
+    # invocation, store commit), and three boundary carries prove
+    # cross-batch adjacency as well as seven. The batch size comes from
+    # parquet metadata only, no data read.
     import pyarrow.parquet as pq
 
     n_rows = pq.ParquetFile(
         os.path.join(sf_dir, "events.parquet")
     ).metadata.num_rows
-    stream = (
-        spark.readStream.format("eventreplay")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("batch_rows", str(max(1, -(-n_rows // 4))))
-        .load()
-    )
+    stream = replay_stream(spark, sf_dir, "events", max(1, -(-n_rows // 4)))
     matches = (
         stream.select("user_id", "event_id", "ts", "event_type", "value")
         .groupBy("user_id")
@@ -722,11 +729,9 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    # 32 state partitions, not the stream tier's default 8: the CEP
-    # stateful pass is per-USER pandas invocations (tens of thousands per
-    # batch at sf0.1), so task-level parallelism on the state shuffle is
-    # the lever — measured 11.0 s -> 7.4 s from 8 -> 32 here, where the
-    # low-key-cardinality streams (event_type keys) gain nothing
+    # 32 state partitions, not the stream tier's default 8: the stateful
+    # pass is per-user pandas invocations, so task parallelism on the
+    # state shuffle is the lever (BASELINE.md "Stream state width")
     sink = run_to_memory(
         matches, "append", "sink_cep_sequence", state_partitions=32
     )
@@ -738,7 +743,7 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming incremental dedup — seen-keys state on the wire (round 9)
+# Streaming incremental dedup — seen-keys state on the wire
 # --------------------------------------------------------------------------
 
 _DEDUP_INCR_OUT = StructType(
@@ -774,30 +779,20 @@ def _dedup_incr_fn(key, pdfs, state):
 
 
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of ``dedup_incremental`` (VERDICT r8 #7): the
-    documents table replays in doc_id order as ~8 deterministic
-    micro-batches (``DocReplayDataSource``); each batch's head
-    fingerprints probe the accumulated seen-keys state
-    (``applyInPandasWithState`` keyed by fp). Batch-oracle equality after
-    the drain proves the dedup tier's merge law on the wire the way the
-    r8 HLL/CMS twins did for sketches: because batch boundaries are a
-    pure function of (doc_id rank, ceil(n/8)), the oracle reconstructs
+    """STREAMING twin of ``dedup_incremental``: the documents table
+    replays in doc_id order as ~8 deterministic micro-batches
+    (``replay_stream``); each batch's head fingerprints probe the
+    accumulated seen-keys state (``applyInPandasWithState`` keyed by fp).
+    Batch-oracle equality after the drain proves the dedup tier's merge
+    law on the wire the way the HLL/CMS twins do for sketches: because
+    batch boundaries are a pure function of (doc_id rank, ceil(n/8)),
+    the oracle reconstructs
     "seen in an earlier batch" with two window minima — a dropped batch,
     a state flag lost between commits, or a non-deterministic in-batch
     keeper all shift at least one status."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from jp_qcew_spark.queries.curation import _head_fp
-    from jp_qcew_spark.sources.stream_replay import DocReplayDataSource
 
-    ensure_session_confs(spark)
-    spark.dataSource.register(DocReplayDataSource)
-    stream = (
-        spark.readStream.format("docreplay")
-        .option("path", os.path.join(sf_dir, "documents.parquet"))
-        .option("batch_rows", "auto")
-        .load()
-    )
+    stream = replay_stream(spark, sf_dir, "documents")
     keyed = stream.select("doc_id", _head_fp(F.col("text")).alias("fp"))
     out = keyed.groupBy("fp").applyInPandasWithState(
         _dedup_incr_fn,
@@ -807,12 +802,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # fingerprints are near-unique (~|corpus| keys), so the width derives
-    # from the feed's parquet-metadata row count via the keys/1000 rule
-    # (state_width): 8 at sf0.1, 32+ at sf1. The old constant 32 was
-    # measured under the checkpoint-checksum regime the r15 fix removed;
-    # re-measured without it, 32 partitions cost 10.9 s vs 6.9 s at 8.
-    from jp_qcew_spark.io import metadata_row_count
-
+    # from the feed's parquet-metadata row count (state_width)
     n_docs = metadata_row_count(spark, sf_dir, "documents")
     return run_to_memory(
         out,
@@ -823,7 +813,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming NEAR-dup ingest — banded seen-keys state on the wire (round 10)
+# Streaming NEAR-dup ingest — banded seen-keys state on the wire
 # --------------------------------------------------------------------------
 
 _NEARDUP_OUT = StructType(
@@ -837,39 +827,15 @@ _NEARDUP_STATE = StructType(
     [StructField("seen_keys", ArrayType(BinaryType()))]
 )
 
-# Stateful-op key = crc32(band identity) % _NEARDUP_BUCKETS, NOT the band
-# key itself. The r9 exact-dedup stream keys state per fingerprint — the
-# honest per-key cost contract, and at 3x the key cardinality (3 band
-# keys per doc) the per-key Arrow invocation overhead measurably breaks
-# scaling: the per-key first cut ran 19.98 s at sf0.1 and did not
-# finish in 120 s at sf1 (~150k key groups). Bucketing bounds the
-# invocation count at min(|keys in batch|, buckets) per micro-batch and
-# moves the per-key flags into an array-of-identities state per bucket
-# — the invocation-count vs state-value-size knob. (Round 13 packed the
-# identity from the ~35-char "idx:md5hex" string to 18 raw bytes —
-# lossless, same decisions, half the rewrite bytes.) Production note: with
-# transformWithState (map-typed state) each band key would be one map
-# entry and this trade disappears; with value-typed state, bucket count
-# is the tuning lever (state per bucket = |distinct band keys|/buckets
-# strings, rewritten once per bucket per batch).
-#
-# Rewrite-cost curve, MEASURED round 11 (VERDICT r10 #5): on this wire
-# (mostly-unique docs) every micro-batch grows essentially EVERY bucket
-# (512/512 gaining from batch 1 at sf1; 495-505/512 at sf0.1), so
-# (a) skipping state.update for no-gain buckets saves ~0% here — not a
-# justified change — and (b) per-batch rewrite volume is ~the full
-# accumulated state regardless of bucket count: state 14,345 identities
-# (~0.5 MB) at sf0.1 / 143,450 (~5 MB) at sf1, cumulative rewrite over
-# the 8-batch replay 64,073 / 646,343 strings = ~4.5x final state, i.e.
-# a B-batch stream serializes ~B/2 x final state in total. Wall tracks
-# it sub-linearly (isolated cold runs: 24.0 s at sf1 -> 34.2 s at sf3,
-# 1.42x per 3x data; ~3.0 -> 4.3 s per batch, commit-dominated). The
-# bucket count bounds INVOCATIONS only; the rewrite bill is intrinsic
-# to value-typed state. The fix that removes it is map-typed
-# transformWithState state (one map entry per band key, no array
-# rewrite) — NOT implemented here because the API is protobuf-gated in
-# this runtime; see stream_tws_user_extremes above for the gated
-# transformWithState usage pattern a port would start from.
+# Stateful-op key = crc32(band identity) % _NEARDUP_BUCKETS, not the band
+# key itself: at ~3 band keys per doc, one Arrow invocation per key does
+# not scale, so a bucket bounds the invocations per micro-batch at
+# min(|keys in batch|, buckets) and holds its keys' identities in an
+# array-typed state. Every batch rewrites each touched bucket's array, so
+# a B-batch replay serializes ~B/2 x the final state in total whatever the
+# bucket count; map-typed transformWithState state (one entry per band
+# key) would remove that rewrite, but the API needs protobuf
+# (``tws_available``). Measurements: BASELINE.md "Near-dup stream buckets".
 _NEARDUP_BUCKETS = 512
 
 
@@ -899,9 +865,7 @@ def _neardup_fn(key, pdfs, state):
     out_prior: list[int] = []
     out_lower: list[int] = []
     # the identity column k arrives pre-built from the plan (one JVM
-    # unhex shared with the bucket derivation) — rebuilding it per-row
-    # in pandas here was the hot-path duplicate the late-r11 review
-    # removed
+    # unhex shared with the bucket derivation)
     for k, grp in rows.groupby("k", sort=True):
         k = bytes(k)
         ids = sorted(int(x) for x in grp["doc_id"])
@@ -926,7 +890,7 @@ def stream_dedup_neardup(
     num_hashes: int | None = None,
     rows_per_band: int | None = None,
 ) -> DataFrame:
-    """STREAMING twin of banded NEAR-dup ingest (VERDICT r9 #7): the
+    """STREAMING twin of banded NEAR-dup ingest: the
     production crawl pipeline dedups arriving batches against the corpus
     by MinHash band keys, not exact fingerprints —
     ``stream_dedup_incremental`` with the key space swapped from
@@ -944,77 +908,53 @@ def stream_dedup_neardup(
     same 1-(1-s^r)^b math the batch tier certifies
     (``dedup_minhash_recall_eval``); batch-equivalence at a derived
     config is pinned by test. The signature UDF rejects ragged configs
-    loudly (ADVICE r10).
+    loudly.
 
     Shape: the replayed docs map through a STATELESS per-row signature
     (``ext.dedup.minhash_band_keys`` — one Arrow-batched UDF, because
     the batch pipeline's exploded+groupBy form would be a second
     stateful operator, which streaming forbids before
-    ``applyInPandasWithState``, and the per-row HOF form measured ~70
-    core-ms/doc interpreted), posexplode to (band_idx, band_key) rows,
+    ``applyInPandasWithState``), posexplode to (band_idx, band_key) rows,
     then ONE stateful pass keyed by band-key bucket. Docs with fewer
     than 3 words have no shingles and are out of scope on both sides
     (the ``dedup_minhash_lsh`` nonempty rule).
 
     Cost contract: band-key cardinality is ~_NUM_BANDS x distinct docs —
-    3x the r9 exact-dedup stream — so the stateful op is keyed by a
-    crc32 BUCKET of the band identity (``_NEARDUP_BUCKETS``), bounding
-    Arrow invocations per micro-batch at the bucket count instead of the
-    key count (the per-key first cut: 19.98 s at sf0.1, unfinished at
-    sf1; bucketed: measured at both). The state width comes from
-    ``state_width`` over the bucket count. Batch-oracle equality after
-    the drain: batch
-    index is a pure function of (doc_id rank, ceil(n/8)), so the oracle
-    reconstructs 'band seen earlier' and 'lower id in batch' with two
-    window minima over the banded keys — the r9 reconstruction device
-    generalized to the banded key space; the bucketing is invisible to
-    the oracle because it never changes a decision, only which
-    invocation computes it."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    3x the exact-dedup stream — so the stateful op is keyed by a crc32
+    BUCKET of the band identity (``_NEARDUP_BUCKETS``), bounding Arrow
+    invocations per micro-batch at the bucket count instead of the key
+    count. The state width comes from ``state_width`` over the bucket
+    count. Batch-oracle equality after the drain: batch index is a pure
+    function of (doc_id rank, ceil(n/8)), so the oracle reconstructs
+    'band seen earlier' and 'lower id in batch' with two window minima
+    over the banded keys, as for the exact-dedup stream; the bucketing
+    is invisible to the oracle because it never changes a decision, only
+    which invocation computes it."""
     from jp_qcew_spark.ext import dedup as D
     from jp_qcew_spark.queries.dedup import _NUM_HASHES, _ROWS_PER_BAND
-    from jp_qcew_spark.sources.stream_replay import DocReplayDataSource
 
-    ensure_session_confs(spark)
     nh = _NUM_HASHES if num_hashes is None else num_hashes
     rpb = _ROWS_PER_BAND if rows_per_band is None else rows_per_band
     # The packed identity below lpads hex(band_idx) to 4 chars, and Spark's
     # lpad TRUNCATES longer input — >0xFFFF bands would silently collide
     # distinct band identities into one state key (wrong prior/keeper
-    # decisions). Fail loudly instead (ADVICE r13; same discipline as the
-    # SNM plant-offset guard).
+    # decisions). Fail loudly instead.
     if nh // rpb > 0xFFFF:
         raise ValueError(
             f"stream_dedup_neardup: {nh // rpb} bands exceed the 2-byte "
             "packed band-index budget (65535); raise rows_per_band or "
             "widen the identity packing"
         )
-    spark.dataSource.register(DocReplayDataSource)
-    stream = (
-        spark.readStream.format("docreplay")
-        .option("path", os.path.join(sf_dir, "documents.parquet"))
-        .option("batch_rows", "auto")
-        .load()
-    )
+    stream = replay_stream(spark, sf_dir, "documents")
     # Signature = ONE Arrow-batched UDF (ext.dedup.minhash_band_keys):
-    # the batch pipeline's codegen exploded+groupBy form is a streaming
-    # aggregation (forbidden before the stateful op), and the per-row
-    # HOF fallback measured ~70 core-ms/doc interpreted, too slow
-    # for sf1; the Arrow loop is ~2-3 ms/doc, bit-identical
-    # keys (pinned by test). The replay source emits ONE partition per
-    # micro-batch, so repartition FIRST to run the signature at task
-    # parallelism (the widen_scan lesson applied to the wire).
-    # the band identity k is projected ONCE (JVM unhex) and shared by
-    # the bucket derivation and the stateful op's state keys — a single
-    # point of definition for the identity format (the late-r11 review
-    # found it built twice, once JVM-side and once per-row in pandas).
-    # PACKED binary, not the r11 "idx:md5hex" string: 18 bytes (2-byte
-    # band index + the 16 md5 bytes) vs ~35 UTF-8 chars — LOSSLESS, so
-    # every prior/keeper decision and the oracle are untouched, but the
-    # value-typed state's intrinsic rewrite bill (~B/2 x final state
-    # over a B-batch stream, the measured scale tax documented above)
-    # carries half the bytes per identity.
+    # the batch pipeline's exploded+groupBy form is a streaming
+    # aggregation (forbidden before the stateful op); its keys are
+    # bit-identical (pinned by test). The replay source emits ONE
+    # partition per micro-batch, so repartition FIRST to run the
+    # signature at task parallelism. The band identity k is projected
+    # ONCE (JVM unhex) and shared by the bucket derivation and the
+    # stateful op's state keys: 18 packed bytes (2-byte band index + the
+    # 16 md5 bytes), lossless, so the rewritten state carries few bytes.
     keyed = (
         stream.repartition(32)
         .select(
@@ -1043,10 +983,7 @@ def stream_dedup_neardup(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # width from the STATE-key space (the crc32 buckets, not the band
-    # keys): keys/1000 floors at 8 for _NEARDUP_BUCKETS=512 — post-
-    # checksum-fix re-measure put 32 partitions at ~16-20 s vs ~12-14 s
-    # at 8-16 (sf0.1); a production wire raising the bucket count
-    # derives a wider store through the same rule
+    # keys): a wire raising the bucket count derives a wider store
     sink = run_to_memory(
         out,
         "append",
@@ -1067,7 +1004,7 @@ def stream_dedup_neardup(
 
 
 # --------------------------------------------------------------------------
-# Streaming quality gate — online classifier scoring on the wire (round 14)
+# Streaming quality gate — online classifier scoring on the wire
 # --------------------------------------------------------------------------
 
 
@@ -1099,20 +1036,13 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism — this is the cheapest possible streaming operator shape
     and the right one for an online quality filter."""
     from jp_qcew_spark.queries.curation import _qc_weights_t
-    from jp_qcew_spark.sources.stream_replay import DocReplayDataSource
 
     ensure_session_confs(spark)
     weights = {
         int(r["feature_id"]): int(r["weight_micro"])
         for r in _qc_weights_t(spark, sf_dir).collect()
     }
-    spark.dataSource.register(DocReplayDataSource)
-    stream = (
-        spark.readStream.format("docreplay")
-        .option("path", os.path.join(sf_dir, "documents.parquet"))
-        .option("batch_rows", "auto")
-        .load()
-    )
+    stream = replay_stream(spark, sf_dir, "documents")
 
     def score(batches):
         import hashlib

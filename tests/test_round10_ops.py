@@ -291,126 +291,6 @@ def test_semdedup_rp_semantics(spark, sf_dir):
             assert r["n_dropped"] == 0 and r["keep_id"] == r["comp"]
 
 
-def test_stream_dedup_neardup_batch_semantics(spark, tmp_path_factory):
-    """Crafted 16-doc corpus, bsz = ceil(16/8) = 2: an identical text
-    (all bands collide by construction) repeated ACROSS batches must be
-    dup_vs_seen, repeated WITHIN a batch kept + dup_in_batch; unique
-    texts kept; a doc under 3 words has no shingles and is OUT of the
-    query's scope on both engines (the dedup_minhash_lsh nonempty
-    rule)."""
-    from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
-
-    d = tmp_path_factory.mktemp("sdn")
-    rows = []
-    for i in range(16):
-        if i in (0, 3):
-            text = "the quick brown fox jumps over the lazy dog today"
-        elif i in (4, 5):
-            text = "pack my box with five dozen liquor jugs tonight"
-        elif i == 7:
-            text = "hi"  # < 3 words: no shingles, out of scope
-        else:
-            # fully indexed tokens: no shared shingles between docs (a
-            # first cut shared 60% of shingles via common filler words
-            # and the band family CORRECTLY flagged them as near-dups)
-            text = " ".join(f"w{i}x{j}" for j in range(10))
-        rows.append((i, text))
-    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(str(d / "documents.parquet"))
-
-    got = {
-        r.doc_id: r.status
-        for r in stream_dedup_neardup(spark, str(d)).collect()
-    }
-    assert 7 not in got
-    assert got[0] == "kept"
-    assert got[3] == "dup_vs_seen"  # batch 1 probes state set by batch 0
-    assert got[4] == "kept"
-    assert got[5] == "dup_in_batch"  # same batch (2), higher doc_id
-    assert all(
-        got[i] == "kept" for i in got if i not in (3, 5)
-    ), got
-
-
-def test_stream_dedup_neardup_matches_banded_batch(spark, sf_dir):
-    """The wire decision must agree with the BATCH banded reconstruction
-    (the oracle's device, recomputed here in Spark): same band family,
-    same batch rule — any divergence means state was lost or a band key
-    drifted."""
-    from pyspark.sql import Window
-
-    from jp_qcew_spark.ext import dedup as D
-    from jp_qcew_spark.functions.text import tokens
-    from jp_qcew_spark.io import load_table
-    from jp_qcew_spark.queries.dedup import (
-        _NUM_BANDS,
-        _NUM_HASHES,
-        _ROWS_PER_BAND,
-    )
-    from jp_qcew_spark.queries.streaming import q_stream_dedup_neardup
-
-    got = {
-        r.doc_id: r.status
-        for r in q_stream_dedup_neardup(spark, sf_dir).collect()
-    }
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = docs.count()
-    bsz = -(-n // 8)
-    rk = docs.select(
-        "doc_id",
-        ((F.row_number().over(Window.orderBy("doc_id")) - 1) / bsz)
-        .cast("long")
-        .alias("bi"),
-    )
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
-    sh = toks.select(
-        "doc_id", D.shingles_from_tokens(F.col("t")).alias("shset")
-    ).filter(F.size("shset") > 0)
-    sig = sh.select(
-        "doc_id", D.minhash_array(F.col("shset"), _NUM_HASHES).alias("sig")
-    )
-    keyed = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    D.band_key(F.col("sig"), b, _ROWS_PER_BAND)
-                    for b in range(_NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    ).join(rk, "doc_id")
-    wk = Window.partitionBy("band_idx", "band_key")
-    wkb = Window.partitionBy("band_idx", "band_key", "bi")
-    ann = keyed.select(
-        "doc_id",
-        "bi",
-        F.min("bi").over(wk).alias("min_bi"),
-        F.min("doc_id").over(wkb).alias("min_doc"),
-    )
-    want = {
-        r.doc_id: r.status
-        for r in ann.groupBy("doc_id")
-        .agg(
-            F.max((F.col("bi") > F.col("min_bi")).cast("int")).alias("p"),
-            F.max(
-                (F.col("doc_id") > F.col("min_doc")).cast("int")
-            ).alias("l"),
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("p") == 1, "dup_vs_seen")
-            .when(F.col("l") == 1, "dup_in_batch")
-            .otherwise("kept")
-            .alias("status"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_target_cfg_is_a_real_parameter():
     """The (threshold, recall) target is a PARAMETER, not a constant
     pair: across a grid of contracts the derived b always satisfies the

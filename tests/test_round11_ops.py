@@ -441,84 +441,6 @@ def test_metadata_row_count_partitioned_layout(spark, tmp_path):
     assert io_mod.metadata_row_count(spark, str(tmp_path), "documents") == 1000
 
 
-def test_stream_neardup_accepts_derived_config(spark, sf_dir):
-    """The streaming near-dup wire accepts the DERIVED contract config
-    (VERDICT r10 #1's inheritance edge): running the stream at the
-    (bands, rows_per_band) the text contract derives for this corpus
-    must agree with the batch banded reconstruction at the SAME config —
-    the default path keeps the pinned 12/3/4 family (oracle-checked),
-    the contract path is one parameter away."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from jp_qcew_spark.ext import dedup as D
-    from jp_qcew_spark.functions.text import tokens
-    from jp_qcew_spark.io import load_table, metadata_row_count
-    from jp_qcew_spark.queries.dedup import _lsh_cfg_minhash_target
-    from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
-
-    n = metadata_row_count(spark, sf_dir, "documents")
-    bands, rpb = _lsh_cfg_minhash_target(n)
-    nh = bands * rpb
-    got = {
-        r.doc_id: r.status
-        for r in stream_dedup_neardup(
-            spark, sf_dir, num_hashes=nh, rows_per_band=rpb
-        ).collect()
-    }
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bsz = -(-n // 8)
-    rk = docs.select(
-        "doc_id",
-        ((F.row_number().over(Window.orderBy("doc_id")) - 1) / bsz)
-        .cast("long")
-        .alias("bi"),
-    )
-    sh = docs.select(
-        "doc_id",
-        D.shingles_from_tokens(tokens(F.col("text"))).alias("shset"),
-    ).filter(F.size("shset") > 0)
-    sig = sh.select(
-        "doc_id", D.minhash_array(F.col("shset"), nh).alias("sig")
-    )
-    keyed = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[D.band_key(F.col("sig"), b, rpb) for b in range(bands)]
-            )
-        ).alias("band_idx", "band_key"),
-    ).join(rk, "doc_id")
-    wk = Window.partitionBy("band_idx", "band_key")
-    wkb = Window.partitionBy("band_idx", "band_key", "bi")
-    ann = keyed.select(
-        "doc_id",
-        "bi",
-        F.min("bi").over(wk).alias("min_bi"),
-        F.min("doc_id").over(wkb).alias("min_doc"),
-    )
-    want = {
-        r.doc_id: r.status
-        for r in ann.groupBy("doc_id")
-        .agg(
-            F.max((F.col("bi") > F.col("min_bi")).cast("int")).alias("p"),
-            F.max(
-                (F.col("doc_id") > F.col("min_doc")).cast("int")
-            ).alias("l"),
-        )
-        .select(
-            "doc_id",
-            F.when(F.col("p") == 1, "dup_vs_seen")
-            .when(F.col("l") == 1, "dup_in_batch")
-            .otherwise("kept")
-            .alias("status"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_metadata_row_count_skips_hidden_files(spark, tmp_path):
     """The footer counter mirrors Spark's InMemoryFileIndex visibility
     rule: files and path components starting with '_' or '.' (stale

@@ -148,27 +148,6 @@ def test_keep_best_policy(spark, sf_dir):
         assert kept[0]["doc_id"] == min(best_ids)
 
 
-def test_stream_quality_gate_equals_batch(spark, sf_dir):
-    """stream_quality_gate: the wire must add NOTHING — per-doc margins
-    and keep decisions equal the batch classifier apply row-for-row
-    (same model, same tokenizer, same hash), and the streaming plan is
-    map-only (no stateful operator, no aggregation before the sink)."""
-    from jp_qcew_spark.queries.curation import (
-        q_quality_classifier_apply,
-    )
-    from jp_qcew_spark.queries.streaming import q_stream_quality_gate
-
-    got = {
-        r["doc_id"]: (r["margin_micro"], r["keep"])
-        for r in q_stream_quality_gate(spark, sf_dir).collect()
-    }
-    want = {
-        r["doc_id"]: (r["margin_micro"], r["keep"])
-        for r in q_quality_classifier_apply(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
 class TestQualityClassifier:
     def test_train_model_shape(self, spark, sf_dir):
         from jp_qcew_spark.queries.curation import (

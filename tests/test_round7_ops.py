@@ -4,8 +4,6 @@ DuckDB oracle:
 
 - exact-substring dedup: the stride-coverage GUARANTEE (any ≥ 80-char
   verbatim shared run is detected at ANY alignment) swept by hypothesis,
-- histogram quantile read-out: estimates bracketed by the rank-holding
-  bin against a pure-numpy reference,
 - Markov transitions: rows are a probability distribution with exact
   integer support accounting,
 - Gram matrix: symmetric PSD with trace equal to an independently
@@ -133,50 +131,6 @@ def test_exact_substring_matches_bruteforce(spark, sf_dir):
     }
     # the query LIMITs to 100; at sf0.001 the full set fits
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# hist_quantile_readout: bracketing + numpy reference
-# ---------------------------------------------------------------------------
-
-
-@given(
-    counts=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=63),
-            st.integers(min_value=1, max_value=50),
-        ),
-        min_size=1,
-        max_size=20,
-        unique_by=lambda t: t[0],
-    )
-)
-@_settings
-def test_hist_readout_matches_numpy(spark, counts):
-    """The rank-interpolation read-out must locate the bin holding rank
-    ceil(q*n) (cumulative bracketing) and interpolate inside it — checked
-    against an independent numpy cumulative scan for arbitrary sparse
-    histograms."""
-    from jp_qcew_spark.queries.sketches import hist_quantile_readout
-
-    width = 10
-    hist = spark.createDataFrame(
-        [("g", b, c) for b, c in counts], "flag string, bin long, cnt long"
-    )
-    (row,) = hist_quantile_readout(hist, width).collect()
-    bins = np.array(sorted(b for b, _ in counts))
-    cnts = np.array([dict(counts)[b] for b in bins])
-    cum = np.cumsum(cnts)
-    n = int(cum[-1])
-    assert row.n == n
-    for q, est in ((0.5, row.e50), (0.95, row.e95)):
-        r = int(np.ceil(q * n))
-        k = int(np.searchsorted(cum, r))
-        lo = int(bins[k]) * width
-        cumb = int(cum[k - 1]) if k else 0
-        expect = lo + width * (r - cumb) / int(cnts[k])
-        assert est == pytest.approx(expect, abs=1e-9)
-        assert lo < est <= lo + width  # interpolation stays inside the bin
 
 
 # ---------------------------------------------------------------------------

@@ -8,21 +8,15 @@ DuckDB oracle:
 - label propagation: the label domain is closed, isolated nodes are
   fixed points, and majority self-agreement is stable,
 - chunk overlap: pure-Python hashlib re-chunking reproduces every
-  (chunk_id, n_tokens, signature) row exactly,
-- streaming HLL: pure-Python hashlib registers reproduce the streamed
-  sketch's estimates, the estimate respects the published 1.04/sqrt(m)
-  error envelope, and register max-merge is duplicate-insensitive.
+  (chunk_id, n_tokens, signature) row exactly.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 import pyspark.sql.functions as F
-
-_HEX = "0123456789abcdef"
 
 
 # ---------------------------------------------------------------------------
@@ -185,68 +179,6 @@ def test_chunk_overlap_covers_every_token(spark, sf_dir):
             for i in range(len(chunks) - 1)
         )
         assert covered == n, (d.doc_id, covered, n)
-
-
-# ---------------------------------------------------------------------------
-# stream_hll_distinct
-# ---------------------------------------------------------------------------
-
-
-def _py_hll(users) -> tuple[dict, float]:
-    """Pure-Python mirror of the explicit HLL: registers + estimate."""
-    regs: dict[int, int] = {}
-    for u in users:
-        h = hashlib.md5(str(u).encode()).hexdigest()
-        r = _HEX.index(h[0]) * 16 + _HEX.index(h[1])
-        w = int(h[2:8], 16)
-        rho = 25 if w == 0 else 24 - w.bit_length() + 1
-        regs[r] = max(regs.get(r, 0), rho)
-    sp = sum(2 ** (32 - m) for m in regs.values())
-    vz = 256 - len(regs)
-    k = 0.7213 / (1 + 1.079 / 256) * 256 * 256 * 4294967296.0
-    raw = k / float(sp + vz * 4294967296)
-    if raw <= 2.5 * 256 and vz > 0:
-        return regs, 256.0 * math.log(256.0 / vz)
-    return regs, raw
-
-
-def test_stream_hll_matches_pure_python(spark, sf_dir):
-    """Third implementation: hashlib-built registers over the raw event
-    feed reproduce the streamed sketch's estimate for every event type
-    (to the query's 4-decimal rounding)."""
-    from jp_qcew_spark.io import load_table
-    from jp_qcew_spark.queries.streaming import q_stream_hll_distinct
-
-    out = {r.event_type: r for r in q_stream_hll_distinct(spark, sf_dir).collect()}
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "user_id"
-    ).collect()
-    by_type: dict[str, list] = {}
-    for e in events:
-        by_type.setdefault(e.event_type, []).append(e.user_id)
-    assert set(out) == set(by_type)
-    for t, users in by_type.items():
-        regs, est = _py_hll(users)
-        assert out[t].n_registers == len(regs)
-        assert out[t].v_zero == 256 - len(regs)
-        assert abs(out[t].est_hll - est) <= 1e-4, (t, out[t].est_hll, est)
-        # published error envelope: 3 sigma of 1.04/sqrt(m)
-        n_exact = len(set(users))
-        assert abs(out[t].est_hll - n_exact) / n_exact <= 3 * 1.04 / math.sqrt(
-            256
-        ), (t, out[t].est_hll, n_exact)
-
-
-def test_hll_max_merge_duplicate_insensitive():
-    """The law the streaming twin exists to prove, stated directly:
-    replaying the whole feed a second time (worst-case duplication)
-    cannot move a single register, because max is idempotent — unlike
-    the sum-merged histogram/CMS sketches, which would double."""
-    users = list(range(137))
-    once, est_once = _py_hll(users)
-    twice, est_twice = _py_hll(users + users)
-    assert once == twice
-    assert est_once == est_twice
 
 
 # ---------------------------------------------------------------------------

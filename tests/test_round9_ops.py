@@ -119,43 +119,6 @@ def test_tokenizer_pack_pipeline_composes(spark, sf_dir):
         assert all(b > a for a, b in zip(pids, pids[1:]))
 
 
-def test_stream_dedup_incremental_batch_semantics(spark, tmp_path_factory):
-    """Crafted 16-doc corpus, bsz = ceil(16/8) = 2: a fingerprint repeated
-    ACROSS batches must classify as dup_vs_seen (state set by the earlier
-    batch), repeated WITHIN one batch as kept + dup_in_batch (min doc_id
-    keeps), unique fingerprints as kept — the three branches of the
-    state-store decision, each exercised away from the oracle twin."""
-    from jp_qcew_spark.streaming.pipelines import stream_dedup_incremental
-
-    d = tmp_path_factory.mktemp("sdi")
-    rows = []
-    for i in range(16):
-        if i == 3:
-            text = "alpha beta common lede"          # dup of doc 0, batch 1
-        elif i == 0:
-            text = "alpha beta common lede"
-        elif i in (4, 5):
-            text = "gamma delta shared lede"         # same batch (2)
-        else:
-            text = f"unique lede number {i} filler words here"
-        rows.append((i, text))
-    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(str(d / "documents.parquet"))
-
-    got = {
-        r.doc_id: r.status
-        for r in stream_dedup_incremental(spark, str(d)).collect()
-    }
-    assert got[0] == "kept"
-    assert got[3] == "dup_vs_seen"
-    assert got[4] == "kept"
-    assert got[5] == "dup_in_batch"
-    assert all(
-        got[i] == "kept" for i in range(16) if i not in (3, 5)
-    ), got
-
-
 def test_rp_weights_match_duckdb_md5_derivation(spark):
     """The Rademacher plane weights are a pinned public derivation each
     engine owns INDEPENDENTLY: Spark builds the weight matrix from

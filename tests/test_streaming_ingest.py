@@ -1,14 +1,22 @@
-"""Streaming QCEW ingest: exactly-once file-source → partitioned parquet.
+"""Streaming ingest and the stream twins of batch queries.
 
 Covers the arriving-quarterly-files design (streaming/pipelines.py): an
 available-now drain processes the backlog; a SECOND drain with one new file
 processes ONLY that file (checkpoint = exactly-once), and the partitioned
-output stays consistent with the batch decode of the same inputs.
+output stays consistent with the batch decode of the same inputs. The
+replay-fed stream consumers are checked against a third implementation or
+their batch twin: streaming HLL registers against pure-Python hashlib (and
+register max-merge is duplicate-insensitive), the exact and banded dedup
+streams against crafted corpora and the batch banded reconstruction, the
+quality gate against the batch classifier, and the replay-batch SQL
+fragment against the slices the doc replay reader serves.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
+import math
 import os
 import random
 
@@ -18,6 +26,8 @@ from pyspark.sql import functions as F
 from jp_qcew_spark.sources.fixed_width import decode_qcew, read_qcew_text, typed_qcew
 from jp_qcew_spark.streaming.pipelines import stream_qcew_ingest
 from tests.qcew_fixtures import gen_quarter_file
+
+_HEX = "0123456789abcdef"
 
 
 @pytest.fixture()
@@ -231,3 +241,361 @@ def test_stream_neardup_flags_a_near_duplicate(spark, tmp_path):
         for r in stream_dedup_incremental(spark, str(tmp_path)).collect()
     }
     assert exact[5] == "kept"
+
+
+# ---------------------------------------------------------------------------
+# stream_hll_distinct
+# ---------------------------------------------------------------------------
+
+
+def _py_hll(users) -> tuple[dict, float]:
+    """Pure-Python mirror of the explicit HLL: registers + estimate."""
+    regs: dict[int, int] = {}
+    for u in users:
+        h = hashlib.md5(str(u).encode()).hexdigest()
+        r = _HEX.index(h[0]) * 16 + _HEX.index(h[1])
+        w = int(h[2:8], 16)
+        rho = 25 if w == 0 else 24 - w.bit_length() + 1
+        regs[r] = max(regs.get(r, 0), rho)
+    sp = sum(2 ** (32 - m) for m in regs.values())
+    vz = 256 - len(regs)
+    k = 0.7213 / (1 + 1.079 / 256) * 256 * 256 * 4294967296.0
+    raw = k / float(sp + vz * 4294967296)
+    if raw <= 2.5 * 256 and vz > 0:
+        return regs, 256.0 * math.log(256.0 / vz)
+    return regs, raw
+
+
+def test_stream_hll_matches_pure_python(spark, sf_dir):
+    """Third implementation: hashlib-built registers over the raw event
+    feed reproduce the streamed sketch's estimate for every event type
+    (to the query's 4-decimal rounding)."""
+    from jp_qcew_spark.io import load_table
+    from jp_qcew_spark.queries.streaming import q_stream_hll_distinct
+
+    out = {r.event_type: r for r in q_stream_hll_distinct(spark, sf_dir).collect()}
+    events = load_table(spark, sf_dir, "events").select(
+        "event_type", "user_id"
+    ).collect()
+    by_type: dict[str, list] = {}
+    for e in events:
+        by_type.setdefault(e.event_type, []).append(e.user_id)
+    assert set(out) == set(by_type)
+    for t, users in by_type.items():
+        regs, est = _py_hll(users)
+        assert out[t].n_registers == len(regs)
+        assert out[t].v_zero == 256 - len(regs)
+        assert abs(out[t].est_hll - est) <= 1e-4, (t, out[t].est_hll, est)
+        # published error envelope: 3 sigma of 1.04/sqrt(m)
+        n_exact = len(set(users))
+        assert abs(out[t].est_hll - n_exact) / n_exact <= 3 * 1.04 / math.sqrt(
+            256
+        ), (t, out[t].est_hll, n_exact)
+
+
+def test_hll_max_merge_duplicate_insensitive():
+    """The law the streaming twin exists to prove, stated directly:
+    replaying the whole feed a second time (worst-case duplication)
+    cannot move a single register, because max is idempotent — unlike
+    the sum-merged histogram/CMS sketches, which would double."""
+    users = list(range(137))
+    once, est_once = _py_hll(users)
+    twice, est_twice = _py_hll(users + users)
+    assert once == twice
+    assert est_once == est_twice
+
+
+def test_stream_dedup_incremental_batch_semantics(spark, tmp_path_factory):
+    """Crafted 16-doc corpus, bsz = ceil(16/8) = 2: a fingerprint repeated
+    ACROSS batches must classify as dup_vs_seen (state set by the earlier
+    batch), repeated WITHIN one batch as kept + dup_in_batch (min doc_id
+    keeps), unique fingerprints as kept — the three branches of the
+    state-store decision, each exercised away from the oracle twin."""
+    from jp_qcew_spark.streaming.pipelines import stream_dedup_incremental
+
+    d = tmp_path_factory.mktemp("sdi")
+    rows = []
+    for i in range(16):
+        if i == 3:
+            text = "alpha beta common lede"          # dup of doc 0, batch 1
+        elif i == 0:
+            text = "alpha beta common lede"
+        elif i in (4, 5):
+            text = "gamma delta shared lede"         # same batch (2)
+        else:
+            text = f"unique lede number {i} filler words here"
+        rows.append((i, text))
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(d / "documents.parquet"))
+
+    got = {
+        r.doc_id: r.status
+        for r in stream_dedup_incremental(spark, str(d)).collect()
+    }
+    assert got[0] == "kept"
+    assert got[3] == "dup_vs_seen"
+    assert got[4] == "kept"
+    assert got[5] == "dup_in_batch"
+    assert all(
+        got[i] == "kept" for i in range(16) if i not in (3, 5)
+    ), got
+
+
+def test_stream_dedup_neardup_batch_semantics(spark, tmp_path_factory):
+    """Crafted 16-doc corpus, bsz = ceil(16/8) = 2: an identical text
+    (all bands collide by construction) repeated ACROSS batches must be
+    dup_vs_seen, repeated WITHIN a batch kept + dup_in_batch; unique
+    texts kept; a doc under 3 words has no shingles and is OUT of the
+    query's scope on both engines (the dedup_minhash_lsh nonempty
+    rule)."""
+    from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
+
+    d = tmp_path_factory.mktemp("sdn")
+    rows = []
+    for i in range(16):
+        if i in (0, 3):
+            text = "the quick brown fox jumps over the lazy dog today"
+        elif i in (4, 5):
+            text = "pack my box with five dozen liquor jugs tonight"
+        elif i == 7:
+            text = "hi"  # < 3 words: no shingles, out of scope
+        else:
+            # fully indexed tokens: no shared shingles between docs (a
+            # first cut shared 60% of shingles via common filler words
+            # and the band family CORRECTLY flagged them as near-dups)
+            text = " ".join(f"w{i}x{j}" for j in range(10))
+        rows.append((i, text))
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(d / "documents.parquet"))
+
+    got = {
+        r.doc_id: r.status
+        for r in stream_dedup_neardup(spark, str(d)).collect()
+    }
+    assert 7 not in got
+    assert got[0] == "kept"
+    assert got[3] == "dup_vs_seen"  # batch 1 probes state set by batch 0
+    assert got[4] == "kept"
+    assert got[5] == "dup_in_batch"  # same batch (2), higher doc_id
+    assert all(
+        got[i] == "kept" for i in got if i not in (3, 5)
+    ), got
+
+
+def test_stream_dedup_neardup_matches_banded_batch(spark, sf_dir):
+    """The wire decision must agree with the BATCH banded reconstruction
+    (the oracle's device, recomputed here in Spark): same band family,
+    same batch rule — any divergence means state was lost or a band key
+    drifted."""
+    from pyspark.sql import Window
+
+    from jp_qcew_spark.ext import dedup as D
+    from jp_qcew_spark.functions.text import tokens
+    from jp_qcew_spark.io import load_table
+    from jp_qcew_spark.queries.dedup import (
+        _NUM_BANDS,
+        _NUM_HASHES,
+        _ROWS_PER_BAND,
+    )
+    from jp_qcew_spark.queries.streaming import q_stream_dedup_neardup
+
+    got = {
+        r.doc_id: r.status
+        for r in q_stream_dedup_neardup(spark, sf_dir).collect()
+    }
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    n = docs.count()
+    bsz = -(-n // 8)
+    rk = docs.select(
+        "doc_id",
+        ((F.row_number().over(Window.orderBy("doc_id")) - 1) / bsz)
+        .cast("long")
+        .alias("bi"),
+    )
+    toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
+    sh = toks.select(
+        "doc_id", D.shingles_from_tokens(F.col("t")).alias("shset")
+    ).filter(F.size("shset") > 0)
+    sig = sh.select(
+        "doc_id", D.minhash_array(F.col("shset"), _NUM_HASHES).alias("sig")
+    )
+    keyed = sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    D.band_key(F.col("sig"), b, _ROWS_PER_BAND)
+                    for b in range(_NUM_BANDS)
+                ]
+            )
+        ).alias("band_idx", "band_key"),
+    ).join(rk, "doc_id")
+    wk = Window.partitionBy("band_idx", "band_key")
+    wkb = Window.partitionBy("band_idx", "band_key", "bi")
+    ann = keyed.select(
+        "doc_id",
+        "bi",
+        F.min("bi").over(wk).alias("min_bi"),
+        F.min("doc_id").over(wkb).alias("min_doc"),
+    )
+    want = {
+        r.doc_id: r.status
+        for r in ann.groupBy("doc_id")
+        .agg(
+            F.max((F.col("bi") > F.col("min_bi")).cast("int")).alias("p"),
+            F.max(
+                (F.col("doc_id") > F.col("min_doc")).cast("int")
+            ).alias("l"),
+        )
+        .select(
+            "doc_id",
+            F.when(F.col("p") == 1, "dup_vs_seen")
+            .when(F.col("l") == 1, "dup_in_batch")
+            .otherwise("kept")
+            .alias("status"),
+        )
+        .collect()
+    }
+    assert got == want
+
+
+def test_stream_neardup_accepts_derived_config(spark, sf_dir):
+    """The streaming near-dup wire accepts the DERIVED contract config
+    (VERDICT r10 #1's inheritance edge): running the stream at the
+    (bands, rows_per_band) the text contract derives for this corpus
+    must agree with the batch banded reconstruction at the SAME config —
+    the default path keeps the pinned 12/3/4 family (oracle-checked),
+    the contract path is one parameter away."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from jp_qcew_spark.ext import dedup as D
+    from jp_qcew_spark.functions.text import tokens
+    from jp_qcew_spark.io import load_table, metadata_row_count
+    from jp_qcew_spark.queries.dedup import _lsh_cfg_minhash_target
+    from jp_qcew_spark.streaming.pipelines import stream_dedup_neardup
+
+    n = metadata_row_count(spark, sf_dir, "documents")
+    bands, rpb = _lsh_cfg_minhash_target(n)
+    nh = bands * rpb
+    got = {
+        r.doc_id: r.status
+        for r in stream_dedup_neardup(
+            spark, sf_dir, num_hashes=nh, rows_per_band=rpb
+        ).collect()
+    }
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    bsz = -(-n // 8)
+    rk = docs.select(
+        "doc_id",
+        ((F.row_number().over(Window.orderBy("doc_id")) - 1) / bsz)
+        .cast("long")
+        .alias("bi"),
+    )
+    sh = docs.select(
+        "doc_id",
+        D.shingles_from_tokens(tokens(F.col("text"))).alias("shset"),
+    ).filter(F.size("shset") > 0)
+    sig = sh.select(
+        "doc_id", D.minhash_array(F.col("shset"), nh).alias("sig")
+    )
+    keyed = sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[D.band_key(F.col("sig"), b, rpb) for b in range(bands)]
+            )
+        ).alias("band_idx", "band_key"),
+    ).join(rk, "doc_id")
+    wk = Window.partitionBy("band_idx", "band_key")
+    wkb = Window.partitionBy("band_idx", "band_key", "bi")
+    ann = keyed.select(
+        "doc_id",
+        "bi",
+        F.min("bi").over(wk).alias("min_bi"),
+        F.min("doc_id").over(wkb).alias("min_doc"),
+    )
+    want = {
+        r.doc_id: r.status
+        for r in ann.groupBy("doc_id")
+        .agg(
+            F.max((F.col("bi") > F.col("min_bi")).cast("int")).alias("p"),
+            F.max(
+                (F.col("doc_id") > F.col("min_doc")).cast("int")
+            ).alias("l"),
+        )
+        .select(
+            "doc_id",
+            F.when(F.col("p") == 1, "dup_vs_seen")
+            .when(F.col("l") == 1, "dup_in_batch")
+            .otherwise("kept")
+            .alias("status"),
+        )
+        .collect()
+    }
+    assert got == want
+
+
+def test_stream_quality_gate_equals_batch(spark, sf_dir):
+    """stream_quality_gate: the wire must add NOTHING — per-doc margins
+    and keep decisions equal the batch classifier apply row-for-row
+    (same model, same tokenizer, same hash), and the streaming plan is
+    map-only (no stateful operator, no aggregation before the sink)."""
+    from jp_qcew_spark.queries.curation import (
+        q_quality_classifier_apply,
+    )
+    from jp_qcew_spark.queries.streaming import q_stream_quality_gate
+
+    got = {
+        r["doc_id"]: (r["margin_micro"], r["keep"])
+        for r in q_stream_quality_gate(spark, sf_dir).collect()
+    }
+    want = {
+        r["doc_id"]: (r["margin_micro"], r["keep"])
+        for r in q_quality_classifier_apply(spark, sf_dir).collect()
+    }
+    assert got == want
+
+
+def test_doc_batch_sql_matches_replay_slices(spark, tmp_path):
+    """The DuckDB replay-batch fragment ``_DOC_BATCH_SQL`` gives every doc
+    the index of the micro-batch ``_DocReplayReader`` actually serves it
+    in, on a Spark-written directory of 17 docs in 2 part files: 17 is not
+    a multiple of 8, so a ceil(n/8) and a floor(n/8) batch size differ."""
+    import duckdb
+
+    from jp_qcew_spark.queries.streaming import _DOC_BATCH_SQL
+    from jp_qcew_spark.sources.stream_replay import _DocReplayReader
+
+    docs = tmp_path / "documents.parquet"
+    rows = [(3 * i + 1, f"doc {i}") for i in range(17)]
+    spark.createDataFrame(rows, "doc_id long, text string").repartition(
+        2
+    ).write.parquet(str(docs))
+    assert len(glob.glob(str(docs / "*.parquet"))) == 2
+
+    reader = _DocReplayReader({"path": str(docs), "batch_rows": "auto"})
+    served: dict[int, int] = {}
+    offset, bi = reader.initialOffset(), 0
+    while True:
+        batches, end = reader.read(offset)
+        ids = [d for b in batches for d in b.column("doc_id").to_pylist()]
+        if not ids:
+            break
+        served.update((d, bi) for d in ids)
+        offset, bi = end, bi + 1
+    assert sorted(served) == [d for d, _ in rows]
+    assert bi == 6  # ceil(17/8) = 3 docs per batch
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{docs}/*.parquet')"
+    )
+    got = dict(con.execute(_DOC_BATCH_SQL).fetchall())
+    con.close()
+    assert got == served
