@@ -87,6 +87,25 @@ def band_key(sig: Column, band: int, rows_per_band: int) -> Column:
     )
 
 
+def band_pairs(banded: DataFrame, id: str, a: str, b: str) -> DataFrame:
+    """LSH candidate pairs: the DISTINCT (``a``, ``b``) id pairs, a < b,
+    of rows of ``banded`` (one row per id and band: ``id``, band index,
+    band key) that agree on every column but ``id``. A keyed equi-join on
+    (band, key), so only ids sharing a bucket meet; a pair colliding in
+    several bands comes out once. Caches nothing: callers that reuse the
+    pairs scope-cache them (``io.track_cache``)."""
+    keys = [c for c in banded.columns if c != id]
+    on = F.col(f"l.{id}") < F.col(f"r.{id}")
+    for k in reversed(keys):
+        on = (F.col(f"l.{k}") == F.col(f"r.{k}")) & on
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), on)
+        .select(F.col(f"l.{id}").alias(a), F.col(f"r.{id}").alias(b))
+        .distinct()
+    )
+
+
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(id, shingle) rows — the EXPLODED shingle form, all codegen'd operators.
 

@@ -45,6 +45,31 @@ _GROUPS = [
 # oldest driver evidence. Everything not listed follows in module order.
 # The per-round rationale lives in BASELINE.md ("Driver window history").
 _WINDOW_PRIORITY = [
+    # -- changed: one LSH candidate layer (ext.dedup.band_pairs /
+    #    _band_pairs_sql, _minhash_cand, _sign_buckets, _cos_sql) and
+    #    the footer-sized CEP replay
+    "dedup_minhash_lsh",
+    "dedup_minhash_est_eval",
+    "dedup_minhash_target",
+    "dedup_minhash_recall_eval",
+    "stream_dedup_neardup",
+    "dedup_embedding_cos",
+    "dedup_embedding_rp",
+    "dedup_embedding_rp_target",
+    "dedup_recall_eval",
+    "dedup_recall_target_eval",
+    "knn_lsh_banded",
+    "knn_recall_eval",
+    "knn_recall_rp",
+    "knn_signlsh",
+    "knn_multiprobe",
+    "semdedup_lsh",
+    "knn_graph_mutual",
+    "semdedup_mutual",
+    "semdedup_rp",
+    "graph_label_prop",
+    "knn_ivf",
+    "stream_cep_sequence",
     # -- changed: the stream twins build on their batch twins
     #    (streaming.pipelines.replay_stream, the batch oracles by
     #    reference, sketches._cms_probes / _cms_topk and the shared SQL
@@ -53,9 +78,7 @@ _WINDOW_PRIORITY = [
     "stream_quantile_hist",
     "stream_countmin_topk",
     "stream_hll_distinct",
-    "stream_cep_sequence",
     "stream_dedup_incremental",
-    "stream_dedup_neardup",
     "stream_quality_gate",
     "stream_session",
     "stream_sliding",
@@ -76,8 +99,6 @@ _WINDOW_PRIORITY = [
     "mm_audio_frames",
     "mm_tiff_decode",
     # -- changed in round 15: connected-components local finish
-    "semdedup_mutual",
-    "semdedup_rp",
     "dedup_components",
     "dedup_keep_best",
     "dedup_keep_best_eval",
@@ -86,27 +107,6 @@ _WINDOW_PRIORITY = [
     "knn_pq_opq_eval",
     # -- the other stream consumers, all drained by run_to_memory
     "stream_python_source_sharded",
-    "stream_dedup",
-    "stream_stateful_user_stats",
-    "stream_static_join",
-    "stream_stream_join",
-    "events_tumbling_stream",
-    # -- displaced from the r14 leads by the late-r14 optimization pass
-    "join_range",
-    "join_salted_skew",
-    # -- r10 cohort (oldest evidence), alphabetical; its tail after
-    #    running_sum rotated out for the mm_* and sketch rows
-    "join_semi",
-    "knn_recall_rp",
-    "label_synthesis",
-    "lag_diff_pct",
-    "mode_keying",
-    "moving_avg",
-    "pivot_wide",
-    "pricing_summary",
-    "rank_dense",
-    "rollup_agg",
-    "running_sum",
 ]
 
 

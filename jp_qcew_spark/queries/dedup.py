@@ -300,14 +300,9 @@ def _sig_band_sql(
     num_hashes: int = _NUM_HASHES, rows_per_band: int = _ROWS_PER_BAND
 ) -> tuple[str, str]:
     """(sig_exprs, band_selects) SQL fragments of the fixed-family
-    signature derivation — the ONE copy every oracle that re-derives
-    the MinHash banding shares (``_oracle_minhash``,
-    ``_oracle_minhash_est_eval``, the streaming near-dup oracle; the
-    targeted tier derives its config in SQL and keeps its own
-    range-enumerated form). The band stride follows ``rows_per_band``
-    instead of a hardcoded 4, so a family change cannot leave an oracle
-    silently slicing the wrong mh columns (code-review late-r11: three
-    hand-copies, each with the 4*b stride baked in)."""
+    signature derivation, which ``_MH_CTES`` assembles. The band stride
+    follows ``rows_per_band``, so a family change slices the right mh
+    columns."""
     sig_exprs = ",\n         ".join(
         f"list_min(list_transform(shset, s -> md5('{i}:' || s))) AS mh_{i}"
         for i in range(num_hashes)
@@ -322,6 +317,63 @@ def _sig_band_sql(
         for b in range(num_hashes // rows_per_band)
     )
     return sig_exprs, band_selects
+
+
+def _band_pairs_sql(banded: str, id: str, a: str, b: str) -> str:
+    """CTE ``cand(a, b)``: the DuckDB twin of ``ext.dedup.band_pairs``
+    over the relation ``banded`` (``id``, band_idx, band_key): DISTINCT
+    id pairs, a < b, sharing a band key in the same band."""
+    return f"""cand AS (
+  SELECT DISTINCT l.{id} AS {a}, r.{id} AS {b}
+  FROM {banded} l JOIN {banded} r
+    ON l.band_idx = r.band_idx AND l.band_key = r.band_key
+   AND l.{id} < r.{id}
+)"""
+
+
+def _jaccard_sql(x: str, y: str) -> str:
+    """Unrounded shingle Jaccard of the ``shset`` lists of rows ``x`` and
+    ``y``."""
+    inter = f"len(list_intersect({x}.shset, {y}.shset))"
+    return f"{inter}::DOUBLE / (len({x}.shset) + len({y}.shset) - {inter})"
+
+
+_SIG_EXPRS, _BAND_SELECTS = _sig_band_sql()
+
+# The fixed family's signature chain in DuckDB: shingle sets (``sh``),
+# docs with at least one shingle (``nonempty``), 12 md5 minima per doc
+# (``sig``) and 3 band keys of 4 minima each (``banded``).
+_MH_CTES = f"""sh AS ({_SH_SQL}),
+nonempty AS (SELECT * FROM sh WHERE len(shset) > 0),
+sig AS (
+  SELECT doc_id, shset,
+         {_SIG_EXPRS}
+  FROM nonempty
+),
+banded AS (
+{_BAND_SELECTS}
+)"""
+_MH_CAND_SQL = _band_pairs_sql("banded", "doc_id", "doc_a", "doc_b")
+
+
+def _minhash_cand(
+    ex: DataFrame, bands: int, rpb: int
+) -> tuple[DataFrame, DataFrame]:
+    """(sig, cand) of exploded shingles ``ex``: ``sig`` the (doc_id,
+    mh_0..mh_{bands*rpb-1}) MinHash signatures, ``cand`` the DISTINCT
+    same-band pairs (doc_a < doc_b, ``ext.dedup.band_pairs``) over the
+    posexploded band keys, ``rpb`` minima per band. Its DuckDB twin is
+    ``_MH_CTES`` plus ``_MH_CAND_SQL``."""
+    num_hashes = bands * rpb
+    sig = D.minhash_from_exploded(ex, "doc_id", num_hashes)
+    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
+    banded = sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[D.band_key(sig_arr, b, rpb) for b in range(bands)])
+        ).alias("band_idx", "band_key"),
+    )
+    return sig, D.band_pairs(banded, "doc_id", "doc_a", "doc_b")
 
 
 def _jaccard_verify(ex: DataFrame, cand: DataFrame) -> DataFrame:
@@ -387,33 +439,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic sub-quadratic LSH plan.
     """
     ex = cache_parallel(_exploded(spark, sf_dir))
-    sig = D.minhash_from_exploded(ex, "doc_id", _NUM_HASHES)
-    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(_NUM_HASHES)])
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    D.band_key(sig_arr, b, _ROWS_PER_BAND)
-                    for b in range(_NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    _sig, cand = _minhash_cand(ex, _NUM_BANDS, _ROWS_PER_BAND)
     cand = track_cache(cand)
     return (
         _jaccard_verify(ex, cand)
@@ -425,33 +451,12 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_minhash() -> str:
-    sig_exprs, band_selects = _sig_band_sql()
-    return rf"""
-WITH sh AS ({_SH_SQL}),
-nonempty AS (SELECT * FROM sh WHERE len(shset) > 0),
-sig AS (
-  SELECT doc_id, shset,
-         {sig_exprs}
-  FROM nonempty
-),
-banded AS (
-{band_selects}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       round(len(list_intersect(x.shset, y.shset))::DOUBLE
-             / (len(x.shset) + len(y.shset) - len(list_intersect(x.shset, y.shset))),
-             6) AS jac
+ORACLE_DEDUP_MINHASH_LSH = rf"""
+WITH {_MH_CTES},
+{_MH_CAND_SQL}
+SELECT doc_a, doc_b, round({_jaccard_sql("x", "y")}, 6) AS jac
 FROM cand JOIN nonempty x ON x.doc_id = doc_a JOIN nonempty y ON y.doc_id = doc_b
-WHERE round(len(list_intersect(x.shset, y.shset))::DOUBLE
-      / (len(x.shset) + len(y.shset) - len(list_intersect(x.shset, y.shset))),
-      6) >= 0.2
+WHERE round({_jaccard_sql("x", "y")}, 6) >= 0.2
 ORDER BY doc_a, doc_b
 """
 
@@ -509,7 +514,7 @@ QUERIES = {
 ORACLE = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "dedup_jaccard_pairs": ORACLE_DEDUP_JACCARD_PAIRS,
-    "dedup_minhash_lsh": _oracle_minhash(),
+    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH_LSH,
     "dedup_simhash": ORACLE_DEDUP_SIMHASH,
 }
 
@@ -1356,7 +1361,7 @@ ORACLE["text_containment"] = ORACLE_TEXT_CONTAINMENT
 
 
 # --------------------------------------------------------------------------
-# dedup_minhash_est_eval — MinHash estimator quality as a query (round 7)
+# dedup_minhash_est_eval — MinHash estimator quality as a query
 # --------------------------------------------------------------------------
 
 
@@ -1380,33 +1385,7 @@ def q_dedup_minhash_est_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, no corpus-growing broadcast) plus one signature equi-join per
     pair side — signatures are one row per doc, joined on doc_id."""
     ex = cache_parallel(_exploded(spark, sf_dir))
-    sig = D.minhash_from_exploded(ex, "doc_id", _NUM_HASHES)
-    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(_NUM_HASHES)])
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    D.band_key(sig_arr, b, _ROWS_PER_BAND)
-                    for b in range(_NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    sig, cand = _minhash_cand(ex, _NUM_BANDS, _ROWS_PER_BAND)
     cand = track_cache(cand)
     k_agree = sum(
         (F.col(f"sa.mh_{i}") == F.col(f"sb.mh_{i}")).cast("int")
@@ -1437,36 +1416,19 @@ def q_dedup_minhash_est_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_minhash_est_eval() -> str:
-    sig_exprs, band_selects = _sig_band_sql()
-    agree = " + ".join(
-        f"(CASE WHEN x.mh_{i} = y.mh_{i} THEN 1 ELSE 0 END)"
-        for i in range(_NUM_HASHES)
-    )
-    return rf"""
-WITH sh AS ({_SH_SQL}),
-nonempty AS (SELECT * FROM sh WHERE len(shset) > 0),
-sig AS (
-  SELECT doc_id, shset,
-         {sig_exprs}
-  FROM nonempty
-),
-banded AS (
-{band_selects}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
+_MH_AGREE_SQL = " + ".join(
+    f"(CASE WHEN x.mh_{i} = y.mh_{i} THEN 1 ELSE 0 END)"
+    for i in range(_NUM_HASHES)
+)
+
+ORACLE_DEDUP_MINHASH_EST = rf"""
+WITH {_MH_CTES},
+{_MH_CAND_SQL},
 scored AS (
   SELECT doc_a, doc_b,
-         CAST({agree} AS BIGINT) AS k_agree,
-         CAST({agree} AS DOUBLE) / {_NUM_HASHES} AS jac_est,
-         CAST(len(list_intersect(x.shset, y.shset)) AS DOUBLE)
-           / (len(x.shset) + len(y.shset)
-              - len(list_intersect(x.shset, y.shset))) AS jac_exact
+         CAST({_MH_AGREE_SQL} AS BIGINT) AS k_agree,
+         CAST({_MH_AGREE_SQL} AS DOUBLE) / {_NUM_HASHES} AS jac_est,
+         {_jaccard_sql("x", "y")} AS jac_exact
   FROM cand JOIN sig x ON x.doc_id = doc_a JOIN sig y ON y.doc_id = doc_b
 )
 SELECT doc_a, doc_b, k_agree, jac_est, jac_exact,
@@ -1476,7 +1438,7 @@ FROM scored ORDER BY doc_a, doc_b
 
 
 QUERIES["dedup_minhash_est_eval"] = q_dedup_minhash_est_eval
-ORACLE["dedup_minhash_est_eval"] = _oracle_minhash_est_eval()
+ORACLE["dedup_minhash_est_eval"] = ORACLE_DEDUP_MINHASH_EST
 
 
 # --------------------------------------------------------------------------
@@ -1643,14 +1605,13 @@ ORACLE["dedup_exact_substring"] = ORACLE_DEDUP_EXACT_SUBSTRING
 
 # --------------------------------------------------------------------------
 # dedup_minhash_target + dedup_minhash_recall_eval — the recall contract on
-# the TEXT near-dup tier (round 11, VERDICT r10 #1)
+# the TEXT near-dup tier
 # --------------------------------------------------------------------------
 
 # Production text near-dup target: catch document pairs at Jaccard >=
 # _MH_TGT_JACCARD with probability >= _MH_TGT_RECALL. The fixed family
 # above (dedup_minhash_lsh, 12 hashes / 3 bands / 4 rows) has whatever
-# recall those constants happen to give at a given threshold — the same
-# constants-accident the RP embedding tier had before round 10. Here
+# recall those constants happen to give at a given threshold. Here
 # (bands, rows_per_band) are DERIVED from the target, exactly the
 # _lsh_cfg_rp_target pattern re-instantiated on Jaccard's S-curve
 # 1-(1-s^r)^b (band collision probability for a pair at Jaccard s is
@@ -1736,24 +1697,10 @@ def _lsh_cfg_minhash_target(
     per bit. The fixed family (``dedup_minhash_lsh``) keeps its pinned
     constants for callers without a contract.
 
-    Cost-sweep adjudication (round 11, MEASURED — the RP tier's
-    ``_lsh_cfg_rp_target`` bit sweep evaluated here and REJECTED):
-    actual candidate volume under the floor config is
-    true-pair-dominated, not background-dominated — 505 / 749 / 3,054 /
-    8,172 pairs at sf0.01/0.1/1/3 (DuckDB over the identical CTE chain)
-    vs the s_bg-model's BOUND of ~625k background pairs at sf1 — the
-    3-gram shingle space almost never hash-collides non-duplicates at
-    r >= 2, so the model's background term prices a worst case the data
-    never realizes. Deeper rows cut nothing (sf0.1 candidates at
-    floor/floor+1/floor+2: 749 / 746 / 747) while raising signature
-    hash work 1.7-2.5x — the OPPOSITE trade of the RP tier, whose
-    per-unit background decay is 1/2 per bit against 1/10 per row here
-    and whose keygen is one batched matmul rather than per-shingle
-    hashing. The floor config IS the measured optimum at every tested
-    scale; a sweep would re-derive it while paying pow() sweeps on both
-    engines for nothing. Re-adjudicate if a corpus with genuinely dense
-    shingle overlap (effective background Jaccard near s_bg) shows
-    candidate volume tracking the bound."""
+    No cost sweep over rows_per_band (unlike ``_lsh_cfg_rp_target``):
+    measured candidate volume under the floor config is dominated by
+    true pairs, and deeper rows cut nothing while raising signature hash
+    work (BASELINE.md "One LSH candidate layer")."""
     import math
 
     from jp_qcew_spark.queries.similarity import _qgrid
@@ -1910,34 +1857,19 @@ banded AS (
   FROM sig CROSS JOIN cfg
   GROUP BY doc_id, i // cfg.rpb
 ),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-)"""
+{_MH_CAND_SQL}"""
 
 
 def _mh_target_banding(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, int]:
-    """Shared Spark chain for the targeted tier: (exploded shingles of
-    the augmented corpus, DISTINCT same-band candidate pairs) under the
-    derived (bands, rows_per_band). Same plan family as
-    ``dedup_minhash_lsh`` — exploded-shingle min-agg signatures (one
-    shuffle on doc_id, map-side partial agg), posexploded band keys,
-    keyed band-bucket self-join (only docs sharing a bucket meet), pair
-    DISTINCT before any verify — just with the config derived from the
-    contract instead of pinned. n comes from parquet footers — read
-    ONCE here and threaded to the fixture and both callers, so the
-    whole tier costs one footer read and zero pre-query jobs (VERDICT
-    r10 #6). Returns (ex, cand, bands, rpb) so callers reuse the
-    derived config instead of re-deriving it."""
-    from jp_qcew_spark.io import metadata_row_count
-
+    """(ex, cand, bands, rpb) of the targeted tier: the exploded
+    shingles of the augmented corpus and their DISTINCT same-band pairs
+    (``_minhash_cand``, scope-cached) under the (bands, rows_per_band)
+    derived from the target. n is read once from the parquet footers and
+    threaded to the fixture, so the tier runs no pre-query job."""
     n = metadata_row_count(spark, sf_dir, "documents")
     bands, rpb = _lsh_cfg_minhash_target(n)
-    num_hashes = bands * rpb
     ex = cache_parallel(
         D.exploded_shingles(
             widen_scan(_aug_docs(spark, sf_dir, n_raw=n)),
@@ -1945,31 +1877,7 @@ def _mh_target_banding(
             "text",
         )
     )
-    sig = D.minhash_from_exploded(ex, "doc_id", num_hashes)
-    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[D.band_key(sig_arr, b, rpb) for b in range(bands)]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+    _sig, cand = _minhash_cand(ex, bands, rpb)
     return ex, track_cache(cand), bands, rpb
 
 
@@ -1993,8 +1901,7 @@ def q_dedup_minhash_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join shuffles on (band_idx, band_key) so only same-bucket docs
     meet, survivors are Jaccard-verified over the semi-join-narrowed
     shingle sets, and NO broadcast hint sits on any corpus-growing side
-    (the r1/r2 dedup rule). Cites the fixed family at
-    queries/dedup.py:140 for the shared machinery."""
+    (``_minhash_cand``, shared with the fixed family)."""
     ex, cand, _bands, _rpb = _mh_target_banding(spark, sf_dir)
     return (
         _jaccard_verify(ex, cand)
@@ -2008,16 +1915,11 @@ def q_dedup_minhash_target(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_MINHASH_TARGET = f"""
 WITH {_MH_TGT_CTES}
-SELECT doc_a, doc_b,
-       round(len(list_intersect(x.shset, y.shset))::DOUBLE
-             / (len(x.shset) + len(y.shset)
-                - len(list_intersect(x.shset, y.shset))), 6) AS jac
+SELECT doc_a, doc_b, round({_jaccard_sql("x", "y")}, 6) AS jac
 FROM cand
 JOIN nonempty x ON x.doc_id = doc_a
 JOIN nonempty y ON y.doc_id = doc_b
-WHERE round(len(list_intersect(x.shset, y.shset))::DOUBLE
-      / (len(x.shset) + len(y.shset)
-         - len(list_intersect(x.shset, y.shset))), 6) >= {_MH_TGT_JACCARD}
+WHERE round({_jaccard_sql("x", "y")}, 6) >= {_MH_TGT_JACCARD}
 ORDER BY doc_a, doc_b
 """
 
@@ -2063,15 +1965,9 @@ def q_dedup_minhash_recall_eval(
 ORACLE_DEDUP_MINHASH_RECALL = f"""
 WITH {_MH_TGT_CTES},
 truth AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         len(list_intersect(a.shset, b.shset))::DOUBLE
-           / (len(a.shset) + len(b.shset)
-              - len(list_intersect(a.shset, b.shset))) AS jac
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {_jaccard_sql("a", "b")} AS jac
   FROM nonempty a JOIN nonempty b ON a.doc_id < b.doc_id
-  WHERE a.doc_id < {_DOC_EVAL_SLICE}
-    AND len(list_intersect(a.shset, b.shset))::DOUBLE
-          / (len(a.shset) + len(b.shset)
-             - len(list_intersect(a.shset, b.shset))) >= 0.2
+  WHERE a.doc_id < {_DOC_EVAL_SLICE} AND {_jaccard_sql("a", "b")} >= 0.2
 ),
 {_binned_recall_sql("rec", "truth", "jac", _MH_EVAL_EDGES, {"hit": "cand"},
                     ["doc_a", "doc_b"])}

@@ -3,19 +3,24 @@
 ``knn_bruteforce`` is the exact baseline; ``knn_signlsh`` is the bucketed
 scale path; ``knn_classify`` composes top-k with majority-vote labeling.
 
-LSH width policy (rounds 8-9): EVERY sign-LSH bucketing in this module
+LSH width policy: EVERY sign-LSH bucketing in this module
 derives its width from the corpus (expected band-bucket occupancy ~16;
 fixed width is quadratic candidate growth for self-joins and linear
 per-query candidate growth for serving). Two tiers:
 
 - corpus SELF-joins (``dedup_embedding_cos``, ``knn_graph_mutual`` and its
-  consumers) use the MULTI-BAND generator ``_banded_cand`` / ``_lsh_cfg``
-  (round 9): b bands × r disjoint coordinate planes, r clamped [4, 32],
+  consumers) use the MULTI-BAND generator ``_banded_cand`` / ``_lsh_cfg``:
+  b bands × r disjoint coordinate planes, r clamped [4, 32],
   b = min(4, 64//r) — the occupancy rule holds to ~69 B vectors and the
   bands buy back the recall the wider key costs (1-(1-p^r)^b);
 - serving-side single-band primitives (``knn_signlsh``, ``knn_multiprobe``)
-  and ``semdedup_lsh``'s window partitioning keep ``_lsh_bits`` (clamped
-  [4, 16]); ``knn_lsh_banded`` is the banded serving path.
+  and ``semdedup_lsh``'s window partitioning keep ``_sign_buckets``
+  (``_lsh_bits``, clamped [4, 16]); ``knn_lsh_banded`` is the banded
+  serving path.
+
+Every candidate self-join goes through ``ext.dedup.band_pairs`` (twin
+``queries.dedup._band_pairs_sql``) and every oracle cosine through
+``_cos_sql``.
 
 Recall is measured, not assumed: ``knn_recall_eval`` scores both the
 single-band and the banded index against the brute-force ground truth.
@@ -31,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jp_qcew_spark.ext import similarity as S
+from jp_qcew_spark.ext.dedup import band_pairs
 from jp_qcew_spark.io import (
     cache_parallel,
     current_scope,
@@ -44,17 +50,32 @@ from jp_qcew_spark.io import (
 from jp_qcew_spark.io import reset_trained_artifacts as reset_trained_memo
 from jp_qcew_spark.io import trained_artifact as _trained
 from jp_qcew_spark.queries.dedup import (
+    _band_pairs_sql,
     _binned_recall,
     _binned_recall_sql,
     _components_sql,
 )
 
 _N_QUERIES = 10
-_COS_SQL = (
-    "round(list_sum(list_transform(list_zip(q.v, c.v), x -> x[1] * x[2]))"
-    " / (sqrt(list_sum(list_transform(list_zip(q.v, q.v), x -> x[1] * x[2])))"
-    " * sqrt(list_sum(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2])))), 6)"
-)
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB cosine between two DOUBLE[] expressions, rounded to 6 dp:
+    the twin of ``ext.similarity.cosine``, and the one cosine spelling of
+    every oracle here."""
+    return (
+        f"round(list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))"
+        f" / (sqrt(list_sum(list_transform(list_zip({a}, {a}), x -> x[1] * x[2])))"
+        f" * sqrt(list_sum(list_transform(list_zip({b}, {b}), x -> x[1] * x[2])))), 6)"
+    )
+
+
+def _sign_sql(n: int) -> str:
+    """DuckDB '1'/'0' string of the signs of the first ``n`` coordinates
+    of ``v`` (the ``ext.similarity.sign_bucket`` twin)."""
+    return " || ".join(
+        f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, n + 1)
+    )
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,17 +106,6 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (imported above as ``_trained``); see the design note there.
 # ``reset_trained_memo`` is the testing hook plan tests use to pin the
 # COLD (training) build.
-
-
-def _cos_sql(a: str, b: str) -> str:
-    """DuckDB cosine between two named DOUBLE[] columns, rounded to 6 dp
-    (the ``ext.similarity.cosine`` twin) — ``_COS_SQL`` generalized to
-    arbitrary table aliases for CTE chains whose sides are not q/c."""
-    return (
-        f"round(list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))"
-        f" / (sqrt(list_sum(list_transform(list_zip({a}, {a}), x -> x[1] * x[2])))"
-        f" * sqrt(list_sum(list_transform(list_zip({b}, {b}), x -> x[1] * x[2])))), 6)"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -332,32 +342,49 @@ WITH vecs AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v FROM vecs WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-         {_COS_SQL} AS score
+         {_cos_sql("q.v", "c.v")} AS score
   FROM q JOIN vecs c ON c.vec_id <> q.query_id
 ),
 {_served_sql("scored", k=5)}
 """
 
 
-def _knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed top-3 neighbors: candidates limited to the query's
-    sign-bit bucket — the sub-quadratic ANN plan (bucket join replaces the
-    full cross product).
-
-    The bucket width is corpus-adaptive (``_lsh_bits``, round 8 — the same
-    growth rule every corpus-sized LSH plan in this file uses): at fixed
-    width the per-query candidate set is n/2^bits, i.e. LINEAR in corpus —
-    a latency cliff at 100×, even though the serving side is bounded.
-    Holding expected occupancy ~16 keeps per-query work constant; the
-    recall cost of narrower buckets is measured, not assumed —
-    ``knn_recall_eval`` composes this query against the brute-force ground
-    truth, and ``knn_multiprobe`` is the dial that buys recall back at
-    +log(n) probes. Oracle derives the identical width via a scalar
-    subquery."""
+def _sign_buckets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(vecs, bits): ``_vecs`` with its single-band ``bucket``, the signs
+    of the first ``bits`` coordinates (``sign_bucket``), ``bits`` =
+    ``_lsh_bits`` of the footer row count. ``_SIGN_VECS_SQL`` is its
+    DuckDB twin."""
     bits = _lsh_bits(metadata_row_count(spark, sf_dir, "embeddings"))
     vecs = _vecs(spark, sf_dir).withColumn(
         "bucket", S.sign_bucket(F.col("v"), bits)
     )
+    return vecs, bits
+
+
+# vecs(vec_id, label, v, bucket) with the width ``nb.bits`` derived by the
+# ``_lsh_bits`` rule over the corpus count.
+_SIGN_VECS_SQL = f"""raw AS (
+  SELECT vec_id, label, embedding::DOUBLE[] AS v, {_sign_sql(16)} AS sig
+  FROM embeddings
+),
+nb AS (
+  SELECT LEAST(16, GREATEST(4,
+           CAST(ceil(log2(count(*) / 16.0)) AS INT))) AS bits
+  FROM embeddings
+),
+vecs AS (
+  SELECT vec_id, label, v, substr(sig, 1, (SELECT bits FROM nb)) AS bucket
+  FROM raw
+)"""
+
+
+def _knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed top-3 neighbors: candidates limited to the query's
+    single-band sign bucket (``_sign_buckets``), a bucket join instead of
+    the full cross product. The width grows with the corpus, so
+    per-query work stays constant; ``knn_recall_eval`` measures the recall
+    this costs and ``knn_multiprobe`` buys it back."""
+    vecs, _bits = _sign_buckets(spark, sf_dir)
     q = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -388,29 +415,13 @@ def q_knn_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_result(_knn_signlsh(spark, sf_dir), "query_id", "rank")
 
 
-def _oracle_signlsh() -> str:
-    sig16 = " || ".join(
-        f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, 17)
-    )
-    return f"""
-WITH raw AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v, {sig16} AS sig
-  FROM embeddings
-),
-nb AS (
-  SELECT LEAST(16, GREATEST(4,
-           CAST(ceil(log2(count(*) / 16.0)) AS INT))) AS bits
-  FROM embeddings
-),
-vecs AS (
-  SELECT vec_id, label, v, substr(sig, 1, (SELECT bits FROM nb)) AS bucket
-  FROM raw
-),
+ORACLE_KNN_SIGNLSH = f"""
+WITH {_SIGN_VECS_SQL},
 q AS (SELECT vec_id AS query_id, v, bucket AS qbucket FROM vecs
       WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-         {_COS_SQL} AS score
+         {_cos_sql("q.v", "c.v")} AS score
   FROM q JOIN vecs c ON c.bucket = q.qbucket AND c.vec_id <> q.query_id
 ),
 {_served_sql("scored")}
@@ -468,7 +479,7 @@ q AS (SELECT vec_id AS query_id, label AS true_label, v FROM vecs
       WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.query_id, q.true_label, c.label AS nb_label, c.vec_id AS neighbor_id,
-         {_COS_SQL} AS score
+         {_cos_sql("q.v", "c.v")} AS score
   FROM q JOIN vecs c ON c.vec_id <> q.query_id
 ), ranked AS (
   SELECT *, row_number() OVER (
@@ -681,10 +692,7 @@ q AS (SELECT vec_id AS query_id, v AS qv, cell AS qcell FROM assigned
       WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-         round(list_sum(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]))
-           / (sqrt(list_sum(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2])))
-            * sqrt(list_sum(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2])))), 6)
-           AS score
+         {_cos_sql("q.qv", "c.v")} AS score
   FROM q JOIN assigned c ON c.cell = q.qcell AND c.vec_id <> q.query_id
 ),
 {_served_sql("scored")}
@@ -700,7 +708,7 @@ def _lsh_bits(n: int) -> int:
     of ``semdedup_lsh``. Corpus SELF-joins use ``_lsh_cfg`` instead: the
     16-bit clamp saturates at n ≈ 16·2¹⁶ ≈ 1M vectors, past which a
     single band's per-bucket pairs grow quadratically again — the banded
-    generator lifts that ceiling (VERDICT r8 #1)."""
+    generator lifts that ceiling."""
     import math
 
     return min(16, max(4, math.ceil(math.log2(max(n, 1) / 16.0))))
@@ -736,7 +744,7 @@ def _lsh_cfg(n: int) -> tuple[int, int]:
 # otherwise silently derive different band keys (Spark generating the
 # full-width signature, the oracle a truncated one) and the driver's
 # hash compare would read as a correctness bug instead of a harness
-# ceiling (ADVICE r9).
+# ceiling.
 _RP_ORACLE_PLANES = 128
 
 
@@ -773,11 +781,10 @@ def _banded_cand(
     """Shared banded candidate generator for the corpus self-join family:
     returns (vecs, cand) where ``vecs`` is the scope-cached vector frame
     (vec_id, v, nrm) and ``cand`` the DISTINCT same-band pairs
-    (id_a < id_b). The ``dedup_minhash_lsh`` banding pattern on the
-    embedding tier: posexplode the per-vector band keys, self-join on
-    (band, key) — a keyed shuffle join, both sides corpus-sized, NO
-    broadcast (the r1/r2 dedup rule) — then dedupe the pair ids BEFORE
-    any scoring so a pair colliding in several bands is scored once.
+    (id_a < id_b, ``ext.dedup.band_pairs`` over the posexploded band
+    keys: a keyed shuffle join, both sides corpus-sized, NO broadcast),
+    deduped BEFORE any scoring so a pair colliding in several bands is
+    scored once.
     Candidate volume is ≤ bands × (occupancy-bounded single-band count),
     i.e. still ~linear in n; the vectors never ride through the banded
     join — scoring joins them back by vec_id against the cached frame.
@@ -805,10 +812,8 @@ def _banded_cand(
         )
     )
     # scope-cached so the band keys are computed ONCE: Spark does not
-    # reuse the exchange across the self-join's two sides (measured: the
-    # keygen projection ran twice in the executed plan), and for the RP
+    # reuse the exchange across the self-join's two sides, and for the RP
     # tier each run is a real Arrow matmul pass, not a free projection.
-    # 4 small rows per vector — negligible next to the cached vectors.
     banded = track_cache(
         vecs.select(
             "vec_id",
@@ -817,22 +822,7 @@ def _banded_cand(
             ),
         )
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    return vecs, cand
+    return vecs, band_pairs(banded, "vec_id", "id_a", "id_b")
 
 
 def _scored_pairs(vecs: DataFrame, cand: DataFrame, out: str) -> DataFrame:
@@ -862,20 +852,13 @@ def _dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates from a MULTI-BAND sign-LSH self-join (a pair is scored iff it
     collides in ≥1 band), verified at cosine ≥ 0.3.
 
-    Round 9 replaces the single-band bucket join with the banded generator
-    (``_banded_cand`` — the ``dedup_minhash_lsh`` pattern on the embedding
-    tier, VERDICT r8 #1). Two scale facts, both corpus-adaptive
-    (``_lsh_cfg``; the oracle re-derives the identical config by scalar
-    subquery): (1) per-band width keeps expected band-bucket occupancy ~16
-    — round 3's 10× study caught a constant-bucket form at 29× wall for
-    10× data, and the single-band 16-bit clamp merely deferred that
-    quadratic to n ≈ 1M; the banded clamp (32 bits × disjoint planes)
-    holds the occupancy rule to ~69 B vectors. (2) bands buy back the
-    recall the wider key costs — P(candidate) = 1-(1-p^r)^b — so lifting
-    the width clamp no longer trades silent recall loss for speed;
-    ``knn_recall_eval`` measures the banded recall directly. Candidates
-    are ≤ bands× the single-band volume (a constant), deduped before the
-    verify joins so each surviving pair folds one cosine."""
+    Candidates come from ``_banded_cand`` under ``_lsh_cfg`` (the oracle
+    re-derives the config by scalar subquery): per-band width keeps
+    expected band-bucket occupancy ~16 up to ~69 B vectors, and the bands
+    buy back the recall the wider key costs, P(candidate) = 1-(1-p^r)^b
+    (measured by ``dedup_recall_eval``). Candidates are ≤ bands× the
+    single-band volume, deduped before the verify joins so each surviving
+    pair folds one cosine."""
     vecs, cand = _banded_cand(spark, sf_dir)
     return (
         _scored_pairs(vecs, cand, "cos_sim")
@@ -889,17 +872,14 @@ def q_dedup_embedding_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_result(_dedup_embedding_cos(spark, sf_dir), "id_a", "id_b")
 
 
-_SIG64 = " || ".join(
-    f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, 65)
-)
-
-# CTE chain ending in cand(id_a, id_b) — the oracle twin of _banded_cand.
+# CTE chain ending in cand(id_a, id_b), the oracle twin of _banded_cand:
 # cfg derives (bits, bands) from the corpus count exactly as _lsh_cfg;
 # band k of a vector is substr(sig, k*bits+1, bits) over the 64-char
 # coordinate-sign string; the fixed range(0, 4) × "k < bands" filter keeps
 # the band fan-out in the portable subset (bands ≤ 4 by construction).
+_VEC_CAND_SQL = _band_pairs_sql("banded", "vec_id", "id_a", "id_b")
 _BANDED_CAND_CTES = f"""raw AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, {_SIG64} AS sig FROM embeddings
+  SELECT vec_id, embedding::DOUBLE[] AS v, {_sign_sql(64)} AS sig FROM embeddings
 ),
 cfg AS (
   SELECT bits, LEAST(4, 64 // bits) AS bands FROM (
@@ -910,33 +890,28 @@ cfg AS (
 banded AS (
   SELECT vec_id, k AS band_idx,
          substr(sig, CAST(k * (SELECT bits FROM cfg) + 1 AS INT),
-                (SELECT bits FROM cfg)) AS bkt
+                (SELECT bits FROM cfg)) AS band_key
   FROM raw CROSS JOIN range(0, 4) t(k)
   WHERE k < (SELECT bands FROM cfg)
 ),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.bkt = b.bkt
-   AND a.vec_id < b.vec_id
-)"""
-
-_PAIR_COS_SQL = (
-    "round(list_sum(list_transform(list_zip(a.v, b.v), x -> x[1] * x[2]))"
-    " / (sqrt(list_sum(list_transform(list_zip(a.v, a.v), x -> x[1] * x[2])))"
-    " * sqrt(list_sum(list_transform(list_zip(b.v, b.v), x -> x[1] * x[2])))), 6)"
-)
+{_VEC_CAND_SQL}"""
 
 
-def _oracle_dedup_embedding() -> str:
-    return f"""
-WITH {_BANDED_CAND_CTES}
-SELECT c.id_a, c.id_b, {_PAIR_COS_SQL} AS cos_sim
+def _pair_cos_sql(src: str, threshold: float) -> str:
+    """(id_a, id_b, cos_sim) of the ``cand`` pairs scored against the
+    vectors of ``src`` (vec_id, v), kept at cosine >= ``threshold``, in
+    pair order: the oracle tail of ``_scored_pairs`` plus its filter."""
+    return f"""SELECT c.id_a, c.id_b, {_cos_sql("a.v", "b.v")} AS cos_sim
 FROM cand c
-JOIN raw a ON a.vec_id = c.id_a
-JOIN raw b ON b.vec_id = c.id_b
-WHERE {_PAIR_COS_SQL} >= 0.3
-ORDER BY id_a, id_b
+JOIN {src} a ON a.vec_id = c.id_a
+JOIN {src} b ON b.vec_id = c.id_b
+WHERE {_cos_sql("a.v", "b.v")} >= {threshold}
+ORDER BY id_a, id_b"""
+
+
+ORACLE_DEDUP_EMBEDDING = f"""
+WITH {_BANDED_CAND_CTES}
+{_pair_cos_sql("raw", 0.3)}
 """
 
 
@@ -950,10 +925,10 @@ QUERIES = {
 
 ORACLE = {
     "knn_bruteforce": ORACLE_KNN_BRUTEFORCE,
-    "knn_signlsh": _oracle_signlsh(),
+    "knn_signlsh": ORACLE_KNN_SIGNLSH,
     "knn_classify": ORACLE_KNN_CLASSIFY,
     "knn_ivf": ORACLE_KNN_IVF,
-    "dedup_embedding_cos": _oracle_dedup_embedding(),
+    "dedup_embedding_cos": ORACLE_DEDUP_EMBEDDING,
 }
 
 
@@ -1089,7 +1064,7 @@ vecs AS (
 q AS (SELECT vec_id AS query_id, v FROM vecs WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-         {_COS_SQL} AS score
+         {_cos_sql("q.v", "c.v")} AS score
   FROM q JOIN vecs c ON c.vec_id <> q.query_id
 ),
 {_served_sql("scored")}
@@ -1106,17 +1081,11 @@ def q_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     far better recall than single-probe). Probes explode to (query, bucket)
     rows, so candidate generation stays an equi-join on the bucket key.
 
-    Width is corpus-adaptive (``_lsh_bits``, round 8 — see ``knn_signlsh``):
-    per-probe candidates stay ~constant as the corpus grows, and the probe
-    count grows only as log₂(n/16)+1 — the multi-probe structure is exactly
-    what makes adaptive width safe for recall (each extra bit that halves a
-    bucket also adds one more probe). Oracle derives the identical width via
-    a scalar subquery and generates the flips with a range()-join bounded by
-    the max clamp (16)."""
-    n_planes = _lsh_bits(metadata_row_count(spark, sf_dir, "embeddings"))
-    vecs = _vecs(spark, sf_dir).withColumn(
-        "bucket", S.sign_bucket(F.col("v"), n_planes)
-    )
+    Width is the single-band ``_sign_buckets`` width, so per-probe
+    candidates stay ~constant as the corpus grows while the probe count
+    grows as log2(n/16)+1. The oracle generates the flips with a
+    range()-join bounded by the max clamp (16)."""
+    vecs, n_planes = _sign_buckets(spark, sf_dir)
     base = vecs.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1155,24 +1124,11 @@ def q_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_multiprobe() -> str:
-    sig16 = " || ".join(
-        f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, 17)
-    )
     # flips generated relationally (range() bounded by the max clamp, then
     # filtered to the derived width) because the width is a scalar subquery,
     # not a Python literal; i = 0 is the unflipped home bucket.
     return f"""
-WITH raw AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, {sig16} AS sig FROM embeddings
-),
-nb AS (
-  SELECT LEAST(16, GREATEST(4,
-           CAST(ceil(log2(count(*) / 16.0)) AS INT))) AS bits
-  FROM embeddings
-),
-vecs AS (
-  SELECT vec_id, v, substr(sig, 1, (SELECT bits FROM nb)) AS bucket FROM raw
-),
+WITH {_SIGN_VECS_SQL},
 base AS (
   SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM vecs
   WHERE vec_id < {_N_QUERIES}
@@ -1190,10 +1146,7 @@ probes AS (
 ),
 scored AS (
   SELECT p.query_id, c.vec_id AS neighbor_id,
-         round(list_sum(list_transform(list_zip(p.qv, c.v), x -> x[1] * x[2]))
-           / (sqrt(list_sum(list_transform(list_zip(p.qv, p.qv), x -> x[1] * x[2])))
-            * sqrt(list_sum(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2])))), 6)
-           AS score
+         {_cos_sql("p.qv", "c.v")} AS score
   FROM probes p JOIN vecs c
     ON c.bucket = p.probe_bucket AND c.vec_id <> p.query_id
 ),
@@ -1442,15 +1395,7 @@ def q_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: bucket occupancy is held ~constant by the bit-growth rule, so
     window partitions stay bounded; everything is JVM codegen (fold-based
     cosine), zero UDFs, zero broadcasts."""
-    # config scalar from parquet FOOTER metadata (io.metadata_row_count):
-    # zero pre-query jobs — counting the widened _vecs frame would pay the
-    # widen exchange + the float->double transform for a number the file
-    # footers already carry (r5 tail audit: 1.6 -> ~1.0 s; r11 kills the
-    # remaining count job too)
-    bits = _lsh_bits(metadata_row_count(spark, sf_dir, "embeddings"))
-    vecs = _vecs(spark, sf_dir).withColumn(
-        "bucket", S.sign_bucket(F.col("v"), bits)
-    )
+    vecs, _bits = _sign_buckets(spark, sf_dir)
     w = Window.partitionBy("bucket")
     rep = F.min(F.struct(F.col("vec_id"), F.col("v"))).over(w)
     scored = vecs.select(
@@ -1480,29 +1425,14 @@ def q_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_semdedup_lsh() -> str:
-    sig16 = " || ".join(
-        f"CASE WHEN v[{i}] >= 0 THEN '1' ELSE '0' END" for i in range(1, 17)
-    )
-    cos = (
-        "round(list_sum(list_transform(list_zip(m.v, rv.v), x -> x[1] * x[2]))"
-        " / (sqrt(list_sum(list_transform(list_zip(m.v, m.v), x -> x[1] * x[2])))"
-        " * sqrt(list_sum(list_transform(list_zip(rv.v, rv.v), x -> x[1] * x[2])))), 6)"
-    )
     return f"""
-WITH raw AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v, {sig16} AS sig FROM embeddings
-), nb AS (
-  SELECT LEAST(16, GREATEST(4,
-           CAST(ceil(log2(count(*) / 16.0)) AS INT))) AS bits
-  FROM embeddings
-), vecs AS (
-  SELECT vec_id, label, v, substr(sig, 1, (SELECT bits FROM nb)) AS bucket
-  FROM raw
-), rep AS (
+WITH {_SIGN_VECS_SQL},
+rep AS (
   SELECT bucket, min(vec_id) AS rep_id FROM vecs GROUP BY 1
 ), scored AS (
   SELECT m.label, m.vec_id, r.rep_id,
-         CASE WHEN m.vec_id = r.rep_id THEN NULL ELSE {cos} END AS cos_to_rep
+         CASE WHEN m.vec_id = r.rep_id THEN NULL
+              ELSE {_cos_sql("m.v", "rv.v")} END AS cos_to_rep
   FROM vecs m
   JOIN rep r USING (bucket)
   JOIN vecs rv ON rv.vec_id = r.rep_id
@@ -2174,7 +2104,7 @@ ORACLE["embedding_quantize_int8"] = ORACLE_EMB_QUANT_INT8
 
 
 # --------------------------------------------------------------------------
-# knn_lsh_banded — multi-band serving-side ANN (round 9)
+# knn_lsh_banded — multi-band serving-side ANN
 # --------------------------------------------------------------------------
 
 
@@ -2296,28 +2226,32 @@ def _banded_topk(
     )
 
 
-def _oracle_knn_banded() -> str:
-    return f"""
-WITH {_BANDED_CAND_CTES},
-qc AS (
+# qscored(query_id, neighbor_id, score): each query's DISTINCT any-band
+# neighbors over ``banded``, scored once against ``raw`` — the oracle of
+# ``_banded_topk``'s candidate and scoring steps.
+_QPROBE_SQL = f"""qc AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM banded q JOIN banded c
-    ON c.band_idx = q.band_idx AND c.bkt = q.bkt
+    ON c.band_idx = q.band_idx AND c.band_key = q.band_key
    AND c.vec_id <> q.vec_id
   WHERE q.vec_id < {_N_QUERIES}
 ),
 qscored AS (
-  SELECT qc.query_id, qc.neighbor_id, {_PAIR_COS_SQL} AS score
+  SELECT qc.query_id, qc.neighbor_id, {_cos_sql("a.v", "b.v")} AS score
   FROM qc
   JOIN raw a ON a.vec_id = qc.query_id
   JOIN raw b ON b.vec_id = qc.neighbor_id
-),
+)"""
+
+ORACLE_KNN_BANDED = f"""
+WITH {_BANDED_CAND_CTES},
+{_QPROBE_SQL},
 {_served_sql("qscored")}
 """
 
 
 QUERIES["knn_lsh_banded"] = q_knn_lsh_banded
-ORACLE["knn_lsh_banded"] = _oracle_knn_banded()
+ORACLE["knn_lsh_banded"] = ORACLE_KNN_BANDED
 
 
 # --------------------------------------------------------------------------
@@ -2365,8 +2299,8 @@ def q_knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_KNN_RECALL = f"""
 WITH bf AS ({ORACLE_KNN_BRUTEFORCE}),
-ann AS ({_oracle_signlsh()}),
-bnd AS ({_oracle_knn_banded()}),
+ann AS ({ORACLE_KNN_SIGNLSH}),
+bnd AS ({ORACLE_KNN_BANDED}),
 qs AS (SELECT DISTINCT query_id FROM bf),
 {_recall_sql("r1", "bf", "ann", "qs", ["query_id"], "recall_at_3", 3, 4,
              "n_hits")},
@@ -2455,7 +2389,7 @@ ORACLE["embedding_gram_matrix"] = ORACLE_EMBEDDING_GRAM
 
 
 # --------------------------------------------------------------------------
-# knn_graph_mutual — mutual-kNN graph construction (round 7)
+# knn_graph_mutual — mutual-kNN graph construction
 # --------------------------------------------------------------------------
 
 
@@ -2467,17 +2401,12 @@ def _mutual_edges(
     ``semdedup_mutual`` and ``graph_label_prop`` consume it as their
     clustering substrate.
 
-    Round 9: candidates come from the BANDED generator (``_banded_cand``,
-    VERDICT r8 #1) — each unordered pair is scored ONCE (cosine is
-    symmetric: products commute and the fold order is positional, so the
-    mirrored edge carries the bit-identical rounded score the oracle
-    computes for each direction independently), then mirrored into the
-    directed list the per-source top-3 window ranks.
-
-    Round 10: ``cfg``/``keyfn`` thread the plane tier through to the
-    candidate generator (VERDICT r9 #5), so the clustering family can
-    ride the unlimited-width RP planes (``semdedup_rp``) instead of the
-    64-plane coordinate budget. Default: coordinate tier, unchanged."""
+    Candidates come from ``_banded_cand`` (``cfg``/``keyfn`` select the
+    plane tier; default coordinate signs). Each unordered pair is scored
+    ONCE (cosine is symmetric: products commute and the fold order is
+    positional, so the mirrored edge carries the bit-identical rounded
+    score the oracle computes for each direction), then mirrored into the
+    directed list the per-source top-3 window ranks."""
     vecs, cand = _banded_cand(spark, sf_dir, cfg=cfg, keyfn=keyfn)
     pair = _scored_pairs(vecs, cand, "score")
     scored = pair.select(
@@ -2528,8 +2457,7 @@ def q_knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     join never drops a pair to a half-ulp.
 
     At 100 TB: candidates come from the BANDED corpus-adaptive generator
-    (round 9, ``_banded_cand`` — see ``dedup_embedding_cos`` for the full
-    adjudication): per-band occupancy ~16 holds to ~69 B vectors (the
+    (``_banded_cand``, see ``dedup_embedding_cos``): per-band occupancy ~16 holds to ~69 B vectors (the
     single-band clamp saturated at ~1M), and the extra bands buy back the
     recall a wider key costs, which matters doubly here because an edge
     must survive TWO top-3 memberships. The corpus count is one plan-time
@@ -2543,13 +2471,13 @@ def _mutual_edges_ctes(base: str | None = None) -> str:
     """CTE chain ending in ``mut(src, dst, score, rank_ab, rank_ba)`` with
     src < dst — the oracle twin of ``_mutual_edges``, shared by
     knn_graph_mutual, semdedup_mutual and graph_label_prop. Candidates
-    come from the shared banded CTEs (round 9); each unordered pair is
-    scored once and mirrored, exactly as the Spark side. ``base`` swaps
-    the candidate chain (must end in raw + cand) — the RP tier passes
-    ``_RP_CAND_CTES`` (round 10, semdedup_rp)."""
+    come from the shared banded CTEs; each unordered pair is scored once
+    and mirrored, exactly as the Spark side. ``base`` swaps the candidate
+    chain (must end in raw + cand): ``semdedup_rp`` passes
+    ``_RP_CAND_CTES``."""
     return f"""{base or _BANDED_CAND_CTES},
 pair AS (
-  SELECT c.id_a, c.id_b, {_PAIR_COS_SQL} AS score
+  SELECT c.id_a, c.id_b, {_cos_sql("a.v", "b.v")} AS score
   FROM cand c
   JOIN raw a ON a.vec_id = c.id_a
   JOIN raw b ON b.vec_id = c.id_b
@@ -2851,7 +2779,7 @@ ORACLE["sample_kcenter"] = _kc_oracle()
 
 
 # --------------------------------------------------------------------------
-# dedup_embedding_rp — random-hyperplane banded generator (round 9)
+# dedup_embedding_rp — random-hyperplane banded generator
 # --------------------------------------------------------------------------
 
 
@@ -2868,25 +2796,15 @@ def _dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band self-join, pair-distinct, verify joins, cosine ≥ 0.3.
 
     The weights are a PINNED PUBLIC derivation each engine owns
-    independently — Spark builds the ±1 matrix at plan-build time
+    independently: Spark builds the ±1 matrix at plan-build time
     (hashlib md5 parity) and runs ONE Arrow-batched int64 matmul per
     batch over ``RP_Q``-quantized vectors (exact integer dots, so the
-    matmul's summation order can't diverge from the oracle's sequential
-    BIGINT list_sum — the ``semdedup_mutual`` integer-quantization
-    device applied to projections); the oracle re-derives the same
-    weights in SQL (md5() + a one-hex-char parity test), so either side
-    drifting hash-fails the driver. Plane QUALITY is load-bearing, not
-    cosmetic: a first-cut affine-LCG bit sequence made the planes
-    linearly-correlated blocks of one low-dimensional sequence —
-    measured max band-bucket occupancy 1050 (vs 57 for md5) and 18.0M
-    candidate pairs (vs 0.56M) on the sf1 corpus, i.e. a
-    degenerate-bucket quadratic exactly where the banding was supposed
-    to prevent one (and two all-JVM dot forms — unrolled codegen chains
-    and interpreted HOF folds — both measured seconds-per-million-rows
-    of keygen; a dense projection is BLAS work). Candidates and joins
-    are unchanged from the coordinate tier. The oracle derives the
-    identical keys from a string_agg'd plane-sign string + the same
-    scalar-subquery width."""
+    matmul's summation order cannot diverge from the oracle's sequential
+    BIGINT list_sum); the oracle re-derives the same weights in SQL
+    (``_rp_sig_sql``), so either side drifting hash-fails the driver.
+    Plane quality is load-bearing: correlated planes collapse the corpus
+    into a few degenerate buckets and make the self-join quadratic
+    again."""
     vecs, cand = _banded_cand(
         spark, sf_dir, cfg=_lsh_cfg_rp, keyfn=S.rp_bands
     )
@@ -2902,17 +2820,39 @@ def q_dedup_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_result(_dedup_embedding_rp(spark, sf_dir), "id_a", "id_b")
 
 
-# The RP signature CTE chain, shared by the dedup generator and the
-# recall eval. The weights CTE derives every ±1 IN SQL (md5 parity on hex
-# digit 2 = bit 0 of byte 0 — ext.similarity.rp_weight's documented
-# twin), once per (plane, dim) rather than once per row. The dot runs on
-# floor(v·2²⁰)-quantized BIGINTs (ext.similarity.RP_Q): exact integer
-# arithmetic, so this sequential list_sum equals the Spark side's
-# batched int64 matmul by VALUE with no fold-order coupling. Plane
-# budget _RP_ORACLE_PLANES (bits ≤ 32 ⇒ n ≤ 16·2³²) is a test-harness
-# text cap, not an engine limit — and since round 10 the cfg RAISES
-# rather than letting the engines hash-diverge past it (ADVICE r9);
-# the WHERE prunes to the 4·bits planes actually used.
+def _rp_sig_sql(src: str, budget: int, planes: str) -> str:
+    """CTEs ``w``, ``dots``, ``sig(vec_id, s)``: the random-hyperplane
+    sign string of every vector of ``src`` (vec_id, v) over the planes
+    p < ``planes`` (a scalar SQL expression), enumerated under the fixed
+    range(0, ``budget``). Each ±1 weight is derived in SQL
+    (``ext.similarity.rp_weight``'s md5 parity twin), and each dot runs on
+    floor(v·``RP_Q``) BIGINTs, so it equals the Spark matmul by value."""
+    return f"""w AS (
+  SELECT p,
+         list_transform(range(0, 64), i ->
+           CASE WHEN instr('02468ace',
+                           substr(md5('rp:' || p || ':' || i), 2, 1)) > 0
+                THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS wv
+  FROM range(0, {budget}) t(p)
+  WHERE p < {planes}
+),
+dots AS (
+  SELECT r.vec_id, w.p,
+         list_sum(list_transform(range(1, 65),
+           i -> w.wv[i] * CAST(floor(r.v[i] * {S.RP_Q}) AS BIGINT)))
+           AS dot
+  FROM {src} r CROSS JOIN w
+),
+sig AS (
+  SELECT vec_id,
+         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END,
+                    '' ORDER BY p) AS s
+  FROM dots GROUP BY vec_id
+)"""
+
+
+# raw + the fixed 4-band RP banding under the _lsh_cfg_rp width (the
+# _RP_ORACLE_PLANES budget; the cfg raises past it).
 _RP_SIG_CTES = f"""raw AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -2920,63 +2860,24 @@ cfg AS (
   SELECT GREATEST(4, CAST(ceil(log2(count(*) / 16.0)) AS INT)) AS bits
   FROM embeddings
 ),
-w AS (
-  SELECT p,
-         list_transform(range(0, 64), i ->
-           CASE WHEN instr('02468ace',
-                           substr(md5('rp:' || p || ':' || i), 2, 1)) > 0
-                THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS wv
-  FROM range(0, {_RP_ORACLE_PLANES}) t(p)
-  WHERE p < 4 * (SELECT bits FROM cfg)
-),
-dots AS (
-  SELECT r.vec_id, w.p,
-         list_sum(list_transform(range(1, 65),
-           i -> w.wv[i] * CAST(floor(r.v[i] * {S.RP_Q}) AS BIGINT)))
-           AS dot
-  FROM raw r CROSS JOIN w
-),
-sig AS (
-  SELECT vec_id,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END,
-                    '' ORDER BY p) AS s
-  FROM dots GROUP BY vec_id
-),
+{_rp_sig_sql("raw", _RP_ORACLE_PLANES, "4 * (SELECT bits FROM cfg)")},
 banded AS (
   SELECT vec_id, k AS band_idx,
          substr(s, CAST(k * (SELECT bits FROM cfg) + 1 AS INT),
-                (SELECT bits FROM cfg)) AS bkt
+                (SELECT bits FROM cfg)) AS band_key
   FROM sig CROSS JOIN range(0, 4) t(k)
 )"""
-
-
-# Candidate chain for the RP tier (sig CTEs + the same-band pair
-# DISTINCT) — the RP twin of _BANDED_CAND_CTES, reusable wherever a
-# consumer needs raw + cand on the unlimited-plane substrate
-# (dedup_embedding_rp, and the round-10 semdedup_rp mutual chain).
 _RP_CAND_CTES = f"""{_RP_SIG_CTES},
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.bkt = b.bkt
-   AND a.vec_id < b.vec_id
-)"""
+{_VEC_CAND_SQL}"""
 
-
-def _oracle_dedup_rp() -> str:
-    return f"""
+ORACLE_DEDUP_RP = f"""
 WITH {_RP_CAND_CTES}
-SELECT c.id_a, c.id_b, {_PAIR_COS_SQL} AS cos_sim
-FROM cand c
-JOIN raw a ON a.vec_id = c.id_a
-JOIN raw b ON b.vec_id = c.id_b
-WHERE {_PAIR_COS_SQL} >= 0.3
-ORDER BY id_a, id_b
+{_pair_cos_sql("raw", 0.3)}
 """
 
 
 QUERIES["dedup_embedding_rp"] = q_dedup_embedding_rp
-ORACLE["dedup_embedding_rp"] = _oracle_dedup_rp()
+ORACLE["dedup_embedding_rp"] = ORACLE_DEDUP_RP
 
 
 # --------------------------------------------------------------------------
@@ -3028,19 +2929,7 @@ def q_knn_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_KNN_RECALL_RP = f"""
 WITH bf AS ({ORACLE_KNN_BRUTEFORCE}),
 {_RP_SIG_CTES},
-qc AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM banded q JOIN banded c
-    ON c.band_idx = q.band_idx AND c.bkt = q.bkt
-   AND c.vec_id <> q.vec_id
-  WHERE q.vec_id < {_N_QUERIES}
-),
-qscored AS (
-  SELECT qc.query_id, qc.neighbor_id, {_PAIR_COS_SQL} AS score
-  FROM qc
-  JOIN raw a ON a.vec_id = qc.query_id
-  JOIN raw b ON b.vec_id = qc.neighbor_id
-),
+{_QPROBE_SQL},
 {_topk_sql("rp", "qscored", ["query_id"], "score DESC", 3)},
 qs AS (SELECT DISTINCT query_id FROM bf),
 {_recall_sql("rec", "bf", "rp", "qs", ["query_id"], "recall_rp_at_3", 3, 4,
@@ -3065,6 +2954,41 @@ _EVAL_EDGES = (0.9, 0.7, 0.5, 0.3)  # dedup_recall_eval's cosine bins
 _TGT_EVAL_EDGES = (0.8, 0.65, 0.5, 0.3)  # dedup_recall_target_eval's bins
 
 
+def _slice_truth(spark: SparkSession, vecs: DataFrame, cos: Column) -> DataFrame:
+    """(id_a, id_b, cs) true pairs of the eval slice: id_a below
+    ``_EVAL_SLICE``, id_a < id_b, cosine ``cs`` >= 0.3. Every column c of
+    ``vecs`` but vec_id becomes c_a and c_b on the two sides; ``cos`` is
+    the cosine over them. The bounded slice is broadcast against the
+    corpus (|slice| x n, never n²). The corpus side is repartitioned
+    before the join: the join folds |slice| cosines per corpus row, and a
+    one-split embeddings file would otherwise put that whole pass on one
+    core. ``_slice_truth_sql`` is its DuckDB twin."""
+    cols = [c for c in vecs.columns if c != "vec_id"]
+    a = vecs.filter(F.col("vec_id") < _EVAL_SLICE).select(
+        F.col("vec_id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
+    )
+    b = vecs.select(
+        F.col("vec_id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
+    ).repartition(spark.sparkContext.defaultParallelism, "id_b")
+    return (
+        F.broadcast(a)
+        .join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cos.alias("cs"))
+        .filter(F.col("cs") >= 0.3)
+    )
+
+
+def _slice_truth_sql(src: str) -> str:
+    """CTE ``truth(id_a, id_b, cs)``: ``_slice_truth`` over the vectors of
+    ``src`` (vec_id, v), in DuckDB."""
+    cos = _cos_sql("a.v", "b.v")
+    return f"""truth AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cs
+  FROM {src} a JOIN {src} b ON a.vec_id < b.vec_id
+  WHERE a.vec_id < {_EVAL_SLICE} AND {cos} >= 0.3
+)"""
+
+
 def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair-recall of BOTH banded dedup generators — coordinate signs
     (``dedup_embedding_cos``) and random hyperplanes
@@ -3077,36 +3001,13 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold collide rarely. The binned curve (``_binned_recall``) makes
     that trade measured data (the faiss recall-curve discipline).
 
-    Scale shape: ground truth broadcasts the 200-vector eval slice
-    against the corpus (bounded side broadcast, one linear pass — never
-    the n^2 all-pairs); the generators under eval are the registry
-    queries themselves (composition, not re-derivation), filtered to the
-    slice; the final agg is a 4-group rollup.
-
-    The corpus side of the truth pass is explicitly repartitioned
-    before the broadcast join: the join amplifies every corpus row
-    ×|slice| (200 cosine folds per row), and widen_scan's byte gate
-    cannot see compute amplification — a one-split embeddings file
-    otherwise puts the whole |slice|×n scoring pass on ONE core. The
-    exchange payload is the compact pre-amplification corpus stream (n
-    rows), linear and evenly keyed by the unique vec_id."""
-    sc = spark.sparkContext
-    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
-    a = vecs.filter(F.col("vec_id") < _EVAL_SLICE).select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va")
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb")
-    ).repartition(sc.defaultParallelism, "id_b")
-    truth = (
-        F.broadcast(a)
-        .join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            S.cosine(F.col("va"), F.col("vb")).alias("cs"),
-        )
-        .filter(F.col("cs") >= 0.3)
+    Ground truth is ``_slice_truth`` of the raw corpus; the generators
+    under eval are the registry queries themselves, filtered to the
+    slice; the final agg is a 4-group rollup."""
+    truth = _slice_truth(
+        spark,
+        _vecs(spark, sf_dir).select("vec_id", "v"),
+        S.cosine(F.col("v_a"), F.col("v_b")),
     )
     hits = {
         x: h.filter(F.col("id_a") < _EVAL_SLICE)
@@ -3124,13 +3025,9 @@ ORACLE_DEDUP_RECALL = f"""
 WITH raw AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
-truth AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_PAIR_COS_SQL} AS cs
-  FROM raw a JOIN raw b ON a.vec_id < b.vec_id
-  WHERE a.vec_id < {_EVAL_SLICE} AND {_PAIR_COS_SQL} >= 0.3
-),
-rp AS ({_oracle_dedup_rp()}),
-co AS ({_oracle_dedup_embedding()}),
+{_slice_truth_sql("raw")},
+rp AS ({ORACLE_DEDUP_RP}),
+co AS ({ORACLE_DEDUP_EMBEDDING}),
 {_binned_recall_sql("rec", "truth", "cs", _EVAL_EDGES,
                     {"rp": "rp", "coord": "co"}, ["id_a", "id_b"])}
 SELECT * FROM rec ORDER BY sim_band
@@ -3141,20 +3038,19 @@ ORACLE["dedup_recall_eval"] = ORACLE_DEDUP_RECALL
 
 
 # --------------------------------------------------------------------------
-# dedup_embedding_rp_target — recall-TARGETED banding (round 10)
+# dedup_embedding_rp_target — recall-TARGETED banding
 # --------------------------------------------------------------------------
 
 # Production near-dup target: catch pairs at cosine >= _TGT_COS with
 # probability >= _TGT_RECALL. The (bands, bits) config is DERIVED from
-# the target (VERDICT r9 #1; r10 derived bands at the occupancy-floor
-# bits, r11 sweeps bits too — VERDICT r10 #4) — planes are free on the
-# RP tier (round 9), so banding is the knob that makes recall a
-# contract and cost a minimized consequence.
+# the target by a cost sweep over the bits (``_lsh_cfg_rp_target``):
+# planes are free on the RP tier, so banding is the knob that makes
+# recall a contract and cost a minimized consequence.
 _TGT_COS = 0.8
 _TGT_RECALL = 0.9
 
 # Plane budget the TARGET tier's oracle enumerates (its own constant —
-# the fixed-bands tier keeps _RP_ORACLE_PLANES=128). The r11 sweep
+# the fixed-bands tier keeps _RP_ORACLE_PLANES=128). The sweep
 # spends MORE bits than the occupancy floor when that cuts candidate
 # volume (each extra bit at t=0.8 halves background collisions but
 # costs only 1/p = 1.26x more bands), so the budget must cover the
@@ -3397,15 +3293,6 @@ def _aug_sql() -> str:
 )"""
 
 
-# Target-tier signature chain: identical derivation to _RP_SIG_CTES but
-# over the augmented corpus, with (bands, bits) DERIVED in SQL by the
-# same cost sweep as _lsh_cfg_rp_target — quantization grids with the
-# shared half-up tie rule so ceil() can't straddle a libm ulp or a
-# round() tie-direction difference (ADVICE r10), exact-double cost
-# compare, argmin with ties toward smaller r — and the plane/band
-# fan-outs driven by the cfg scalars under the fixed _RP_TGT_PLANES
-# enumeration (the portable-subset device: fixed range x scalar
-# filter).
 def _rp_cfg_sweep_sql(src: str) -> str:
     """The SQL twin of ``_lsh_cfg_rp_target``'s cost sweep, as a scalar
     (bands, bits) SELECT over the row source ``src`` (n = count(*) of
@@ -3439,32 +3326,15 @@ def _rp_cfg_sweep_sql(src: str) -> str:
   ORDER BY cost, bits LIMIT 1"""
 
 
+# Target-tier chain: _RP_SIG_CTES over the augmented corpus, with
+# (bands, bits) derived in SQL by the cost sweep and the plane/band
+# fan-outs driven by the cfg scalars under the fixed _RP_TGT_PLANES
+# enumeration (the portable-subset device: fixed range x scalar filter).
 _RP_TGT_CTES = f"""{_aug_sql()},
 cfg AS (
   {_rp_cfg_sweep_sql("aug")}
 ),
-w AS (
-  SELECT p,
-         list_transform(range(0, 64), i ->
-           CASE WHEN instr('02468ace',
-                           substr(md5('rp:' || p || ':' || i), 2, 1)) > 0
-                THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS wv
-  FROM range(0, {_RP_TGT_PLANES}) t(p)
-  WHERE p < (SELECT bands * bits FROM cfg)
-),
-dots AS (
-  SELECT r.vec_id, w.p,
-         list_sum(list_transform(range(1, 65),
-           i -> w.wv[i] * CAST(floor(r.v[i] * {S.RP_Q}) AS BIGINT)))
-           AS dot
-  FROM aug r CROSS JOIN w
-),
-sig AS (
-  SELECT vec_id,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END,
-                    '' ORDER BY p) AS s
-  FROM dots GROUP BY vec_id
-),
+{_rp_sig_sql("aug", _RP_TGT_PLANES, "(SELECT bands * bits FROM cfg)")},
 tb AS (
   SELECT k FROM range(0, {_RP_TGT_PLANES}) t(k)
   WHERE k < (SELECT bands FROM cfg)
@@ -3472,24 +3342,14 @@ tb AS (
 banded AS (
   SELECT vec_id, k AS band_idx,
          substr(s, CAST(k * (SELECT bits FROM cfg) + 1 AS INT),
-                (SELECT bits FROM cfg)) AS bkt
+                (SELECT bits FROM cfg)) AS band_key
   FROM sig CROSS JOIN tb
 ),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.bkt = b.bkt
-   AND a.vec_id < b.vec_id
-)"""
+{_VEC_CAND_SQL}"""
 
 ORACLE_DEDUP_RP_TARGET = f"""
 WITH {_RP_TGT_CTES}
-SELECT c.id_a, c.id_b, {_PAIR_COS_SQL} AS cos_sim
-FROM cand c
-JOIN aug a ON a.vec_id = c.id_a
-JOIN aug b ON b.vec_id = c.id_b
-WHERE {_PAIR_COS_SQL} >= {_TGT_COS}
-ORDER BY id_a, id_b
+{_pair_cos_sql("aug", _TGT_COS)}
 """
 
 QUERIES["dedup_embedding_rp_target"] = q_dedup_embedding_rp_target
@@ -3531,32 +3391,14 @@ def q_dedup_recall_target_eval(
         vecs=_aug_vecs(spark, sf_dir, n_raw=n_raw),
         n=n_aug,
     )
-    a = vecs.filter(F.col("vec_id") < _EVAL_SLICE).select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    # Pre-amplification repartition of the corpus side, as in
-    # dedup_recall_eval's truth pass: the broadcast truth join folds
-    # |slice| cosines per corpus row of a frame with the scan's 1-2 splits
-    b = vecs.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    ).repartition(spark.sparkContext.defaultParallelism, "id_b")
-    truth = (
-        F.broadcast(a)
-        .join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                S.dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("cs"),
-        )
-        .filter(F.col("cs") >= 0.3)
+    truth = _slice_truth(
+        spark,
+        vecs,
+        F.round(
+            S.dot(F.col("v_a"), F.col("v_b"))
+            / (F.col("nrm_a") * F.col("nrm_b")),
+            6,
+        ),
     )
     hits = {"tgt": cand.filter(F.col("id_a") < _EVAL_SLICE)}
     return (
@@ -3569,11 +3411,7 @@ def q_dedup_recall_target_eval(
 
 ORACLE_DEDUP_RECALL_TARGET = f"""
 WITH {_RP_TGT_CTES},
-truth AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_PAIR_COS_SQL} AS cs
-  FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-  WHERE a.vec_id < {_EVAL_SLICE} AND {_PAIR_COS_SQL} >= 0.3
-),
+{_slice_truth_sql("aug")},
 {_binned_recall_sql("rec", "truth", "cs", _TGT_EVAL_EDGES, {"tgt": "cand"},
                     ["id_a", "id_b"])}
 SELECT rec.*,
@@ -3593,7 +3431,7 @@ ORACLE["dedup_recall_target_eval"] = ORACLE_DEDUP_RECALL_TARGET
 
 def q_semdedup_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep decision on the RANDOM-HYPERPLANE mutual-kNN
-    substrate (VERDICT r9 #5): identical pipeline to ``semdedup_mutual``
+    substrate: identical pipeline to ``semdedup_mutual``
     — mutual top-3 edges → connected components → integer-exact
     centroid → keep/drop — but the candidate generator is the RP banded
     tier (``_lsh_cfg_rp``/``rp_bands``), so the clustering family rides

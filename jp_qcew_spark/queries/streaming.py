@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from jp_qcew_spark.io import load_table, order_result
 from jp_qcew_spark.queries.curation import _HEAD_FP_SQL, _QC_ITERS, _qc_sql_chain
-from jp_qcew_spark.queries.dedup import _SH_SQL, _sig_band_sql
+from jp_qcew_spark.queries.dedup import _MH_CTES
 from jp_qcew_spark.queries.events import (
     ORACLE_EVENTS_CEP,
     ORACLE_EVENTS_SESSION,
@@ -582,18 +582,8 @@ def _oracle_stream_neardup() -> str:
     per-doc verdict is the same any-band OR the stream folds after the
     drain. Signature CTEs are the dedup_minhash_lsh oracle's (same hash
     family, bit-for-bit)."""
-    sig_exprs, band_selects = _sig_band_sql()
     return f"""
-WITH sh AS ({_SH_SQL}),
-nonempty AS (SELECT * FROM sh WHERE len(shset) > 0),
-sig AS (
-  SELECT doc_id, shset,
-         {sig_exprs}
-  FROM nonempty
-),
-banded AS (
-{band_selects}
-),
+WITH {_MH_CTES},
 k AS (
   SELECT b.doc_id, b.band_idx, b.band_key, r.bi
   FROM banded b JOIN ({_DOC_BATCH_SQL}) r ON b.doc_id = r.doc_id

@@ -94,6 +94,25 @@ def _cast_feed_table(t, schema: StructType):
     return pa.Table.from_arrays(cols, schema=target).combine_chunks()
 
 
+def parquet_files(path: str) -> list[str]:
+    """The parquet files of a feed: ``path`` itself (a single file, as in
+    the driver testdata) or the part files of a Spark-written directory."""
+    import glob
+    import os
+
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def footer_rows(path: str) -> int:
+    """Row count of a parquet file or directory from its footers, with
+    no data read and no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(path))
+
+
 class _ReplayReader(SimpleDataSourceStreamReader):
     """Replay a parquet feed in a deterministic total order as fixed-size
     micro-batches: the events table ordered by (ts, event_id). A subclass
@@ -109,16 +128,6 @@ class _ReplayReader(SimpleDataSourceStreamReader):
         self._batch: int | None = None
         self._table = None
 
-    def _files(self) -> list[str]:
-        """The feed path may be a single parquet file (the driver
-        testdata) or a Spark-written DIRECTORY of part files."""
-        import glob as g
-        import os as o
-
-        if o.path.isdir(self._path):
-            return sorted(g.glob(o.path.join(self._path, "*.parquet")))
-        return [self._path]
-
     def _batch_rows(self) -> int:
         """Micro-batch size. ``auto`` = ceil(n/8) of the feed (parquet
         metadata row counts, no data read): micro-batch COUNT, not size,
@@ -128,12 +137,7 @@ class _ReplayReader(SimpleDataSourceStreamReader):
         it explicitly."""
         if self._batch is None:
             if self._batch_opt == "auto":
-                import pyarrow.parquet as pq
-
-                n = sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in self._files()
-                )
-                self._batch = max(1, -(-n // 8))
+                self._batch = max(1, -(-footer_rows(self._path) // 8))
             else:
                 self._batch = int(self._batch_opt)
         return self._batch
@@ -151,7 +155,8 @@ class _ReplayReader(SimpleDataSourceStreamReader):
             import pyarrow.parquet as pq
 
             t = pa.concat_tables(
-                pq.read_table(f, columns=self._COLUMNS) for f in self._files()
+                pq.read_table(f, columns=self._COLUMNS)
+                for f in parquet_files(self._path)
             ).sort_by(self._ORDER)
             self._table = _cast_feed_table(t, self._FEED_SCHEMA)
         return self._table

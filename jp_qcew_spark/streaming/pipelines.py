@@ -45,6 +45,7 @@ from jp_qcew_spark.io import (
 from jp_qcew_spark.sources.stream_replay import (
     DocReplayDataSource,
     EventReplayDataSource,
+    footer_rows,
 )
 
 
@@ -711,12 +712,8 @@ def stream_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer pays a full state-store pass (shuffle, per-user pandas
     # invocation, store commit), and three boundary carries prove
     # cross-batch adjacency as well as seven. The batch size comes from
-    # parquet metadata only, no data read.
-    import pyarrow.parquet as pq
-
-    n_rows = pq.ParquetFile(
-        os.path.join(sf_dir, "events.parquet")
-    ).metadata.num_rows
+    # parquet footers only, no data read.
+    n_rows = footer_rows(os.path.join(sf_dir, "events.parquet"))
     stream = replay_stream(spark, sf_dir, "events", max(1, -(-n_rows // 4)))
     matches = (
         stream.select("user_id", "event_id", "ts", "event_type", "value")

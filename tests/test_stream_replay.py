@@ -256,3 +256,28 @@ def test_cep_fn_carries_state_across_batches():
         (6, 1000 + 1801, "purchase", 2.0),
     ])]), st))
     assert len(out3) == 0
+
+
+def test_cep_sequence_reads_a_part_file_directory(spark, tmp_path):
+    """``stream_cep_sequence`` sizes its micro-batches from the footers of
+    ``events.parquet``, which may be one file or a directory of part
+    files: a two-part directory gives the same rows as a one-file copy."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from jp_qcew_spark.streaming.pipelines import stream_cep_sequence
+
+    one, two = tmp_path / "one", tmp_path / "two" / "events.parquet"
+    one.mkdir()
+    two.mkdir(parents=True)
+    shutil.copy(SF, one / "events.parquet")
+    t = pq.read_table(SF)
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), two / "part-00000.parquet")
+    pq.write_table(t.slice(half), two / "part-00001.parquet")
+    got = [
+        sorted(tuple(r) for r in stream_cep_sequence(spark, str(d)).collect())
+        for d in (one, two.parent)
+    ]
+    assert got[0] and got[1] == got[0]
